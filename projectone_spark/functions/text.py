@@ -88,7 +88,9 @@ _SPREAD_CHUNK_BYTES = 16 * 1024
 def _spread_width(df: DataFrame) -> int:
     """Scale-adaptive spread width (guide §2: derive partitioning from
     input size, not a constant): ~one task per ``_SPREAD_CHUNK_BYTES`` of
-    the plan's estimated input, clamped to [4, defaultParallelism].
+    the plan's estimated input, at most ``defaultParallelism`` and at
+    least 4 — the floor of 4 wins, so under ``defaultParallelism`` < 4
+    (e.g. ``local[2]``) every spread is 4 wide.
     Frames without statistics (in-memory micro-batches, local relations)
     estimate huge and get full width — at real scale every estimate
     exceeds the cap, so this only narrows tiny local inputs."""

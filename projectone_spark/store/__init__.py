@@ -229,8 +229,12 @@ class TableStore:
 
     # -- IO ----------------------------------------------------------------
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        m = self.manifest(name)
+    def read(self, spark: SparkSession, name: str,
+             snapshot: dict | None = None) -> DataFrame:
+        """The current version, or exactly ``snapshot`` (a dict from
+        :meth:`manifest`): a read-modify-write reads the version it then
+        pins as ``_expected_base``, not whatever is current by then."""
+        m = self.manifest(name) if snapshot is None else snapshot
         if m is None:
             raise FileNotFoundError(f"table '{name}' does not exist in {self.root}")
         return self._read_manifest(spark, m)
@@ -494,6 +498,9 @@ class TableStore:
 #: guide §1.2: inference cost one driver-side job per directory per
 #: write). Anything outside the list (user-defined types, char/varchar
 #: metadata, future types) falls back to the empirical inference pass.
+#: ``timestamp_ntz`` is safe under any ``spark.sql.parquet.
+#: inferTimestampNTZ.enabled``: that setting only steers inference for
+#: files without the embedded Spark schema, and every store file has it.
 _READBACK_SAFE_TYPES = frozenset({
     "boolean", "byte", "short", "integer", "long", "float", "double",
     "string", "binary", "date", "timestamp", "timestamp_ntz",
@@ -508,7 +515,7 @@ def _derived_readback_schema(schema) -> str | None:
     type outside the proven-safe set (or decimal, handled explicitly)
     appears and the caller must fall back to real inference. Pinned
     against actual inference across the full type matrix by
-    ``tests/test_r12_fastpaths.py``."""
+    ``tests/test_r13_fastpaths.py``."""
     def nullable(node):
         if isinstance(node, dict):
             t = node.get("type")

@@ -82,7 +82,9 @@ def delta_overwrite(spark: SparkSession, path: str, df: DataFrame, *,
 
 
 def _merge_condition(key_cols: Sequence[str]) -> str:
-    return " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in key_cols)
+    from projectone_spark.writers.hashing import sql_ident
+
+    return " AND ".join(f"t.{sql_ident(k)} <=> s.{sql_ident(k)}" for k in key_cols)
 
 
 def delta_scd1_merge(spark: SparkSession, path: str, source: DataFrame, *,
@@ -100,11 +102,12 @@ def delta_scd1_merge(spark: SparkSession, path: str, source: DataFrame, *,
         source = source.dropDuplicates(list(key_cols))
     hashed = with_key_data_hashes(source, key_cols, data_cols)
     delta_create_if_not_exists(spark, path, hashed, partition_by=partition_by)
-    from projectone_spark.writers.hashing import DATA_HASH
+    from projectone_spark.writers.hashing import DATA_HASH, sql_ident
 
+    dh = sql_ident(DATA_HASH)
     (_delta_table(spark, path).alias("t")
      .merge(hashed.alias("s"), _merge_condition(key_cols))
-     .whenMatchedUpdateAll(condition=f"t.`{DATA_HASH}` <> s.`{DATA_HASH}`")
+     .whenMatchedUpdateAll(condition=f"t.{dh} <> s.{dh}")
      .whenNotMatchedInsertAll()
      .execute())
 
@@ -180,8 +183,12 @@ class DeltaStore:
     def exists(self, name: str) -> bool:
         return delta_exists_at_root(self, name)
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.format("delta").load(self._path(name))
+    def read(self, spark: SparkSession, name: str,
+             snapshot: dict | None = None) -> DataFrame:
+        reader = spark.read.format("delta")
+        if snapshot is not None:
+            reader = reader.option("versionAsOf", snapshot["version"])
+        return reader.load(self._path(name))
 
     def version(self, name: str) -> int:
         spark = SparkSession.getActiveSession()

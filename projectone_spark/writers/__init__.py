@@ -21,7 +21,7 @@ from __future__ import annotations
 from collections.abc import Mapping, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from projectone_spark.store import TableStore
 from projectone_spark.writers.hashing import (
@@ -33,8 +33,16 @@ from projectone_spark.writers.hashing import (
     UPDATE_TS,
     VALID_FROM,
     VALID_TO,
+    sql_ident,
+    sql_string,
+    with_key_data_hashes,
 )
-from projectone_spark.writers.merge import scd1_merge, scd2_apply, scd3_apply
+from projectone_spark.writers.merge import (
+    _scd2_data_cols,
+    scd1_merge,
+    scd2_apply,
+    scd3_apply,
+)
 
 
 class ConstraintViolation(Exception):
@@ -106,14 +114,24 @@ def write_selective_overwrite(spark: SparkSession, store: TableStore,
 
 
 def _read_target(spark: SparkSession, store: TableStore, table: str,
+                 snapshot: dict | None,
                  rename: Mapping[str, str] | None) -> DataFrame | None:
-    if not store.exists(table):
+    """The merge target as of ``snapshot`` (``store.manifest(table)``, or
+    None for a table that does not exist yet)."""
+    if snapshot is None:
         return None
-    tgt = store.read(spark, table)
+    tgt = store.read(spark, table, snapshot=snapshot)
     if rename:  # un-rename so merge logic sees canonical metadata names
         inverse = {v: k for k, v in rename.items()}
         tgt = rename_metadata_columns(tgt, inverse)
     return tgt
+
+
+def _base_version(snapshot: dict | None) -> int:
+    """The version a read-modify-write pins as ``_expected_base``, so a
+    commit landing after ``snapshot`` was read raises
+    ``ConcurrentWriteError`` instead of being overwritten."""
+    return -1 if snapshot is None else snapshot["version"]
 
 
 def _partition_prune(spark: SparkSession, store: TableStore, df: DataFrame,
@@ -195,11 +213,13 @@ def write_scd1(spark: SparkSession, store: TableStore, df: DataFrame,
             return store.selective_overwrite(
                 spark, rename_metadata_columns(merged, rename), table,
                 partition_values=values)
-    target = _read_target(spark, store, table, rename)
+    snapshot = store.manifest(table)
+    target = _read_target(spark, store, table, snapshot, rename)
     merged = scd1_merge(df, target, key_cols, data_cols=data_cols,
                         dedup_on_keys=dedup_on_keys, now=now, algo=algo)
     return store.overwrite(spark, rename_metadata_columns(merged, rename),
-                           table, partition_by)
+                           table, partition_by,
+                           _expected_base=_base_version(snapshot))
 
 
 def write_scd2(spark: SparkSession, store: TableStore, df: DataFrame,
@@ -219,7 +239,8 @@ def write_scd2(spark: SparkSession, store: TableStore, df: DataFrame,
     into a per-key history chain (reference window repair,
     ``write.py:875-960``): all but the newest version insert as closed
     rows, the newest goes through the normal merge."""
-    target = _read_target(spark, store, table, rename)
+    snapshot = store.manifest(table)
+    target = _read_target(spark, store, table, snapshot, rename)
     if fix_duplicates_by_key:
         history, df = scd2_compact(df, key_cols, data_cols=data_cols,
                                    valid_from=valid_from, sentinel=sentinel,
@@ -236,12 +257,13 @@ def write_scd2(spark: SparkSession, store: TableStore, df: DataFrame,
                             history_start=history_start)
     if active_mapping:
         # reference active_record_value_mapping (write.py:617-624)
-        expr = F.col(ACTIVE)
-        mapped = F.when(expr == "Y", F.lit(active_mapping.get("Y", "Y"))) \
-                  .otherwise(F.lit(active_mapping.get("N", "N")))
-        merged = merged.withColumn(ACTIVE, mapped)
+        y = sql_string(active_mapping.get("Y", "Y"))
+        n = sql_string(active_mapping.get("N", "N"))
+        merged = merged.withColumn(ACTIVE, F.expr(
+            f"CASE WHEN {sql_ident(ACTIVE)} = 'Y' THEN {y} ELSE {n} END"))
     return store.overwrite(spark, rename_metadata_columns(merged, rename),
-                           table, partition_by)
+                           table, partition_by,
+                           _expected_base=_base_version(snapshot))
 
 
 def scd2_compact(source: DataFrame, key_cols: Sequence[str], *,
@@ -258,25 +280,21 @@ def scd2_compact(source: DataFrame, key_cols: Sequence[str], *,
     (stamped like target history rows) and the bare latest rows (to be
     merged normally).
     """
-    from projectone_spark.writers.hashing import with_key_data_hashes
-    from projectone_spark.writers.merge import _scd2_data_cols
-
     vf = valid_from if isinstance(valid_from, Column) else F.col(valid_from)
     data_cols = _scd2_data_cols(source, key_cols, data_cols, valid_from)
     hashed = with_key_data_hashes(source, key_cols, data_cols, algo)
     hashed = hashed.withColumn(VALID_FROM, vf)
-    w = Window.partitionBy(KEY_HASH).orderBy(F.asc(VALID_FROM))
+    dh, vf_sql = sql_ident(DATA_HASH), sql_ident(VALID_FROM)
+    over = f"OVER (PARTITION BY {sql_ident(KEY_HASH)} ORDER BY {vf_sql} ASC)"
     hashed = (hashed
-              .withColumn("__prev_hash", F.lag(DATA_HASH).over(w))
-              .filter(F.col("__prev_hash").isNull()
-                      | (F.col("__prev_hash") != F.col(DATA_HASH)))
+              .withColumn("__prev_hash", F.expr(f"lag({dh}) {over}"))
+              .filter(f"__prev_hash IS NULL OR __prev_hash != {dh}")
               .drop("__prev_hash"))
-    w2 = Window.partitionBy(KEY_HASH).orderBy(F.asc(VALID_FROM))
-    hashed = (hashed
-              .withColumn("__next_from", F.lead(VALID_FROM).over(w2)))
-    latest = (hashed.filter(F.col("__next_from").isNull())
+    hashed = hashed.withColumn("__next_from",
+                               F.expr(f"lead({vf_sql}) {over}"))
+    latest = (hashed.filter("__next_from IS NULL")
               .drop("__next_from", KEY_HASH, DATA_HASH, VALID_FROM))
-    history = (hashed.filter(F.col("__next_from").isNotNull())
+    history = (hashed.filter("__next_from IS NOT NULL")
                .withColumn(VALID_TO, F.col("__next_from"))
                .withColumn(ACTIVE, F.lit("N"))
                .drop("__next_from"))
@@ -291,11 +309,13 @@ def write_scd3(spark: SparkSession, store: TableStore, df: DataFrame,
                partition_by: Sequence[str] | None = None,
                rename: Mapping[str, str] | None = None,
                algo: str = "md5") -> int:
-    target = _read_target(spark, store, table, rename)
+    snapshot = store.manifest(table)
+    target = _read_target(spark, store, table, snapshot, rename)
     merged = scd3_apply(df, target, key_cols, tracked_cols, data_cols=data_cols,
                         dedup_on_keys=dedup_on_keys, now=now, algo=algo)
     return store.overwrite(spark, rename_metadata_columns(merged, rename),
-                           table, partition_by)
+                           table, partition_by,
+                           _expected_base=_base_version(snapshot))
 
 
 def check_table_constraints(spark: SparkSession, store: TableStore,

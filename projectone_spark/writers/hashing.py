@@ -6,6 +6,11 @@ write.py:103-140`` scd3, ``:393-417`` scd1, ``:647-687`` scd2). We keep the
 identical md5 semantics for parity, and expose ``xxhash64`` as the fast
 variant for the 100 TB path (cheaper, JVM-intrinsic, no hex-string
 materialization — a long column shuffles ~4× less than a 32-char string).
+
+Hashes are built as SQL expression text (one ``F.expr`` each), not as a
+tree of ``Column`` objects: every ``Column`` node is one py4j round trip,
+so a per-column tree costs the driver O(columns) JVM calls per hash.
+:func:`sql_ident` is the one quoting rule every such string uses.
 """
 
 from __future__ import annotations
@@ -35,16 +40,30 @@ METADATA_COLUMNS = (
 SCD2_SENTINEL = "9999-12-31 00:00:00"
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier (embedded backticks
+    doubled): spaces, dots, reserved words and non-ASCII letters all stay
+    a single column reference."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a single-quoted SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def row_hash(cols: Sequence[str], algo: str = "md5") -> Column:
     """Stable hash over a column set: NULL-safe, order-sensitive, type-erased.
 
     ``md5`` matches the reference bit-for-bit; ``xxhash64`` is the fast path.
+    One ``F.expr``, whatever the column count.
     """
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols]
-    joined = F.concat_ws("|", *parts)
+    parts = "".join(f", coalesce(cast({sql_ident(c)} as string), '')"
+                    for c in cols)
+    joined = f"concat_ws('|'{parts})"
     if algo == "xxhash64":
-        return F.xxhash64(joined)
-    return F.md5(joined.cast("binary"))
+        return F.expr(f"xxhash64({joined})")
+    return F.expr(f"md5(cast({joined} as binary))")
 
 
 def with_key_data_hashes(df: DataFrame, key_cols: Sequence[str],

@@ -15,10 +15,23 @@ Scale notes:
   so the join condition stays a cheap equi-compare (reference rationale:
   ``write.py:103-140``);
 - with ``algo="xxhash64"`` the shuffle key is a long instead of a hex string.
+
+Plan-construction rule: one SQL expression per output column; never one
+``Column`` per column per side. Each ``Column`` node (``F.col``, ``when``,
+``alias``, …) is one py4j round trip, which made building one 9-column
+SCD2 plan cost ~1,500 JVM calls of driver time before any job ran. The
+builders therefore write each output column as SQL
+text, with every identifier quoted by ``hashing.sql_ident``, and ship a
+whole projection to the JVM as one string (:func:`_project`), so building
+a merge costs a fixed few dozen calls whatever the column count.
+``Column``-typed arguments (``now``, ``valid_from``, ``history_start``)
+have no SQL text; each is stamped once as a column the SQL references,
+and the optimizer folds it back in.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
@@ -34,16 +47,51 @@ from projectone_spark.writers.hashing import (
     VALID_TO,
     data_columns,
     row_hash,
+    sql_ident,
+    sql_string,
     with_key_data_hashes,
 )
 
+#: Internal column names: the exploded SCD2 row struct, and the stamped
+#: ``now`` / ``history_start`` arguments the SQL text refers to.
+_ROW = "r"
+_NOW = "__metadata_now__"
+_HISTORY_START = "__metadata_history_start__"
 
-def _as_col(value: Column | str | None, default: Column) -> Column:
-    if value is None:
-        return default
-    if isinstance(value, Column):
-        return value
-    return F.col(value)
+_KH, _DH, _CKH = sql_ident(KEY_HASH), sql_ident(DATA_HASH), sql_ident(COLUMN_KEY_HASH)
+_VF, _VT, _ACTIVE = sql_ident(VALID_FROM), sql_ident(VALID_TO), sql_ident(ACTIVE)
+_S_PRESENT = f"s.{_KH} IS NOT NULL"
+_T_PRESENT = f"t.{_KH} IS NOT NULL"
+#: key on both sides, data hash differs
+_CHANGED = f"({_S_PRESENT} AND {_T_PRESENT} AND s.{_DH} != t.{_DH})"
+
+
+def _as(expr: str, name: str) -> str:
+    return f"{expr} AS {sql_ident(name)}"
+
+
+def _project(df: DataFrame, exprs: Sequence[str]) -> DataFrame:
+    """``df.selectExpr(*exprs)`` in a fixed number of py4j calls.
+
+    py4j hands a Python list to the JVM one ``add`` call per element, so
+    the expressions cross as ONE JSON array that Spark's bundled Jackson
+    decodes back into the ``java.util.List`` ``selectExpr`` takes.
+    """
+    jvm = df.sparkSession._jvm
+    exprs_j = jvm.com.fasterxml.jackson.databind.ObjectMapper().readValue(
+        json.dumps(list(exprs)), jvm.java.util.ArrayList._java_lang_class)
+    return DataFrame(df._jdf.selectExpr(jvm.PythonUtils.toSeq(exprs_j)),
+                     df.sparkSession)
+
+
+def _bind_now(df: DataFrame, now: Column | None) -> tuple[DataFrame, str]:
+    """SQL text for the ``now`` argument: ``current_timestamp()`` when it
+    is None, else a reference to ``now`` stamped onto ``df`` (a literal or
+    ``current_timestamp()`` folds back into the expressions that use it,
+    so the stamp leaves the optimized plan as it was)."""
+    if now is None:
+        return df, "current_timestamp()"
+    return df.withColumn(_NOW, now), sql_ident(_NOW)
 
 
 def _prep_source(source: DataFrame, key_cols: Sequence[str],
@@ -53,7 +101,20 @@ def _prep_source(source: DataFrame, key_cols: Sequence[str],
     if dedup_on_keys:
         # reference `deduplicate_onkeys` (write.py:257-259, 488-491, 769-771)
         src = src.dropDuplicates(list(key_cols))
+    if data_cols is None:  # resolve on `source`, whose schema is cached
+        data_cols = data_columns(source, key_cols)
     return with_key_data_hashes(src, key_cols, data_cols, algo)
+
+
+def _join_on_key(src: DataFrame, tgt: DataFrame) -> DataFrame:
+    return src.alias("s").join(tgt.alias("t"), F.expr(f"s.{_KH} = t.{_KH}"),
+                               "full_outer")
+
+
+def _pick(cond: str, cols: Sequence[str]) -> list[str]:
+    """``CASE WHEN cond THEN s.c ELSE t.c END AS c`` for each column."""
+    return [_as(f"CASE WHEN {cond} THEN s.{sql_ident(c)} "
+                f"ELSE t.{sql_ident(c)} END", c) for c in cols]
 
 
 def scd1_merge(source: DataFrame, target: DataFrame | None,
@@ -69,36 +130,26 @@ def scd1_merge(source: DataFrame, target: DataFrame | None,
     ``now`` defaults to ``current_timestamp()``; pass a literal for
     deterministic tests.
     """
-    now = _as_col(now, F.current_timestamp())
     src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo)
-    payload = data_columns(src, key_cols)
-    out_cols = list(key_cols) + payload + [KEY_HASH, DATA_HASH]
+    out_cols = [*key_cols, *data_columns(source, key_cols), KEY_HASH, DATA_HASH]
 
     if target is None or not target.columns:
-        return src.select(*out_cols).withColumn(VALID_FROM, now)
+        src, now_sql = _bind_now(src, now)
+        return _project(src, [*map(sql_ident, out_cols),
+                              _as(now_sql, VALID_FROM)])
 
     tgt = target
     if KEY_HASH not in tgt.columns:
         tgt = with_key_data_hashes(tgt, key_cols, data_cols, algo)
     if VALID_FROM not in tgt.columns:
-        tgt = tgt.withColumn(VALID_FROM, now)
+        tgt = tgt.withColumn(VALID_FROM,
+                             F.current_timestamp() if now is None else now)
 
-    s = src.alias("s")
-    t = tgt.alias("t")
-    joined = s.join(t, F.col(f"s.{KEY_HASH}") == F.col(f"t.{KEY_HASH}"), "full_outer")
-
-    matched = F.col(f"s.{KEY_HASH}").isNotNull() & F.col(f"t.{KEY_HASH}").isNotNull()
-    changed = matched & (F.col(f"s.{DATA_HASH}") != F.col(f"t.{DATA_HASH}"))
-    inserted = F.col(f"t.{KEY_HASH}").isNull()
-    take_source = changed | inserted
-
-    cols = [
-        F.when(take_source, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-        for c in out_cols
-    ]
-    valid_from = (F.when(take_source, now)
-                  .otherwise(F.col(f"t.{VALID_FROM}")).alias(VALID_FROM))
-    return joined.select(*cols, valid_from)
+    joined, now_sql = _bind_now(_join_on_key(src, tgt), now)
+    take_source = f"({_CHANGED} OR t.{_KH} IS NULL)"
+    valid_from = f"CASE WHEN {take_source} THEN {now_sql} ELSE t.{_VF} END"
+    return _project(joined, [*_pick(take_source, out_cols),
+                             _as(valid_from, VALID_FROM)])
 
 
 def _scd2_data_cols(source: DataFrame, key_cols: Sequence[str],
@@ -138,69 +189,61 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
     loads then say "valid since epoch", not "valid since the load ran".
     Version-2 rows of existing keys are unaffected.
     """
-    vf = _as_col(valid_from, F.current_timestamp())
-    sentinel_ts = F.lit(sentinel).cast("timestamp")
+    if valid_from is None:
+        vf = F.current_timestamp()
+    else:
+        vf = F.col(valid_from) if isinstance(valid_from, str) else valid_from
+    sentinel_ts = f"CAST({sql_string(sentinel)} AS TIMESTAMP)"
     data_cols = _scd2_data_cols(source, key_cols, data_cols, valid_from)
     src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo)
     src = src.withColumn(VALID_FROM, vf)
-    payload = data_columns(src, key_cols)
-    payload = [c for c in payload if c != VALID_FROM]
-    out_cols = list(key_cols) + payload + [KEY_HASH, DATA_HASH]
-
-    def finalize(df: DataFrame) -> DataFrame:
-        return df.select(*out_cols, VALID_FROM, VALID_TO, ACTIVE)
-
-    new_rows_from = (lambda df: df
-                     .withColumn(VALID_TO, sentinel_ts)
-                     .withColumn(ACTIVE, F.lit("Y")))
+    out_cols = [*key_cols, *data_columns(source, key_cols), KEY_HASH, DATA_HASH]
+    final_cols = [*out_cols, VALID_FROM, VALID_TO, ACTIVE]
 
     if target is None or not target.columns:
-        first = (src.withColumn(VALID_FROM, history_start)
-                 if history_start is not None else src)
-        return finalize(new_rows_from(first))
+        if history_start is not None:
+            src = src.withColumn(VALID_FROM, history_start)
+        return _project(src, [*map(sql_ident, [*out_cols, VALID_FROM]),
+                              _as(sentinel_ts, VALID_TO), _as("'Y'", ACTIVE)])
 
-    history = target.filter(F.col(ACTIVE) == "N")
-    active = target.filter(F.col(ACTIVE) == "Y")
+    history = target.filter(f"{_ACTIVE} = 'N'")
+    active = target.filter(f"{_ACTIVE} = 'Y'")
+    joined = _join_on_key(src, active)
+    new_vf = f"s.{_VF}"
+    if history_start is not None:
+        joined = joined.withColumn(_HISTORY_START, history_start)
+        new_vf = (f"CASE WHEN NOT ({_T_PRESENT}) "
+                  f"THEN {sql_ident(_HISTORY_START)} ELSE {new_vf} END")
 
-    s = src.alias("s")
-    t = active.alias("t")
-    joined = s.join(t, F.col(f"s.{KEY_HASH}") == F.col(f"t.{KEY_HASH}"), "full_outer")
-
-    s_present = F.col(f"s.{KEY_HASH}").isNotNull()
-    t_present = F.col(f"t.{KEY_HASH}").isNotNull()
-    changed = s_present & t_present & (F.col(f"s.{DATA_HASH}") != F.col(f"t.{DATA_HASH}"))
-    insert_new = s_present & (~t_present | changed)  # I or the insert half of UI
+    insert_new = f"({_S_PRESENT} AND (NOT ({_T_PRESENT}) OR {_CHANGED}))"
 
     # One pass emits up to two rows per joined key via explode of a struct
     # array: the surviving target-side row (closed or unchanged) and the
     # newly inserted source-side row — the Spark-native equivalent of the
     # reference's dual-row unionByName trick (write.py:962-969).
-    def side_struct(side: str, valid_from_c: Column, valid_to_c: Column,
-                    active_c: Column) -> Column:
-        fields = [F.col(f"{side}.{c}").alias(c) for c in out_cols]
-        return F.struct(*fields, valid_from_c.alias(VALID_FROM),
-                        valid_to_c.alias(VALID_TO), active_c.alias(ACTIVE))
+    def side_struct(side: str, valid_from_sql: str, valid_to_sql: str,
+                    active_sql: str) -> str:
+        fields = [*(_as(f"{side}.{sql_ident(c)}", c) for c in out_cols),
+                  _as(valid_from_sql, VALID_FROM), _as(valid_to_sql, VALID_TO),
+                  _as(active_sql, ACTIVE)]
+        return f"struct({', '.join(fields)})"
 
-    target_row = F.when(
-        t_present,
-        side_struct(
-            "t",
-            F.col(f"t.{VALID_FROM}"),
-            F.when(changed, F.col(f"s.{VALID_FROM}")).otherwise(F.col(f"t.{VALID_TO}")),
-            F.when(changed, F.lit("N")).otherwise(F.col(f"t.{ACTIVE}")),
-        ))
-    new_vf = (F.when(~t_present, history_start)
-              .otherwise(F.col(f"s.{VALID_FROM}"))
-              if history_start is not None else F.col(f"s.{VALID_FROM}"))
-    source_row = F.when(
-        insert_new,
-        side_struct("s", new_vf, sentinel_ts, F.lit("Y")))
-
-    rows = joined.select(
-        F.explode(F.filter(F.array(target_row, source_row),
-                           lambda x: x.isNotNull())).alias("r"))
-    merged = rows.select("r.*")
-    return finalize(merged).unionByName(finalize(history))
+    target_row = side_struct(
+        "t", f"t.{_VF}",
+        f"CASE WHEN {_CHANGED} THEN s.{_VF} ELSE t.{_VT} END",
+        f"CASE WHEN {_CHANGED} THEN 'N' ELSE t.{_ACTIVE} END")
+    source_row = side_struct("s", new_vf, sentinel_ts, "'Y'")
+    merged = (joined
+              .selectExpr(f"explode(filter(array("
+                          f"CASE WHEN {_T_PRESENT} THEN {target_row} END, "
+                          f"CASE WHEN {insert_new} THEN {source_row} END), "
+                          f"x -> x IS NOT NULL)) AS {_ROW}")
+              .selectExpr(f"{_ROW}.*"))
+    if set(target.columns) != set(final_cols):
+        # schema drift: keep only the output columns (a missing one fails
+        # analysis here, as it does in the merge above)
+        history = _project(history, list(map(sql_ident, final_cols)))
+    return merged.unionByName(history)
 
 
 def scd3_apply(source: DataFrame, target: DataFrame | None,
@@ -218,47 +261,32 @@ def scd3_apply(source: DataFrame, target: DataFrame | None,
     data changed → data updated, prev columns kept; unmatched source →
     insert with NULL prev; unmatched target → kept.
     """
-    now = _as_col(now, F.current_timestamp())
     src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo)
     src = src.withColumn(COLUMN_KEY_HASH, row_hash(list(tracked_cols), algo))
-    payload = [c for c in data_columns(src, key_cols)]
-    prev_cols = [f"{prev_prefix}{c}" for c in tracked_cols]
-    out_cols = list(key_cols) + payload
+    out_cols = [*key_cols, *data_columns(source, key_cols)]
     meta = [KEY_HASH, DATA_HASH, COLUMN_KEY_HASH]
 
     if target is None or not target.columns:
-        out = src
-        for c in tracked_cols:
-            out = out.withColumn(f"{prev_prefix}{c}",
-                                 F.lit(None).cast(dict(src.dtypes)[c]))
-        return out.select(*out_cols, *prev_cols, *meta).withColumn(VALID_FROM, now)
+        types = dict(source.dtypes)
+        prevs = [_as(f"CAST(NULL AS {types[c]})", f"{prev_prefix}{c}")
+                 for c in tracked_cols]
+        src, now_sql = _bind_now(src, now)
+        return _project(src, [*map(sql_ident, out_cols), *prevs,
+                              *map(sql_ident, meta), _as(now_sql, VALID_FROM)])
 
-    tgt = target
-    s = src.alias("s")
-    t = tgt.alias("t")
-    joined = s.join(t, F.col(f"s.{KEY_HASH}") == F.col(f"t.{KEY_HASH}"), "full_outer")
+    joined, now_sql = _bind_now(_join_on_key(src, target), now)
+    tracked_changed = f"({_S_PRESENT} AND {_T_PRESENT} AND s.{_CKH} != t.{_CKH})"
+    inserted = f"({_S_PRESENT} AND NOT ({_T_PRESENT}))"
+    take_source = f"({inserted} OR {_CHANGED} OR {tracked_changed})"
 
-    s_present = F.col(f"s.{KEY_HASH}").isNotNull()
-    t_present = F.col(f"t.{KEY_HASH}").isNotNull()
-    tracked_changed = (s_present & t_present
-                       & (F.col(f"s.{COLUMN_KEY_HASH}") != F.col(f"t.{COLUMN_KEY_HASH}")))
-    data_changed = (s_present & t_present
-                    & (F.col(f"s.{DATA_HASH}") != F.col(f"t.{DATA_HASH}")))
-    inserted = s_present & ~t_present
-    take_source = inserted | data_changed | tracked_changed
-
-    cols = [F.when(take_source, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-            for c in out_cols + meta]
     prevs = []
     for c in tracked_cols:
-        pc = f"{prev_prefix}{c}"
-        prevs.append(
-            F.when(tracked_changed,
-                   F.when(F.col(f"t.{c}") != F.col(f"s.{c}"), F.col(f"t.{c}")))
-             .when(t_present, F.col(f"t.{pc}"))
-             .otherwise(F.lit(None))
-             .alias(pc))
-    valid_from = (F.when(take_source, now)
-                  .otherwise(F.col(f"t.{VALID_FROM}")).alias(VALID_FROM))
-    return joined.select(*cols[:len(out_cols)], *prevs,
-                         *cols[len(out_cols):], valid_from)
+        q, pc = sql_ident(c), f"{prev_prefix}{c}"
+        prevs.append(_as(
+            f"CASE WHEN {tracked_changed} THEN "
+            f"CASE WHEN t.{q} != s.{q} THEN t.{q} END "
+            f"WHEN {_T_PRESENT} THEN t.{sql_ident(pc)} ELSE NULL END", pc))
+    valid_from = f"CASE WHEN {take_source} THEN {now_sql} ELSE t.{_VF} END"
+    return _project(joined, [*_pick(take_source, out_cols), *prevs,
+                             *_pick(take_source, meta),
+                             _as(valid_from, VALID_FROM)])

@@ -6,7 +6,7 @@ Every entry pins an r13 optimization's bit-identity contract:
   write-time inference pass) must be byte-identical to what inference
   returns, across the full supported type matrix, and must FALL BACK
   to real inference for anything outside the proven-safe set;
-- the spread()/explode_outer reshaping of the tokenizer and dedup
+- the spread() + plain-explode reshaping of the tokenizer and dedup
   corpus pipelines (tokenize parallel, one exchange) must keep row
   sets identical on the degenerate inputs the old shapes gated
   (empty/punctuation-only/NULL texts, empty token arrays).
@@ -100,6 +100,26 @@ def test_store_write_records_derived_schema_and_reads_back(spark, tmp_path):
     assert got.count() == 5
 
 
+def test_store_write_timestamp_ntz_without_ntz_inference(spark, tmp_path):
+    """The recorded schema must equal inference under a non-default
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` too (it holds because
+    the setting only steers files without Spark's embedded footer
+    schema)."""
+    from projectone_spark.store import TableStore
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        store = TableStore(str(tmp_path / "store"))
+        df = spark.sql("SELECT 1 AS k, TIMESTAMP_NTZ'2024-01-01 10:00:00' AS ts")
+        store.overwrite(spark, df, "t")
+        [(d, recorded)] = list(store.manifest("t")["schemas"].items())
+        assert recorded == spark.read.parquet(d).schema.json()
+    finally:
+        spark.conf.set(key, before)
+
+
 @pytest.fixture()
 def degenerate_docs(spark):
     return spark.createDataFrame(
@@ -122,8 +142,8 @@ def test_winnow_gate_matches_normalize_emptiness(spark, degenerate_docs):
 
 
 def test_bpe_doc_word_counts_degenerate_rows(spark, degenerate_docs):
-    """explode_outer + filter must drop empty/NULL/punctuation-only docs
-    exactly as the old plain-explode shape did."""
+    """The spread + plain-explode shape must drop empty/NULL/
+    punctuation-only docs (no tokens, so no exploded rows)."""
     from projectone_spark.functions.text import bpe_doc_word_counts
 
     wf = bpe_doc_word_counts(degenerate_docs)
@@ -135,7 +155,7 @@ def test_bpe_doc_word_counts_degenerate_rows(spark, degenerate_docs):
 def test_surprisal_folds_degenerate_rows(spark, degenerate_docs):
     """uni/bigram surprisal over degenerate docs: only docs with >= 1
     token (unigram) / >= 2 tokens (bigram) emit rows, and the scores
-    fold the same integers as before the spread/outer-explode change."""
+    fold the same integers as before the spread reshaping."""
     from projectone_spark.functions.text import (
         bigram_surprise,
         unigram_surprise,

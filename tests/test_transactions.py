@@ -143,3 +143,42 @@ def test_merge_into_records_txn_watermark(spark, tmp_path):
     got = {r["k"]: r["n"] for r in store.read(spark, "t").collect()}
     assert got == {"a": 2, "b": 1, "c": 1}
     assert store.txn_version("t", "app") == 1
+
+
+@pytest.mark.parametrize("write_type", ["scd1", "scd2", "scd3"])
+def test_scd_write_raises_on_concurrent_append(spark, store, monkeypatch,
+                                               write_type):
+    """An append committed between an SCD write's snapshot read and its
+    commit must fail the SCD write (whose overwrite would drop the
+    appended row), and the appended row must still be in the table."""
+    from projectone_spark.writers import WRITERS
+
+    t0 = F.lit("2024-01-01").cast("timestamp")
+    t1 = F.lit("2024-02-01").cast("timestamp")
+    kwargs = {"scd1": lambda t: {"now": t},
+              "scd2": lambda t: {"valid_from": t},
+              "scd3": lambda t: {"now": t, "tracked_cols": ["name"]}}[write_type]
+    write = WRITERS[write_type]
+    write(spark, store, spark.createDataFrame([(1, "a"), (2, "b")],
+                                              "id long, name string"),
+          "dim", key_cols=["id"], **kwargs(t0))
+    current = store.read(spark, "dim")
+    extra = spark.createDataFrame(
+        [(99, *current.filter("id = 1").first()[1:])], current.schema)
+
+    fired = []
+    orig = TableStore._write_dir
+
+    def hijack(self, df, path, partition_by, capture_schema=True):
+        # the SCD overwrite's data write: a concurrent append commits first
+        if not fired:
+            fired.append(True)
+            store.append(spark, extra, "dim")
+        return orig(self, df, path, partition_by, capture_schema)
+
+    monkeypatch.setattr(TableStore, "_write_dir", hijack)
+    update = spark.createDataFrame([(2, "B")], "id long, name string")
+    with pytest.raises(ConcurrentWriteError, match="re-read and retry"):
+        write(spark, store, update, "dim", key_cols=["id"], **kwargs(t1))
+    assert fired
+    assert store.read(spark, "dim").filter("id = 99").count() == 1

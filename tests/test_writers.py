@@ -230,6 +230,40 @@ def test_scd3_prev_column_lifecycle(spark, store):
     assert (r2["name"], r2["prev_name"], r2["offset"]) == ("B", "b", 999)
 
 
+#: a key and two payload names that are only single columns as quoted SQL
+#: identifiers: a space, a dot, a backtick, a reserved word, non-ASCII
+ODD_NAMES = ("ïd.`k` ey", "select", "off.set ñ")
+
+
+@pytest.mark.parametrize("write_type", ["scd1", "scd2", "scd3"])
+def test_scd_odd_column_names(spark, store, write_type):
+    key, name, _ = ODD_NAMES
+    write = {
+        "scd1": lambda df, t: write_scd1(spark, store, df, "t", key_cols=[key],
+                                         now=_ts(t)),
+        "scd2": lambda df, t: write_scd2(spark, store, df, "t", key_cols=[key],
+                                         valid_from=_ts(t)),
+        "scd3": lambda df, t: write_scd3(spark, store, df, "t", key_cols=[key],
+                                         tracked_cols=[name], now=_ts(t)),
+    }[write_type]
+    write(_df(spark, BASE).toDF(*ODD_NAMES), T0)
+    write(_df(spark, [(2, "B", 99), (7, "g", 70)]).toDF(*ODD_NAMES), T1)
+
+    got = store.read(spark, "t").withColumnsRenamed(
+        {**dict(zip(ODD_NAMES, ("id", "name", "offset"))),
+         f"prev_{name}": "prev_name"})
+    if write_type == "scd2":
+        assert got.count() == 8
+        assert _rows(got.filter(F.col(ACTIVE) == "N"), "id", "name") == [(2, "b")]
+        got = got.filter(F.col(ACTIVE) == "Y")
+    assert _rows(got, "id", "name", "offset") == sorted(
+        [(1, "a", 10), (2, "B", 99), (3, "c", 30), (4, "d", 40),
+         (5, "e", 50), (6, "f", 60), (7, "g", 70)])
+    if write_type == "scd3":
+        assert _rows(got.filter("prev_name IS NOT NULL"), "id", "prev_name") \
+            == [(2, "b")]
+
+
 def test_scd3_second_tracked_change_overwrites_prev(spark, store):
     write_scd3(spark, store, _df(spark, BASE), "t", key_cols=["id"],
                tracked_cols=["name"], now=_ts(T0))
@@ -320,3 +354,47 @@ def test_task_write_extra_options_knobs(spark, tmp_path):
            for r in task.store.read(spark, "t").collect()}
     assert got[1] == 10  # offset excluded from change detection -> kept
     assert wo.data_attributes == "name"  # computed complement persisted
+
+
+# -- plan construction cost -------------------------------------------------
+
+def _py4j_calls(spark, monkeypatch, build) -> int:
+    """py4j commands this thread sends while ``build()`` runs, not counting
+    the object-release messages py4j sends as Python objects are freed."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    me = threading.get_ident()
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me and not command.startswith("m\nd\n"):
+            calls.append(command)
+        return orig(command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counting)
+        build()
+    return len(calls)
+
+
+@pytest.mark.parametrize("merge", ["scd1_merge", "scd2_apply", "scd3_apply"])
+def test_merge_plan_build_py4j_calls_fixed(spark, monkeypatch, merge):
+    """Building (not running) a merge plan sends a fixed, small number of
+    py4j calls whatever the column count: each projection crosses as SQL
+    text, not as one Column object per column per side (that shape cost
+    1,538 calls for a 9-column SCD2)."""
+    from projectone_spark.writers import merge as merges
+
+    fn = getattr(merges, merge)
+    extra = {"scd3_apply": {"tracked_cols": ["c0"]}}.get(merge, {})
+    counts = {}
+    for ncols in (9, 9, 40):  # the first 9 warms py4j's class lookups
+        source = spark.createDataFrame([], ", ".join(
+            ["id long"] + [f"c{i} string" for i in range(ncols - 1)]))
+        target = fn(source, None, ["id"], **extra)
+        counts[ncols] = _py4j_calls(
+            spark, monkeypatch, lambda: fn(source, target, ["id"], **extra))
+    assert counts[9] <= 100
+    assert counts[40] == counts[9]
