@@ -11,14 +11,15 @@ on, with plain parquet + a manifest:
   append adds a directory instead of rewriting old files (a miniature
   add-file log).
 
-When ``delta-spark`` IS importable the store transparently uses Delta
-(``format("delta")``, ``replaceWhere``) — see ``_delta_available``.
+Delta is used only through an explicitly built
+``store.delta_backend.DeltaStore``; this class never switches to it.
 
-Scale notes: data directories may be hive-partitioned (``partition_by``);
-``selective_overwrite`` with explicit partition values replaces only the
-affected partition directories (untouched partitions are hard-linked into
-the new version, not copied). Reading is always
-``spark.read.parquet(*dirs)`` → normal pushdown/pruning applies.
+Scale notes: data directories may be hive-partitioned (``partition_by``).
+Row-level rewrites (``selective_overwrite``, partition-pruned SCD1, the
+``dml`` DELETE / UPDATE / MERGE) share one copy-on-write commit,
+:meth:`TableStore._rewrite`: files that file stats or hive partition values
+prove untouched are hard-linked into the new version, not copied. Reading
+is always ``spark.read.parquet(*dirs)`` → normal pushdown/pruning applies.
 """
 
 from __future__ import annotations
@@ -32,13 +33,6 @@ from collections.abc import Sequence
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-
-try:  # pragma: no cover - delta not present in this environment
-    from delta.tables import DeltaTable  # noqa: F401
-
-    _delta_available = True
-except ImportError:
-    _delta_available = False
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -244,18 +238,13 @@ class TableStore:
         schema (``_dir_schema``) are planned WITHOUT schema inference —
         no per-dir driver job; dirs without one (pre-r12 manifests,
         hand-built fixtures) fall back to inference."""
-        schemas = m.get("schemas") or {}
         if m["partition_by"]:
             # hive-partitioned dirs: each data directory needs ITS OWN
             # basePath for partition-column discovery (one basePath cannot
             # cover sibling commit dirs), so multi-commit snapshots are a
             # union of per-dir scans — collapsed back to one by compaction
-            frames = [self._dir_frame(spark, d, schemas.get(d))
-                      for d in m["dirs"]]
-            out = frames[0]
-            for f in frames[1:]:
-                out = out.unionByName(f)
-            return out
+            return self._read_files(spark, m, {d: [d] for d in m["dirs"]})
+        schemas = m.get("schemas") or {}
         known = [schemas.get(d) for d in m["dirs"]]
         if all(known) and len(set(known)) == 1:
             # one shared schema: a single multi-path scan, zero inference
@@ -269,12 +258,30 @@ class TableStore:
 
         return StructType.fromJson(json.loads(schema_json))
 
-    def _dir_frame(self, spark: SparkSession, d: str,
-                   schema_json: str | None) -> DataFrame:
-        reader = spark.read
-        if schema_json:
-            reader = reader.schema(self._schema_of(schema_json))
-        return reader.option("basePath", d).parquet(d)
+    def _read_files(self, spark: SparkSession, m: dict,
+                    by_dir: dict[str, list[str]]) -> DataFrame | None:
+        """One frame over chosen data files (or whole dirs) of snapshot
+        ``m``, grouped by data directory. Each group reads with its
+        directory as ``basePath``, so hive partition columns come back as
+        real columns, and with the directory's recorded read-back schema
+        when ``m`` has one, so planning runs no inference job. Groups
+        union by name, null-filling columns a directory lacks (a table
+        widened by ``append_evolve``). None when no file is chosen."""
+        schemas = m.get("schemas") or {}
+        frames = []
+        for d, paths in by_dir.items():
+            if not paths:
+                continue
+            reader = spark.read
+            if schemas.get(d):
+                reader = reader.schema(self._schema_of(schemas[d]))
+            frames.append(reader.option("basePath", d).parquet(*paths))
+        if not frames:
+            return None
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f, allowMissingColumns=True)
+        return out
 
     def read_version(self, spark: SparkSession, name: str, version: int) -> DataFrame:
         """Time travel to an historical version. Applies the same per-dir
@@ -315,6 +322,16 @@ class TableStore:
                    else _derived_readback_schema(df.schema))
         if derived is not None:
             return derived
+        if partition_by and not _data_files([path]):
+            # an empty partitioned write leaves no file to infer from (and
+            # the dir would not read at all): record the written schema,
+            # partition columns last as a partitioned read returns them
+            from pyspark.sql.types import StructType
+
+            fields = df.schema.fields
+            return _derived_readback_schema(StructType(
+                [f for f in fields if f.name not in partition_by]
+                + [f for c in partition_by for f in fields if f.name == c]))
         return self._dir_schema(df.sparkSession, path, partition_by)
 
     def _dir_schema(self, spark: SparkSession, path: str,
@@ -419,74 +436,143 @@ class TableStore:
         raise ConcurrentWriteError(
             f"append to '{name}' lost the commit race 20 times")
 
+    def _rewrite(self, spark: SparkSession, name: str, snapshot: dict,
+                 predicates: Sequence[tuple[str, str, object]], transform,
+                 operation: str, *, adds_rows: bool = False,
+                 metrics: dict | None = None,
+                 txn: tuple[str, int] | None = None,
+                 manifest_extra: dict | None = None) -> int | None:
+        """The store's one copy-on-write commit: link the untouched data,
+        rewrite the rest. Files of ``snapshot`` whose stats or hive
+        partition values provably exclude the conjunctive ``predicates``
+        are hard-linked into a new data directory; every other file (no
+        stats entry included) is read as one frame, ``transform(frame)``
+        is written first, the links are added beside it, and the commit
+        pins ``snapshot``: a commit that landed since raises
+        ConcurrentWriteError instead of losing its rows. The commit
+        records its exact read/write file sets (``changed_old`` /
+        ``changed_new``) for the change feed.
+
+        With no candidate file, a caller that cannot add rows (DELETE,
+        UPDATE) gets None — no commit, no Spark job; one that can
+        (``adds_rows``) has ``transform`` run over an empty frame of the
+        snapshot's schema."""
+        from projectone_spark.store.skipping import prune_files
+
+        m = snapshot
+        part = m["partition_by"]
+        kept, _ = prune_files(m, predicates)
+        candidates = {f["path"] for f in kept}
+        entries = {f["path"] for f in (m.get("files") or [])}
+        touched: dict[str, list[str]] = {}
+        linkable: list[tuple[str, str]] = []
+        for d in m["dirs"]:
+            for p in _data_files([d]):
+                # a file with no stats entry was never examined by pruning
+                if p in candidates or p not in entries:
+                    touched.setdefault(d, []).append(p)
+                else:
+                    linkable.append((d, p))
+        if not touched and not adds_rows:
+            return None
+        frame = self._read_files(spark, m, touched)
+        if frame is None:
+            frame = self._read_manifest(spark, m).limit(0)
+        out = transform(frame)
+        nd = self._new_data_dir(name)
+        written = self._write_dir(out, nd, part)
+        linked = set()
+        for d, p in linkable:
+            dst = os.path.join(nd, os.path.relpath(p, d))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            _link_file(p, dst)
+            linked.add(dst)
+        # the new dir's read-back schema is recorded only when uniformity
+        # is provable: every linked-from dir carries exactly the recorded
+        # schema the fresh files read back as. Otherwise readers fall back
+        # to inference, and read_merged keeps its footer-merging path.
+        recorded = m.get("schemas") or {}
+        uniform = all(recorded.get(d) == written for d, _ in linkable)
+        cols = m.get("stats_columns") or []
+        sets = m.get("set_columns") or []
+        files = self._stats_for([nd], cols, sets)
+        fresh = [f for f in files if f["path"] not in linked]
+        stats = {
+            **(metrics or {}),
+            "files_rewritten": sum(map(len, touched.values())),
+            "files_linked": len(linked),
+            "rows_scanned": sum(_footer_rows(p) for ps in touched.values()
+                                for p in ps),
+            "rows_after_rewrite": sum(f["rows"] for f in fresh),
+            "changed_old": touched,
+            "changed_new": [f["path"] for f in fresh],
+        }
+        if part:
+            stats["replaced_partitions"] = sorted(
+                {os.path.relpath(os.path.dirname(p), d)
+                 for d, ps in touched.items() for p in ps})
+        return self._commit(name, [nd], part, operation, stats,
+                            stats_columns=cols, set_columns=sets,
+                            files=files, txn=txn,
+                            # index maintenance (indexes.drop_from_index)
+                            # re-stamps through the SAME atomic commit
+                            manifest_extra=manifest_extra,
+                            expected_base=m["version"],
+                            schemas={nd: written if uniform else None})
+
     def selective_overwrite(self, spark: SparkSession, df: DataFrame, name: str,
                             replace_where: str | None = None,
                             partition_values: dict[str, list] | None = None,
                             partition_by: Sequence[str] | None = None) -> int:
-        """Delta ``replaceWhere`` semantics (the reference declares
-        `selective_overwrite` but never implemented it — sources.py:85).
+        """Delta ``replaceWhere`` (the reference declares
+        `selective_overwrite` but never implemented it — sources.py:85):
+        the rows matching the condition are replaced by ``df``.
 
-        Two paths:
-        - ``partition_values`` on a partitioned table: rewrite only the
-          matching partition directories; untouched partitions are
-          hard-linked into the new version (metadata-only at cloud scale);
-        - general ``replace_where`` predicate: keep-rows = anti-filter of
-          the current snapshot, union with the new data, full snapshot swap
-          (the fallback Delta itself uses for non-partition predicates).
+        The condition is ``replace_where`` (SQL) AND one ``col IN (values)``
+        per ``partition_values`` entry. Both run through :meth:`_rewrite`:
+        the ``partition_values`` terms prune, so files whose hive partition
+        values or stats exclude them are hard-linked untouched; the other
+        files keep their rows outside the condition, and the commit
+        records its exact changed-file sets. A ``replace_where``-only
+        call reads every file. Rows whose condition is NULL are kept.
+
+        Every row of ``df`` must satisfy the condition (Delta's
+        replaceWhere constraint check): a row outside it fails the write,
+        naming the table and the condition. ``partition_by`` applies only
+        when the table does not exist yet.
         """
         m = self.manifest(name)
         if m is None:
             return self.overwrite(spark, df, name, partition_by)
-        part = m["partition_by"]
+        import pyspark.sql.functions as F
 
-        if partition_values and part and set(partition_values) <= set(part):
-            new_dir = self._new_data_dir(name)
-            data_schema = self._write_dir(df, new_dir, part)
-            # re-link every old partition dir that is NOT being replaced
-            replaced = {
-                f"{col}={v}" for col, vals in partition_values.items() for v in vals
-            }
-            linked = False
-            for old in m["dirs"]:
-                for entry in os.listdir(old):
-                    src = os.path.join(old, entry)
-                    if not os.path.isdir(src) or entry in replaced:
-                        continue
-                    dst = os.path.join(new_dir, entry)
-                    if not os.path.exists(dst):
-                        _link_tree(src, dst)
-                        linked = True
-            cols = m.get("stats_columns") or []
-            sets = m.get("set_columns") or []
-            # a re-linked dir mixes fresh files with files from prior
-            # commits; record its read-back schema ONLY when uniformity
-            # is provable — every linked-from dir carries the same
-            # recorded schema and both the fresh data (pre-link) and the
-            # whole dir (post-link) infer to exactly it. Otherwise leave
-            # the dir unrecorded: readers fall back to inference and
-            # read_merged keeps its true footer-merging path (its fast
-            # path relies on recorded dirs being internally uniform).
-            post_schema = self._dir_schema(spark, new_dir, part)
-            prior = {(m.get("schemas") or {}).get(d) for d in m["dirs"]}
-            uniform = (not linked) or (prior == {post_schema}
-                                       and data_schema == post_schema)
-            return self._commit(name, [new_dir], part, "selective_overwrite",
-                                {"replaced_partitions": sorted(replaced)},
-                                stats_columns=cols, set_columns=sets,
-                                files=self._stats_for([new_dir], cols, sets),
-                                schemas=({new_dir: post_schema}
-                                         if uniform else None))
+        from projectone_spark.store.skipping import (
+            _validate_predicates,
+            predicates_to_sql,
+            sql_ident,
+        )
 
-        if replace_where is None and partition_values:
-            replace_where = " AND ".join(
-                "({})".format(" OR ".join(f"{c} = {v!r}" for v in vals))
-                for c, vals in partition_values.items())
-        if replace_where is None:
+        predicates = _validate_predicates(
+            [(c, "in", vals) for c, vals in (partition_values or {}).items()])
+        terms = ([predicates_to_sql(predicates)] if predicates else []) \
+            + ([f"({replace_where})"] if replace_where else [])
+        if not terms:
             raise ValueError("selective_overwrite needs replace_where or partition_values")
-        current = self.read(spark, name)
-        kept = current.filter(f"NOT ({replace_where})")
-        merged = kept.unionByName(df, allowMissingColumns=False)
-        return self.overwrite(spark, merged, name, part or None)
+        cond = " AND ".join(terms)
+        outside = F.expr(f"({cond}) IS NOT TRUE")
+        first = df.columns[0]
+        # folded into an OUTPUT column (like merge_into's duplicate-match
+        # guard) so the check rides the write's own job
+        checked = df.withColumn(first, F.when(outside, F.raise_error(F.lit(
+            f"selective_overwrite on '{name}': a source row falls outside "
+            f"the replaced range {cond}; filter the source to it or widen "
+            f"the condition"))).otherwise(F.col(sql_ident(first))))
+        return self._rewrite(
+            spark, name, m, predicates,
+            lambda cand: cand.filter(outside).unionByName(
+                checked, allowMissingColumns=True),
+            "selective_overwrite", adds_rows=True,
+            metrics={"predicate": cond})
 
 
 #: Spark type-json names whose parquet read-back provably equals the
@@ -628,19 +714,41 @@ def last_commit_stats(store: TableStore, name: str) -> dict:
             "num_bytes": n_bytes, "partition_by": m["partition_by"]}
 
 
-def _link_tree(src: str, dst: str) -> None:
-    """Hard-link a directory tree (fallback: copy). Stands in for the
+def _link_file(src: str, dst: str) -> None:
+    """Hard-link one file (fallback: copy). Stands in for the
     manifest-only file re-add a cloud table format would do."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
+def _link_tree(src: str, dst: str) -> None:
+    """:func:`_link_file` over a directory tree."""
     os.makedirs(dst, exist_ok=True)
     for entry in os.listdir(src):
         s, d = os.path.join(src, entry), os.path.join(dst, entry)
         if os.path.isdir(s):
             _link_tree(s, d)
         else:
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
+            _link_file(s, d)
+
+
+def _data_files(dirs: Sequence[str]) -> list[str]:
+    """Every parquet data file under ``dirs``, in a stable order."""
+    out = []
+    for d in dirs:
+        for dirpath, _, files in os.walk(d):
+            for fn in sorted(files):
+                if fn.endswith(".parquet"):
+                    out.append(os.path.join(dirpath, fn))
+    return out
+
+
+def _footer_rows(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
 
 
 def read_changes(store: TableStore, spark: SparkSession, name: str,
@@ -651,34 +759,19 @@ def read_changes(store: TableStore, spark: SparkSession, name: str,
 
     Append commits are metadata-only: the delta is exactly the data
     directories the commit added, so reading changes costs one scan of the
-    new files. DML commits (delete/update/merge) record their exact
+    new files. Commits made by ``TableStore._rewrite`` (delete / update /
+    merge, selective overwrites, partition-pruned SCD1) record their exact
     read/write file sets, so the delta diffs only the touched files —
     cost ∝ files changed, not table size. Other snapshot-rewriting commits
-    (overwrite / scd merges) don't materialize change files in this store,
-    so the delta is computed as exceptAll both ways — correct, but a full
-    compare; a production deployment on Delta gets those change files for
-    free at write time.
+    (overwrite / unpruned scd merges) don't materialize change files in
+    this store, so the delta is computed as exceptAll both ways — correct,
+    but a full compare; a production deployment on Delta gets those
+    change files for free at write time.
 
     Output adds ``_change_type`` ('insert' | 'delete') and
     ``_commit_version`` columns, mirroring CDF's shape.
     """
     import pyspark.sql.functions as F
-
-    def _read_paths(by_dir: dict, part: list) -> DataFrame | None:
-        frames = []
-        for d, ps in by_dir.items():
-            if not ps:
-                continue
-            r = spark.read
-            if part:
-                r = r.option("basePath", d)
-            frames.append(r.parquet(*ps))
-        if not frames:
-            return None
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
 
     history = {m["version"]: m for m in store.history(name)}
     if not history:
@@ -699,12 +792,10 @@ def read_changes(store: TableStore, spark: SparkSession, name: str,
             continue
         changed_old = (m.get("metrics") or {}).get("changed_old")
         if changed_old is not None and prev is not None:
-            part = m["partition_by"]
-            nd = m["dirs"][0]
-            old = _read_paths(changed_old, part)
-            new = _read_paths({nd: (m["metrics"].get("changed_new") or [])},
-                              part)
-            empty = store.read(spark, name).limit(0)
+            old = store._read_files(spark, prev, changed_old)
+            new = store._read_files(
+                spark, m, {m["dirs"][0]: m["metrics"].get("changed_new")})
+            empty = store._read_manifest(spark, m).limit(0)
             old = old if old is not None else empty
             new = new if new is not None else empty
         else:

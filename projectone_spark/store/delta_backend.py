@@ -162,7 +162,8 @@ def delta_restore(spark: SparkSession, path: str, version: int) -> Any:
 class DeltaStore:
     """TableStore-shaped adapter over real Delta tables: the subset of the
     store surface the writers consume (``exists`` / ``read`` / ``manifest``
-    / ``append`` / ``overwrite`` / ``selective_overwrite``), so
+    / ``append`` / ``overwrite`` / ``selective_overwrite`` /
+    ``_rewrite``), so
     ``write_scd1/2/3``, the streaming ``foreach_batch_writer``, and CDC
     all route through DeltaTable commits unchanged when delta-spark is on
     the cluster. Construct only after checking :func:`delta_available`.
@@ -223,17 +224,33 @@ class DeltaStore:
                             name: str, replace_where: str | None = None,
                             partition_values: dict[str, list] | None = None,
                             partition_by: Sequence[str] | None = None) -> int:
+        from projectone_spark.store.skipping import predicates_to_sql
+
         p = self._path(name)
         if replace_where is None and partition_values:
-            replace_where = " AND ".join(
-                "({})".format(" OR ".join(f"{c} = {v!r}" for v in vals))
-                for c, vals in partition_values.items())
+            replace_where = predicates_to_sql(
+                [(c, "in", vals) for c, vals in partition_values.items()])
         if replace_where is None:
             raise ValueError(
                 "selective_overwrite needs replace_where or partition_values")
         delta_create_if_not_exists(spark, p, df, partition_by=partition_by)
         delta_overwrite(spark, p, df, partition_by=partition_by,
                         replace_where=replace_where)
+        return delta_version(spark, p)
+
+    def _rewrite(self, spark: SparkSession, name: str, snapshot: dict,
+                 predicates: Sequence[tuple[str, str, object]], transform,
+                 operation: str, **_: Any) -> int:
+        """``TableStore._rewrite``'s contract for the partition-pruned
+        SCD1: the rows of ``snapshot`` inside the predicates' range are
+        transformed and written back with ``replaceWhere`` (Delta prunes
+        the files and checks for conflicting commits itself)."""
+        from projectone_spark.store.skipping import predicates_to_sql
+
+        cond = predicates_to_sql(predicates)
+        cand = self.read(spark, name, snapshot=snapshot).filter(cond)
+        p = self._path(name)
+        delta_overwrite(spark, p, transform(cand), replace_where=cond)
         return delta_version(spark, p)
 
 

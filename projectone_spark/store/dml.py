@@ -1,11 +1,12 @@
-"""Row-level DML on the TableStore: DELETE and UPDATE with copy-on-write
-file rewrite — the Delta ``DELETE FROM`` / ``UPDATE`` surface the reference
-gets from Delta Lake (its SCD writers assume it exists underneath;
-``core/execution/write.py`` merges are the row-level path it actually
-exercises).
+"""Row-level DML on the TableStore: DELETE, UPDATE and MERGE with
+copy-on-write file rewrite — the Delta ``DELETE FROM`` / ``UPDATE`` /
+``MERGE INTO`` surface the reference gets from Delta Lake (its SCD writers
+assume it exists underneath; ``core/execution/write.py`` merges are the
+row-level path it actually exercises). Each statement is a transform over
+the store's one copy-on-write commit, ``TableStore._rewrite``.
 
 Scale design: a DELETE that touches 0.1% of a 100 TB table must not rewrite
-100 TB. Both operators prune with the same file-level min/max + hive
+100 TB. Every operator prunes with the same file-level min/max + hive
 partition statistics ``read_where`` uses (``store/skipping.py``):
 
 - files whose stats provably exclude the predicate are **hard-linked** into
@@ -20,154 +21,34 @@ optimization, never a correctness filter.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Mapping, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from projectone_spark.store import TableStore
-from projectone_spark.store.skipping import predicates_to_sql, prune_files
+from projectone_spark.store import ConcurrentWriteError, TableStore
+from projectone_spark.store.skipping import (
+    _validate_predicates,
+    predicates_to_sql,
+)
 
 
-def _footer_rows(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
-def _split_candidates(m: dict, predicates) -> tuple[set[str], list[str]]:
-    """(candidate file paths, dirs with no stats coverage). Uncovered dirs
-    are scanned whole; covered files not in the candidate set are provably
-    untouched."""
-    files = m.get("files") or []
-    covered = {d for d in m["dirs"]
-               if any(f["path"].startswith(d + os.sep) for f in files)}
-    uncovered = [d for d in m["dirs"] if d not in covered]
-    kept, _ = prune_files(m, predicates)
-    return {f["path"] for f in kept}, uncovered
-
-
-def _all_files(dirs: Sequence[str]) -> list[str]:
-    out = []
-    for d in dirs:
-        for dirpath, _, files in os.walk(d):
-            for fn in sorted(files):
-                if fn.endswith(".parquet"):
-                    out.append(os.path.join(dirpath, fn))
-    return out
-
-
-def _rewrite(store: TableStore, spark: SparkSession, name: str,
-             predicates: Sequence[tuple[str, str, object]],
-             transform, operation: str,
-             txn: tuple[str, int] | None = None,
-             manifest_extra: dict | None = None,
-             expected_version: int | None = None) -> int | None:
-    """Shared copy-on-write machinery: link untouched files, apply
-    ``transform(candidate_df, residual_sql) -> DataFrame`` to the touched
-    subset, commit. Returns the new version, or None when pruning proves
-    nothing matches. ``expected_version`` pins the SNAPSHOT the caller
-    prepared against (e.g. the manifest a ``manifest_extra`` stamp was
-    read from): a commit that landed in between raises
-    ConcurrentWriteError here instead of re-publishing stale metadata
-    over the newer contents."""
+def _snapshot(store: TableStore, name: str, operation: str,
+              expected_version: int | None) -> dict:
+    """The manifest a DML statement rewrites (``TableStore._rewrite`` pins
+    it). ``expected_version`` is the version the caller prepared against
+    (e.g. the manifest a ``manifest_extra`` stamp was read from): a commit
+    that landed in between raises here instead of re-publishing stale
+    metadata over the newer contents."""
     m = store.manifest(name)
     if m is None:
         raise FileNotFoundError(f"table '{name}' does not exist")
     if expected_version is not None and m["version"] != expected_version:
-        from projectone_spark.store import ConcurrentWriteError
-
         raise ConcurrentWriteError(
             f"table '{name}' is at version {m['version']}, but this "
             f"{operation} was prepared against version "
             f"{expected_version}; re-read and retry")
-    # materialize any generator-valued 'in' before the SQL render consumes
-    # it (the prune pass below reuses the same predicate list)
-    from projectone_spark.store.skipping import _validate_predicates
-
-    predicates = _validate_predicates(predicates)
-    residual = predicates_to_sql(predicates)
-    part = m["partition_by"]
-
-    candidates, uncovered_dirs = _split_candidates(m, predicates)
-    uncovered_files = _all_files(uncovered_dirs)
-    # a file with no stats entry at all was never examined by pruning:
-    # candidate, not linkable
-    entry_paths = {f["path"] for f in (m.get("files") or [])}
-    unexamined = [p for p in _all_files(m["dirs"])
-                  if p not in entry_paths and p not in uncovered_files]
-    if not candidates and not uncovered_files and not unexamined:
-        return None
-    touched_by_dir: dict[str, list[str]] = {}
-    linked: set[str] = set()
-    nd = store._new_data_dir(name)
-    os.makedirs(nd, exist_ok=True)
-    for d in m["dirs"]:
-        for dirpath, _, files in os.walk(d):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                p = os.path.join(dirpath, fn)
-                if p in candidates or p in uncovered_files or p not in entry_paths:
-                    touched_by_dir.setdefault(d, []).append(p)
-                else:
-                    rel = os.path.relpath(p, d)
-                    dst = os.path.join(nd, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    if dst not in linked:
-                        try:
-                            os.link(p, dst)
-                        except OSError:
-                            import shutil
-                            shutil.copy2(p, dst)
-                        linked.add(dst)
-    # one scan of the touched subset; per-dir basePath so hive partition
-    # columns come back as real columns
-    frames = []
-    for d, paths in touched_by_dir.items():
-        r = spark.read
-        if part:
-            r = r.option("basePath", d)
-        frames.append(r.parquet(*paths))
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f)
-    out = transform(df, residual)
-    writer = out.write.mode("append")
-    if part:
-        writer = writer.partitionBy(*part)
-    writer.parquet(nd)
-
-    rows_before = sum(_footer_rows(p)
-                      for ps in touched_by_dir.values() for p in ps)
-    rows_after = sum(_footer_rows(p) for p in _all_files([nd])
-                     if p not in linked)
-    cols = m.get("stats_columns") or []
-    new_paths = [p for p in _all_files([nd]) if p not in linked]
-    return store._commit(
-        name, [nd], part, operation,
-        {"predicate": residual,
-         "files_rewritten": sum(len(v) for v in touched_by_dir.values()),
-         "files_linked": len(linked),
-         "rows_scanned": rows_before,
-         "rows_after_rewrite": rows_after,
-         # the commit's exact read/write set: the change feed diffs ONLY
-         # these files instead of comparing whole snapshots
-         "changed_old": {d: ps for d, ps in touched_by_dir.items()},
-         "changed_new": new_paths},
-        stats_columns=cols,
-        set_columns=m.get("set_columns") or [],
-        files=store._stats_for([nd], cols, m.get("set_columns") or []),
-        txn=txn,
-        # validated index maintenance (store.indexes.drop_from_index)
-        # re-stamps through the SAME atomic commit — plain DML callers
-        # pass nothing and the stamp drops, per the _commit contract
-        manifest_extra=manifest_extra,
-        # a concurrent commit since our snapshot read means this rewrite
-        # would drop its rows — fail, don't clobber (Delta's
-        # ConcurrentAppendException for DELETE/UPDATE/MERGE)
-        expected_base=m["version"])
+    return m
 
 
 def delete_where(store: TableStore, spark: SparkSession, name: str,
@@ -180,12 +61,18 @@ def delete_where(store: TableStore, spark: SparkSession, name: str,
     Copy-on-write: only files that may contain matching rows are rewritten
     without them. Returns the committed version, or None when file stats
     prove no row matches (no commit, exactly like a no-op Delta DELETE
-    that prunes every file)."""
-    return _rewrite(
-        store, spark, name, predicates,
-        lambda df, residual: df.filter(f"NOT ({residual})"),
-        "delete", manifest_extra=manifest_extra, txn=txn,
-        expected_version=expected_version)
+    that prunes every file). Rows whose predicate is NULL are kept, as in
+    SQL."""
+    m = _snapshot(store, name, "delete", expected_version)
+    # materialize any generator-valued 'in' once: the SQL render and the
+    # file pruning both consume the list
+    predicates = _validate_predicates(predicates)
+    residual = predicates_to_sql(predicates)
+    return store._rewrite(
+        spark, name, m, predicates,
+        lambda df: df.filter(f"({residual}) IS NOT TRUE"), "delete",
+        metrics={"predicate": residual}, txn=txn,
+        manifest_extra=manifest_extra)
 
 
 def update_where(store: TableStore, spark: SparkSession, name: str,
@@ -198,8 +85,11 @@ def update_where(store: TableStore, spark: SparkSession, name: str,
     bad = [c for c in assignments if c.startswith("__")]
     if bad:
         raise ValueError(f"cannot assign metadata columns: {bad}")
+    m = _snapshot(store, name, "update", None)
+    predicates = _validate_predicates(predicates)
+    residual = predicates_to_sql(predicates)
 
-    def apply(df: DataFrame, residual: str) -> DataFrame:
+    def apply(df: DataFrame) -> DataFrame:
         missing = [c for c in assignments if c not in df.columns]
         if missing:
             raise ValueError(f"unknown columns in SET: {missing}")
@@ -208,7 +98,8 @@ def update_where(store: TableStore, spark: SparkSession, name: str,
             c: F.when(cond, F.expr(e)).otherwise(F.col(c))
             for c, e in assignments.items()})
 
-    return _rewrite(store, spark, name, predicates, apply, "update")
+    return store._rewrite(spark, name, m, predicates, apply, "update",
+                          metrics={"predicate": residual})
 
 
 def merge_into(store: TableStore, spark: SparkSession, name: str,
@@ -253,11 +144,9 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
     files join the source. The source is scanned twice (bounds + join) —
     checkpoint upstream if its lineage is expensive.
     """
-    m = store.manifest(name)
-    if m is None:
-        raise FileNotFoundError(f"table '{name}' does not exist")
+    m = _snapshot(store, name, "merge", expected_version)
     keys = list(keys)
-    tgt_probe = store.read(spark, name)
+    tgt_probe = store.read(spark, name, snapshot=m)
     missing = [k for k in keys if k not in tgt_probe.columns or k not in source.columns]
     if missing:
         raise ValueError(f"merge keys missing from source or target: {missing}")
@@ -282,7 +171,7 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
             predicates.append((k, ">=", bounds[f"lo_{k}"]))
             predicates.append((k, "<=", bounds[f"hi_{k}"]))
 
-    def apply(tgt: DataFrame, _residual: str) -> DataFrame:
+    def apply(tgt: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
         if evolving:
@@ -351,20 +240,8 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
             out_cols.append(val.alias(c))
         return joined.filter(keep).select(*out_cols)
 
-    v = _rewrite(store, spark, name, predicates, apply, "merge", txn=txn,
-                 manifest_extra=manifest_extra,
-                 expected_version=expected_version)
-    if v is None and when_not_matched_insert:
-        # every target file pruned, but source-only rows still insert
-        ins = source.alias("source")
-        if not_matched_condition:
-            ins = ins.filter(F.expr(not_matched_condition))
-        if ins.limit(1).count() > 0:
-            fields = list(tgt_probe.schema.fields) + [
-                source.schema[c] for c in evolving]
-            aligned = ins.select(*[
-                F.col(f.name) if f.name in source.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in fields])
-            return store.append(spark, aligned, name, txn=txn)
-    return v
+    # with every target file pruned, the merge runs over an empty target:
+    # only the source-only inserts remain
+    return store._rewrite(spark, name, m, predicates, apply, "merge",
+                          adds_rows=when_not_matched_insert, txn=txn,
+                          manifest_extra=manifest_extra)

@@ -141,7 +141,7 @@ def clone(store: TableStore, name: str, target: str) -> int:
     """Delta ``CREATE TABLE ... CLONE``: snapshot ``name`` into a new
     independent table. Data files are HARD-LINKED into the target table's
     own directory (metadata-only cost on one filesystem, the same trick
-    ``selective_overwrite`` uses for untouched partitions), so vacuuming
+    ``TableStore._rewrite`` uses for untouched files), so vacuuming
     or dropping the source never breaks the clone — unlike a Delta
     shallow clone, which this otherwise matches in cost."""
     m = store.manifest(name)

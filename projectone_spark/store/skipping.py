@@ -413,6 +413,14 @@ def _validate_predicates(
     return out
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier (embedded backticks
+    doubled): spaces, dots, reserved words and non-ASCII letters all stay
+    a single column reference. The one quoting rule for every SQL string
+    the engine builds (re-exported by ``writers.hashing``)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _sql_literal(val) -> str:
     if isinstance(val, str):
         return "'" + val.replace("'", "''") + "'"
@@ -434,9 +442,10 @@ def predicates_to_sql(predicates: Sequence[tuple[str, str, object]]) -> str:
     for col, op, val in predicates:
         if op == "in":
             lits = ", ".join(_sql_literal(v) for v in val)
-            parts.append(f"({col} IN ({lits}))")
+            parts.append(f"({sql_ident(col)} IN ({lits}))")
         else:
-            parts.append(f"({col} {'=' if op == '==' else op} {_sql_literal(val)})")
+            parts.append(f"({sql_ident(col)} {'=' if op == '==' else op} "
+                         f"{_sql_literal(val)})")
     return " AND ".join(parts)
 
 

@@ -113,6 +113,13 @@ def write_selective_overwrite(spark: SparkSession, store: TableStore,
                                      partition_by=partition_by)
 
 
+def _unrename(tgt: DataFrame, rename: Mapping[str, str] | None) -> DataFrame:
+    """Undo ``rename`` so merge logic sees canonical metadata names."""
+    if not rename:
+        return tgt
+    return rename_metadata_columns(tgt, {v: k for k, v in rename.items()})
+
+
 def _read_target(spark: SparkSession, store: TableStore, table: str,
                  snapshot: dict | None,
                  rename: Mapping[str, str] | None) -> DataFrame | None:
@@ -120,11 +127,7 @@ def _read_target(spark: SparkSession, store: TableStore, table: str,
     None for a table that does not exist yet)."""
     if snapshot is None:
         return None
-    tgt = store.read(spark, table, snapshot=snapshot)
-    if rename:  # un-rename so merge logic sees canonical metadata names
-        inverse = {v: k for k, v in rename.items()}
-        tgt = rename_metadata_columns(tgt, inverse)
-    return tgt
+    return _unrename(store.read(spark, table, snapshot=snapshot), rename)
 
 
 def _base_version(snapshot: dict | None) -> int:
@@ -134,19 +137,16 @@ def _base_version(snapshot: dict | None) -> int:
     return -1 if snapshot is None else snapshot["version"]
 
 
-def _partition_prune(spark: SparkSession, store: TableStore, df: DataFrame,
-                     table: str, *, max_partition_values: int | None = None
-                     ) -> tuple[DataFrame | None, dict | None]:
+def _partition_prune(df: DataFrame, table: str, partition_by: Sequence[str],
+                     *, max_partition_values: int | None = None
+                     ) -> dict[str, list] | None:
     """Merge-condition partition pruning (reference
     ``use_partition_attributes_in_merge``, SURVEY §4 "Merge join pruning"):
-    when the target is partitioned on a column the source carries, only the
-    partitions holding source keys participate — the target read is
-    partition-filtered, and the commit replaces only those partition
-    directories (the rest re-link, metadata-only). At 100 TB this is the
-    difference between rewriting a day and rewriting a decade.
-
-    Returns ``(pruned_target, partition_values)`` or ``(full_target, None)``
-    when pruning doesn't apply.
+    the distinct source values of each target partition column the source
+    carries, or None when there is none. The caller rewrites only the
+    files in those partitions (``TableStore._rewrite``); the rest re-link,
+    metadata-only. At 100 TB this is the difference between rewriting a
+    day and rewriting a decade.
 
     ``max_partition_values`` overrides the :data:`MAX_PARTITION_VALUES` cap
     for legitimately wide writes (e.g. a multi-year hourly backfill) without
@@ -154,18 +154,12 @@ def _partition_prune(spark: SparkSession, store: TableStore, df: DataFrame,
     """
     cap = MAX_PARTITION_VALUES if max_partition_values is None \
         else max_partition_values
-    m = store.manifest(table)
-    if m is None:
-        return None, None
-    part = [p for p in m["partition_by"] if p in df.columns]
-    if not part:
-        return store.read(spark, table), None
-    # distinct partition values of the source: small by construction
-    # (same cardinality class as a partition listing). The collect is capped:
-    # a mistyped/high-cardinality partition column must fail fast, not OOM the
-    # driver at scale.
     values = {}
-    for p in part:
+    for p in [p for p in partition_by if p in df.columns]:
+        # distinct partition values of the source: small by construction
+        # (same cardinality class as a partition listing). The collect is
+        # capped: a mistyped/high-cardinality partition column must fail
+        # fast, not OOM the driver at scale.
         vals = [r[p] for r in
                 df.select(p).distinct().limit(cap + 1).collect()]
         if len(vals) > cap:
@@ -176,19 +170,16 @@ def _partition_prune(spark: SparkSession, store: TableStore, df: DataFrame,
                 f"partition_prune, fix partition_by, or raise "
                 f"max_partition_values for a wide backfill")
         if any(v is None for v in vals):
-            # NULL can't round-trip through the prune: isin() would silently
-            # drop null-partition target rows and the store's col=value
-            # directory key has no null spelling — fail loudly instead.
+            # NULL can't round-trip through the prune: an IN predicate
+            # never matches null-partition target rows and the store's
+            # col=value directory key has no null spelling — fail loudly.
             raise ValueError(
                 f"partition pruning on {table!r}: source has NULL values in "
                 f"partition column {p!r} — nulls are not valid partition "
                 f"prune values; clean the source or write without "
                 f"partition_prune")
         values[p] = vals
-    tgt = store.read(spark, table)
-    for p, vals in values.items():
-        tgt = tgt.filter(F.col(p).isin(vals))
-    return tgt, values
+    return values or None
 
 
 def write_scd1(spark: SparkSession, store: TableStore, df: DataFrame,
@@ -200,26 +191,28 @@ def write_scd1(spark: SparkSession, store: TableStore, df: DataFrame,
                algo: str = "md5",
                partition_prune: bool = False,
                max_partition_values: int | None = None) -> int:
-    if partition_prune:
-        target, values = _partition_prune(
-            spark, store, df, table,
-            max_partition_values=max_partition_values)
-        if values is not None:
-            if rename and target is not None:
-                inverse = {v: k for k, v in rename.items()}
-                target = rename_metadata_columns(target, inverse)
-            merged = scd1_merge(df, target, key_cols, data_cols=data_cols,
-                                dedup_on_keys=dedup_on_keys, now=now, algo=algo)
-            return store.selective_overwrite(
-                spark, rename_metadata_columns(merged, rename), table,
-                partition_values=values)
+    """SCD1 upsert. With ``partition_prune`` on a partitioned table, only
+    the partitions holding source rows are read, merged and rewritten
+    (``TableStore._rewrite``, recorded as a ``selective_overwrite``)."""
     snapshot = store.manifest(table)
-    target = _read_target(spark, store, table, snapshot, rename)
-    merged = scd1_merge(df, target, key_cols, data_cols=data_cols,
-                        dedup_on_keys=dedup_on_keys, now=now, algo=algo)
-    return store.overwrite(spark, rename_metadata_columns(merged, rename),
-                           table, partition_by,
-                           _expected_base=_base_version(snapshot))
+
+    def merge(target: DataFrame | None) -> DataFrame:
+        merged = scd1_merge(df, target, key_cols, data_cols=data_cols,
+                            dedup_on_keys=dedup_on_keys, now=now, algo=algo)
+        return rename_metadata_columns(merged, rename)
+
+    values = (_partition_prune(df, table, snapshot["partition_by"],
+                               max_partition_values=max_partition_values)
+              if partition_prune and snapshot is not None else None)
+    if values:
+        return store._rewrite(
+            spark, table, snapshot,
+            [(p, "in", vals) for p, vals in values.items()],
+            lambda cand: merge(_unrename(cand, rename)),
+            "selective_overwrite", adds_rows=True)
+    return store.overwrite(
+        spark, merge(_read_target(spark, store, table, snapshot, rename)),
+        table, partition_by, _expected_base=_base_version(snapshot))
 
 
 def write_scd2(spark: SparkSession, store: TableStore, df: DataFrame,

@@ -10,7 +10,9 @@ materialization — a long column shuffles ~4× less than a 32-char string).
 Hashes are built as SQL expression text (one ``F.expr`` each), not as a
 tree of ``Column`` objects: every ``Column`` node is one py4j round trip,
 so a per-column tree costs the driver O(columns) JVM calls per hash.
-:func:`sql_ident` is the one quoting rule every such string uses.
+:func:`sql_ident` (defined beside the store's predicate renderer,
+``store.skipping``, and re-exported here) is the one quoting rule every
+such string uses.
 """
 
 from __future__ import annotations
@@ -19,6 +21,8 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+
+from projectone_spark.store.skipping import sql_ident
 
 KEY_HASH = "__metadata_key_hash__"
 DATA_HASH = "__metadata_data_hash__"
@@ -38,13 +42,6 @@ METADATA_COLUMNS = (
 
 #: SCD2 open-row sentinel (reference ``write.py`` valid_to default).
 SCD2_SENTINEL = "9999-12-31 00:00:00"
-
-
-def sql_ident(name: str) -> str:
-    """``name`` as one backtick-quoted SQL identifier (embedded backticks
-    doubled): spaces, dots, reserved words and non-ASCII letters all stay
-    a single column reference."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def sql_string(value: str) -> str:

@@ -285,3 +285,41 @@ def test_merge_into_schema_evolution(spark, store):
     assert got.filter(F.col("channel").isNull()).count() == df.count() - 5
     # the snapshot is schema-uniform: no linked files with the old schema
     assert store.manifest("orders")["metrics"]["files_linked"] == 0
+
+
+def test_delete_records_readback_schema(spark, store):
+    """A rewrite of an unpartitioned table records its new directory's
+    read-back schema, so later reads of the DML'd table skip inference."""
+    df = _orders(spark)
+    store.overwrite(spark, df.repartitionByRange(4, "o_orderkey"), "orders",
+                    stats_columns=["o_orderkey"])
+    lo = int(df.agg(F.min("o_orderkey")).first()[0])
+    delete_where(store, spark, "orders", [("o_orderkey", "==", lo)])
+    m = store.manifest("orders")
+    assert m["metrics"]["files_linked"] >= 1
+    assert set(m["schemas"]) == set(m["dirs"])
+    assert store.read(spark, "orders").count() == df.count() - 1
+
+
+def test_delete_keeps_rows_whose_predicate_is_null(spark, store):
+    """SQL DELETE semantics: a NULL predicate does not match."""
+    rows = [(1, 10), (2, None), (3, 30)]
+    store.overwrite(spark, spark.createDataFrame(rows, "id long, v long"), "t")
+    delete_where(store, spark, "t", [("v", ">", 20)])
+    assert sorted(r["id"] for r in store.read(spark, "t").collect()) == [1, 2]
+
+
+@pytest.mark.parametrize("col", ["order date", "select"])
+def test_dml_and_selective_overwrite_quote_column_names(spark, store, col):
+    """Predicate SQL quotes identifiers: a column named with a space or a
+    reserved word stays one column reference."""
+    schema = f"id long, `{col}` string"
+    store.overwrite(spark, spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], schema), "t",
+        partition_by=[col], stats_columns=["id"])
+    delete_where(store, spark, "t", [(col, "==", "a")])
+    store.selective_overwrite(
+        spark, spark.createDataFrame([(9, "b")], schema), "t",
+        partition_values={col: ["b"]})
+    got = sorted((r["id"], r[col]) for r in store.read(spark, "t").collect())
+    assert got == [(3, "c"), (9, "b")]

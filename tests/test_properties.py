@@ -185,6 +185,41 @@ def test_delete_update_match_filter_model(spark, tmp_path_factory, rows, cut):
     assert got == expect
 
 
+PARTS = st.sampled_from(["p0", "p1", "p2"])
+PART_ROWS = st.lists(st.tuples(KEYS, PARTS, VALS), min_size=1, max_size=5)
+
+
+@given(appends=st.lists(PART_ROWS, min_size=1, max_size=3),
+       replaced=st.sets(PARTS, min_size=1),
+       new=st.lists(st.tuples(KEYS, VALS), max_size=4),
+       data=st.data())
+@SLOW
+def test_selective_overwrite_matches_python_model(spark, tmp_path_factory,
+                                                  appends, replaced, new,
+                                                  data):
+    """selective_overwrite(partition_values=...) over a table built from
+    1-3 appends (so untouched partitions span several data directories)
+    equals {rows outside the replaced partitions} + the source rows."""
+    from collections import Counter
+
+    from projectone_spark.store import TableStore
+
+    schema = "id long, grp string, v long"
+    store = TableStore(str(tmp_path_factory.mktemp("sel")))
+    for rows in appends:
+        store.append(spark, spark.createDataFrame(rows, schema), "t",
+                     partition_by=["grp"])
+    src = [(k, data.draw(st.sampled_from(sorted(replaced))), v)
+           for k, v in new]
+    store.selective_overwrite(spark, spark.createDataFrame(src, schema), "t",
+                              partition_values={"grp": sorted(replaced)})
+    expect = Counter([r for rows in appends for r in rows
+                      if r[1] not in replaced] + src)
+    got = Counter((r["id"], r["grp"], r["v"])
+                  for r in store.read(spark, "t").collect())
+    assert got == expect
+
+
 # -- r4 corpus operators vs pure-Python models --------------------------------
 
 WORDS = st.lists(st.sampled_from(["the", "a", "data", "spark", "query",

@@ -8,7 +8,7 @@ import pyspark.sql.functions as F
 
 from projectone_spark.functions.skew import salted_agg, salted_join, with_salt
 from projectone_spark.store import TableStore
-from projectone_spark.writers import write_overwrite, write_scd1
+from projectone_spark.writers import write_append, write_overwrite, write_scd1
 
 SCHEMA = "id long, grp string, v long"
 
@@ -140,3 +140,21 @@ def test_partition_prune_rejects_null_partition_values(spark, tmp_path):
     with pytest.raises(ValueError, match="NULL values in partition column"):
         write_scd1(spark, store, src, "t", key_cols=["id"],
                    partition_prune=True)
+
+
+def test_scd1_partition_prune_keeps_untouched_rows_of_every_dir(spark,
+                                                                tmp_path):
+    """An append adds a second data directory; the pruned merge must keep
+    the untouched partition's rows from both directories."""
+    store = TableStore(str(tmp_path / "store"))
+    write_overwrite(spark, store, spark.createDataFrame(
+        [(1, "p1", 10), (3, "p2", 30)], SCHEMA), "t", partition_by=["grp"])
+    write_append(spark, store, spark.createDataFrame(
+        [(4, "p2", 40)], SCHEMA), "t")
+    src = spark.createDataFrame([(1, "p1", 11), (5, "p1", 50)], SCHEMA)
+    write_scd1(spark, store, src, "t", key_cols=["id"], partition_prune=True)
+    got = sorted((r["id"], r["grp"], r["v"])
+                 for r in store.read(spark, "t").collect())
+    assert got == [(1, "p1", 11), (3, "p2", 30), (4, "p2", 40),
+                   (5, "p1", 50)]
+    assert store.manifest("t")["metrics"]["replaced_partitions"] == ["grp=p1"]

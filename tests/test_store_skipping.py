@@ -275,7 +275,7 @@ def test_value_set_in_predicate_sql_and_interval(spark, store):
     from projectone_spark.store.skipping import predicates_to_sql
 
     assert predicates_to_sql([("c", "in", ("a", "b'c"))]) == \
-        "(c IN ('a', 'b''c'))"
+        "(`c` IN ('a', 'b''c'))"
     df = _orders(spark)
     store.overwrite(spark, df.repartitionByRange(4, "o_orderkey")
                     .sortWithinPartitions("o_orderkey"),

@@ -145,32 +145,59 @@ def test_merge_into_records_txn_watermark(spark, tmp_path):
     assert store.txn_version("t", "app") == 1
 
 
-@pytest.mark.parametrize("write_type", ["scd1", "scd2", "scd3"])
-def test_scd_write_raises_on_concurrent_append(spark, store, monkeypatch,
-                                               write_type):
-    """An append committed between an SCD write's snapshot read and its
-    commit must fail the SCD write (whose overwrite would drop the
-    appended row), and the appended row must still be in the table."""
+def _racing_writes(write_type, t0, t1):
+    """(initial write, racing write) for one case; each is called with
+    (spark, store, df) on table 'dim'."""
     from projectone_spark.writers import WRITERS
 
-    t0 = F.lit("2024-01-01").cast("timestamp")
-    t1 = F.lit("2024-02-01").cast("timestamp")
+    if write_type.startswith("selective"):
+        cond = ({"partition_values": {"id": [2]}}
+                if write_type == "selective_partition_values"
+                else {"replace_where": "id = 2"})
+        return (lambda spark, store, df: store.overwrite(
+                    spark, df, "dim", partition_by=["id"]),
+                lambda spark, store, df: store.selective_overwrite(
+                    spark, df, "dim", **cond))
+    scd = write_type.removesuffix("_partition_prune")
     kwargs = {"scd1": lambda t: {"now": t},
               "scd2": lambda t: {"valid_from": t},
-              "scd3": lambda t: {"now": t, "tracked_cols": ["name"]}}[write_type]
-    write = WRITERS[write_type]
-    write(spark, store, spark.createDataFrame([(1, "a"), (2, "b")],
-                                              "id long, name string"),
-          "dim", key_cols=["id"], **kwargs(t0))
+              "scd3": lambda t: {"now": t, "tracked_cols": ["name"]}}[scd]
+    first, second = kwargs(t0), kwargs(t1)
+    if write_type == "scd1_partition_prune":
+        first["partition_by"] = ["id"]
+        second["partition_prune"] = True
+    write = WRITERS[scd]
+    return (lambda spark, store, df: write(spark, store, df, "dim",
+                                           key_cols=["id"], **first),
+            lambda spark, store, df: write(spark, store, df, "dim",
+                                           key_cols=["id"], **second))
+
+
+@pytest.mark.parametrize("write_type", [
+    "scd1", "scd2", "scd3", "scd1_partition_prune",
+    "selective_partition_values", "selective_replace_where"])
+def test_scd_write_raises_on_concurrent_append(spark, store, monkeypatch,
+                                               write_type):
+    """An append committed between a rewriting write's snapshot read and
+    its commit must fail that write (whose commit would drop the appended
+    row), and the appended row must still be in the table. Covers the
+    SCD writers, the partition-pruned SCD1 and both selective-overwrite
+    forms."""
+    t0 = F.lit("2024-01-01").cast("timestamp")
+    t1 = F.lit("2024-02-01").cast("timestamp")
+    initial, racing = _racing_writes(write_type, t0, t1)
+    initial(spark, store, spark.createDataFrame([(1, "a"), (2, "b")],
+                                                "id long, name string"))
     current = store.read(spark, "dim")
-    extra = spark.createDataFrame(
-        [(99, *current.filter("id = 1").first()[1:])], current.schema)
+    # by name: a table partitioned on id reads it back as the last column
+    row = current.filter("id = 1").first().asDict()
+    extra = spark.createDataFrame([{**row, "id": 99}], current.schema)
 
     fired = []
     orig = TableStore._write_dir
 
     def hijack(self, df, path, partition_by, capture_schema=True):
-        # the SCD overwrite's data write: a concurrent append commits first
+        # the rewrite's data write: a concurrent append commits first
         if not fired:
             fired.append(True)
             store.append(spark, extra, "dim")
@@ -179,6 +206,6 @@ def test_scd_write_raises_on_concurrent_append(spark, store, monkeypatch,
     monkeypatch.setattr(TableStore, "_write_dir", hijack)
     update = spark.createDataFrame([(2, "B")], "id long, name string")
     with pytest.raises(ConcurrentWriteError, match="re-read and retry"):
-        write(spark, store, update, "dim", key_cols=["id"], **kwargs(t1))
+        racing(spark, store, update)
     assert fired
     assert store.read(spark, "dim").filter("id = 99").count() == 1

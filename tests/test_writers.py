@@ -96,6 +96,56 @@ def test_selective_overwrite_replace_where(spark, store):
     assert _rows(got, "id", "name") == [(1, "a"), (2, "b"), (3, "c"), (4, "D")]
 
 
+def _two_dir_table(spark, store):
+    """grp-partitioned table whose p2 rows span two data directories."""
+    grp = F.when(F.col("id") <= 2, "p1").otherwise("p2")
+    write_overwrite(spark, store, _df(spark, BASE[:4]).withColumn("grp", grp),
+                    "t", partition_by=["grp"], now=_ts(T0))
+    write_append(spark, store, _df(spark, BASE[4:]).withColumn("grp", grp),
+                 "t", now=_ts(T0))
+    assert len(store.manifest("t")["dirs"]) == 2
+
+
+def test_selective_overwrite_keeps_untouched_rows_of_every_dir(spark, store):
+    _two_dir_table(spark, store)
+    repl = _df(spark, [(9, "z", 90)]).withColumn("grp", F.lit("p1"))
+    write_selective_overwrite(spark, store, repl, "t",
+                              partition_values={"grp": ["p1"]}, now=_ts(T1))
+    got = store.read(spark, "t")
+    assert _rows(got, "id", "grp") == [
+        (3, "p2"), (4, "p2"), (5, "p2"), (6, "p2"), (9, "p1")]
+    m = store.manifest("t")
+    # exact changed-file sets: only p1's file was read and replaced
+    assert m["metrics"]["replaced_partitions"] == ["grp=p1"]
+    assert m["metrics"]["files_linked"] >= 2  # p2 files of both dirs
+
+
+@pytest.mark.parametrize("cond", [{"partition_values": {"grp": ["p1"]}},
+                                  {"replace_where": "grp = 'p1'"}],
+                         ids=["partition_values", "replace_where"])
+def test_selective_overwrite_rejects_rows_outside_range(spark, store, cond):
+    """Delta's replaceWhere constraint: a source row outside the replaced
+    range fails the write instead of replacing rows it never named."""
+    _two_dir_table(spark, store)
+    v = store.version("t")
+    stray = _df(spark, [(9, "z", 90), (8, "y", 80)]).withColumn(
+        "grp", F.when(F.col("id") == 9, "p1").otherwise("p2"))
+    with pytest.raises(Exception, match="selective_overwrite on 't'.*p1"):
+        write_selective_overwrite(spark, store, stray, "t", now=_ts(T1),
+                                  **cond)
+    assert store.version("t") == v
+    assert store.read(spark, "t").count() == 6
+
+
+def test_selective_overwrite_replace_where_keeps_null_rows(spark, store):
+    """Rows whose condition is NULL are not in the replaced range."""
+    rows = [(1, "a", 10), (2, "b", None)]
+    write_overwrite(spark, store, _df(spark, rows), "t", now=_ts(T0))
+    write_selective_overwrite(spark, store, _df(spark, [(3, "c", 30)]), "t",
+                              replace_where="offset >= 10", now=_ts(T1))
+    assert _rows(store.read(spark, "t"), "id") == [(2,), (3,)]
+
+
 # -- scd1 -------------------------------------------------------------------
 
 def test_scd1_two_run_upsert(spark, store):
