@@ -15,7 +15,7 @@ Delta is used only through an explicitly built
 ``store.delta_backend.DeltaStore``; this class never switches to it.
 
 Scale notes: data directories may be hive-partitioned (``partition_by``).
-Row-level rewrites (``selective_overwrite``, partition-pruned SCD1, the
+Row-level rewrites (``selective_overwrite``, the SCD1/2/3 key merges, the
 ``dml`` DELETE / UPDATE / MERGE) share one copy-on-write commit,
 :meth:`TableStore._rewrite`: files that file stats or hive partition values
 prove untouched are hard-linked into the new version, not copied. Reading
@@ -760,13 +760,13 @@ def read_changes(store: TableStore, spark: SparkSession, name: str,
     Append commits are metadata-only: the delta is exactly the data
     directories the commit added, so reading changes costs one scan of the
     new files. Commits made by ``TableStore._rewrite`` (delete / update /
-    merge, selective overwrites, partition-pruned SCD1) record their exact
-    read/write file sets, so the delta diffs only the touched files —
-    cost ∝ files changed, not table size. Other snapshot-rewriting commits
-    (overwrite / unpruned scd merges) don't materialize change files in
-    this store, so the delta is computed as exceptAll both ways — correct,
-    but a full compare; a production deployment on Delta gets those
-    change files for free at write time.
+    merge, selective overwrites, SCD1/2/3) record their exact read/write
+    file sets, so the delta diffs only the touched files — cost ∝ files
+    changed, not table size. A plain overwrite (and compact / optimize /
+    zorder / restore) records no change files, so its delta is the two
+    whole snapshots compared with exceptAll both ways — correct, but a
+    full compare; a production deployment on Delta gets those change
+    files for free at write time.
 
     Output adds ``_change_type`` ('insert' | 'delete') and
     ``_commit_version`` columns, mirroring CDF's shape.
@@ -786,7 +786,9 @@ def read_changes(store: TableStore, spark: SparkSession, name: str,
         if m["operation"] == "append" and prev is not None:
             new_dirs = [d for d in m["dirs"] if d not in set(prev["dirs"])]
             if new_dirs:
-                frames.append(spark.read.parquet(*new_dirs)
+                added = store._read_files(spark, m,
+                                          {d: [d] for d in new_dirs})
+                frames.append(added
                               .withColumn("_change_type", F.lit("insert"))
                               .withColumn("_commit_version", F.lit(v)))
             continue
@@ -799,8 +801,8 @@ def read_changes(store: TableStore, spark: SparkSession, name: str,
             old = old if old is not None else empty
             new = new if new is not None else empty
         else:
-            new = spark.read.parquet(*m["dirs"])
-            old = (spark.read.parquet(*prev["dirs"]) if prev is not None
+            new = store._read_manifest(spark, m)
+            old = (store._read_manifest(spark, prev) if prev is not None
                    else new.limit(0))
         frames.append(new.exceptAll(old)
                       .withColumn("_change_type", F.lit("insert"))

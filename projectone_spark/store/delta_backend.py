@@ -1,9 +1,9 @@
-"""Delta Lake passthrough backend — used automatically when delta-spark is
-importable, so the engine's write/CDF surface binds to real Delta tables on
-clusters that have it (the reference is built directly on DeltaTable:
+"""Delta Lake passthrough backend. An explicitly built :class:`DeltaStore`
+binds the engine's write/CDF surface to real Delta tables on clusters that
+have delta-spark (the reference is built directly on DeltaTable:
 ``core/execution/write.py:437``, ``core/sources/delta_source.py:32-45``,
-``core/utils/delta.py:84-133``), while this container's TableStore provides
-the same semantics where the package is absent.
+``core/utils/delta.py:84-133``). Nothing switches to it automatically;
+``TableStore`` provides the same semantics without the package.
 
 Design: one thin adapter per operation, all calls expressed through
 delta-spark's *public* API (``DeltaTable.forPath`` / ``merge`` /
@@ -19,8 +19,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
-import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def delta_available() -> bool:
@@ -112,15 +111,6 @@ def delta_scd1_merge(spark: SparkSession, path: str, source: DataFrame, *,
      .execute())
 
 
-def delta_delete_where(spark: SparkSession, path: str, predicate: str) -> None:
-    _delta_table(spark, path).delete(predicate)
-
-
-def delta_update_where(spark: SparkSession, path: str, predicate: str,
-                       assignments: dict[str, Column | str]) -> None:
-    _delta_table(spark, path).update(predicate, assignments)
-
-
 def delta_read_cdf(spark: SparkSession, path: str, *,
                    starting_version: int = 0,
                    ending_version: int | None = None) -> DataFrame:
@@ -140,33 +130,14 @@ def delta_version(spark: SparkSession, path: str) -> int:
     return int(hist[0]) if hist else -1
 
 
-def delta_optimize(spark: SparkSession, path: str,
-                   zorder_by: Sequence[str] | None = None) -> Any:
-    dt = _delta_table(spark, path)
-    opt = dt.optimize()
-    return (opt.executeZOrderBy(*zorder_by) if zorder_by
-            else opt.executeCompaction())
-
-
-def delta_vacuum(spark: SparkSession, path: str,
-                 retention_hours: float | None = None) -> Any:
-    dt = _delta_table(spark, path)
-    return dt.vacuum(retention_hours) if retention_hours is not None \
-        else dt.vacuum()
-
-
-def delta_restore(spark: SparkSession, path: str, version: int) -> Any:
-    return _delta_table(spark, path).restoreToVersion(version)
-
-
 class DeltaStore:
     """TableStore-shaped adapter over real Delta tables: the subset of the
     store surface the writers consume (``exists`` / ``read`` / ``manifest``
     / ``append`` / ``overwrite`` / ``selective_overwrite`` /
-    ``_rewrite``), so
-    ``write_scd1/2/3``, the streaming ``foreach_batch_writer``, and CDC
-    all route through DeltaTable commits unchanged when delta-spark is on
-    the cluster. Construct only after checking :func:`delta_available`.
+    ``_rewrite``), so ``write_scd1/2/3``, the streaming
+    ``foreach_batch_writer``, and CDC route through DeltaTable commits
+    unchanged when a caller passes a ``DeltaStore`` instead of a
+    ``TableStore``. Construct only after checking :func:`delta_available`.
     """
 
     def __init__(self, root: str):
@@ -182,7 +153,7 @@ class DeltaStore:
         return os.path.join(self.root, name)
 
     def exists(self, name: str) -> bool:
-        return delta_exists_at_root(self, name)
+        return delta_exists(SparkSession.getActiveSession(), self._path(name))
 
     def read(self, spark: SparkSession, name: str,
              snapshot: dict | None = None) -> DataFrame:
@@ -241,38 +212,18 @@ class DeltaStore:
     def _rewrite(self, spark: SparkSession, name: str, snapshot: dict,
                  predicates: Sequence[tuple[str, str, object]], transform,
                  operation: str, **_: Any) -> int:
-        """``TableStore._rewrite``'s contract for the partition-pruned
-        SCD1: the rows of ``snapshot`` inside the predicates' range are
-        transformed and written back with ``replaceWhere`` (Delta prunes
-        the files and checks for conflicting commits itself)."""
+        """``TableStore._rewrite``'s contract for the SCD key merges: the
+        rows of ``snapshot`` inside the predicates' range are transformed
+        and written back with ``replaceWhere`` (Delta prunes the files and
+        checks for conflicting commits itself). With no predicate the
+        whole snapshot is transformed and replaces the table."""
         from projectone_spark.store.skipping import predicates_to_sql
 
         cond = predicates_to_sql(predicates)
-        cand = self.read(spark, name, snapshot=snapshot).filter(cond)
+        cand = self.read(spark, name, snapshot=snapshot)
+        if cond:
+            cand = cand.filter(cond)
         p = self._path(name)
-        delta_overwrite(spark, p, transform(cand), replace_where=cond)
+        delta_overwrite(spark, p, transform(cand), replace_where=cond or None)
         return delta_version(spark, p)
 
-
-def delta_exists_at_root(store: "DeltaStore", name: str) -> bool:
-    spark = SparkSession.getActiveSession()
-    return delta_exists(spark, store._path(name))
-
-
-def scd2_snapshot_rewrite(spark: SparkSession, path: str, source: DataFrame,
-                          *, key_cols: Sequence[str],
-                          valid_from: Column | str | None = None,
-                          **kw: Any) -> None:
-    """SCD2 on Delta: the classification transform is engine-agnostic, so
-    reuse writers.merge.scd2_apply on the current Delta snapshot and
-    overwrite — semantically identical to the reference's two-statement
-    MERGE+append (``write.py:799-844``) with one atomic commit instead of
-    two. For very large targets prefer partition-pruned replaceWhere via
-    ``delta_overwrite``."""
-    from projectone_spark.writers.merge import scd2_apply
-
-    target = (spark.read.format("delta").load(path)
-              if delta_exists(spark, path) else None)
-    out = scd2_apply(source, target, key_cols, valid_from=valid_from, **kw)
-    delta_create_if_not_exists(spark, path, out)
-    delta_overwrite(spark, path, out)

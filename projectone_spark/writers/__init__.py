@@ -14,11 +14,15 @@ Metadata stamping matches the reference (FIXTURES.md §2):
 - scd3 adds prev_<col> + column-key hash.
 All metadata columns are renameable (``rename_metadata_columns``) and the
 scd2 active flag values remappable (``active_record_value_mapping``).
+
+SCD1/2/3 are ``build(target) -> merged`` transforms over one commit path,
+:func:`_merge_write`: it creates a missing table, or rewrites an existing
+one through ``TableStore._rewrite``, recorded as ``scd1``/``scd2``/``scd3``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -120,33 +124,52 @@ def _unrename(tgt: DataFrame, rename: Mapping[str, str] | None) -> DataFrame:
     return rename_metadata_columns(tgt, {v: k for k, v in rename.items()})
 
 
-def _read_target(spark: SparkSession, store: TableStore, table: str,
-                 snapshot: dict | None,
-                 rename: Mapping[str, str] | None) -> DataFrame | None:
-    """The merge target as of ``snapshot`` (``store.manifest(table)``, or
-    None for a table that does not exist yet)."""
+def _merge_write(spark: SparkSession, store: TableStore, table: str,
+                 build: Callable[[DataFrame | None], DataFrame],
+                 operation: str, *,
+                 partition_by: Sequence[str] | None = None,
+                 rename: Mapping[str, str] | None = None,
+                 prune: Callable[[list[str]], list] | None = None) -> int:
+    """The one commit path of every key-merge write (SCD1/2/3).
+
+    ``build(target)`` returns the merged table, with canonical metadata
+    names, from the current target (None when the table does not exist).
+    The manifest is read once. A missing table is created by ``overwrite``
+    pinned to "no table yet", so a concurrent creator makes it raise. An
+    existing table is rewritten by ``TableStore._rewrite`` over that
+    snapshot, recorded as ``operation``: a commit that lands in between
+    raises ``ConcurrentWriteError``, the table keeps its partition spec,
+    and the commit records its changed-file sets for ``read_changes``.
+    ``prune(partition_spec)`` gives the pruning predicates; files they
+    exclude are re-linked unread. Without it every file is read.
+    """
+    snapshot = store.manifest(table)
     if snapshot is None:
-        return None
-    return _unrename(store.read(spark, table, snapshot=snapshot), rename)
-
-
-def _base_version(snapshot: dict | None) -> int:
-    """The version a read-modify-write pins as ``_expected_base``, so a
-    commit landing after ``snapshot`` was read raises
-    ``ConcurrentWriteError`` instead of being overwritten."""
-    return -1 if snapshot is None else snapshot["version"]
+        return store.overwrite(
+            spark, rename_metadata_columns(build(None), rename), table,
+            partition_by, _expected_base=-1)
+    spec = snapshot["partition_by"]
+    if partition_by and list(partition_by) != spec:
+        raise ValueError(
+            f"{operation} on {table!r}: partition_by {list(partition_by)} "
+            f"!= table {spec}; omit partition_by to keep the table's spec")
+    return store._rewrite(
+        spark, table, snapshot, prune(spec) if prune else [],
+        lambda cand: rename_metadata_columns(
+            build(_unrename(cand, rename)), rename),
+        operation, adds_rows=True)
 
 
 def _partition_prune(df: DataFrame, table: str, partition_by: Sequence[str],
                      *, max_partition_values: int | None = None
-                     ) -> dict[str, list] | None:
+                     ) -> list[tuple[str, str, list]]:
     """Merge-condition partition pruning (reference
     ``use_partition_attributes_in_merge``, SURVEY §4 "Merge join pruning"):
-    the distinct source values of each target partition column the source
-    carries, or None when there is none. The caller rewrites only the
-    files in those partitions (``TableStore._rewrite``); the rest re-link,
-    metadata-only. At 100 TB this is the difference between rewriting a
-    day and rewriting a decade.
+    one ``(col, "in", values)`` predicate per target partition column the
+    source carries, with the source's distinct values. The caller rewrites
+    only the files in those partitions (``TableStore._rewrite``); the rest
+    re-link, metadata-only. At 100 TB this is the difference between
+    rewriting a day and rewriting a decade.
 
     ``max_partition_values`` overrides the :data:`MAX_PARTITION_VALUES` cap
     for legitimately wide writes (e.g. a multi-year hourly backfill) without
@@ -154,7 +177,7 @@ def _partition_prune(df: DataFrame, table: str, partition_by: Sequence[str],
     """
     cap = MAX_PARTITION_VALUES if max_partition_values is None \
         else max_partition_values
-    values = {}
+    preds = []
     for p in [p for p in partition_by if p in df.columns]:
         # distinct partition values of the source: small by construction
         # (same cardinality class as a partition listing). The collect is
@@ -178,8 +201,8 @@ def _partition_prune(df: DataFrame, table: str, partition_by: Sequence[str],
                 f"partition column {p!r} — nulls are not valid partition "
                 f"prune values; clean the source or write without "
                 f"partition_prune")
-        values[p] = vals
-    return values or None
+        preds.append((p, "in", vals))
+    return preds
 
 
 def write_scd1(spark: SparkSession, store: TableStore, df: DataFrame,
@@ -192,27 +215,19 @@ def write_scd1(spark: SparkSession, store: TableStore, df: DataFrame,
                partition_prune: bool = False,
                max_partition_values: int | None = None) -> int:
     """SCD1 upsert. With ``partition_prune`` on a partitioned table, only
-    the partitions holding source rows are read, merged and rewritten
-    (``TableStore._rewrite``, recorded as a ``selective_overwrite``)."""
-    snapshot = store.manifest(table)
+    the files in partitions holding source rows are read, merged and
+    rewritten; the rest are re-linked (see :func:`_merge_write`)."""
+    def build(target: DataFrame | None) -> DataFrame:
+        return scd1_merge(df, target, key_cols, data_cols=data_cols,
+                          dedup_on_keys=dedup_on_keys, now=now, algo=algo)
 
-    def merge(target: DataFrame | None) -> DataFrame:
-        merged = scd1_merge(df, target, key_cols, data_cols=data_cols,
-                            dedup_on_keys=dedup_on_keys, now=now, algo=algo)
-        return rename_metadata_columns(merged, rename)
+    def prune(spec: list[str]) -> list[tuple[str, str, list]]:
+        return _partition_prune(df, table, spec,
+                                max_partition_values=max_partition_values)
 
-    values = (_partition_prune(df, table, snapshot["partition_by"],
-                               max_partition_values=max_partition_values)
-              if partition_prune and snapshot is not None else None)
-    if values:
-        return store._rewrite(
-            spark, table, snapshot,
-            [(p, "in", vals) for p, vals in values.items()],
-            lambda cand: merge(_unrename(cand, rename)),
-            "selective_overwrite", adds_rows=True)
-    return store.overwrite(
-        spark, merge(_read_target(spark, store, table, snapshot, rename)),
-        table, partition_by, _expected_base=_base_version(snapshot))
+    return _merge_write(spark, store, table, build, "scd1",
+                        partition_by=partition_by, rename=rename,
+                        prune=prune if partition_prune else None)
 
 
 def write_scd2(spark: SparkSession, store: TableStore, df: DataFrame,
@@ -232,31 +247,31 @@ def write_scd2(spark: SparkSession, store: TableStore, df: DataFrame,
     into a per-key history chain (reference window repair,
     ``write.py:875-960``): all but the newest version insert as closed
     rows, the newest goes through the normal merge."""
-    snapshot = store.manifest(table)
-    target = _read_target(spark, store, table, snapshot, rename)
-    if fix_duplicates_by_key:
-        history, df = scd2_compact(df, key_cols, data_cols=data_cols,
-                                   valid_from=valid_from, sentinel=sentinel,
-                                   algo=algo)
-        merged = scd2_apply(df, target, key_cols, data_cols=data_cols,
-                            valid_from=valid_from, sentinel=sentinel,
-                            dedup_on_keys=False, algo=algo,
-                            history_start=history_start)
-        merged = merged.unionByName(history)
-    else:
-        merged = scd2_apply(df, target, key_cols, data_cols=data_cols,
-                            valid_from=valid_from, sentinel=sentinel,
-                            dedup_on_keys=dedup_on_keys, algo=algo,
-                            history_start=history_start)
-    if active_mapping:
-        # reference active_record_value_mapping (write.py:617-624)
-        y = sql_string(active_mapping.get("Y", "Y"))
-        n = sql_string(active_mapping.get("N", "N"))
-        merged = merged.withColumn(ACTIVE, F.expr(
-            f"CASE WHEN {sql_ident(ACTIVE)} = 'Y' THEN {y} ELSE {n} END"))
-    return store.overwrite(spark, rename_metadata_columns(merged, rename),
-                           table, partition_by,
-                           _expected_base=_base_version(snapshot))
+    def build(target: DataFrame | None) -> DataFrame:
+        if fix_duplicates_by_key:
+            history, latest = scd2_compact(
+                df, key_cols, data_cols=data_cols, valid_from=valid_from,
+                sentinel=sentinel, algo=algo)
+            merged = scd2_apply(latest, target, key_cols,
+                                data_cols=data_cols, valid_from=valid_from,
+                                sentinel=sentinel, dedup_on_keys=False,
+                                algo=algo, history_start=history_start)
+            merged = merged.unionByName(history)
+        else:
+            merged = scd2_apply(df, target, key_cols, data_cols=data_cols,
+                                valid_from=valid_from, sentinel=sentinel,
+                                dedup_on_keys=dedup_on_keys, algo=algo,
+                                history_start=history_start)
+        if active_mapping:
+            # reference active_record_value_mapping (write.py:617-624)
+            y = sql_string(active_mapping.get("Y", "Y"))
+            n = sql_string(active_mapping.get("N", "N"))
+            merged = merged.withColumn(ACTIVE, F.expr(
+                f"CASE WHEN {sql_ident(ACTIVE)} = 'Y' THEN {y} ELSE {n} END"))
+        return merged
+
+    return _merge_write(spark, store, table, build, "scd2",
+                        partition_by=partition_by, rename=rename)
 
 
 def scd2_compact(source: DataFrame, key_cols: Sequence[str], *,
@@ -302,13 +317,13 @@ def write_scd3(spark: SparkSession, store: TableStore, df: DataFrame,
                partition_by: Sequence[str] | None = None,
                rename: Mapping[str, str] | None = None,
                algo: str = "md5") -> int:
-    snapshot = store.manifest(table)
-    target = _read_target(spark, store, table, snapshot, rename)
-    merged = scd3_apply(df, target, key_cols, tracked_cols, data_cols=data_cols,
-                        dedup_on_keys=dedup_on_keys, now=now, algo=algo)
-    return store.overwrite(spark, rename_metadata_columns(merged, rename),
-                           table, partition_by,
-                           _expected_base=_base_version(snapshot))
+    def build(target: DataFrame | None) -> DataFrame:
+        return scd3_apply(df, target, key_cols, tracked_cols,
+                          data_cols=data_cols, dedup_on_keys=dedup_on_keys,
+                          now=now, algo=algo)
+
+    return _merge_write(spark, store, table, build, "scd3",
+                        partition_by=partition_by, rename=rename)
 
 
 def check_table_constraints(spark: SparkSession, store: TableStore,

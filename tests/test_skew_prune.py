@@ -60,7 +60,7 @@ def test_scd1_partition_prune_relinks_untouched(spark, tmp_path):
     assert sorted((r["id"], r["v"]) for r in got.collect()) == \
         [(1, 10), (2, 99), (3, 30), (4, 40), (5, 50)]
     m = store.manifest("t")
-    assert m["operation"] == "selective_overwrite"
+    assert m["operation"] == "scd1"
     assert m["metrics"]["replaced_partitions"] == ["grp=p1"]
     # p2's data files were re-linked, not rewritten: same inode content
     # (hard link count > 1 on at least one old parquet file)

@@ -325,6 +325,107 @@ def test_scd3_second_tracked_change_overwrites_prev(spark, store):
     assert (r2["name"], r2["prev_name"]) == ("C", "B")
 
 
+# -- one commit path: partition spec, commit record, change feed -----------
+
+def _scd_writer(spark, store, write_type):
+    """``write(df, t, **kw)`` for one SCD type on table 't', keyed on id."""
+    return {
+        "scd1": lambda df, t, **kw: write_scd1(
+            spark, store, df, "t", key_cols=["id"], now=_ts(t), **kw),
+        "scd2": lambda df, t, **kw: write_scd2(
+            spark, store, df, "t", key_cols=["id"], valid_from=_ts(t), **kw),
+        "scd3": lambda df, t, **kw: write_scd3(
+            spark, store, df, "t", key_cols=["id"], tracked_cols=["name"],
+            now=_ts(t), **kw),
+    }[write_type]
+
+
+def _same_rows(a, b) -> bool:
+    """Multiset equality of two frames over ``b``'s columns."""
+    a = a.select(*b.columns)
+    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+@pytest.mark.parametrize("write_type", ["scd1", "scd2", "scd3"])
+def test_scd_write_keeps_partition_spec(spark, store, write_type):
+    """An SCD write that omits ``partition_by`` keeps an existing table's
+    partition spec and rows; a different ``partition_by`` raises, naming
+    the table and both specs, and commits nothing."""
+    write = _scd_writer(spark, store, write_type)
+    grp = F.expr("IF(id <= 3, 'p1', 'p2')")
+    write(_df(spark, BASE).withColumn("grp", grp), T0, partition_by=["grp"])
+    write(_df(spark, [(2, "B", 20), (7, "g", 70)]).withColumn("grp", grp), T1)
+
+    m = store.manifest("t")
+    assert m["partition_by"] == ["grp"]
+    assert m["files"] and all("/grp=p" in f["path"] for f in m["files"])
+    got = store.read(spark, "t")
+    if write_type == "scd2":
+        assert got.count() == 8
+        got = got.filter(F.col(ACTIVE) == "Y")
+    assert _rows(got, "id", "name", "grp") == [
+        (1, "a", "p1"), (2, "B", "p1"), (3, "c", "p1"), (4, "d", "p2"),
+        (5, "e", "p2"), (6, "f", "p2"), (7, "g", "p2")]
+
+    with pytest.raises(ValueError,
+                       match=r"'t': partition_by \['name'\] != table \['grp'\]"):
+        write(_df(spark, [(3, "C", 30)]).withColumn("grp", grp), T2,
+              partition_by=["name"])
+    assert store.version("t") == m["version"]
+
+
+@pytest.mark.parametrize("write_type", ["scd2", "scd1"])
+def test_scd_commit_records_operation_and_changes(spark, store, write_type):
+    """An SCD increment is recorded as its write type with the rewrite's
+    metrics, and the change feed over it is the exact snapshot diff."""
+    from projectone_spark.store import read_changes
+
+    write = _scd_writer(spark, store, write_type)
+    write(_df(spark, BASE), T0)
+    v = write(_df(spark, [(2, "B", 20), (7, "g", 70)]), T1)
+
+    m = store.manifest("t")
+    assert (m["version"], m["operation"]) == (v, write_type)
+    assert {"files_rewritten", "rows_scanned", "rows_after_rewrite",
+            "changed_old", "changed_new"} <= set(m["metrics"])
+    assert m["metrics"]["rows_scanned"] == 6
+    assert m["metrics"]["rows_after_rewrite"] == (8 if write_type == "scd2"
+                                                  else 7)
+
+    changes = read_changes(store, spark, "t", v, v)
+    new = store.read_version(spark, "t", v)
+    old = store.read_version(spark, "t", v - 1)
+    assert _same_rows(changes.filter("_change_type = 'insert'"),
+                      new.exceptAll(old))
+    assert _same_rows(changes.filter("_change_type = 'delete'"),
+                      old.exceptAll(new))
+    # SCD2 inserts id 2's closed row beside its new version; SCD1 replaces it
+    assert changes.filter("_change_type = 'insert'").count() == \
+        (3 if write_type == "scd2" else 2)
+    assert changes.filter("_change_type = 'delete'").count() == 1
+
+
+def test_read_changes_on_partitioned_multi_dir_snapshots(spark, store):
+    """The change feed reads partitioned snapshots of several data
+    directories (an overwrite after an append) and a partitioned append's
+    new directory with their partition columns."""
+    from projectone_spark.store import read_changes
+
+    df = _df(spark, BASE).withColumn("grp", F.expr("IF(id <= 3, 'p1', 'p2')"))
+    store.overwrite(spark, df.filter("id <= 4"), "t", partition_by=["grp"])
+    store.append(spark, df.filter("id > 4"), "t")                       # v1
+    store.overwrite(spark, df.filter("id % 2 = 0"), "t",
+                    partition_by=["grp"])                               # v2
+
+    appended = read_changes(store, spark, "t", 1, 1)
+    assert _rows(appended, "_change_type", "id", "grp") == [
+        ("insert", 5, "p2"), ("insert", 6, "p2")]
+    got = _rows(read_changes(store, spark, "t", 2, 2),
+                "_change_type", "id", "grp")
+    assert got == [("delete", 1, "p1"), ("delete", 3, "p1"),
+                   ("delete", 5, "p2")]
+
+
 # -- constraints + store ----------------------------------------------------
 
 def test_table_constraint(spark, store):
