@@ -18,12 +18,24 @@ string-interpolated SQL (the reference's ``get_spark_string_value``,
 :class:`projectone_spark.store.state.StateStore` under the reference's
 ``{input}_cdc_value`` key shape (``core/task/spark/task.py:519-544``).
 
-The min/max bound resolution is the only driver-side action (two scalars),
-same as the reference — the actual data read stays lazy/pushed-down.
+Where the bounds come from: :func:`resolve_cdc` takes them either from a
+Spark aggregate over the whole source (one job per run, scanning every
+landed file, as in the reference) or, when the caller passes
+``file_bounds``, from per-file min/max values with no Spark job at all.
+``SparkTask`` passes footer bounds for a local directory of parquet files
+(``store.skipping.footer_bounds``) and then reads only the files whose max
+is above the watermark, since landed files never change. It falls back to
+the aggregate for a backfill, a user ``source_schema``, a non-``file:`` or
+hive-partitioned source, an attribute that is not int, long, date,
+timestamp or timestamp_ntz, NANOS or INT96 timestamps, and any row group
+with rows but no min/max (an all-null chunk). Either way the boundary
+rules above live only in :func:`resolve_cdc`, and the data read itself
+stays lazy.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import asdict, dataclass
 from typing import Any
 
@@ -61,38 +73,62 @@ def NO_DATA() -> Column:
 def resolve_cdc(df: DataFrame, attribute: str,
                 prev: CdcState | None = None,
                 backfill: tuple[Any, Any] | None = None,
-                batch_id: str | None = None) -> tuple[Column, CdcState]:
+                batch_id: str | None = None, *,
+                file_bounds: Sequence[tuple[str, Any, Any]] | None = None):
     """Compute the incremental filter predicate and the post-run state.
 
     Returns ``(predicate, new_state)``. Apply the predicate with
     ``df.filter(predicate)``; persist ``new_state`` only after the run
     succeeds (reference persists post-success, ``task.py:519-544``).
+
+    ``file_bounds`` lists ``(path, min, max)`` of ``attribute`` for every
+    non-empty file behind ``df``, exact as Spark would ``collect()`` them.
+    With it no Spark job runs, and the return gains a third item: the
+    paths that can hold rows matching the predicate (empty when nothing
+    is new, None for a backfill, which reads every file). Without it, the
+    bounds come from an aggregate over ``df``.
     """
     attr = F.col(attribute)
 
     if backfill is not None:
         start, end = backfill
         state = CdcState(attribute, start, end, "backfill", batch_id)
-        return (attr >= F.lit(start)) & (attr <= F.lit(end)), state
+        pred = (attr >= F.lit(start)) & (attr <= F.lit(end))
+        return (pred, state) if file_bounds is None else (pred, state, None)
 
-    if prev is None or prev.next_value is None:
+    first = prev is None or prev.next_value is None
+    start = None if first else prev.next_value
+    files = None
+    if file_bounds is not None:
+        chosen = [b for b in file_bounds if first or b[2] > start]
+        files = [b[0] for b in chosen]
+        lo = min((b[1] for b in chosen), default=None) if first else start
+        hi = max((b[2] for b in chosen), default=None)
+    elif first:
         row = df.agg(F.min(attr).alias("lo"), F.max(attr).alias("hi")).collect()[0]
         lo, hi = row["lo"], row["hi"]
-        if lo is None:  # empty source
-            return NO_DATA(), CdcState(attribute, None, None, "incremental", batch_id)
-        state = CdcState(attribute, lo, hi, "incremental", batch_id)
-        return (attr >= F.lit(lo)) & (attr <= F.lit(hi)), state
+    else:
+        lo = start
+        hi = (df.filter(attr > F.lit(start))
+              .agg(F.max(attr).alias("hi")).collect()[0]["hi"])
 
-    start = prev.next_value
-    row = (df.filter(attr > F.lit(start))
-           .agg(F.max(attr).alias("hi")).collect()[0])
-    hi = row["hi"]
-    if hi is None:  # no new data: read nothing, keep state
-        return NO_DATA(), CdcState(attribute, start, start, "incremental", batch_id)
-    state = CdcState(attribute, start, hi, "incremental", batch_id)
-    if hi == start:  # degenerate equal-bound case (delta_source.py:311-328)
-        return attr == F.lit(start), state
-    return (attr > F.lit(start)) & (attr <= F.lit(hi)), state
+    if first:
+        if lo is None:  # empty source
+            pred = NO_DATA()
+            state = CdcState(attribute, None, None, "incremental", batch_id)
+        else:
+            state = CdcState(attribute, lo, hi, "incremental", batch_id)
+            pred = (attr >= F.lit(lo)) & (attr <= F.lit(hi))
+    elif hi is None:  # no new data: read nothing, keep state
+        pred = NO_DATA()
+        state = CdcState(attribute, start, start, "incremental", batch_id)
+    else:
+        state = CdcState(attribute, start, hi, "incremental", batch_id)
+        if hi == start:  # degenerate equal-bound case (delta_source.py:311-328)
+            pred = attr == F.lit(start)
+        else:
+            pred = (attr > F.lit(start)) & (attr <= F.lit(hi))
+    return (pred, state) if file_bounds is None else (pred, state, files)
 
 
 def load_cdc_state(state_store: StateStore, input_name: str) -> CdcState | None:

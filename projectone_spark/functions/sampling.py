@@ -924,6 +924,10 @@ def doremi_reweight(df: DataFrame, text_col: str = "text",
     excess_micro, baseline_micro, weight_micro, boost) — one row per
     domain with at least one token, ``boost = weight/baseline`` HALF-UP
     at 6 dp.
+
+    Eager: building this frame runs Spark jobs. The (domain, term)
+    counts are ``localCheckpoint(eager=True)``-ed in
+    ``text.surprisal_micro_fold`` before it returns.
     """
     from projectone_spark.functions.text import surprisal_micro_fold
 

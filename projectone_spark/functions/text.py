@@ -391,6 +391,9 @@ def surprisal_micro_fold(df: DataFrame, key_col: str,
     the t14/t15 pattern: strictly smaller than the exploded tokens,
     and every consumer reads the materialized RDD.
     Returns (key_col, term, tf, __c, __n, __micro).
+
+    Eager: building this frame runs Spark jobs. The (key, term) counts
+    are ``localCheckpoint(eager=True)``-ed before it returns.
     """
     # ``spread_by`` hash-spreads on a UNIQUE key before the tokenize so
     # the regex/split chain runs parallel instead of inside the (serial,
@@ -473,6 +476,10 @@ def unigram_surprise(df: DataFrame, text_col: str = "text",
 
     Returns (id, n_tokens, surprise_micro, surprise) for documents with
     at least one token.
+
+    Eager: building this frame runs Spark jobs. The (doc, term) counts
+    are ``localCheckpoint(eager=True)``-ed in
+    :func:`surprisal_micro_fold` before it returns.
     """
     return (surprisal_micro_fold(df, id_col, text_col, scale,
                                  spread_by=id_col)
@@ -538,6 +545,9 @@ def bigram_surprise(df: DataFrame, text_col: str = "text",
 
     Returns (id, n_bigrams, surprise_micro, surprise) for documents
     with at least two tokens.
+
+    Eager: building this frame runs Spark jobs. The (doc, bigram) counts
+    are ``localCheckpoint(eager=True)``-ed before it returns.
     """
     # __toks is referenced several times below (size + slice + the
     # lambda's positional lookup), which inhibits CollapseProject from
@@ -642,6 +652,10 @@ def bpe_train_merges(df: DataFrame, text_col: str = "text",
 
     Returns one row per learned rule: (step, left_sym, right_sym,
     merged, pair_count).
+
+    Eager: building this frame runs Spark jobs. Besides one ``collect``
+    per merge, the vocabulary is ``localCheckpoint(eager=True)``-ed once
+    up front and again every ``_BPE_CKPT_EVERY`` merges.
     """
     # the whole encoding rests on sep never occurring inside a symbol,
     # and sep is spliced into a regex replacement and SQL exprs — enforce
@@ -674,7 +688,11 @@ def bpe_train_merges_from_counts(wf: DataFrame, n_merges: int = 8,
     pipeline already checkpoints the (doc, word) counts, and training's
     separate spread→tokenize→explode→count pass over the corpus was the
     single largest duplicated computation in those queries (r12, guide
-    §1.2 step 1 / §2.4: remove passes outright)."""
+    §1.2 step 1 / §2.4: remove passes outright).
+
+    Eager: building this frame runs Spark jobs. Besides one ``collect``
+    per merge, the vocabulary is ``localCheckpoint(eager=True)``-ed once
+    up front and again every ``_BPE_CKPT_EVERY`` merges."""
     _check_bpe_sep(sep)
     wc = wf.groupBy("__w").agg(F.sum("__c").cast("bigint").alias("wc"))
     return _bpe_train_from_word_counts(wc, n_merges, sep)
@@ -779,7 +797,10 @@ def bpe_doc_word_counts(df: DataFrame, text_col: str = "text",
     fold both read a single computed pipeline (the d10 discipline — the
     t10-style exchange-reuse fold does NOT survive here because column
     pruning collapses a count-free vocabulary fold into a plain distinct
-    with its own scan). Columns: (id_col, __w, __c)."""
+    with its own scan). Columns: (id_col, __w, __c).
+
+    Eager: building this frame runs Spark jobs. The (doc, word) counts
+    are ``localCheckpoint(eager=True)``-ed before it returns."""
     # HASH-spread by the id and tokenize AFTER the exchange (r13, guide
     # §1.2/§2.4/§2.5): the old round-robin shape tokenized serially in the
     # map task, sorted fat token arrays (sortBeforeRepartition), and then
@@ -986,6 +1007,10 @@ def bpe_encode(df: DataFrame, merges: Sequence[tuple[str, str]],
     character), n_bpe_tokens the post-merge count, and compression the
     exact 6-dp half-up ratio n_bpe_tokens/n_chars. Documents with no
     tokens are absent (same contract as unigram_surprise).
+
+    Eager: building this frame runs Spark jobs. The (doc, word) counts
+    are ``localCheckpoint(eager=True)``-ed in
+    :func:`bpe_doc_word_counts` before it returns.
     """
     wf = bpe_doc_word_counts(df, text_col, id_col, parallelism)
     # the vocabulary folds the CHECKPOINTED doc-word aggregate, so both
@@ -1000,7 +1025,7 @@ def unigram_word_freqs(df: DataFrame, text_col: str = "text",
                        parallelism: int | None = None) -> DataFrame:
     """(word, freq) corpus word frequencies for the unigram-LM
     tokenizer — its ONE corpus-sized computation, map-side-combining
-    and ``localCheckpoint``-ed (eager=False) because every downstream
+    and ``localCheckpoint``-ed because every downstream
     stage (piece seeding, both Viterbi passes) folds it: the d10/t14
     discipline, one scan no matter how many consumers.
 
@@ -1010,7 +1035,10 @@ def unigram_word_freqs(df: DataFrame, text_col: str = "text",
     (``--max_sentencepiece_length``, Kudo & Richardson 2018 §3); an
     oracle mirroring the DP must unroll exactly ``max_word_len``
     levels, so the cap is part of the operator's contract, not an
-    implementation detail."""
+    implementation detail.
+
+    Eager: building this frame runs Spark jobs. The (word, freq) table
+    is ``localCheckpoint(eager=True)``-ed before it returns."""
     if max_word_len < 1:
         raise ValueError(f"max_word_len must be >= 1, got {max_word_len}")
     # tokenize after the exchange (the bpe_train_merges shape: serial
@@ -1334,6 +1362,9 @@ def linear_token_classifier(df: DataFrame, label: Column, train: Column,
 
     Returns, for rows NOT in the training split: (id, n_tokens,
     logit_micro, score_micro, pred, label).
+
+    Eager: building this frame runs Spark jobs. The (doc, term) counts
+    are ``localCheckpoint(eager=True)``-ed before it returns.
     """
     # hash-spread by the unique id + tokenize post-exchange (r13): the
     # bpe_doc_word_counts shape — parallel tokenize, the (id, ...)

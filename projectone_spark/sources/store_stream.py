@@ -36,9 +36,6 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-_CHANGE_OPS = {"delete", "update", "merge", "compact", "optimize",
-               "restore", "overwrite", "selective_overwrite"}
-
 
 def _manifests(root: str, table: str) -> dict[int, dict]:
     tdir = os.path.join(root, table)

@@ -196,17 +196,20 @@ class TableStore:
     def amend_manifest(self, name: str, mutator) -> dict:
         """Apply ``mutator(manifest_dict)`` to the current manifest and
         atomically republish it (current pointer + its ``_v{n}`` history
-        copy) — the single place manifest-rewrite atomicity lives."""
-        m = self.manifest(name)
-        if m is None:
+        copy) — the single place manifest-rewrite atomicity lives. The
+        read, mutation and publish hold the commit lock, so a commit that
+        lands meanwhile is neither rolled back nor overwritten."""
+        if self.manifest(name) is None:
             raise FileNotFoundError(f"table '{name}' does not exist")
-        mutator(m)
-        tdir = self._table_dir(name)
-        tmp = os.path.join(tdir, f"_manifest.tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        shutil.copy(tmp, os.path.join(tdir, f"_manifest_v{m['version']}.json"))
-        os.replace(tmp, self._manifest_path(name))
+        with self._commit_lock(name):
+            m = self.manifest(name)
+            mutator(m)
+            tdir = self._table_dir(name)
+            tmp = os.path.join(tdir, f"_manifest.tmp.{uuid.uuid4().hex}")
+            with open(tmp, "w") as f:
+                json.dump(m, f, indent=1)
+            shutil.copy(tmp, os.path.join(tdir, f"_manifest_v{m['version']}.json"))
+            os.replace(tmp, self._manifest_path(name))
         return m
 
     def history(self, name: str) -> list[dict]:

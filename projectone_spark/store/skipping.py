@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import json
+import math
 import os
 import urllib.parse
 from collections.abc import Sequence
@@ -98,6 +100,73 @@ def file_stats(dirs: Sequence[str], columns: Sequence[str]) -> list[dict]:
                 out.append({"path": path, "rows": md.num_rows,
                             "bytes": os.path.getsize(path),
                             "min": mins, "max": maxs})
+    return out
+
+
+#: 1900-01-01 in days and micros since the epoch. Spark may rebase older
+#: date/timestamp values between calendars on read, so a footer value
+#: below this floor is not trusted to equal what Spark returns.
+_FLOOR_DAYS = -25_567
+_FLOOR_MICROS = _FLOOR_DAYS * 86_400 * 1_000_000
+
+
+def _raw_scale(col, data_type: T.DataType) -> tuple[int, float] | None:
+    """``(scale, floor)`` such that ``raw * scale`` is Spark's internal value
+    for one parquet column read as ``data_type`` and is exact from
+    ``floor`` up; None when footer values are not exact Spark values
+    (unsigned ints, nanosecond or INT96 timestamps, other types)."""
+    phys = col.physical_type
+    lt = json.loads(col.logical_type.to_json())
+    kind = lt["Type"]
+    if isinstance(data_type, (T.IntegerType, T.LongType)):
+        signed = kind == "None" or (kind == "Int" and lt["isSigned"])
+        return (1, -math.inf) if phys in ("INT32", "INT64") and signed else None
+    if isinstance(data_type, T.DateType):
+        return (1, _FLOOR_DAYS) if phys == "INT32" and kind == "Date" else None
+    utc = isinstance(data_type, T.TimestampType)
+    if not (utc or isinstance(data_type, T.TimestampNTZType)):
+        return None
+    if phys != "INT64" or kind != "Timestamp" or lt["isAdjustedToUTC"] != utc:
+        return None
+    scale = {"milliseconds": 1000, "microseconds": 1}.get(lt["timeUnit"])
+    return None if scale is None else (scale, _FLOOR_MICROS)
+
+
+def footer_bounds(paths: Sequence[str], column: str,
+                  data_type: T.DataType) -> list[tuple[str, object, object]] | None:
+    """Exact per-file ``(path, min, max)`` of one int/long/date/timestamp
+    column, from parquet footers only, as the Python values Spark's
+    ``collect()`` of ``min``/``max`` returns for ``data_type``. Files with
+    no rows are left out. Returns None when any file cannot give exact
+    bounds: the column is missing or of another physical type, or a row
+    group holding rows has no min/max (an all-null chunk)."""
+    import pyarrow.parquet as pq
+
+    out: list[tuple[str, object, object]] = []
+    for path in paths:
+        md = pq.ParquetFile(path).metadata
+        if md.num_rows == 0:
+            continue
+        ci = next((i for i in range(md.num_columns)
+                   if md.schema.column(i).path == column), None)
+        spec = None if ci is None else _raw_scale(md.schema.column(ci), data_type)
+        if spec is None:
+            return None
+        lo = hi = None
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            if g.num_rows == 0:
+                continue
+            st = g.column(ci).statistics
+            if st is None or not st.has_min_max:
+                return None
+            lo = st.min_raw if lo is None else min(lo, st.min_raw)
+            hi = st.max_raw if hi is None else max(hi, st.max_raw)
+        scale, floor = spec
+        if lo * scale < floor:
+            return None
+        out.append((path, data_type.fromInternal(lo * scale),
+                    data_type.fromInternal(hi * scale)))
     return out
 
 

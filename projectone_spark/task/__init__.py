@@ -14,8 +14,10 @@ micro-batch via foreachBatch (see :mod:`projectone_spark.streaming`).
 
 from __future__ import annotations
 
+import os
 import time
 import traceback
+import urllib.parse
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -188,8 +190,23 @@ class SparkTask:
                 backfill = (inp.cdc.backfill_start or rp.range_start,
                             inp.cdc.backfill_end or rp.range_end)
             prev = load_cdc_state(self.state, inp.name)
-            pred, new_state = resolve_cdc(df, inp.cdc.attribute, prev,
-                                          backfill, self.batch_id)
+            bounds = None
+            if backfill is None and not inp.read_options.source_schema:
+                bounds = _footer_file_bounds(df, inp.source, path, opts,
+                                             inp.cdc.attribute)
+            if bounds is None:
+                pred, new_state = resolve_cdc(df, inp.cdc.attribute, prev,
+                                              backfill, self.batch_id)
+            else:
+                pred, new_state, files = resolve_cdc(
+                    df, inp.cdc.attribute, prev, backfill, self.batch_id,
+                    file_bounds=bounds)
+                if files and len(files) < len(bounds):
+                    # landed files are immutable: re-read only those that
+                    # can hold new rows, with the schema already inferred
+                    df = (self.spark.read.format(inp.source)
+                          .options(**{k: str(v) for k, v in opts.items()})
+                          .schema(df.schema).load(files))
             df = df.filter(pred)
             self._pending_cdc = getattr(self, "_pending_cdc", {})
             self._pending_cdc[inp.name] = new_state
@@ -433,6 +450,43 @@ class SparkTask:
         stream_wait_close(queries, timeout_seconds=timeout_seconds)
         self.state.set("pipeline_stream_load_timestamp", time.time())
         return self.results
+
+
+def _local_path(uri: str) -> str | None:
+    """Absolute local path of a plain or ``file:`` path; None for any
+    other scheme."""
+    parsed = urllib.parse.urlparse(uri)
+    if parsed.scheme not in ("", "file"):
+        return None
+    return os.path.normpath(os.path.abspath(urllib.parse.unquote(parsed.path)
+                                            if parsed.scheme else uri))
+
+
+def _footer_file_bounds(df: DataFrame, source: str, path: str | None,
+                        options: dict[str, Any], attribute: str):
+    """Per-file ``(path, min, max)`` of ``attribute`` from the parquet
+    footers of the files Spark listed for ``df``, keyed by Spark's own file
+    URIs. None, so that CDC falls back to its Spark aggregate, unless the
+    input is a local directory of parquet files with no partition
+    subdirectories and every file has exact footer bounds."""
+    from projectone_spark.store.skipping import footer_bounds
+
+    if source != "parquet" or path is None or attribute not in df.schema.names:
+        return None
+    if any(k.lower() == "basepath" for k in options):
+        return None
+    root = _local_path(path)
+    if root is None or not os.path.isdir(root):
+        return None
+    files = df.inputFiles()
+    local = [_local_path(f) for f in files]
+    if any(p is None or os.path.dirname(p) != root for p in local):
+        return None
+    bounds = footer_bounds(local, attribute, df.schema[attribute].dataType)
+    if bounds is None:
+        return None
+    uri = dict(zip(local, files))
+    return [(uri[p], lo, hi) for p, lo, hi in bounds]
 
 
 def task_builder() -> SparkTask.Builder:

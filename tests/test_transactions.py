@@ -3,6 +3,7 @@ conflict detection for snapshot-derived rewrites, and append retries that
 make concurrent appends all land."""
 
 import threading
+import time
 
 import pyspark.sql.functions as F
 import pytest
@@ -209,3 +210,35 @@ def test_scd_write_raises_on_concurrent_append(spark, store, monkeypatch,
         racing(spark, store, update)
     assert fired
     assert store.read(spark, "dim").filter("id = 99").count() == 1
+
+
+def test_amend_does_not_roll_back_concurrent_append(spark, store, monkeypatch):
+    """A slow ``amend_manifest`` mutator runs while an append commits: the
+    amend holds the commit lock, so the append lands after it instead of
+    being overwritten by the amend's stale copy of the manifest."""
+    df = _orders(spark).limit(4)
+    store.overwrite(spark, df, "orders")
+    amending, committing = threading.Event(), threading.Event()
+    real_commit = store._commit
+
+    def commit(*args, **kwargs):
+        committing.set()
+        return real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(store, "_commit", commit)
+
+    def slow_mutator(m):
+        amending.set()
+        assert committing.wait(60)
+        time.sleep(0.5)  # the append's commit would land here, unlocked
+        m["amended"] = True
+
+    amend = threading.Thread(target=store.amend_manifest,
+                             args=("orders", slow_mutator))
+    amend.start()
+    assert amending.wait(60)  # the amend has read version 0
+    store.append(spark, df, "orders")
+    amend.join()
+    assert store.version("orders") == 1
+    assert store.read(spark, "orders").count() == 8
+    assert [m.get("amended") for m in store.history("orders")] == [None, True]
