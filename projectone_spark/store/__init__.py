@@ -199,7 +199,7 @@ class TableStore:
         copy) — the single place manifest-rewrite atomicity lives. The
         read, mutation and publish hold the commit lock, so a commit that
         lands meanwhile is neither rolled back nor overwritten."""
-        if self.manifest(name) is None:
+        if self.manifest(name) is None:  # before the lock, which makes the dir
             raise FileNotFoundError(f"table '{name}' does not exist")
         with self._commit_lock(name):
             m = self.manifest(name)

@@ -120,7 +120,8 @@ def _raw_scale(col, data_type: T.DataType) -> tuple[int, float] | None:
     kind = lt["Type"]
     if isinstance(data_type, (T.IntegerType, T.LongType)):
         signed = kind == "None" or (kind == "Int" and lt["isSigned"])
-        return (1, -math.inf) if phys in ("INT32", "INT64") and signed else None
+        fits = phys == "INT32" or (phys == "INT64" and isinstance(data_type, T.LongType))
+        return (1, -math.inf) if signed and fits else None
     if isinstance(data_type, T.DateType):
         return (1, _FLOOR_DAYS) if phys == "INT32" and kind == "Date" else None
     utc = isinstance(data_type, T.TimestampType)

@@ -482,11 +482,14 @@ def _footer_file_bounds(df: DataFrame, source: str, path: str | None,
     local = [_local_path(f) for f in files]
     if any(p is None or os.path.dirname(p) != root for p in local):
         return None
-    bounds = footer_bounds(local, attribute, df.schema[attribute].dataType)
-    if bounds is None:
+    try:
+        bounds = footer_bounds(local, attribute, df.schema[attribute].dataType)
+    except (OSError, ValueError):
+        # an unreadable or vanished file: the aggregate path fails or
+        # skips it exactly as Spark's options say (ignoreCorruptFiles)
         return None
     uri = dict(zip(local, files))
-    return [(uri[p], lo, hi) for p, lo, hi in bounds]
+    return None if bounds is None else [(uri[p], lo, hi) for p, lo, hi in bounds]
 
 
 def task_builder() -> SparkTask.Builder:

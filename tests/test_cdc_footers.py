@@ -267,6 +267,17 @@ def test_fallback_source_schema(spark, tmp_path, used_footers):
                    source_schema="id long, offset long")
 
 
+def test_fallback_unreadable_footer(spark, tmp_path):
+    src = str(tmp_path / "src")
+    _write(f"{src}/p0.parquet", {"id": [1], "offset": [10]})
+    with open(f"{src}/p1.parquet", "wb") as f:
+        f.write(b"not parquet")
+    opts = {"ignoreCorruptFiles": "true"}
+    df = spark.read.options(**opts).parquet(src)
+    assert len(df.inputFiles()) == 2
+    assert task_mod._footer_file_bounds(df, "parquet", src, opts, "offset") is None
+
+
 # -- random increment sequences ---------------------------------------------
 
 VALUE = st.one_of(st.none(), st.integers(min_value=0, max_value=8))

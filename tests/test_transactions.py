@@ -233,12 +233,20 @@ def test_amend_does_not_roll_back_concurrent_append(spark, store, monkeypatch):
         time.sleep(0.5)  # the append's commit would land here, unlocked
         m["amended"] = True
 
-    amend = threading.Thread(target=store.amend_manifest,
-                             args=("orders", slow_mutator))
+    errors = []
+
+    def amend_orders():
+        try:
+            store.amend_manifest("orders", slow_mutator)
+        except Exception as e:  # pragma: no cover
+            errors.append(e)
+
+    amend = threading.Thread(target=amend_orders)
     amend.start()
     assert amending.wait(60)  # the amend has read version 0
     store.append(spark, df, "orders")
-    amend.join()
+    amend.join(60)
+    assert not amend.is_alive() and not errors
     assert store.version("orders") == 1
     assert store.read(spark, "orders").count() == 8
     assert [m.get("amended") for m in store.history("orders")] == [None, True]
