@@ -27,10 +27,12 @@ landed file, as in the reference) or, when the caller passes
 is above the watermark, since landed files never change. It falls back to
 the aggregate for a backfill, a user ``source_schema``, a non-``file:`` or
 hive-partitioned source, an attribute that is not int, long, date,
-timestamp or timestamp_ntz, NANOS or INT96 timestamps, and any row group
-with rows but no min/max (an all-null chunk). Either way the boundary
-rules above live only in :func:`resolve_cdc`, and the data read itself
-stays lazy.
+timestamp or timestamp_ntz, NANOS or INT96 timestamps, any row group
+with rows but no min/max (an all-null chunk), and a saved watermark that
+is not of the bounds' Python type (a backfill's string range end, or a
+tz-aware datetime), which only Spark compares as the aggregate does.
+Either way the boundary rules above live only in :func:`resolve_cdc`,
+and the data read itself stays lazy.
 """
 
 from __future__ import annotations
@@ -74,7 +76,8 @@ def resolve_cdc(df: DataFrame, attribute: str,
                 prev: CdcState | None = None,
                 backfill: tuple[Any, Any] | None = None,
                 batch_id: str | None = None, *,
-                file_bounds: Sequence[tuple[str, Any, Any]] | None = None):
+                file_bounds: Sequence[tuple[str, Any, Any]] | None = None,
+                ) -> tuple[Column, CdcState] | tuple[Column, CdcState, list[str]]:
     """Compute the incremental filter predicate and the post-run state.
 
     Returns ``(predicate, new_state)``. Apply the predicate with
@@ -82,19 +85,21 @@ def resolve_cdc(df: DataFrame, attribute: str,
     succeeds (reference persists post-success, ``task.py:519-544``).
 
     ``file_bounds`` lists ``(path, min, max)`` of ``attribute`` for every
-    non-empty file behind ``df``, exact as Spark would ``collect()`` them.
-    With it no Spark job runs, and the return gains a third item: the
-    paths that can hold rows matching the predicate (empty when nothing
-    is new, None for a backfill, which reads every file). Without it, the
-    bounds come from an aggregate over ``df``.
+    non-empty file behind ``df``, exact as Spark would ``collect()`` them
+    and of the same Python type as ``prev.next_value``. With it no Spark
+    job runs, and the return gains a third item: the paths that can hold
+    rows matching the predicate (empty when nothing is new). Without it,
+    the bounds come from an aggregate over ``df``. A backfill reads every
+    file and takes no ``file_bounds``.
     """
     attr = F.col(attribute)
 
     if backfill is not None:
+        if file_bounds is not None:
+            raise ValueError("a backfill reads every file; pass no file_bounds")
         start, end = backfill
         state = CdcState(attribute, start, end, "backfill", batch_id)
-        pred = (attr >= F.lit(start)) & (attr <= F.lit(end))
-        return (pred, state) if file_bounds is None else (pred, state, None)
+        return (attr >= F.lit(start)) & (attr <= F.lit(end)), state
 
     first = prev is None or prev.next_value is None
     start = None if first else prev.next_value

@@ -198,7 +198,9 @@ class TableStore:
         atomically republish it (current pointer + its ``_v{n}`` history
         copy) — the single place manifest-rewrite atomicity lives. The
         read, mutation and publish hold the commit lock, so a commit that
-        lands meanwhile is neither rolled back nor overwritten."""
+        lands meanwhile is neither rolled back nor overwritten. Every
+        commit waits on that lock, so ``mutator`` must be cheap: it edits
+        the dict and reads no data files."""
         if self.manifest(name) is None:  # before the lock, which makes the dir
             raise FileNotFoundError(f"table '{name}' does not exist")
         with self._commit_lock(name):

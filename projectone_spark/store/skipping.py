@@ -217,17 +217,25 @@ def add_value_set_stats(store, name: str, columns: Sequence[str],
     """Enrich the current manifest's file entries with distinct-value sets
     for ``columns`` — an index build, republished atomically via
     ``amend_manifest``. Files already carrying sets for a column are
-    skipped, so running this after each commit only reads NEW files."""
+    skipped, so running this after each commit only reads NEW files.
+
+    The files are read before the commit lock is taken, so concurrent
+    commits do not wait on the index build. Under the lock only the
+    computed sets are merged into the files still listed; a file that a
+    concurrent commit added keeps no set and is never pruned by one."""
+    m = store.manifest(name)
+    if m is None:
+        raise FileNotFoundError(f"table '{name}' does not exist")
+    found: dict[str, dict] = {}
+    for f in m.get("files") or []:
+        need = [c for c in columns if c not in (f.get("vals") or {})]
+        if need:
+            found[f["path"]] = value_set_stats(f["path"], need, cap)
 
     def mutator(m: dict) -> None:
         for f in m.get("files") or []:
-            have = f.get("vals") or {}
-            need = [c for c in columns if c not in have]
-            if not need:
-                continue
-            have.update(value_set_stats(f["path"], need, cap))
-            if have:
-                f["vals"] = have
+            if found.get(f["path"]):
+                f["vals"] = {**(f.get("vals") or {}), **found[f["path"]]}
         m["set_columns"] = sorted(
             set(m.get("set_columns") or []) | set(columns))
 

@@ -25,7 +25,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from projectone_spark.cdc import load_cdc_state, resolve_cdc, save_cdc_state
+from projectone_spark.cdc import (CdcState, load_cdc_state, resolve_cdc,
+                                  save_cdc_state)
 from projectone_spark.config import SparkInput, SparkOutput, TaskConfig
 from projectone_spark.features import (
     DictSecretManager,
@@ -194,19 +195,17 @@ class SparkTask:
             if backfill is None and not inp.read_options.source_schema:
                 bounds = _footer_file_bounds(df, inp.source, path, opts,
                                              inp.cdc.attribute)
-            if bounds is None:
-                pred, new_state = resolve_cdc(df, inp.cdc.attribute, prev,
-                                              backfill, self.batch_id)
-            else:
-                pred, new_state, files = resolve_cdc(
-                    df, inp.cdc.attribute, prev, backfill, self.batch_id,
-                    file_bounds=bounds)
-                if files and len(files) < len(bounds):
-                    # landed files are immutable: re-read only those that
-                    # can hold new rows, with the schema already inferred
-                    df = (self.spark.read.format(inp.source)
-                          .options(**{k: str(v) for k, v in opts.items()})
-                          .schema(df.schema).load(files))
+            if bounds and not _fits_watermark(prev, bounds[0][2]):
+                bounds = None
+            pred, new_state, *rest = resolve_cdc(
+                df, inp.cdc.attribute, prev, backfill, self.batch_id,
+                file_bounds=bounds)
+            if rest and rest[0] and len(rest[0]) < len(bounds):
+                # landed files are immutable: re-read only those that can
+                # hold new rows, with the schema already inferred
+                df = (self.spark.read.format(inp.source)
+                      .options(**{k: str(v) for k, v in opts.items()})
+                      .schema(df.schema).load(rest[0]))
             df = df.filter(pred)
             self._pending_cdc = getattr(self, "_pending_cdc", {})
             self._pending_cdc[inp.name] = new_state
@@ -490,6 +489,19 @@ def _footer_file_bounds(df: DataFrame, source: str, path: str | None,
         return None
     uri = dict(zip(local, files))
     return None if bounds is None else [(uri[p], lo, hi) for p, lo, hi in bounds]
+
+
+def _fits_watermark(prev: CdcState | None, bound: Any) -> bool:
+    """Whether footer bounds, of which ``bound`` is one, compare with the
+    saved watermark in Python exactly as Spark compares the column with
+    it. A backfill saves its range end as given (often a string), and a
+    caller may give a tz-aware datetime; only Spark's cast handles those,
+    so the aggregate resolves that run and saves a watermark of the
+    column's own type."""
+    if prev is None or prev.next_value is None:
+        return True
+    value = prev.next_value
+    return type(value) is type(bound) and getattr(value, "tzinfo", None) is None
 
 
 def task_builder() -> SparkTask.Builder:

@@ -76,34 +76,37 @@ class Lanes:
         self.ref_state = StateStore(os.path.join(root, "ref_state"))
         self.ref_rows: list[tuple] = []
 
-    def task(self) -> SparkTask:
+    def task(self, backfill: tuple[str, str] | None = None) -> SparkTask:
+        refresh = ({"type": "backfill", "start_value": backfill[0],
+                    "end_value": backfill[1]} if backfill else
+                   {"type": "incremental"})
         read_options = {"source_schema": self.schema} if self.schema else {}
         return (SparkTask.builder.setName("cdc_footers")
                 .setInput(name="src", path=self.src, source="parquet",
                           cdc={"attribute": self.attribute},
                           read_options=read_options)
                 .setOutput(name="out", table="target", write_type="append")
-                .setRefreshPolicy(type="incremental")
+                .setRefreshPolicy(**refresh)
                 .setStateLocation(os.path.join(self.root, "state"))
                 .setStoreLocation(os.path.join(self.root, "store"))
                 .setSession(self.spark)
                 .create())
 
-    def reference(self) -> list[tuple]:
+    def reference(self, backfill: tuple[str, str] | None = None) -> list[tuple]:
         reader = self.spark.read
         if self.schema:
             reader = reader.schema(self.schema)
         df, state = incremental_read(reader.parquet(self.src), self.attribute,
-                                     self.ref_state, "src")
+                                     self.ref_state, "src", backfill)
         rows = _rows(df)
         self.ref_rows = sorted(self.ref_rows + rows, key=repr)
         save_cdc_state(self.ref_state, "src", state)
         return rows
 
-    def step(self) -> None:
-        task = self.task()
+    def step(self, backfill: tuple[str, str] | None = None) -> None:
+        task = self.task(backfill)
         assert all(r.status == "success" for r in task.execute())
-        self.reference()
+        self.reference(backfill)
         store = TableStore(os.path.join(self.root, "store"))
         got = _rows(store.read(self.spark, "target")) if store.exists("target") else []
         assert got == self.ref_rows
@@ -198,6 +201,24 @@ def test_empty_source_first_run(spark, tmp_path, used_footers):
     _write(f"{src}/p1.parquet", {"id": [1], "offset": [5]})
     lanes.step()
     assert used_footers == [True, True]
+
+
+def test_backfill_then_incremental(spark, tmp_path, used_footers):
+    """A backfill saves its string range end as the watermark. The next
+    run resolves against it with the aggregate, which lets Spark cast the
+    string, and saves a timestamp; the run after that uses the footers."""
+    src = str(tmp_path / "src")
+    ts = pa.timestamp("us", tz="UTC")
+    day = [dt.datetime(2020, 6, d, tzinfo=dt.timezone.utc) for d in range(28, 31)]
+    _write(f"{src}/p0.parquet", {"id": [1, 2, 3], "ts": pa.array(day, ts)})
+    lanes = Lanes(spark, str(tmp_path), src, "ts")
+    lanes.step(backfill=("2020-01-01T00:00:00", "2020-06-29T00:00:00"))
+    assert isinstance(load_cdc_state(lanes.ref_state, "src").next_value, str)
+    lanes.step()
+    _write(f"{src}/p1.parquet", {"id": [4], "ts": pa.array(
+        [dt.datetime(2020, 7, 1, tzinfo=dt.timezone.utc)], ts)})
+    lanes.step()
+    assert used_footers == [False, False, True]
 
 
 def test_narrowed_read_skips_old_files(spark, tmp_path):

@@ -250,3 +250,29 @@ def test_amend_does_not_roll_back_concurrent_append(spark, store, monkeypatch):
     assert store.version("orders") == 1
     assert store.read(spark, "orders").count() == 8
     assert [m.get("amended") for m in store.history("orders")] == [None, True]
+
+
+def test_index_build_reads_files_outside_commit_lock(spark, store, monkeypatch):
+    """``add_value_set_stats`` reads data files before it takes the commit
+    lock: an append that commits during the build lands at once, and the
+    sets merge into the files they were read from."""
+    from projectone_spark.store import skipping
+
+    df = _orders(spark).limit(4)
+    store.overwrite(spark, df, "orders")
+    real = skipping.value_set_stats
+    appended = []
+
+    def reading(*args, **kwargs):
+        if not appended:  # with the lock held this append would time out
+            appended.append(store.append(spark, df, "orders"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(skipping, "value_set_stats", reading)
+    m = skipping.add_value_set_stats(store, "orders", ["o_orderstatus"])
+    assert appended == [1] and m["version"] == 1
+    assert m["set_columns"] == ["o_orderstatus"]
+    old, new = store.history("orders")[1], store.history("orders")[0]
+    old_paths = {f["path"] for f in old["files"]}
+    assert all(("vals" in f) == (f["path"] in old_paths) for f in new["files"])
+    assert store.read(spark, "orders").count() == 8

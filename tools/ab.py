@@ -1,15 +1,16 @@
 """Paired A/B benchmark runner: two revisions, alternating runs, one table.
 
     python3 tools/ab.py <base-rev> [<change-rev>] [--workloads scd_incremental]
-                        [--seeds 2,3,4,5,6] [--seconds 10] [--trace 0]
-                        [--root DIR] [--json OUT]
+                        [--seeds 2,3,4,5,6] [--root DIR] [--json OUT]
 
 Each revision (``<change-rev>`` defaults to ``HEAD``) is unpacked with
 ``git archive`` into ``<root>/a/repo`` and ``<root>/b/repo``: sibling
 directories at the same path depth and length, so neither side runs from
 a location the other does not. Passing the same revision twice is an A/A
-run. For every workload and seed the two sides run ``perfbench/run.py``
-back to back, and the side that runs first alternates from pair to pair.
+run. For every workload and seed the two sides run ``perfbench/run.py
+--trace 0`` back to back, for the ``run_seconds`` the base's
+``BENCHMARK.json`` sets, and the side that runs first alternates from
+pair to pair.
 
 The report gives, per workload and metric, each side's median and
 interquartile range, the change of the medians, and in how many pairs the
@@ -46,11 +47,11 @@ def unpack(rev: str, dest: str) -> str:
     return sha
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float,
-             trace: int) -> dict:
-    """One ``perfbench/run.py`` run; its last stdout line is the result."""
+def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
+    """One untraced ``perfbench/run.py`` run; its last stdout line is the
+    result."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
@@ -98,8 +99,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("change", nargs="?", default="HEAD")
     p.add_argument("--workloads", default="scd_incremental")
     p.add_argument("--seeds", default="2,3,4,5,6")
-    p.add_argument("--seconds", type=float, default=10)
-    p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--root", help="empty scratch directory (default: a new temp dir)")
     p.add_argument("--json", help="write every run's result here")
     args = p.parse_args(argv)
@@ -120,8 +119,8 @@ def main(argv: list[str] | None = None) -> int:
             order = (0, 1) if i % 2 == 0 else (1, 0)
             got: dict[int, dict] = {}
             for side in order:
-                got[side] = run_once(sides[side], workload, seed, args.seconds,
-                                     args.trace)
+                got[side] = run_once(sides[side], workload, seed,
+                                     spec["run_seconds"])
                 print(f"# {workload} seed={seed} {'AB'[side]}: correct="
                       f"{got[side]['correct']} failed={got[side]['failed']}",
                       file=sys.stderr, flush=True)
