@@ -24,6 +24,7 @@ is always ``spark.read.parquet(*dirs)`` → normal pushdown/pruning applies.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import shutil
@@ -82,28 +83,32 @@ class TableStore:
 
     @contextmanager
     def _commit_lock(self, name: str, timeout: float = 30.0):
-        """Filesystem mutex for the check-and-swap window (O_CREAT|O_EXCL is
-        atomic on one filesystem — the same primitive Delta's log store
-        uses for 'put-if-absent' on non-transactional storage)."""
+        """Per-table mutex for the check-and-swap window: an exclusive
+        ``flock`` on ``_commit.lock``, polled until ``timeout``. The kernel
+        drops it when the holder's process dies, so a writer killed
+        mid-commit blocks no one; each ``open`` is its own lock owner, so
+        threads of one process exclude each other too. The file itself is
+        never removed (unlinking a held lock file would let a second
+        writer lock a fresh inode)."""
         tdir = self._table_dir(name)
         os.makedirs(tdir, exist_ok=True)
         lock = os.path.join(tdir, "_commit.lock")
-        deadline = time.time() + timeout
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                if time.time() > deadline:
-                    raise TimeoutError(
-                        f"commit lock {lock} held too long; remove it if the "
-                        f"holding process died")
-                time.sleep(0.005)
+        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
         try:
+            deadline = time.time() + timeout
+            while True:
+                try:
+                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    if time.time() > deadline:
+                        raise TimeoutError(
+                            f"commit lock {lock} held by another writer for "
+                            f"more than {timeout:g}s") from None
+                    time.sleep(0.005)
             yield
         finally:
             os.close(fd)
-            os.unlink(lock)
 
     def _commit(self, name: str, dirs: list[str], partition_by: list[str],
                 operation: str, metrics: dict | None = None,

@@ -198,9 +198,7 @@ def append_evolve(store: TableStore, spark: SparkSession, df: DataFrame,
     for col, dtype in cur_types.items():
         if col not in new_types:
             df = df.withColumn(col, F.lit(None).cast(dtype))
-    v = store.append(spark, df, name, stats_columns=stats_columns)
-    store.amend_manifest(name, lambda m: m.__setitem__("schema_merged", True))
-    return v
+    return store.append(spark, df, name, stats_columns=stats_columns)
 
 
 def read_merged(store: TableStore, spark: SparkSession, name: str) -> DataFrame:

@@ -117,13 +117,6 @@ def write_selective_overwrite(spark: SparkSession, store: TableStore,
                                      partition_by=partition_by)
 
 
-def _unrename(tgt: DataFrame, rename: Mapping[str, str] | None) -> DataFrame:
-    """Undo ``rename`` so merge logic sees canonical metadata names."""
-    if not rename:
-        return tgt
-    return rename_metadata_columns(tgt, {v: k for k, v in rename.items()})
-
-
 def _merge_write(spark: SparkSession, store: TableStore, table: str,
                  build: Callable[[DataFrame | None], DataFrame],
                  operation: str, *,
@@ -153,10 +146,11 @@ def _merge_write(spark: SparkSession, store: TableStore, table: str,
         raise ValueError(
             f"{operation} on {table!r}: partition_by {list(partition_by)} "
             f"!= table {spec}; omit partition_by to keep the table's spec")
+    canonical = {v: k for k, v in (rename or {}).items()}
     return store._rewrite(
         spark, table, snapshot, prune(spec) if prune else [],
         lambda cand: rename_metadata_columns(
-            build(_unrename(cand, rename)), rename),
+            build(rename_metadata_columns(cand, canonical)), rename),
         operation, adds_rows=True)
 
 
@@ -247,7 +241,14 @@ def write_scd2(spark: SparkSession, store: TableStore, df: DataFrame,
     into a per-key history chain (reference window repair,
     ``write.py:875-960``): all but the newest version insert as closed
     rows, the newest goes through the normal merge."""
+    # reference active_record_value_mapping (write.py:617-624): stored
+    # flags map back to 'Y'/'N' for the merge, and out again after it
+    y, n = (sql_string((active_mapping or {}).get(f, f)) for f in "YN")
+
     def build(target: DataFrame | None) -> DataFrame:
+        if active_mapping and target is not None:
+            target = target.withColumn(ACTIVE, F.expr(
+                f"CASE WHEN {sql_ident(ACTIVE)} = {y} THEN 'Y' ELSE 'N' END"))
         if fix_duplicates_by_key:
             history, latest = scd2_compact(
                 df, key_cols, data_cols=data_cols, valid_from=valid_from,
@@ -263,9 +264,6 @@ def write_scd2(spark: SparkSession, store: TableStore, df: DataFrame,
                                 dedup_on_keys=dedup_on_keys, algo=algo,
                                 history_start=history_start)
         if active_mapping:
-            # reference active_record_value_mapping (write.py:617-624)
-            y = sql_string(active_mapping.get("Y", "Y"))
-            n = sql_string(active_mapping.get("N", "N"))
             merged = merged.withColumn(ACTIVE, F.expr(
                 f"CASE WHEN {sql_ident(ACTIVE)} = 'Y' THEN {y} ELSE {n} END"))
         return merged

@@ -8,9 +8,14 @@ available, versioned-parquet swap otherwise) is a separate concern handled
 by :mod:`projectone_spark.writers` / :mod:`projectone_spark.store`.
 
 Scale notes:
-- every variant is ONE full-outer equi-join on ``__metadata_key_hash__``
+- every variant is ONE full-outer join keyed on ``__metadata_key_hash__``
   (a single 32-byte/8-byte shuffle key), not per-branch joins — one shuffle
   per merge regardless of how many match-branches the SCD type has;
+- SCD2 joins the whole target on the key AND ``t.active = 'Y'``: closed
+  history never matches and passes through unmatched, so the target is
+  scanned once and, with the source as hash-build side, never sorted.
+  Rows leave through ``explode(array(...))`` and ``IS NOT NULL``; a lambda
+  ``filter`` (``ArrayFilter``) has no generated code and runs interpreted;
 - change detection compares precomputed row hashes, not N column pairs,
   so the join condition stays a cheap equi-compare (reference rationale:
   ``write.py:103-140``);
@@ -176,9 +181,10 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
     Implements the reference's flag taxonomy (``write.py:799-844``):
     I (new key) → insert active row; UI (key matched, data changed) → close
     the old row (``valid_to = source valid_from``, active 'N') and insert a
-    new active row; D (no change) → keep. Closed history rows pass through
-    untouched. Exactly one active row per key is preserved (the reference's
-    hardest invariant, ``write.py:547-1010``).
+    new active row; D (no change) → keep. Closed history rows never match
+    (the join also requires ``t.active = 'Y'``) and pass through unmatched.
+    Exactly one active row per key is preserved (the reference's hardest
+    invariant, ``write.py:547-1010``).
 
     ``valid_from`` is the event-time column/expression on the source
     (reference ``history_tracking_col``); defaults to ``current_timestamp()``.
@@ -198,7 +204,6 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
     src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo)
     src = src.withColumn(VALID_FROM, vf)
     out_cols = [*key_cols, *data_columns(source, key_cols), KEY_HASH, DATA_HASH]
-    final_cols = [*out_cols, VALID_FROM, VALID_TO, ACTIVE]
 
     if target is None or not target.columns:
         if history_start is not None:
@@ -206,9 +211,9 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
         return _project(src, [*map(sql_ident, [*out_cols, VALID_FROM]),
                               _as(sentinel_ts, VALID_TO), _as("'Y'", ACTIVE)])
 
-    history = target.filter(f"{_ACTIVE} = 'N'")
-    active = target.filter(f"{_ACTIVE} = 'Y'")
-    joined = _join_on_key(src, active)
+    joined = src.hint("shuffle_hash").alias("s").join(
+        target.alias("t"), F.expr(f"s.{_KH} = t.{_KH} AND t.{_ACTIVE} = 'Y'"),
+        "full_outer")
     new_vf = f"s.{_VF}"
     if history_start is not None:
         joined = joined.withColumn(_HISTORY_START, history_start)
@@ -218,9 +223,9 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
     insert_new = f"({_S_PRESENT} AND (NOT ({_T_PRESENT}) OR {_CHANGED}))"
 
     # One pass emits up to two rows per joined key via explode of a struct
-    # array: the surviving target-side row (closed or unchanged) and the
-    # newly inserted source-side row — the Spark-native equivalent of the
-    # reference's dual-row unionByName trick (write.py:962-969).
+    # array: the surviving target-side row (closed, unchanged or history)
+    # and the newly inserted source-side row — the Spark-native equivalent
+    # of the reference's dual-row unionByName trick (write.py:962-969).
     def side_struct(side: str, valid_from_sql: str, valid_to_sql: str,
                     active_sql: str) -> str:
         fields = [*(_as(f"{side}.{sql_ident(c)}", c) for c in out_cols),
@@ -233,17 +238,13 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
         f"CASE WHEN {_CHANGED} THEN s.{_VF} ELSE t.{_VT} END",
         f"CASE WHEN {_CHANGED} THEN 'N' ELSE t.{_ACTIVE} END")
     source_row = side_struct("s", new_vf, sentinel_ts, "'Y'")
-    merged = (joined
-              .selectExpr(f"explode(filter(array("
-                          f"CASE WHEN {_T_PRESENT} THEN {target_row} END, "
-                          f"CASE WHEN {insert_new} THEN {source_row} END), "
-                          f"x -> x IS NOT NULL)) AS {_ROW}")
-              .selectExpr(f"{_ROW}.*"))
-    if set(target.columns) != set(final_cols):
-        # schema drift: keep only the output columns (a missing one fails
-        # analysis here, as it does in the merge above)
-        history = _project(history, list(map(sql_ident, final_cols)))
-    return merged.unionByName(history)
+    return (joined
+            .selectExpr(f"explode(array("
+                        f"CASE WHEN {_T_PRESENT} THEN {target_row} END, "
+                        f"CASE WHEN {insert_new} THEN {source_row} END)) "
+                        f"AS {_ROW}")
+            .filter(f"{_ROW} IS NOT NULL")
+            .selectExpr(f"{_ROW}.*"))
 
 
 def scd3_apply(source: DataFrame, target: DataFrame | None,

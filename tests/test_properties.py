@@ -63,6 +63,65 @@ def test_scd2_invariants_under_random_histories(spark, batches):
         assert chain[-1][ACTIVE] == "Y"
 
 
+def _scd2_model(batches, days, history_start=None):
+    """Plain-Python SCD2: per key, close the active version when the value
+    changes and open a new one; brand-new keys open at ``history_start``
+    when given. Rows are (id, v, valid_from, valid_to, active)."""
+    from datetime import datetime
+
+    sentinel = datetime(9999, 12, 31)
+    rows: list[list] = []
+    for batch, day in zip(batches, days):
+        for k, v in batch:
+            cur = [r for r in rows if r[0] == k and r[4] == "Y"]
+            if cur and cur[0][1] == v:
+                continue
+            if cur:
+                cur[0][3:] = [day, "N"]
+            start = history_start if history_start and not cur else day
+            rows.append([k, v, start, sentinel, "Y"])
+    return sorted(map(tuple, rows))
+
+
+@given(batches=st.lists(BATCH, min_size=1, max_size=3),
+       mapped=st.booleans(), renamed=st.booleans(), started=st.booleans())
+@SLOW
+def test_write_scd2_matches_python_model(spark, tmp_path_factory, batches,
+                                         mapped, renamed, started):
+    """``write_scd2`` increments into a ``TableStore`` (new, changed,
+    unchanged and repeated keys) equal the Python model row for row, both
+    plain and with the drawn ``active_mapping`` / ``rename`` /
+    ``history_start`` options."""
+    from datetime import datetime
+
+    from projectone_spark.store import TableStore
+    from projectone_spark.writers import write_scd2
+
+    days = [datetime(2024, m, 1) for m in (1, 2, 3)]
+    plain = {"active_mapping": None, "rename": None, "history_start": None}
+    drawn = {"active_mapping": {"Y": "1", "N": "0"} if mapped else None,
+             "rename": {ACTIVE: "is_active", VALID_FROM: "start_ts"}
+             if renamed else None,
+             "history_start": datetime(1900, 1, 1) if started else None}
+    for opts in (plain, drawn):
+        store = TableStore(str(tmp_path_factory.mktemp("scd2")))
+        hs = opts["history_start"]
+        for batch, day in zip(batches, days):
+            write_scd2(spark, store, _df(spark, batch), "t", key_cols=["id"],
+                       valid_from=F.lit(day),
+                       active_mapping=opts["active_mapping"],
+                       rename=opts["rename"],
+                       history_start=None if hs is None else F.lit(hs))
+        names = {ACTIVE: ACTIVE, VALID_FROM: VALID_FROM,
+                 **(opts["rename"] or {})}
+        flags = opts["active_mapping"] or {"Y": "Y", "N": "N"}
+        got = sorted((r["id"], r["v"], r[names[VALID_FROM]], r[VALID_TO],
+                      r[names[ACTIVE]])
+                     for r in store.read(spark, "t").collect())
+        assert got == [(*r[:4], flags[r[4]])
+                       for r in _scd2_model(batches, days, hs)]
+
+
 @given(batch=BATCH)
 @SLOW
 def test_scd1_idempotent(spark, batch):

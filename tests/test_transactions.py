@@ -276,3 +276,41 @@ def test_index_build_reads_files_outside_commit_lock(spark, store, monkeypatch):
     old_paths = {f["path"] for f in old["files"]}
     assert all(("vals" in f) == (f["path"] in old_paths) for f in new["files"])
     assert store.read(spark, "orders").count() == 8
+
+
+def test_commit_lock_dies_with_its_holder(tmp_path):
+    """A writer SIGKILLed while it holds the commit lock blocks no one: the
+    kernel drops the lock with the process, and the next commit takes it
+    at once (no stale lock file to wait out or delete by hand)."""
+    import os
+    import signal
+    import subprocess
+    import sys
+
+    root = str(tmp_path / "store")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    holder = subprocess.Popen(
+        [sys.executable, "-c",
+         "import sys, time\n"
+         "from projectone_spark.store import TableStore\n"
+         "with TableStore(sys.argv[1])._commit_lock('t'):\n"
+         "    print('locked', flush=True)\n"
+         "    time.sleep(600)\n", root],
+        cwd=repo, stdout=subprocess.PIPE, text=True,
+        env={**os.environ, "PYTHONPATH": repo})
+    try:
+        assert holder.stdout.readline().strip() == "locked"
+        store = TableStore(root)
+        with pytest.raises(TimeoutError):
+            with store._commit_lock("t", timeout=0.05):
+                pass
+        holder.send_signal(signal.SIGKILL)
+        holder.wait(30)
+        start = time.monotonic()
+        with store._commit_lock("t", timeout=2.0):
+            pass
+        assert time.monotonic() - start < 1.0
+    finally:
+        holder.kill()
+        holder.wait(30)
+        holder.stdout.close()

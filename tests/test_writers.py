@@ -5,6 +5,8 @@ assertions (active-subset equality, closed-row chaining)."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -225,6 +227,25 @@ def test_scd2_active_mapping_and_rename(spark, store):
     assert got.filter("is_active = '1'").count() == 6
 
 
+@pytest.mark.parametrize("rename", [None, {ACTIVE: "is_active",
+                                            VALID_TO: "end_ts"}])
+def test_scd2_active_mapping_second_write_keeps_history(spark, store, rename):
+    """The second mapped write reads stored '1'/'0' flags back as Y/N:
+    untouched keys stay, the changed key keeps its closed version."""
+    names = {ACTIVE: ACTIVE, VALID_TO: VALID_TO, **(rename or {})}
+    opts = {"key_cols": ["id"], "active_mapping": {"Y": "1", "N": "0"},
+            "rename": rename}
+    write_scd2(spark, store, _df(spark, BASE[:3]), "t", valid_from=_ts(T0),
+               **opts)
+    write_scd2(spark, store, _df(spark, [(2, "b", 99)]), "t",
+               valid_from=_ts(T1), **opts)
+    got = sorted((r["id"], r["offset"], r[names[ACTIVE]],
+                  r[names[VALID_TO]].isoformat()[:10])
+                 for r in store.read(spark, "t").collect())
+    assert got == [(1, 10, "1", "9999-12-31"), (2, 20, "0", "2024-02-01"),
+                   (2, 99, "1", "9999-12-31"), (3, 30, "1", "9999-12-31")]
+
+
 def test_scd2_rename_roundtrip_second_run(spark, store):
     rename = {ACTIVE: "is_active"}
     write_scd2(spark, store, _df(spark, BASE), "t", key_cols=["id"],
@@ -234,6 +255,52 @@ def test_scd2_rename_roundtrip_second_run(spark, store):
     got = store.read(spark, "t")
     assert got.filter("is_active = 'Y' AND id = 2").count() == 1
     assert got.filter("is_active = 'N' AND id = 2").count() == 1
+
+
+def _final_write_plan(spark, write) -> str:
+    """The final (adaptive) physical plan of the one file write ``write()``
+    runs, from Spark's SQL execution store."""
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        found = sql_store.executionsList()
+        return [found.apply(i) for i in range(found.size())]
+
+    seen = {e.executionId() for e in executions()}
+    write()
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() not in seen]
+    plans = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(plans) == 1
+    return plans[0]
+
+
+def test_scd2_merge_plan_reads_target_once_without_sort(spark, store):
+    """The SCD2 merge scans the target once (closed history rides the key
+    join unmatched), hashes the source as the build side, sorts nothing,
+    and keeps no interpreted lambda between the join and the write."""
+    write_scd2(spark, store, _df(spark, BASE), "t", key_cols=["id"],
+               valid_from=_ts(T0))
+    write_scd2(spark, store, _df(spark, [(2, "b", 99)]), "t",
+               key_cols=["id"], valid_from=_ts(T1))  # closes a row
+    plan = _final_write_plan(spark, lambda: write_scd2(
+        spark, store, _df(spark, [(3, "c", 99), (7, "g", 70)]), "t",
+        key_cols=["id"], valid_from=_ts(T2)))
+    # the adaptive plan the write ran: its last update may still be
+    # labelled "Current" when the store records it, with every stage done
+    final = re.split(r"== (?:Final|Current) Plan ==", plan)[1]
+    final = final.split("== Initial Plan ==")[0]
+    nodes = re.findall(r"^[\s:|+-]*(?:\* )?([A-Za-z]\w*)", final, re.M)
+    assert "ShuffledHashJoin FullOuter BuildLeft" in final, final
+    # one scan per side, the left (build) subtree printed first: the
+    # source is built, the target's one parquet scan streams
+    scans = re.findall(r"\bScan (\w+)", final)
+    assert len(scans) == 2 and scans[1] == "parquet", final
+    assert not {"Sort", "SortMergeJoin", "Union"} & set(nodes), final
+    assert "* Generate" in final, final  # the explode is code-generated
+    assert "lambdafunction" not in plan
+    assert store.read(spark, "t").count() == 9
 
 
 def test_scd2_fix_duplicates_by_key(spark, store):
