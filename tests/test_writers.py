@@ -6,6 +6,7 @@ assertions (active-subset equality, closed-row chaining)."""
 from __future__ import annotations
 
 import re
+import time
 
 import pyspark.sql.functions as F
 import pytest
@@ -258,21 +259,29 @@ def test_scd2_rename_roundtrip_second_run(spark, store):
 
 
 def _final_write_plan(spark, write) -> str:
-    """The final (adaptive) physical plan of the one file write ``write()``
-    runs, from Spark's SQL execution store."""
+    """The final adaptive plan of the one file write ``write()`` runs, from
+    Spark's SQL execution store, which records it after the execution
+    ends, asynchronously."""
     sql_store = spark._jsparkSession.sharedState().statusStore()
+    count = sql_store.executionsCount()
+    last = sql_store.executionsList(count - 1, 1).apply(0).executionId() \
+        if count else -1
 
-    def executions():
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        found = sql_store.executionsList()
-        return [found.apply(i) for i in range(found.size())]
+    def write_plans() -> list[str]:
+        plans, i = [], last + 1
+        while not (found := sql_store.execution(i)).isEmpty():
+            plans.append(found.get().physicalPlanDescription())
+            i += 1
+        return [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
 
-    seen = {e.executionId() for e in executions()}
     write()
-    plans = [e.physicalPlanDescription() for e in executions()
-             if e.executionId() not in seen]
-    plans = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
-    assert len(plans) == 1
+    deadline = time.monotonic() + 30
+    plans = write_plans()
+    while not any("== Final Plan ==" in p for p in plans) \
+            and time.monotonic() < deadline:
+        time.sleep(0.1)
+        plans = write_plans()
+    assert len(plans) == 1 and "== Final Plan ==" in plans[0], plans
     return plans[0]
 
 
@@ -287,10 +296,7 @@ def test_scd2_merge_plan_reads_target_once_without_sort(spark, store):
     plan = _final_write_plan(spark, lambda: write_scd2(
         spark, store, _df(spark, [(3, "c", 99), (7, "g", 70)]), "t",
         key_cols=["id"], valid_from=_ts(T2)))
-    # the adaptive plan the write ran: its last update may still be
-    # labelled "Current" when the store records it, with every stage done
-    final = re.split(r"== (?:Final|Current) Plan ==", plan)[1]
-    final = final.split("== Initial Plan ==")[0]
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
     nodes = re.findall(r"^[\s:|+-]*(?:\* )?([A-Za-z]\w*)", final, re.M)
     assert "ShuffledHashJoin FullOuter BuildLeft" in final, final
     # one scan per side, the left (build) subtree printed first: the
