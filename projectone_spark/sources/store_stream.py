@@ -12,7 +12,7 @@ reader:
   version range, so executors read files in parallel with pyarrow and the
   driver only ever touches manifest metadata;
 - append commits stream their added files as inserts; data-changing
-  commits (delete/update/merge/compact/optimize/restore) RAISE unless
+  commits (delete/update/merge/compact/zorder/restore) RAISE unless
   ``skipChangeCommits=true`` — Delta's exact contract for streaming from a
   mutated table.
 

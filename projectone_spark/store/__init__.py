@@ -18,8 +18,9 @@ Scale notes: data directories may be hive-partitioned (``partition_by``).
 Row-level rewrites (``selective_overwrite``, the SCD1/2/3 key merges, the
 ``dml`` DELETE / UPDATE / MERGE) share one copy-on-write commit,
 :meth:`TableStore._rewrite`: files that file stats or hive partition values
-prove untouched are hard-linked into the new version, not copied. Reading
-is always ``spark.read.parquet(*dirs)`` → normal pushdown/pruning applies.
+prove untouched are hard-linked into the new version, not copied. Every
+read is :meth:`TableStore._read_files`: plain parquet scans with each data
+directory's recorded schema → normal pushdown/pruning applies.
 """
 
 from __future__ import annotations
@@ -158,7 +159,7 @@ class TableStore:
             # model metadata (store.models.save_model) rides the SAME
             # atomic manifest publish — never a second write — and
             # carries forward across CONTENT-PRESERVING commits (append
-            # adds rows, compact/zorder/optimize recluster the same
+            # adds rows, compact/zorder recluster the same
             # rows), so routine maintenance on a model table cannot
             # silently strip its kind stamp. Content-REPLACING commits
             # (overwrite, selective overwrite, DML mutations) drop it:
@@ -175,8 +176,7 @@ class TableStore:
             # incrementally maintained, so they must keep the stamp
             for stamp in ("model", "index"):
                 if (prev is not None and stamp in prev
-                        and operation in ("append", "compact", "zorder",
-                                          "optimize")):
+                        and operation in ("append", "compact", "zorder")):
                     manifest[stamp] = prev[stamp]
             if manifest_extra:
                 manifest.update(manifest_extra)
@@ -241,26 +241,7 @@ class TableStore:
         m = self.manifest(name) if snapshot is None else snapshot
         if m is None:
             raise FileNotFoundError(f"table '{name}' does not exist in {self.root}")
-        return self._read_manifest(spark, m)
-
-    def _read_manifest(self, spark: SparkSession, m: dict) -> DataFrame:
-        """Scan a manifest's dir set. Dirs with a recorded read-back
-        schema (``_dir_schema``) are planned WITHOUT schema inference —
-        no per-dir driver job; dirs without one (pre-r12 manifests,
-        hand-built fixtures) fall back to inference."""
-        if m["partition_by"]:
-            # hive-partitioned dirs: each data directory needs ITS OWN
-            # basePath for partition-column discovery (one basePath cannot
-            # cover sibling commit dirs), so multi-commit snapshots are a
-            # union of per-dir scans — collapsed back to one by compaction
-            return self._read_files(spark, m, {d: [d] for d in m["dirs"]})
-        schemas = m.get("schemas") or {}
-        known = [schemas.get(d) for d in m["dirs"]]
-        if all(known) and len(set(known)) == 1:
-            # one shared schema: a single multi-path scan, zero inference
-            return (spark.read.schema(self._schema_of(known[0]))
-                    .parquet(*m["dirs"]))
-        return spark.read.parquet(*m["dirs"])
+        return self._read_files(spark, m, {d: [d] for d in m["dirs"]})
 
     @staticmethod
     def _schema_of(schema_json: str):
@@ -271,23 +252,30 @@ class TableStore:
     def _read_files(self, spark: SparkSession, m: dict,
                     by_dir: dict[str, list[str]]) -> DataFrame | None:
         """One frame over chosen data files (or whole dirs) of snapshot
-        ``m``, grouped by data directory. Each group reads with its
-        directory as ``basePath``, so hive partition columns come back as
-        real columns, and with the directory's recorded read-back schema
-        when ``m`` has one, so planning runs no inference job. Groups
-        union by name, null-filling columns a directory lacks (a table
-        widened by ``append_evolve``). None when no file is chosen."""
+        ``m``, grouped by data directory; None when no file is chosen.
+        Each dir reads with its recorded read-back schema (``_dir_schema``),
+        so planning runs no inference job; a dir without one (pre-r12
+        manifests, a rewrite that linked older-schema files) merges its
+        footer schemas. Unpartitioned dirs sharing one schema are a single
+        multi-path scan. Otherwise each dir reads with itself as
+        ``basePath`` (so hive partition columns come back) and the groups
+        union by name, null-filling columns a dir lacks (a table widened
+        by ``append_evolve``)."""
         schemas = m.get("schemas") or {}
-        frames = []
-        for d, paths in by_dir.items():
-            if not paths:
-                continue
-            reader = spark.read
-            if schemas.get(d):
-                reader = reader.schema(self._schema_of(schemas[d]))
-            frames.append(reader.option("basePath", d).parquet(*paths))
-        if not frames:
+        groups = {d: paths for d, paths in by_dir.items() if paths}
+        if not groups:
             return None
+
+        def reader(schema: str | None):
+            return (spark.read.schema(self._schema_of(schema)) if schema
+                    else spark.read.option("mergeSchema", "true"))
+
+        shared = {schemas.get(d) for d in groups}
+        if not m["partition_by"] and len(shared) == 1:
+            return reader(shared.pop()).parquet(
+                *[p for ps in groups.values() for p in ps])
+        frames = [reader(schemas.get(d)).option("basePath", d).parquet(*paths)
+                  for d, paths in groups.items()]
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f, allowMissingColumns=True)
@@ -310,7 +298,7 @@ class TableStore:
                 raise FileNotFoundError(
                     f"version {version} of '{name}' was vacuumed; "
                     f"missing {missing}")
-            return self._read_manifest(spark, m)
+            return self._read_files(spark, m, {d: [d] for d in m["dirs"]})
         raise FileNotFoundError(f"table '{name}' has no version {version}")
 
     def _new_data_dir(self, name: str) -> str:
@@ -387,7 +375,7 @@ class TableStore:
                   manifest_extra: dict | None = None) -> int:
         """Full snapshot replace. A plain overwrite is blind (last writer
         wins, like Delta overwrite); snapshot-derived rewrites (compact,
-        optimize) pass ``_expected_base`` so a concurrent append makes
+        zorder) pass ``_expected_base`` so a concurrent append makes
         them raise instead of silently dropping its rows.
         ``set_columns`` additionally records per-file distinct-value sets
         (skipping.value_set_stats) for =/IN pruning, inherited by appends
@@ -446,6 +434,28 @@ class TableStore:
         raise ConcurrentWriteError(
             f"append to '{name}' lost the commit race 20 times")
 
+    @staticmethod
+    def _select_files(m: dict, predicates: Sequence[tuple[str, str, object]],
+                      ) -> tuple[dict[str, list[str]], list[tuple[str, str]]]:
+        """``(touched, skipped)`` data files of snapshot ``m``: ``touched``
+        maps each dir to the files the conjunctive ``predicates`` may match
+        (a file with no stats entry included); ``skipped`` lists the
+        ``(dir, file)`` pairs that stats or hive partition values exclude."""
+        from projectone_spark.store.skipping import prune_files
+
+        kept, _ = prune_files(m, predicates)
+        candidates = {f["path"] for f in kept}
+        entries = {f["path"] for f in (m.get("files") or [])}
+        touched: dict[str, list[str]] = {}
+        skipped: list[tuple[str, str]] = []
+        for d in m["dirs"]:
+            for p in _data_files([d]):
+                if p in candidates or p not in entries:
+                    touched.setdefault(d, []).append(p)
+                else:
+                    skipped.append((d, p))
+        return touched, skipped
+
     def _rewrite(self, spark: SparkSession, name: str, snapshot: dict,
                  predicates: Sequence[tuple[str, str, object]], transform,
                  operation: str, *, adds_rows: bool = False,
@@ -467,27 +477,15 @@ class TableStore:
         UPDATE) gets None — no commit, no Spark job; one that can
         (``adds_rows``) has ``transform`` run over an empty frame of the
         snapshot's schema."""
-        from projectone_spark.store.skipping import prune_files
-
         m = snapshot
         part = m["partition_by"]
-        kept, _ = prune_files(m, predicates)
-        candidates = {f["path"] for f in kept}
-        entries = {f["path"] for f in (m.get("files") or [])}
-        touched: dict[str, list[str]] = {}
-        linkable: list[tuple[str, str]] = []
-        for d in m["dirs"]:
-            for p in _data_files([d]):
-                # a file with no stats entry was never examined by pruning
-                if p in candidates or p not in entries:
-                    touched.setdefault(d, []).append(p)
-                else:
-                    linkable.append((d, p))
+        touched, linkable = self._select_files(m, predicates)
         if not touched and not adds_rows:
             return None
         frame = self._read_files(spark, m, touched)
         if frame is None:
-            frame = self._read_manifest(spark, m).limit(0)
+            frame = self._read_files(
+                spark, m, {d: [d] for d in m["dirs"]}).limit(0)
         out = transform(frame)
         nd = self._new_data_dir(name)
         written = self._write_dir(out, nd, part)
@@ -611,7 +609,7 @@ def _derived_readback_schema(schema) -> str | None:
     type outside the proven-safe set (or decimal, handled explicitly)
     appears and the caller must fall back to real inference. Pinned
     against actual inference across the full type matrix by
-    ``tests/test_r13_fastpaths.py``."""
+    ``tests/test_store.py``."""
     def nullable(node):
         if isinstance(node, dict):
             t = node.get("type")
@@ -772,8 +770,8 @@ def read_changes(store: TableStore, spark: SparkSession, name: str,
     new files. Commits made by ``TableStore._rewrite`` (delete / update /
     merge, selective overwrites, SCD1/2/3) record their exact read/write
     file sets, so the delta diffs only the touched files — cost ∝ files
-    changed, not table size. A plain overwrite (and compact / optimize /
-    zorder / restore) records no change files, so its delta is the two
+    changed, not table size. A plain overwrite (and compact / zorder /
+    restore) records no change files, so its delta is the two
     whole snapshots compared with exceptAll both ways — correct, but a
     full compare; a production deployment on Delta gets those change
     files for free at write time.
@@ -807,12 +805,12 @@ def read_changes(store: TableStore, spark: SparkSession, name: str,
             old = store._read_files(spark, prev, changed_old)
             new = store._read_files(
                 spark, m, {m["dirs"][0]: m["metrics"].get("changed_new")})
-            empty = store._read_manifest(spark, m).limit(0)
+            empty = store.read(spark, name, snapshot=m).limit(0)
             old = old if old is not None else empty
             new = new if new is not None else empty
         else:
-            new = store._read_manifest(spark, m)
-            old = (store._read_manifest(spark, prev) if prev is not None
+            new = store.read(spark, name, snapshot=m)
+            old = (store.read(spark, name, snapshot=prev) if prev is not None
                    else new.limit(0))
         frames.append(new.exceptAll(old)
                       .withColumn("_change_type", F.lit("insert"))

@@ -16,23 +16,45 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-from projectone_spark.store import TableStore
+from projectone_spark.store import TableStore, _data_files
+from projectone_spark.store.skipping import sql_ident
 
 
 def table_files(store: TableStore, name: str) -> list[tuple[str, int]]:
     """(path, bytes) of every data file in the current snapshot."""
+    return _snapshot_files(_snapshot(store, name))
+
+
+def _snapshot(store: TableStore, name: str) -> dict:
     m = store.manifest(name)
     if m is None:
         raise FileNotFoundError(f"table '{name}' does not exist")
-    out = []
-    for d in m["dirs"]:
-        for dirpath, _, files in os.walk(d):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    p = os.path.join(dirpath, fn)
-                    out.append((p, os.path.getsize(p)))
-    return out
+    return m
+
+
+def _snapshot_files(m: dict) -> list[tuple[str, int]]:
+    return [(p, os.path.getsize(p)) for p in _data_files(m["dirs"])]
+
+
+def _recluster(store: TableStore, spark: SparkSession, name: str, m: dict,
+               operation: str, layout,
+               stats_columns: Sequence[str] | None = None) -> int:
+    """Rewrite snapshot ``m`` as ``layout(frame, partition_by)``, keeping
+    the partition spec; the rewrite under ``compact`` and
+    ``zorder_cluster``. The commit pins ``m``, so a concurrent commit
+    makes it raise instead of dropping its rows."""
+    if m.get("metrics", {}).get("bucket_by"):
+        raise ValueError(
+            f"table '{name}' is bucketed; re-bucket with "
+            f"store.bucketing.write_bucketed instead of {operation} — a "
+            f"plain rewrite would silently discard the bucket layout")
+    part = m["partition_by"]
+    df = layout(store.read(spark, name, snapshot=m), part)
+    return store.overwrite(spark, df, name, partition_by=part or None,
+                           stats_columns=stats_columns,
+                           _operation=operation, _expected_base=m["version"])
 
 
 def compact(store: TableStore, spark: SparkSession, name: str,
@@ -49,30 +71,21 @@ def compact(store: TableStore, spark: SparkSession, name: str,
     same plan.
     """
     small = small_file_bytes if small_file_bytes is not None else target_file_bytes // 2
-    files = table_files(store, name)
+    m = _snapshot(store, name)
+    files = _snapshot_files(m)
     if sum(1 for _, b in files if b < small) < 2:
         return None
-    m = store.manifest(name)
-    if m.get("metrics", {}).get("bucket_by"):
-        raise ValueError(
-            f"table '{name}' is bucketed; re-bucket with "
-            f"store.bucketing.write_bucketed instead of compact() — a plain "
-            f"rewrite would silently discard the bucket layout")
-    total = sum(b for _, b in files)
-    n_out = max(1, -(-total // target_file_bytes))
-    # mergeSchema read: a table widened by append_evolve must keep its
-    # evolved columns through the rewrite (plain read takes one file's schema)
-    df = read_merged(store, spark, name)
-    part = m["partition_by"]
-    if part:
-        # coalesce within hive partitions: shuffle on the partition cols
-        compacted = df.repartition(n_out, *[F.col(c) for c in part])
-    else:
-        compacted = df.repartition(n_out)
-    return store.overwrite(spark, compacted, name,
-                           partition_by=part or None,
-                           _operation="compact",
-                           _expected_base=m["version"])
+    n_out = max(1, -(-sum(b for _, b in files) // target_file_bytes))
+    return _recluster(
+        store, spark, name, m, "compact",
+        lambda df, part: df.repartition(n_out, *[F.col(c) for c in part]))
+
+
+#: A data directory that no committed manifest names is a writer's
+#: in-flight output until it is this old (seconds since it was last
+#: modified); only then may vacuum collect it as a crashed write's
+#: orphan. Delta's VACUUM retention check plays the same role.
+UNCOMMITTED_MIN_AGE_S = 24 * 3600
 
 
 def vacuum(store: TableStore, name: str, keep_versions: int = 2,
@@ -82,25 +95,33 @@ def vacuum(store: TableStore, name: str, keep_versions: int = 2,
     committed earlier than the retention horizon — Delta VACUUM's
     time-based retention, with a version floor so the current snapshot is
     never collectable. Time travel to vacuumed versions stops working,
-    exactly like Delta. Returns the removed directories."""
+    exactly like Delta. A directory no manifest names at all (written but
+    not yet committed, or left by a crashed writer) is deleted only once
+    it is older than ``UNCOMMITTED_MIN_AGE_S``, so a concurrent writer
+    never commits a directory vacuum removed. Returns the removed
+    directories."""
     import time as _time
 
     history = store.history(name)
     if not history:
         raise FileNotFoundError(f"table '{name}' does not exist")
-    cutoff = (_time.time() - retention_seconds
-              if retention_seconds is not None else None)
+    now = _time.time()
+    cutoff = now - retention_seconds if retention_seconds is not None else None
     keep = {d for i, m in enumerate(history)
             if i < keep_versions
             or (cutoff is not None and m["committed_at"] >= cutoff)
             for d in m["dirs"]}
+    committed = {d for m in history for d in m["dirs"]}
     dropped: list[str] = []
     tdir = store._table_dir(name)
     for entry in sorted(os.listdir(tdir)):
         p = os.path.join(tdir, entry)
-        if os.path.isdir(p) and p not in keep:
-            shutil.rmtree(p)
-            dropped.append(p)
+        if not os.path.isdir(p) or p in keep:
+            continue
+        if p not in committed and now - os.path.getmtime(p) < UNCOMMITTED_MIN_AGE_S:
+            continue
+        shutil.rmtree(p)
+        dropped.append(p)
     return dropped
 
 
@@ -202,35 +223,24 @@ def append_evolve(store: TableStore, spark: SparkSession, df: DataFrame,
 
 
 def read_merged(store: TableStore, spark: SparkSession, name: str) -> DataFrame:
-    """Read with parquet schema merging on (needed after append_evolve —
-    plain reads take the schema of the first file listed). Partitioned
-    multi-commit snapshots read per-directory (each dir its own basePath,
-    like TableStore.read) and union with allowMissingColumns so commits
-    written before a schema evolution still line up."""
-    m = store.manifest(name)
-    if m is None:
-        raise FileNotFoundError(f"table '{name}' does not exist")
-    schemas = m.get("schemas") or {}
-    known = [schemas.get(d) for d in m["dirs"]]
-    if all(known) and len(set(known)) == 1:
-        # r12 (guide §1.2): every dir's recorded read-back schema is
-        # IDENTICAL, so merging footers would return exactly that
-        # schema — skip the mergeSchema footer sweep (one driver pass
-        # over every file in the snapshot) and read like TableStore.read
-        return store._read_manifest(spark, m)
-    if m["partition_by"]:
-        frames = [spark.read.option("mergeSchema", "true")
-                  .option("basePath", d).parquet(d) for d in m["dirs"]]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
-    return spark.read.option("mergeSchema", "true").parquet(*m["dirs"])
+    """The current snapshot with every column any data directory has (a
+    table widened by ``append_evolve``). ``TableStore.read`` now reads
+    that way itself (see ``TableStore._read_files``); this name stays for
+    callers that state the intent."""
+    return store.read(spark, name)
+
+
+#: Rank-bucket bits per column of a multi-column Z-order: 256 buckets, so
+#: four columns interleave into a 32-bit z-value.
+_ZORDER_BITS = 8
+
+#: Types a multi-column Z-order ranks with ``percentile_approx``.
+_ZORDER_TYPES = (T.NumericType, T.DateType, T.TimestampType,
+                 T.TimestampNTZType)
 
 
 def zorder_cluster(store: TableStore, spark: SparkSession, name: str,
-                   columns: Sequence[str], target_files: int = 8,
-                   bits: int = 8) -> int:
+                   columns: Sequence[str], target_files: int = 8) -> int:
     """Multi-column clustering rewrite — Delta's ``OPTIMIZE ZORDER BY``:
     the snapshot is rewritten ordered by the Morton (Z-order) interleave
     of each row's per-column rank buckets, so every output file covers a
@@ -239,62 +249,72 @@ def zorder_cluster(store: TableStore, spark: SparkSession, name: str,
     clustered column or their conjunction. A single-column sort only
     helps the leading column; bit interleaving is what makes a 2-D
     range predicate prune — the reason warehouses Z-order instead of
-    sorting.
+    sorting. One column is range-sorted on its raw value instead (any
+    orderable type). The clustered columns join the table's declared
+    ``stats_columns``.
 
     Scale shape: one pass — per-column bucket boundaries come from a
-    single ``percentile_approx`` aggregate (boundary ACCURACY only
-    affects layout quality, never data correctness), broadcast as array
-    literals; the bucket id and the interleave are scan-side codegen;
-    the one shuffle is the ``repartitionByRange`` on the z-value that
-    the rewrite needs anyway. No global sort, no window over a single
-    partition.
+    single ``percentile_approx`` aggregate over numeric/date/timestamp
+    keys (boundary ACCURACY only affects layout quality, never data
+    correctness), inlined as literal arrays of the column's own type;
+    the bucket id (a binary search over that array) and the interleave
+    are scan-side codegen; the one shuffle is the ``repartitionByRange``
+    on the z-value that the rewrite needs anyway.
     """
     cols = list(columns)
     if not 1 <= len(cols) <= 4:
         raise ValueError(f"zorder_cluster needs 1-4 columns, got {cols}")
-    if not 1 <= bits <= 16:
-        raise ValueError(f"bits must be in [1, 16], got {bits}")
-    m = store.manifest(name)
-    if m is None:
-        raise FileNotFoundError(f"table '{name}' does not exist")
-    if m.get("metrics", {}).get("bucket_by"):
-        raise ValueError(
-            f"table '{name}' is bucketed; Z-ordering would silently "
-            "discard the bucket layout")
-    df = read_merged(store, spark, name)
-    n_buckets = 1 << bits
-    fracs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = df.agg(*[
-        F.percentile_approx(F.col(c).cast("double"), fracs).alias(c)
-        for c in cols]).first()
+    n_files = max(1, int(target_files))
+    m = _snapshot(store, name)
 
-    def bucket(c: str, bs: list[float]):
-        # rank bucket = number of boundaries <= value (0 .. n_buckets-1),
-        # a scan-side fold over a literal boundary array
-        if not bs:
-            # entirely-NULL column or empty table: percentile_approx has
-            # no boundaries — degenerate single-bucket layout (bucket 0)
-            return F.lit(0).cast("bigint")
-        arr = F.lit([float(b) for b in bs])
-        v = F.col(c).cast("double")
-        return F.coalesce(
-            F.size(F.filter(arr, lambda b: b <= v)).cast("bigint"),
-            F.lit(0).cast("bigint"))  # NULL keys cluster at bucket 0
+    def layout(df: DataFrame, part: list[str]) -> DataFrame:
+        keys = [F.col(sql_ident(c)) for c in cols]
+        if len(cols) == 1:
+            return df.repartitionByRange(n_files, *keys).sortWithinPartitions(*keys)
+        types = [df.schema[c].dataType for c in cols]
+        for c, t in zip(cols, types):
+            if not isinstance(t, _ZORDER_TYPES):
+                raise TypeError(
+                    f"zorder column '{c}' has type {t.simpleString()}; only "
+                    f"numeric/date/timestamp columns can be z-ordered with "
+                    f"others (hash or dictionary-encode strings upstream)")
+        n_buckets = 1 << _ZORDER_BITS
+        fracs = [i / n_buckets for i in range(1, n_buckets)]
+        # boundaries travel as strings and are cast back, so they keep the
+        # column's type (a Python datetime literal would be a session-zone
+        # TIMESTAMP even for a TIMESTAMP_NTZ column)
+        bounds = df.agg(*[F.percentile_approx(k, fracs).cast("array<string>")
+                          for k in keys]).first()
+        ranked = df
+        for ci, (k, t) in enumerate(zip(keys, types)):
+            ranked = ranked.withColumn(f"__r{ci}", F.lit(0))
+            if bounds[ci] is None:
+                # entirely-NULL column or empty table: no boundaries, a
+                # degenerate single-bucket layout
+                continue
+            arr = F.lit(list(bounds[ci])).cast(T.ArrayType(t))
+            r = F.col(f"__r{ci}")
+            # rank bucket = number of boundaries <= value, by binary search
+            # over the sorted boundaries; each step is its own projection
+            # (nested, every step would repeat the running rank's whole
+            # expression twice). NULL keys fail every step → bucket 0
+            for step in (1 << i for i in reversed(range(_ZORDER_BITS))):
+                ranked = ranked.withColumn(f"__r{ci}", r + F.when(
+                    F.element_at(arr, r + step) <= k, step).otherwise(0))
+        z = F.lit(0).cast("bigint")
+        for ci in range(len(cols)):
+            b = F.col(f"__r{ci}").cast("bigint")
+            for bit in range(_ZORDER_BITS):
+                z = z + F.shiftleft(F.shiftright(b, bit).bitwiseAND(F.lit(1)),
+                                    bit * len(cols) + ci).cast("bigint")
+        return (ranked.withColumn("__z", z)
+                .drop(*[f"__r{ci}" for ci in range(len(cols))])
+                .repartitionByRange(n_files, F.col("__z"))
+                .sortWithinPartitions("__z")
+                .drop("__z"))
 
-    z = F.lit(0).cast("bigint")
-    k = len(cols)
-    for ci, c in enumerate(cols):
-        b = bucket(c, [] if bounds[c] is None else list(bounds[c]))
-        for bit in range(bits):
-            z = z + F.shiftleft(
-                F.shiftright(b, bit).bitwiseAND(F.lit(1)),
-                bit * k + ci).cast("bigint")
-    part = m["partition_by"]
-    clustered = (df.withColumn("__z", z)
-                 .repartitionByRange(max(1, int(target_files)), F.col("__z"))
-                 .sortWithinPartitions("__z")
-                 .drop("__z"))
-    return store.overwrite(
-        spark, clustered, name, partition_by=part or None,
-        stats_columns=cols, _operation="zorder",
-        _expected_base=m["version"])
+    return _recluster(
+        store, spark, name, m, "zorder", layout,
+        stats_columns=list(dict.fromkeys([*(m.get("stats_columns") or []),
+                                          *cols])))
+

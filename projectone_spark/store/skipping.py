@@ -19,8 +19,9 @@ results are exact even when a predicate can't be used for pruning.
 
 Scale notes: pruning is O(#files) driver-side metadata work — the same cost
 profile as Delta's log replay — and the payoff is proportional to data
-clustered-ness, which is what ``optimize`` (Z-order-style multi-column
-clustering via bit interleaving) restores after many unordered appends.
+clustered-ness, which is what ``maintenance.zorder_cluster`` (Z-order
+multi-column clustering via bit interleaving) restores after many unordered
+appends.
 """
 
 from __future__ import annotations
@@ -33,7 +34,6 @@ import os
 import urllib.parse
 from collections.abc import Sequence
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -63,43 +63,57 @@ def _norm_stat(v):
     return v
 
 
+def _chunk_bounds(st) -> tuple | None:
+    """Normalized ``(min, max)`` of one column chunk's footer statistics,
+    or None when the chunk has none that decode exactly."""
+    if st is None or not st.has_min_max:
+        return None
+    lt = json.loads(st.logical_type.to_json())
+    if lt["Type"] == "Decimal" and st.physical_type in ("INT32", "INT64"):
+        # pyarrow raises on these (Spark's layout for precision <= 18);
+        # the raw value is the unscaled integer
+        return tuple(_norm_stat(decimal.Decimal(v).scaleb(-lt["scale"]))
+                     for v in (st.min_raw, st.max_raw))
+    try:
+        lo, hi = _norm_stat(st.min), _norm_stat(st.max)
+    except NotImplementedError:  # any other type pyarrow cannot decode
+        return None
+    return None if lo is None or hi is None else (lo, hi)
+
+
 def file_stats(dirs: Sequence[str], columns: Sequence[str]) -> list[dict]:
     """Per-file {path, rows, bytes, min, max} for ``columns``, from parquet
     footers only. A column missing trustworthy stats in any row group is
     dropped from that file's entry (pruning then keeps the file)."""
     import pyarrow.parquet as pq
 
+    from projectone_spark.store import _data_files
+
     out: list[dict] = []
-    for d in dirs:
-        for dirpath, _, files in os.walk(d):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
+    for path in _data_files(dirs):
+        md = pq.ParquetFile(path).metadata
+        mins: dict = {}
+        maxs: dict = {}
+        bad: set[str] = set()
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            for ci in range(g.num_columns):
+                c = g.column(ci)
+                name = c.path_in_schema
+                if name not in columns or name in bad:
                     continue
-                path = os.path.join(dirpath, fn)
-                md = pq.ParquetFile(path).metadata
-                mins: dict = {}
-                maxs: dict = {}
-                bad: set[str] = set()
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        c = g.column(ci)
-                        name = c.path_in_schema
-                        if name not in columns or name in bad:
-                            continue
-                        st = c.statistics
-                        lo = _norm_stat(st.min) if st is not None and st.has_min_max else None
-                        hi = _norm_stat(st.max) if st is not None and st.has_min_max else None
-                        if lo is None or hi is None:
-                            bad.add(name)
-                            mins.pop(name, None)
-                            maxs.pop(name, None)
-                            continue
-                        mins[name] = lo if name not in mins else min(mins[name], lo)
-                        maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-                out.append({"path": path, "rows": md.num_rows,
-                            "bytes": os.path.getsize(path),
-                            "min": mins, "max": maxs})
+                bounds = _chunk_bounds(c.statistics)
+                if bounds is None:
+                    bad.add(name)
+                    mins.pop(name, None)
+                    maxs.pop(name, None)
+                    continue
+                lo, hi = bounds
+                mins[name] = lo if name not in mins else min(mins[name], lo)
+                maxs[name] = hi if name not in maxs else max(maxs[name], hi)
+        out.append({"path": path, "rows": md.num_rows,
+                    "bytes": os.path.getsize(path),
+                    "min": mins, "max": maxs})
     return out
 
 
@@ -535,48 +549,24 @@ def read_where(store, spark: SparkSession, name: str,
 
     Equivalent to a Delta scan with data skipping: the driver consults
     commit metadata, hands Spark only the surviving files, and Catalyst's
-    own row-group pushdown takes over from there.
+    own row-group pushdown takes over from there. The file set is the one
+    ``TableStore._rewrite`` would read for the same predicates (a file with
+    no stats entry is always read: a stats gap never drops data), and it is
+    read with the snapshot's recorded schemas, so planning runs no job.
     """
     m = store.manifest(name)
     if m is None:
         raise FileNotFoundError(f"table '{name}' does not exist in {store.root}")
     if not predicates:
-        return store.read(spark, name)
+        return store.read(spark, name, snapshot=m)
     # materialize once up front: a generator-valued 'in' would otherwise be
     # consumed by the residual-SQL render and arrive empty at prune_files
     predicates = _validate_predicates(predicates)
-    residual = predicates_to_sql(predicates)
-    if not m.get("files"):
-        return store.read(spark, name).filter(residual)
-    # A commit written without stats_columns recorded no file entries for
-    # its directory; those directories MUST be scanned unpruned — a stats
-    # gap is never license to drop data.
-    covered = {d for d in m["dirs"]
-               if any(f["path"].startswith(d + os.sep) for f in m["files"])}
-    uncovered = [d for d in m["dirs"] if d not in covered]
-    kept, _total = prune_files(m, predicates)
-    frames = []
-    if m["partition_by"]:
-        # group surviving files under their snapshot dir so partition-column
-        # discovery (basePath) still works per data directory
-        for d in covered:
-            paths = [f["path"] for f in kept if f["path"].startswith(d + os.sep)]
-            if paths:
-                frames.append(spark.read.option("basePath", d).parquet(*paths))
-        for d in uncovered:
-            frames.append(spark.read.option("basePath", d).parquet(d))
-    else:
-        paths = [f["path"] for f in kept]
-        if paths:
-            frames.append(spark.read.parquet(*paths))
-        if uncovered:
-            frames.append(spark.read.parquet(*uncovered))
-    if not frames:
-        return store.read(spark, name).filter(residual).limit(0)
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out.filter(residual)
+    touched, _ = store._select_files(m, predicates)
+    frame = store._read_files(spark, m, touched)
+    if frame is None:
+        frame = store.read(spark, name, snapshot=m).limit(0)
+    return frame.filter(predicates_to_sql(predicates))
 
 
 def skipping_report(store, name: str,
@@ -593,95 +583,3 @@ def skipping_report(store, name: str,
         "rows_total": sum(f["rows"] for f in files),
         "rows_kept": sum(f["rows"] for f in kept),
     }
-
-
-# -- clustering (OPTIMIZE ZORDER analogue) -----------------------------------
-
-def _as_double(col: str, dtype: T.DataType) -> F.Column:
-    c = F.col(col)
-    if isinstance(dtype, T.TimestampType):
-        return F.unix_timestamp(c).cast("double")
-    if isinstance(dtype, T.DateType):
-        return F.datediff(c, F.lit("1970-01-01")).cast("double")
-    if not isinstance(dtype, T.NumericType):
-        # a silent cast-to-null would drop the column from the z-value and
-        # the caller would believe it got clustered
-        raise TypeError(
-            f"zorder column '{col}' has type {dtype.simpleString()}; only "
-            f"numeric/date/timestamp columns can be z-ordered (hash or "
-            f"dictionary-encode strings upstream)")
-    return c.cast("double")
-
-
-def zorder_column(df: DataFrame, columns: Sequence[str],
-                  total_bits: int = 16) -> F.Column:
-    """Z-value expression interleaving per-column bucket bits — the same
-    space-filling-curve clustering Delta's OPTIMIZE ZORDER uses, built from
-    stock expressions (width_bucket + bit ops) so it runs inside
-    whole-stage codegen, no UDF.
-
-    Bounds come from one driver-side min/max agg (same cost class as the
-    reference's CDC bound resolution, ``delta_source.py:263-308``).
-    """
-    bits = max(1, total_bits // len(columns))
-    n_buckets = 2 ** bits
-    aggs = []
-    for c in columns:
-        d = _as_double(c, df.schema[c].dataType)
-        aggs += [F.min(d).alias(f"__lo_{c}"), F.max(d).alias(f"__hi_{c}")]
-    row = df.agg(*aggs).first()
-    z = F.lit(0).cast("long")
-    for i, c in enumerate(columns):
-        lo, hi = row[f"__lo_{c}"], row[f"__hi_{c}"]
-        if lo is None or hi is None or hi <= lo:
-            continue
-        d = _as_double(c, df.schema[c].dataType)
-        bucket = (F.width_bucket(d, F.lit(float(lo)), F.lit(float(hi)),
-                                 F.lit(n_buckets)) - F.lit(1))
-        bucket = F.coalesce(F.least(F.greatest(bucket, F.lit(0)),
-                                    F.lit(n_buckets - 1)), F.lit(0)).cast("long")
-        for b in range(bits):
-            # bit b of this column lands at interleaved position
-            # b * n_cols + i (column-major round robin, MSB-fair)
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(bucket, b).bitwiseAND(F.lit(1)),
-                            b * len(columns) + i))
-    return z
-
-
-def optimize(store, spark: SparkSession, name: str,
-             zorder_by: Sequence[str], target_files: int = 8,
-             stats_columns: Sequence[str] | None = None) -> int:
-    """Rewrite a table clustered on ``zorder_by`` so file min/max ranges
-    become narrow and data skipping bites — Delta ``OPTIMIZE ... ZORDER BY``.
-
-    Single column → range-partition + sort (perfectly disjoint ranges);
-    multiple columns → interleaved-bit z-value, range-partitioned and
-    sorted, giving every column locality. File count is explicit
-    (``target_files``) — the knob that controls task granularity and small-
-    file pressure at scale.
-    """
-    m = store.manifest(name)
-    if m is None:
-        raise FileNotFoundError(f"table '{name}' does not exist")
-    part = m["partition_by"]
-    df = store.read(spark, name)
-    if len(zorder_by) == 1:
-        c = zorder_by[0]
-        clustered = (df.repartitionByRange(target_files, F.col(c))
-                     .sortWithinPartitions(c))
-    else:
-        z = zorder_column(df, zorder_by)
-        clustered = (df.withColumn("__z__", z)
-                     .repartitionByRange(target_files, F.col("__z__"))
-                     .sortWithinPartitions("__z__")
-                     .drop("__z__"))
-    cols = list(stats_columns if stats_columns is not None
-                else dict.fromkeys([*(m.get("stats_columns") or []),
-                                    *zorder_by]))
-    # hive partitioning survives the rewrite: clustering orders rows WITHIN
-    # each partition directory
-    return store.overwrite(spark, clustered, name,
-                           partition_by=part or None, stats_columns=cols,
-                           _operation="optimize",
-                           _expected_base=m["version"])

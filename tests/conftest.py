@@ -120,3 +120,11 @@ def compare_spark_duckdb(spark_df, duck_con, sql):
     assert len(sr) == len(dr), f"row count: spark={len(sr)} duckdb={len(dr)}"
     for i, (a, b) in enumerate(zip(sr, dr)):
         assert a == b, f"row {i} differs:\n  spark : {a}\n  duckdb: {b}"
+
+
+@pytest.fixture()
+def degenerate_docs(spark):
+    return spark.createDataFrame(
+        [(1, "the cat sat"), (2, ""), (3, "!!! ???"), (4, None),
+         (5, "cat cat the")],
+        "doc_id bigint, text string")

@@ -1,5 +1,6 @@
-"""MinHash-LSH recall audit: verdicts on constructed duplicates,
-sample-bounding, exact-Jaccard arithmetic, and validation."""
+"""functions/dedup.py: the MinHash-LSH recall audit (verdicts on
+constructed duplicates, sample-bounding, exact-Jaccard arithmetic,
+validation) and the winnowing empty-doc gate."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -72,3 +73,16 @@ def test_audit_validates_params(spark):
         lsh_recall_audit(_docs(spark), tau=(0, 1))
     with pytest.raises(ValueError, match="num_hashes must be positive"):
         lsh_recall_audit(_docs(spark), num_hashes=0)
+
+
+def test_winnow_gate_matches_normalize_emptiness(spark, degenerate_docs):
+    """The rlike empty-doc gate must admit exactly the docs whose
+    normalize() is nonempty (the old length(__norm) > 0 gate)."""
+    from projectone_spark.functions.dedup import winnow_fingerprints
+    from projectone_spark.functions.text import normalize
+
+    fp = winnow_fingerprints(degenerate_docs)
+    kept_ids = {r["doc_id"] for r in fp.select("doc_id").distinct().collect()}
+    expect = {r["doc_id"] for r in degenerate_docs
+              .filter(F.length(normalize("text")) > 0).collect()}
+    assert kept_ids == expect == {1, 5}

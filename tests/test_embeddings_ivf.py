@@ -3,6 +3,8 @@ JVM-only plan claim (no Python eval in the search path)."""
 
 import contextlib
 import io
+import math
+import random
 
 import pyspark.sql.functions as F
 
@@ -326,3 +328,99 @@ def test_kmeans_lloyd_centroids_consistent_with_assignments(spark):
     direct = sorted(map(tuple,
                         kmeans_lloyd(emb, k=4, iters=2).collect()))
     assert via_state == direct
+
+
+def _rand_vecs(spark, n=40, dims=16, seed=11):
+    rnd = random.Random(seed)
+    rows = [(i, [rnd.uniform(-2.0, 2.0) for _ in range(dims)])
+            for i in range(n)]
+    # exercise signed zero / exact ties / denormal-ish smalls
+    rows.append((n, [0.0] * dims))
+    rows.append((n + 1, [-0.0] * dims))
+    rows.append((n + 2, [5e-324] * dims))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _cents(dims=16, k=6, seed=3):
+    rnd = random.Random(seed)
+    out = [(i, [rnd.uniform(-1.0, 1.0) for _ in range(dims)])
+           for i in range(k)]
+    out[2] = (2, out[1][1][:])  # duplicate centroid: exact tie
+    return out
+
+
+def test_assign_cell_string_path_bit_identical(spark):
+    from projectone_spark.functions.embeddings import assign_cell
+
+    df = _rand_vecs(spark)
+    cents = _cents()
+    got = df.select("vec_id",
+                    assign_cell("embedding", cents).alias("c")).collect()
+    want = df.select("vec_id",
+                     assign_cell(F.col("embedding"), cents).alias("c")
+                     ).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_assign_cell_nonfinite_centroid_falls_back(spark):
+    from projectone_spark.functions.embeddings import assign_cell
+
+    df = _rand_vecs(spark, n=10)
+    cents = _cents()
+    cents[0] = (0, [math.inf] + cents[0][1][1:])
+    got = df.select("vec_id",
+                    assign_cell("embedding", cents).alias("c")).collect()
+    want = df.select("vec_id",
+                     assign_cell(F.col("embedding"), cents).alias("c")
+                     ).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_probe_cells_string_path_bit_identical(spark):
+    from projectone_spark.functions.embeddings import probe_cells
+
+    df = _rand_vecs(spark)
+    cents = _cents()
+    for nprobe in (1, 3, len(cents)):
+        got = df.select("vec_id",
+                        probe_cells("embedding", cents, nprobe).alias("p")
+                        ).collect()
+        want = df.select("vec_id",
+                         probe_cells(F.col("embedding"), cents, nprobe)
+                         .alias("p")).collect()
+        # probe ORDER is part of the contract (nearest first)
+        assert [(r["vec_id"], list(r["p"])) for r in got] \
+            == [(r["vec_id"], list(r["p"])) for r in want]
+
+
+def test_lloyd_refine_joinless_assignment_bit_identical(spark):
+    """The r12 2-exchange Lloyd iteration (vector carried through the
+    argmax aggregate) must yield bit-identical centroids to the
+    original 3-exchange shape (assign_cell_join + join-back + mean)."""
+    from projectone_spark.functions.embeddings import (
+        _lloyd_project,
+        _lloyd_refine,
+        assign_cell_join,
+        seed_centroids,
+    )
+
+    rnd = random.Random(23)
+    rows = [(i, [rnd.uniform(-1.5, 1.5) for _ in range(8)])
+            for i in range(60)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    v = _lloyd_project(df, "vec_id", "embedding")
+    got = _lloyd_refine(v, k=4, iters=3, id_col="vec_id")
+
+    cents = seed_centroids(v, k=4, id_col="vec_id", vec_col="e")
+    for _ in range(3):  # the pre-r12 shape, inline
+        asg = assign_cell_join(v, cents, id_col="vec_id", vec_col="e")
+        cm = (v.join(asg, "vec_id")
+              .select("cell_id", F.posexplode("e").alias("pos", "val"))
+              .groupBy("cell_id", "pos").agg(F.avg("val").alias("m"))
+              .groupBy("cell_id")
+              .agg(F.transform(
+                  F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                  lambda s: s["m"]).alias("ce")))
+        cents = sorted((int(r["cell_id"]), [float(x) for x in r["ce"]])
+                       for r in cm.collect())
+    assert got == cents

@@ -2,6 +2,8 @@
 range/clamp properties, full-shortlist equality with brute force (the
 e09 adjudication technique), and exact recall arithmetic."""
 
+import random
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -117,3 +119,47 @@ def test_knn_recall_perfect_and_validation(spark):
     assert rows and all(r["recall_micro"] == 1000000 for r in rows)
     with pytest.raises(ValueError, match="k must be positive"):
         knn_recall(exact, exact, "self", k=0)
+
+
+@pytest.mark.parametrize("dims", [1, 3, 4, 7, 16])
+def test_sq8_pack_words_string_path_bit_identical(spark, dims):
+    from projectone_spark.functions.embeddings import sq8_pack_words
+
+    rnd = random.Random(5)
+    rows = [(i, [rnd.randrange(256) for _ in range(dims)])
+            for i in range(20)]
+    rows.append((20, [0] * dims))
+    rows.append((21, [255] * dims))
+    df = spark.createDataFrame(rows, "vec_id long, __code array<int>")
+    got = df.select("vec_id", *[w.alias(f"w{j:02d}") for j, w in
+                                enumerate(sq8_pack_words("__code", dims))])
+    want = df.select("vec_id", *[w.alias(f"w{j:02d}") for j, w in
+                                 enumerate(sq8_pack_words(F.col("__code"),
+                                                          dims))])
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) \
+        == sorted(map(tuple, want.collect()))
+
+
+def test_sq8_codes_string_path_bit_identical(spark):
+    from projectone_spark.functions.embeddings import sq8_bounds, sq8_codes
+
+    dims = 9
+    rnd = random.Random(13)
+    rows = [(i, [rnd.uniform(-3.0, 3.0) for _ in range(dims)])
+            for i in range(30)]
+    rows.append((30, [7.5] * dims))   # constant rows force mx == mn dims
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    const = spark.createDataFrame([(0, [1.0] * dims)],
+                                  "vec_id long, embedding array<double>")
+    for frame in (df, const):
+        bounds = frame.sparkSession.createDataFrame([(1,)], "x int") \
+            .crossJoin(sq8_bounds(frame, dims=dims)).drop("x")
+        base = frame.crossJoin(F.broadcast(bounds))
+        got = base.select("vec_id",
+                          sq8_codes("embedding", dims).alias("c")).collect()
+        want = base.select("vec_id",
+                           sq8_codes(F.col("embedding"), dims).alias("c")
+                           ).collect()
+        assert [(r["vec_id"], list(r["c"])) for r in got] \
+            == [(r["vec_id"], list(r["c"])) for r in want]

@@ -9,7 +9,8 @@ import pytest
 
 from projectone_spark.store import TableStore, read_changes
 from projectone_spark.store.maintenance import (
-    append_evolve, clone, compact, read_merged, restore, table_files, vacuum,
+    UNCOMMITTED_MIN_AGE_S, append_evolve, clone, compact, read_merged,
+    restore, table_files, vacuum, zorder_cluster,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -104,15 +105,21 @@ def test_append_evolve_type_conflict_raises(spark, store):
         append_evolve(store, spark, bad, "orders")
 
 
-def test_compact_preserves_evolved_columns(spark, store):
-    """Regression: compact() read with one file's schema and could rewrite
-    the table without columns added by append_evolve."""
+@pytest.mark.parametrize("op", ["compact", "zorder"])
+def test_compact_preserves_evolved_columns(spark, store, op):
+    """Regression: compact() (and the deleted second Z-order) read with one
+    file's schema and could rewrite the table without columns added by
+    append_evolve."""
     base = _orders(spark).select("o_orderkey", "o_totalprice").limit(30)
     append_evolve(store, spark, base.repartition(2), "orders")
     widened = (_orders(spark).select("o_orderkey", "o_totalprice")
                .withColumn("channel", F.lit("web")).limit(30))
     append_evolve(store, spark, widened.repartition(2), "orders")
-    v = compact(store, spark, "orders", target_file_bytes=64 * 1024 * 1024)
+    if op == "compact":
+        v = compact(store, spark, "orders", target_file_bytes=64 * 1024 * 1024)
+    else:
+        v = zorder_cluster(store, spark, "orders",
+                           ["o_orderkey", "o_totalprice"], target_files=2)
     assert v is not None
     got = read_merged(store, spark, "orders")
     assert "channel" in got.columns
@@ -237,25 +244,103 @@ def test_vacuum_time_retention(spark, store):
     assert store.read(spark, "orders").count() == 30
 
 
+def test_vacuum_spares_uncommitted_dirs(spark, store, monkeypatch):
+    """A vacuum that runs between an append's data write and its commit
+    must leave the written-but-uncommitted dir alone (regression: it was
+    deleted and the append committed a manifest naming it). Superseded
+    versions' dirs are still collected, and so is an uncommitted dir
+    older than the age floor (a crashed writer's orphan)."""
+    import time
+
+    df = _orders(spark).limit(50)
+    store.overwrite(spark, df.limit(10), "orders")      # v0, superseded
+    store.overwrite(spark, df.limit(20), "orders")      # v1
+    [v0_dir] = store.history("orders")[-1]["dirs"]
+    commit = store._commit
+    dropped = []
+
+    def vacuum_then_commit(name, *args, **kwargs):
+        dropped.extend(vacuum(store, name, keep_versions=1))
+        return commit(name, *args, **kwargs)
+
+    monkeypatch.setattr(store, "_commit", vacuum_then_commit)
+    store.append(spark, df.limit(30), "orders")
+    monkeypatch.undo()
+    assert dropped == [v0_dir]
+    assert store.read(spark, "orders").count() == 50
+    orphan = os.path.join(store._table_dir("orders"), "v9-orphan")
+    os.makedirs(orphan)
+    aged = time.time() - UNCOMMITTED_MIN_AGE_S - 60
+    os.utime(orphan, (aged, aged))
+    assert vacuum(store, "orders", keep_versions=1) == [orphan]
+
+
+def test_read_merged_fast_path_uniform_schemas(spark, store):
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string")
+    store.append(spark, df, "t")
+    store.append(spark, df, "t")
+    got = read_merged(store, spark, "t")
+    want = spark.read.option("mergeSchema", "true") \
+        .parquet(*store.manifest("t")["dirs"])
+    assert got.schema == want.schema
+    assert got.count() == 4
+
+
+def test_evolved_schemas_fall_back_to_inference(spark, store):
+    store.append(spark, spark.createDataFrame([(1,)], "k long"), "t")
+    append_evolve(store, spark,
+                  spark.createDataFrame([(2, "b")], "k long, s string"), "t")
+    m = store.manifest("t")
+    # two dirs with DIFFERENT recorded schemas: the single-schema fast
+    # path must not engage, and the merged read stays correct
+    assert len({m["schemas"][d] for d in m["dirs"]}) == 2
+    got = read_merged(store, spark, "t")
+    assert {tuple(r) for r in got.select("k", "s").collect()} \
+        == {(1, None), (2, "b")}
+
+
 # ---------------------------------------------------------------- zorder
 
 
-def test_zorder_preserves_data_and_improves_2d_pruning(spark, store):
-    from projectone_spark.store.maintenance import zorder_cluster
+@pytest.mark.parametrize("key", ["bigint", "date", "timestamp_ntz",
+                                 "decimal(12,2)"])
+def test_zorder_preserves_data_and_improves_2d_pruning(spark, store, key):
+    """Z-orders ``l_suppkey`` with a key derived from ``l_partkey``: the
+    column itself, or a DATE, TIMESTAMP_NTZ or decimal image of it, each
+    ranked in its own type (regression: the old ranking cast every key
+    to DOUBLE, which fails for DATE and TIMESTAMP_NTZ)."""
+    import datetime
+
     from projectone_spark.store.skipping import prune_files
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
+    day0 = datetime.date(1992, 1, 1)
+    days = F.date_add(F.lit(day0), F.col("l_partkey").cast("int"))
+    k = {"bigint": "l_partkey", "date": "k_date", "timestamp_ntz": "k_ntz",
+         "decimal(12,2)": "k_dec"}[key]
+    li = li.withColumn(k, {
+        "bigint": F.col("l_partkey"),
+        "date": days,
+        "timestamp_ntz": days.cast("timestamp_ntz"),
+        "decimal(12,2)": (F.col("l_partkey") / 100).cast("decimal(12,2)"),
+    }[key])
     store.overwrite(spark, li.repartition(8), "li",
-                    stats_columns=["l_partkey", "l_suppkey"])
+                    stats_columns=[k, "l_suppkey"])
     before = sorted(map(tuple, store.read(spark, "li")
                         .drop("__metadata_valid_to_ts__").collect()))
     mx = li.agg(F.max("l_partkey"), F.max("l_suppkey")).first()
-    preds = [("l_partkey", "<=", int(mx[0]) // 4),
+    pk = int(mx[0]) // 4
+    cut = {"bigint": pk,
+           "date": day0 + datetime.timedelta(days=pk),
+           "timestamp_ntz": datetime.datetime.combine(
+               day0 + datetime.timedelta(days=pk), datetime.time()),
+           "decimal(12,2)": pk / 100}[key]
+    preds = [(k, "<=", cut),
              ("l_suppkey", "<=", int(mx[1]) // 4)]
     kept0, total0 = prune_files(store.manifest("li"), preds)
 
-    zorder_cluster(store, spark, "li", ["l_partkey", "l_suppkey"],
+    zorder_cluster(store, spark, "li", [k, "l_suppkey"],
                    target_files=8)
     after = sorted(map(tuple, store.read(spark, "li")
                        .drop("__metadata_valid_to_ts__").collect()))
@@ -267,8 +352,6 @@ def test_zorder_preserves_data_and_improves_2d_pruning(spark, store):
 
 
 def test_zorder_null_keys_survive(spark, store):
-    from projectone_spark.store.maintenance import zorder_cluster
-
     df = spark.createDataFrame(
         [(1, 10, 5), (2, None, 7), (3, 20, None), (4, None, None)],
         "id bigint, a bigint, b bigint")
@@ -283,8 +366,6 @@ def test_zorder_all_null_column_degrades_to_single_bucket(spark, store):
     """ADVICE r7: an entirely-NULL clustered column makes percentile_approx
     return NULL bounds — must produce a degenerate single-bucket layout,
     not a TypeError from iterating None."""
-    from projectone_spark.store.maintenance import zorder_cluster
-
     df = spark.createDataFrame(
         [(1, 10, None), (2, 20, None), (3, 30, None)],
         "id bigint, a bigint, b bigint")
@@ -296,13 +377,22 @@ def test_zorder_all_null_column_degrades_to_single_bucket(spark, store):
 
 
 def test_zorder_rejects_bad_args(spark, store):
-    from projectone_spark.store.maintenance import zorder_cluster
-
     df = spark.range(10).withColumn("a", F.col("id") % 3)
     store.overwrite(spark, df, "t")
     with pytest.raises(ValueError, match="1-4 columns"):
         zorder_cluster(store, spark, "t", [])
-    with pytest.raises(ValueError, match="bits"):
-        zorder_cluster(store, spark, "t", ["a"], bits=0)
     with pytest.raises(FileNotFoundError):
         zorder_cluster(store, spark, "missing", ["a"])
+
+
+def test_zorder_keeps_declared_stats_and_set_columns(spark, store):
+    df = spark.createDataFrame([(i, i % 7, i % 5, f"c{i % 3}")
+                                for i in range(40)],
+                               "a bigint, b bigint, c bigint, cat string")
+    store.overwrite(spark, df, "t", stats_columns=["c"], set_columns=["cat"])
+    zorder_cluster(store, spark, "t", ["a", "b"], target_files=2)
+    m = store.manifest("t")
+    assert m["stats_columns"] == ["c", "a", "b"]
+    assert m["set_columns"] == ["cat"]
+    assert all("c" in f["min"] and "a" in f["min"] and "cat" in f["vals"]
+               for f in m["files"])

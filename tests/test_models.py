@@ -204,19 +204,18 @@ def test_plain_overwrite_strips_model_stamp(spark, tmp_path):
 
 
 def test_maintenance_keeps_model_stamp(spark, tmp_path):
-    """r9 advice finding: OPTIMIZE (a content-preserving recluster of the
+    """r9 advice finding: a Z-order (a content-preserving recluster of the
     same rows) and RESTORE (back to a version written by save_model) must
     keep the kind stamp — previously both stripped it permanently, so
     routine maintenance broke every downstream load_model."""
-    from projectone_spark.store.maintenance import restore
-    from projectone_spark.store.skipping import optimize
+    from projectone_spark.store.maintenance import restore, zorder_cluster
 
     store = _store(tmp_path)
     w = spark.createDataFrame([("cat", 7), ("dog", 9)],
                               "term string, weight_micro bigint")
     v_model = save_model(store, spark, "m", "token_weights", w,
                          params={"scale": 1})
-    optimize(store, spark, "m", ["term"], target_files=1)
+    zorder_cluster(store, spark, "m", ["term"], target_files=1)
     back, meta = load_model(store, spark, "m", kind="token_weights")
     assert meta["params"] == {"scale": 1} and back.count() == 2
 

@@ -9,9 +9,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from projectone_spark.store import TableStore
+from projectone_spark.store.maintenance import zorder_cluster
 from projectone_spark.store.skipping import (
-    optimize, predicates_to_sql, prune_files, read_where, skipping_report,
-    zorder_column,
+    predicates_to_sql, prune_files, read_where, skipping_report,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -115,26 +115,35 @@ def test_optimize_zorder_improves_skipping(spark, store):
     before = skipping_report(store, "orders", preds)
     assert before["files_kept"] == before["files_total"]  # random layout: no skip
 
-    optimize(store, spark, "orders",
-             zorder_by=["o_orderkey", "o_totalprice"], target_files=8)
+    zorder_cluster(store, spark, "orders",
+                   ["o_orderkey", "o_totalprice"], target_files=8)
     after = skipping_report(store, "orders", preds)
     assert after["files_kept"] < after["files_total"]
-    assert store.manifest("orders")["operation"] == "optimize"
+    assert store.manifest("orders")["operation"] == "zorder"
 
     _assert_same(read_where(store, spark, "orders", preds),
                  store.read(spark, "orders")
                  .filter("o_orderkey < 500 AND o_totalprice < 50000.0"))
 
 
-def test_zorder_column_is_codegen_expression(spark):
+def test_zorder_column_is_codegen_expression(spark, store, monkeypatch):
     import contextlib
     import io
 
-    df = _orders(spark)
-    z = zorder_column(df, ["o_orderkey", "o_totalprice"], total_bits=16)
+    store.overwrite(spark, _orders(spark), "orders")
+    written = []
+    overwrite = store.overwrite
+
+    def capture(spark, df, *args, **kwargs):
+        written.append(df)
+        return overwrite(spark, df, *args, **kwargs)
+
+    monkeypatch.setattr(store, "overwrite", capture)
+    zorder_cluster(store, spark, "orders", ["o_orderkey", "o_totalprice"])
+    written[0].collect()  # so the adaptive plan is final and shows codegen
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.select(z.alias("z")).filter("z >= 0").explain("formatted")
+        written[0].explain("formatted")
     plan = buf.getvalue()
     # no Python eval stage: the z-value runs JVM-side inside codegen
     # (formatted mode marks codegen stages with a leading '*')
@@ -145,7 +154,7 @@ def test_zorder_column_is_codegen_expression(spark):
 def test_single_column_optimize_disjoint_ranges(spark, store):
     store.overwrite(spark, _orders(spark).repartition(6), "orders",
                     stats_columns=["o_orderdate"])
-    optimize(store, spark, "orders", zorder_by=["o_orderdate"], target_files=6)
+    zorder_cluster(store, spark, "orders", ["o_orderdate"], target_files=6)
     m = store.manifest("orders")
     spans = sorted((f["min"]["o_orderdate"], f["max"]["o_orderdate"])
                    for f in m["files"] if "o_orderdate" in f["min"])
@@ -157,8 +166,7 @@ def test_optimize_preserves_partitioning(spark, store):
     df = _orders(spark)
     store.overwrite(spark, df, "orders", partition_by=["o_orderstatus"],
                     stats_columns=["o_orderdate"])
-    optimize(store, spark, "orders", zorder_by=["o_orderdate"],
-             target_files=4)
+    zorder_cluster(store, spark, "orders", ["o_orderdate"], target_files=4)
     m = store.manifest("orders")
     assert m["partition_by"] == ["o_orderstatus"]
     import os
@@ -192,6 +200,47 @@ def test_stats_gap_never_drops_files(spark, store):
     assert got.count() == old.count() > 0
 
 
+def test_decimal_stats_column_writes_appends_and_prunes(spark, store):
+    """Spark stores a decimal of precision <= 18 as INT32/INT64, whose
+    footer stats pyarrow cannot decode (regression: every write with such
+    a stats column crashed after its data dir was written). The stats
+    come from the raw unscaled values instead, exactly."""
+    df = _orders(spark).select(
+        "o_orderkey", F.col("o_totalprice").cast("decimal(12,2)").alias("price"))
+    low, high = df.filter("price < 100000"), df.filter("price >= 100000")
+    store.overwrite(spark, low.repartitionByRange(2, "price"), "orders",
+                    stats_columns=["price"])
+    store.append(spark, high.coalesce(1), "orders")
+    files = store.manifest("orders")["files"]
+    assert len(files) == 3 and all("price" in f["min"] for f in files)
+    assert min(f["min"]["price"] for f in files) \
+        == float(df.agg(F.min("price")).first()[0])
+    preds = [("price", ">=", 100000)]
+    rep = skipping_report(store, "orders", preds)
+    assert rep["files_kept"] == 1
+    _assert_same(read_where(store, spark, "orders", preds), high)
+
+
+@pytest.mark.parametrize("partition_by", [None, ["o_orderstatus"]])
+def test_read_where_plans_no_job(spark, store, partition_by):
+    """read_where reads its pruned file set with the snapshot's recorded
+    read-back schemas, so building the frame runs no Spark job (no schema
+    inference per data directory), partitioned or not."""
+    df = _orders(spark)
+    for i in range(5):
+        store.append(spark, df.filter(F.col("o_orderkey") % 5 == i), "orders",
+                     partition_by=partition_by, stats_columns=["o_orderkey"])
+    sc = spark.sparkContext
+    group = f"read-where-plan-{partition_by}"
+    sc.setJobGroup(group, "read_where planning")
+    try:
+        got = read_where(store, spark, "orders", [("o_orderkey", "<=", 1000)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    _assert_same(got.select(*df.columns), df.filter("o_orderkey <= 1000"))
+
+
 def test_numeric_partition_path_pruning(spark, store):
     """Partition dirs like bucket=9 vs bucket=10 must compare numerically
     (regression: lexicographic '9' < '10' pruned matching files)."""
@@ -220,8 +269,7 @@ def test_read_where_empty_predicates_and_date_literal(spark, store):
 def test_zorder_string_column_raises(spark, store):
     store.overwrite(spark, _orders(spark), "orders")
     with pytest.raises(TypeError, match="o_orderstatus"):
-        optimize(store, spark, "orders",
-                 zorder_by=["o_orderstatus", "o_orderkey"])
+        zorder_cluster(store, spark, "orders", ["o_orderstatus", "o_orderkey"])
 
 
 def test_value_set_skipping_prunes_categories(spark, store):
