@@ -147,7 +147,7 @@ class TableStore:
             }
             # per-dir read-back schema (see _dir_schema): carried forward
             # for retained dirs, pruned to the committed dir set so the
-            # manifest stays bounded; readers fall back to inference for
+            # manifest stays bounded; readers merge footer schemas for
             # any dir without an entry
             prev_schemas = dict((prev or {}).get("schemas") or {})
             dir_schemas = {d: prev_schemas[d] for d in dirs
@@ -497,8 +497,8 @@ class TableStore:
             linked.add(dst)
         # the new dir's read-back schema is recorded only when uniformity
         # is provable: every linked-from dir carries exactly the recorded
-        # schema the fresh files read back as. Otherwise readers fall back
-        # to inference, and read_merged keeps its footer-merging path.
+        # schema the fresh files read back as. Otherwise readers merge the
+        # dir's footer schemas (TableStore._read_files).
         recorded = m.get("schemas") or {}
         uniform = all(recorded.get(d) == written for d, _ in linkable)
         cols = m.get("stats_columns") or []
