@@ -10,15 +10,33 @@ Design for 100 TB:
   quadratic blow-up is bounded by bucket size, not corpus size.
 
 All expressions are Catalyst built-ins (md5 / transform / aggregate /
-array_*) so signature generation stays inside whole-stage codegen.
+array_*): no Python worker runs. On Spark 4.1 ``transform``, ``filter``
+and ``aggregate`` are ``CodegenFallback`` expressions, so the stage is
+generated but those lambdas run interpreted inside it. An explode plus
+grouped-min rewrite of :func:`minhash_signatures` measured no faster
+(1.2-1.6 s against 1.0-1.2 s warm on the ~390-doc benchmark corpus,
+4 vCPU, ``local[2]``): md5 dominates either way.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql.types import (
+    ByteType,
+    DataType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from projectone_spark.functions.text import (
     ngram_join,
@@ -165,14 +183,22 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     via :func:`auto_band_chars` — the same sizing
     :func:`lsh_recall_audit` defaults to, so the default audit measures
     the banding the default index actually ships at that corpus size.
+    The corpus size is an observed metric of the signature checkpoint,
+    which is then eager: no separate count job scans the input.
     Pass an explicit width only for parity with a fixed external
     partitioning (the incremental index path,
     :func:`incremental_lsh_pairs`, needs the FIXED width its standing
     band table was built with)."""
-    if band_chars is None:
-        band_chars = auto_band_chars(df.count())
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, k, parallelism)
-    sigs = sigs.localCheckpoint(eager=False)
+    if band_chars is None:
+        # one signature row per input row: the checkpoint's own job counts
+        # the corpus, where a separate count() would scan it again
+        rows = Observation()
+        sigs = (sigs.observe(rows, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True))
+        band_chars = auto_band_chars(rows.get["n"])
+    else:
+        sigs = sigs.localCheckpoint(eager=False)
     mh_cols = [f"mh{i}" for i in range(num_hashes)]
     banded = sigs.withColumn("band", F.substring(F.col("mh0"), 1, band_chars))
     if blocks > 1:
@@ -416,29 +442,134 @@ def winnow_fingerprint_pairs(df: DataFrame, text_col: str = "text",
                      .cast("double") / F.lit(1000000.0)).alias("sim")))
 
 
+#: Spark's ``defaultSize`` in bytes of each node id type the driver path
+#: takes. numpy orders these exactly as Spark does (a UTF-8 string's
+#: code-point order is its byte order); floats take the rounds, because
+#: NaN and -0.0 order differently in Python and Spark, and so does every
+#: other type, collated strings included.
+_ID_BYTES = {ByteType(): 1, ShortType(): 2, IntegerType(): 4, LongType(): 8,
+             StringType(): 20}
+
+
+def component_minima(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Union-find over nodes ``0..n-1`` and the edges ``(u[i], v[i])``:
+    each node's label is the smallest node number in its component.
+
+    Vectorised: every round hooks the larger root of each edge that still
+    spans two trees under the smaller one (``np.minimum.at``), then
+    pointer-jumps until every node points at its root. A node's parent is
+    never larger than the node, so the last root of a component is its
+    minimum."""
+    parent = np.arange(n)
+    while True:
+        pu, pv = parent[u], parent[v]
+        split = pu != pv
+        if not split.any():
+            return parent
+        u, v, pu, pv = u[split], v[split], pu[split], pv[split]
+        np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _driver_edge_cap(spark: SparkSession, id_type: DataType) -> int:
+    """Most edges of ``id_type`` the driver path collects: Spark's
+    broadcast threshold, in bytes through Spark's own conf parser, over
+    the default size of two ids. 0 (the rounds) for a threshold <= 0 and
+    for id types outside ``_ID_BYTES``."""
+    size = _ID_BYTES.get(id_type)
+    if size is None:
+        return 0
+    threshold = spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    return max(threshold, 0) // (2 * size)
+
+
+def _components_table(pairs: pa.Table, id_out: str) -> pa.Table:
+    """The rounds' output rows, from the collected edge list: every
+    non-NULL endpoint labelled with its component's minimum id, and one
+    ``(NULL, NULL)`` row if any endpoint is NULL (a NULL never equals a
+    join key, so the rounds leave it alone with its own NULL label)."""
+    m = pairs.num_rows
+    ends = pa.chunked_array(pairs.column(0).chunks + pairs.column(1).chunks,
+                            type=pairs.schema.field(0).type)
+    valid = pc.is_valid(ends).to_numpy()
+    ids, index = np.unique(pc.drop_null(ends).to_numpy(), return_inverse=True)
+    at = np.full(2 * m, -1, dtype=np.int64)
+    at[valid] = index
+    u, v = at[:m], at[m:]
+    both = (u >= 0) & (v >= 0)
+    cols = [pa.array(ids, type=ends.type),
+            pa.array(ids[component_minima(u[both], v[both], len(ids))],
+                     type=ends.type)]
+    if not valid.all():
+        cols = [pa.concat_arrays([c, pa.nulls(1, ends.type)]) for c in cols]
+    return pa.Table.from_arrays(cols, names=[id_out, "component"])
+
+
 def connected_components(edges: DataFrame, src: str = "doc_id_a",
                          dst: str = "doc_id_b", id_out: str = "doc_id",
                          max_iters: int = 20) -> DataFrame:
-    """Connected components over a pair list by hash-min label propagation:
-    every node starts labeled with its own id; each round takes the min of
-    its own and its neighbors' labels; converged when no label changes.
-    Deterministic, O(graph diameter) rounds — the standard big-graph CC
-    (each round = one shuffle-join, no driver-side graph).
+    """Connected components over a pair list: one row per node id (every
+    endpoint), labelled with the smallest id in its component.
 
     Near-dup grouping is its use here: LSH pairs are edges, a component is
     the transitive closure "these documents are all copies of one thing",
     and downstream keeps one representative per component (cf. d07's
-    per-bucket keep-best). ``localCheckpoint`` each round truncates the
-    lineage the loop would otherwise stack (the reference's
-    ``stage_results`` knob, sources.py:161-169).
+    per-bucket keep-best).
+
+    Two paths, chosen by the size of the edge list:
+
+    - *Driver.* Spark already ships any relation below
+      ``spark.sql.autoBroadcastJoinThreshold`` to every task, so an edge
+      list under that many bytes (at Spark's default size of the id type,
+      two ids per edge: 4,194,304 long edges at the engine's ``64m``) is
+      collected in one job (``limit(cap + 1)``) and labelled by
+      :func:`component_minima` on the driver. The result is a local
+      relation, read with no further job. A threshold <= 0 (Spark's
+      ``-1``) sends every input to the rounds; so do float ids and any
+      type not in ``_ID_BYTES``.
+    - *Rounds.* Above the bound, hash-min label propagation: every node
+      starts labeled with its own id; each round takes the min of its own
+      and its neighbors' labels; converged when no label changes.
+      Deterministic, O(graph diameter) rounds of one shuffle-join each.
+      ``localCheckpoint`` each round truncates the lineage the loop would
+      otherwise stack (the reference's ``stage_results`` knob,
+      sources.py:161-169).
+
+    Both paths return the same rows and schema for the same input,
+    self-loops, duplicate and reversed edges included. A NULL endpoint
+    joins nothing: its partner keeps its own component, and one
+    ``(NULL, NULL)`` row appears.
+
+    ``max_iters`` bounds the rounds only: they raise ``RuntimeError``
+    rather than return labels that have not converged. The driver path is
+    exact and never raises.
     """
+    sym = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+           .unionByName(edges.select(F.col(dst).alias("s"),
+                                     F.col(src).alias("d"))))
+    node = sym.schema["s"]  # the id type and nullability both paths return
+    spark = edges.sparkSession
+    cap = _driver_edge_cap(spark, node.dataType)
+    if cap > 0:
+        pairs = (edges.select(F.col(src).cast(node.dataType).alias("s"),
+                              F.col(dst).cast(node.dataType).alias("d"))
+                 .limit(cap + 1).toArrow())
+        if pairs.num_rows <= cap:
+            schema = StructType([
+                StructField(name, node.dataType, node.nullable)
+                for name in (id_out, "component")])
+            return spark.createDataFrame(_components_table(pairs, id_out),
+                                         schema)
+        del pairs  # over the bound: free the driver copy before the rounds
     # checkpoint the edge list ONCE: its lineage is typically the whole
     # LSH/minhash pipeline, which would otherwise recompute in every
     # round's neighbor join
-    sym = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-           .unionByName(edges.select(F.col(dst).alias("s"),
-                                     F.col(src).alias("d")))
-           .localCheckpoint(eager=False))
+    sym = sym.localCheckpoint(eager=False)
     labels = (sym.select(F.col("s").alias("node")).distinct()
               .withColumn("label", F.col("node")))
     changed = -1

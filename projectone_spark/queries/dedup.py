@@ -3,11 +3,12 @@ the seeded-md5 MinHash / hex-digit SimHash arithmetic exactly."""
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from projectone_spark.functions.dedup import (
-    connected_components,
+    component_minima,
     exact_dedup,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -268,9 +269,10 @@ SELECT node AS doc_id, min(lab) AS component FROM reach GROUP BY node
               "band-edges + per-band (hub, size) stats collect to the "
               "driver for a union-find, and one broadcast join labels "
               "every doc — two small jobs instead of O(diameter) "
-              "label-propagation shuffle rounds (the generic scale path "
-              "for unbounded edge lists stays in "
-              "functions.dedup.connected_components); oracle = "
+              "label-propagation shuffle rounds (the union-find is "
+              "functions.dedup.component_minima, which "
+              "functions.dedup.connected_components also runs on any edge "
+              "list under the broadcast threshold); oracle = "
               "recursive-CTE reachability over the equivalent star edges",
           tags=("dedup", "graph", "llm"))
 def d08_connected_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,27 +295,15 @@ def d08_connected_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.count(F.lit(1)).alias("n")).collect())
     band_edges = sigs.select("b0", "b1").distinct().collect()
 
-    parent: dict[str, str] = {r["band"]: r["band"] for r in stats}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in band_edges:
-        ra, rb = find(r["b0"]), find(r["b1"])
-        if ra != rb:
-            parent[ra] = rb
-    comp_min: dict[str, int] = {}
-    hub_of = {r["band"]: r["hub"] for r in stats}
-    for b in parent:
-        root = find(b)
-        h = hub_of[b]
-        if root not in comp_min or h < comp_min[root]:
-            comp_min[root] = h
-    label = [(b, comp_min[find(b)], int(n))
-             for b, n in ((r["band"], r["n"]) for r in stats)]
+    index = {r["band"]: i for i, r in enumerate(stats)}
+    root = component_minima(
+        np.array([index[r["b0"]] for r in band_edges], dtype=np.int64),
+        np.array([index[r["b1"]] for r in band_edges], dtype=np.int64),
+        len(stats))
+    comp_min = np.full(len(stats), np.iinfo(np.int64).max)
+    np.minimum.at(comp_min, root, [r["hub"] for r in stats])
+    label = [(r["band"], int(comp_min[root[i]]), int(r["n"]))
+             for i, r in enumerate(stats)]
     lab_df = values_frame(sigs.sparkSession, label,
                           "band string, component bigint, n bigint")
     # a doc appears in the oracle's edge list iff either of its buckets has

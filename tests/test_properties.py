@@ -7,7 +7,10 @@ randomized multi-batch histories instead of hand-picked cases.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -159,30 +162,132 @@ def test_cdc_two_runs_partition_the_data(spark, offsets, split):
     assert read1 & read2 == set()
 
 
-def test_connected_components_known_graph(spark):
+@contextmanager
+def _broadcast_threshold(spark, value: str | None):
+    """Run the block with ``spark.sql.autoBroadcastJoinThreshold`` set to
+    ``value`` (``None`` leaves it), then restore it. ``-1`` sends
+    ``connected_components`` to its label-propagation rounds."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["driver", "rounds"])
+def test_connected_components_known_graph(spark, threshold):
     from projectone_spark.functions.dedup import connected_components
 
     # two chains and an isolated pair: {1-2-3-4}, {10-11}, {20-21-22}
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (21, 22)],
         "doc_id_a long, doc_id_b long")
-    got = {r["doc_id"]: r["component"]
-           for r in connected_components(edges).collect()}
+    with _broadcast_threshold(spark, threshold):
+        got = {r["doc_id"]: r["component"]
+               for r in connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
                    20: 20, 21: 20, 22: 20}
 
 
 def test_connected_components_nonconvergence_raises(spark):
-    import pytest
-
     from projectone_spark.functions.dedup import connected_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "doc_id_a long, doc_id_b long")
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(chain, max_iters=2)
-    got = connected_components(chain, max_iters=15).collect()
+    with _broadcast_threshold(spark, "-1"):
+        with pytest.raises(RuntimeError, match="converge"):
+            connected_components(chain, max_iters=2)
+        got = connected_components(chain, max_iters=15).collect()
+        assert {r["component"] for r in got} == {0}
+    # the driver path is exact: max_iters bounds the rounds only
+    got = connected_components(chain, max_iters=2).collect()
     assert {r["component"] for r in got} == {0}
+
+
+def test_connected_components_driver_path_jobs(spark):
+    """A small edge list is one collect job, and the labels come back as a
+    local relation that a collect reads with no job (the rounds ran 8 jobs
+    a round, ~190 on this 20-edge chain)."""
+    import uuid
+
+    from projectone_spark.functions.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], "doc_id_a long, doc_id_b long")
+    sc = spark.sparkContext
+    group = f"cc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        got = connected_components(edges).collect()
+    finally:
+        sc.setJobGroup("", "")
+    assert {r["component"] for r in got} == {0} and len(got) == 21
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def _union_find_reference(edges, n):
+    """Per-edge dict union-find: each node's smallest component member."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return [find(x) for x in range(n)]
+
+
+@given(n=st.integers(min_value=1, max_value=40), data=st.data())
+@settings(max_examples=200, deadline=None)
+def test_component_minima_matches_dict_union_find(n, data):
+    import numpy as np
+
+    from projectone_spark.functions.dedup import component_minima
+
+    node = st.integers(min_value=0, max_value=n - 1)
+    edges = data.draw(st.lists(st.tuples(node, node), max_size=3 * n))
+    u = np.array([a for a, _ in edges], dtype=np.int64)
+    v = np.array([b for _, b in edges], dtype=np.int64)
+    assert component_minima(u, v, n).tolist() == \
+        _union_find_reference(edges, n)
+
+
+#: node ids for the two-path property: a small domain so components form,
+#: NULLs, and strings whose code-point order differs from UTF-16 order
+CC_LONG = st.one_of(st.none(), st.integers(min_value=-3, max_value=6))
+CC_STRING = st.one_of(st.none(), st.sampled_from(
+    ["", "a", "Z", "ab", "\u00e9", "\ufb00", "\U0001d538", "a\u00e9"]))
+
+
+@given(data=st.data(), as_string=st.booleans())
+@SLOW
+def test_connected_components_driver_equals_rounds(spark, data, as_string):
+    """For random edge lists (self-loops, duplicate and reversed edges,
+    NULL endpoints; long and string ids) the driver union-find returns the
+    label-propagation rounds' rows and schema exactly."""
+    from projectone_spark.functions.dedup import connected_components
+
+    ids = CC_STRING if as_string else CC_LONG
+    pairs = data.draw(st.lists(st.tuples(ids, ids), max_size=10))
+    dup = data.draw(st.integers(min_value=0, max_value=len(pairs)))
+    rev = data.draw(st.integers(min_value=0, max_value=len(pairs)))
+    pairs += pairs[:dup] + [(b, a) for a, b in pairs[:rev]]
+    kind = "string" if as_string else "long"
+    edges = spark.createDataFrame(pairs, f"doc_id_a {kind}, doc_id_b {kind}")
+    driver = connected_components(edges)
+    with _broadcast_threshold(spark, "-1"):
+        rounds = connected_components(edges, max_iters=50)
+        want = sorted(map(tuple, rounds.collect()), key=repr)
+    assert driver.schema == rounds.schema
+    assert sorted(map(tuple, driver.collect()), key=repr) == want
 
 
 MERGE_ROWS = st.lists(st.tuples(KEYS, VALS), min_size=0, max_size=6,

@@ -13,11 +13,21 @@ run. For every workload and seed the two sides run ``perfbench/run.py
 pair to pair.
 
 The report gives, per workload and metric, each side's median and
-interquartile range, the change of the medians, and in how many pairs the
+interquartile range, the change of the medians, in how many pairs the
 change side was better (by the metric's ``better`` direction in the base's
-``BENCHMARK.json``). A ``!`` marks an end-to-end metric whose median moved
-past its bound in the worse direction. Runs are sequential: one Spark
-session at a time.
+``BENCHMARK.json``), and a verdict:
+
+- ``gain``: B won at least 9 of every 10 pairs (ties count for neither)
+  and the medians differ, in B's favour, by more than A's IQR;
+- ``worse``: an end-to-end metric whose median moved past its bound in
+  the worse direction (also marked ``!``);
+- ``unresolved``: an end-to-end metric whose A IQR is wider than its
+  bound, unless every B run beat every A run;
+- ``within``: any other end-to-end metric; ``-``: any other per-layer
+  metric (they have no bound).
+
+Each pair's end-to-end values follow the table. Runs are sequential: one
+Spark session at a time.
 """
 
 from __future__ import annotations
@@ -67,12 +77,34 @@ def quartiles(xs: list[float]) -> tuple[float, float]:
     return q[0], q[2]
 
 
+def verdict(a: list[float], b: list[float], better: str,
+            bound: float | None) -> str:
+    """The gain / worse / unresolved rule of the module docstring for one
+    metric's paired values ``a[i]``, ``b[i]``."""
+    sign = 1 if better == "lower" else -1
+    ma, mb = statistics.median(a), statistics.median(b)
+    qa1, qa3 = quartiles(a)
+    wins = sum(sign * (y - x) < 0 for x, y in zip(a, b))
+    if 10 * wins >= 9 * len(a) and sign * (ma - mb) > qa3 - qa1:
+        return "gain"
+    if bound is None:
+        return "-"
+    scale = abs(ma) or 1.0
+    if sign * (mb - ma) / scale > bound:
+        return "worse"
+    every_b_beats_every_a = max(sign * y for y in b) < min(sign * x for x in a)
+    if (qa3 - qa1) / scale > bound and not every_b_beats_every_a:
+        return "unresolved"
+    return "within"
+
+
 def report(workload: str, pairs: list[tuple[dict, dict]], spec: dict) -> list[str]:
     better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
     bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     lines = [f"## {workload} ({len(pairs)} pairs)", "",
-             "| metric | A median | A IQR | B median | B IQR | B vs A | B wins |",
-             "|---|---|---|---|---|---|---|"]
+             "| metric | A median | A IQR | B median | B IQR | B vs A | B wins "
+             "| verdict |",
+             "|---|---|---|---|---|---|---|---|"]
     for name in better:
         a = [p[0]["metrics"][name]["value"] for p in pairs if name in p[0]["metrics"]]
         b = [p[1]["metrics"][name]["value"] for p in pairs if name in p[1]["metrics"]]
@@ -85,7 +117,16 @@ def report(workload: str, pairs: list[tuple[dict, dict]], spec: dict) -> list[st
         flag = " !" if name in bounds and sign * rel > bounds[name] else ""
         (qa1, qa3), (qb1, qb3) = quartiles(a), quartiles(b)
         lines.append(f"| {name} | {ma:.4g} | {qa3 - qa1:.3g} | {mb:.4g} | "
-                     f"{qb3 - qb1:.3g} | {100 * rel:+.1f}%{flag} | {wins}/{len(a)} |")
+                     f"{qb3 - qb1:.3g} | {100 * rel:+.1f}%{flag} | {wins}/{len(a)} "
+                     f"| {verdict(a, b, better[name], bounds.get(name))} |")
+    shown = [n for n in bounds
+             if all(n in p[i]["metrics"] for p in pairs for i in (0, 1))]
+    lines += ["", "| pair | " + " | ".join(f"{n} A → B" for n in shown) + " |",
+              "|---" * (len(shown) + 1) + "|"]
+    for i, (a, b) in enumerate(pairs, 1):
+        lines.append(f"| {i} | " + " | ".join(
+            f"{a['metrics'][n]['value']:.4g} → {b['metrics'][n]['value']:.4g}"
+            for n in shown) + " |")
     for side, i in (("A", 0), ("B", 1)):
         ok = sum(p[i]["correct"] for p in pairs)
         failed = sum(p[i]["failed"] for p in pairs)
