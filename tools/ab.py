@@ -106,10 +106,12 @@ def report(workload: str, pairs: list[tuple[dict, dict]], spec: dict) -> list[st
              "| verdict |",
              "|---|---|---|---|---|---|---|---|"]
     for name in better:
-        a = [p[0]["metrics"][name]["value"] for p in pairs if name in p[0]["metrics"]]
-        b = [p[1]["metrics"][name]["value"] for p in pairs if name in p[1]["metrics"]]
-        if not a or not b:
+        both = [(p[0]["metrics"][name]["value"], p[1]["metrics"][name]["value"])
+                for p in pairs
+                if name in p[0]["metrics"] and name in p[1]["metrics"]]
+        if not both:
             continue
+        a, b = [x for x, _ in both], [y for _, y in both]
         ma, mb = statistics.median(a), statistics.median(b)
         sign = 1 if better[name] == "lower" else -1
         wins = sum(sign * (y - x) < 0 for x, y in zip(a, b))
