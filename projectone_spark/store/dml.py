@@ -17,19 +17,25 @@ partition statistics ``read_where`` uses (``store/skipping.py``):
 
 Files lacking stats are always treated as candidates — pruning is an
 optimization, never a correctness filter.
+
+``merge_into`` and the SCD writers (``writers.merge``) are clause sets over
+one key merge, :func:`_key_merge`. A clause fires only where its condition
+is TRUE, and ``merge_into`` matches keys NULL-safely.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Mapping, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from projectone_spark.store import ConcurrentWriteError, TableStore
 from projectone_spark.store.skipping import (
     _validate_predicates,
     predicates_to_sql,
+    sql_ident,
 )
 
 
@@ -102,6 +108,59 @@ def update_where(store: TableStore, spark: SparkSession, name: str,
                           metrics={"predicate": residual})
 
 
+def _as(expr: str, name: str) -> str:
+    return f"{expr} AS {sql_ident(name)}"
+
+
+def _project(df: DataFrame, exprs: Sequence[str]) -> DataFrame:
+    """``df.selectExpr(*exprs)`` in a fixed number of py4j calls.
+
+    py4j hands a Python list to the JVM one ``add`` call per element, so
+    the expressions cross as ONE JSON array that Spark's bundled Jackson
+    decodes back into the ``java.util.List`` ``selectExpr`` takes.
+    """
+    jvm = df.sparkSession._jvm
+    exprs_j = jvm.com.fasterxml.jackson.databind.ObjectMapper().readValue(
+        json.dumps(list(exprs)), jvm.java.util.ArrayList._java_lang_class)
+    return DataFrame(df._jdf.selectExpr(jvm.PythonUtils.toSeq(exprs_j)),
+                     df.sparkSession)
+
+
+def _key_merge(source: DataFrame, target: DataFrame, on: str,
+               clauses: Sequence[tuple[str | None, Sequence[str]]], *,
+               stamps: Mapping[str, Column] | None = None,
+               hash_source: bool = False) -> DataFrame:
+    """The engine's one key merge: ``source`` full-outer joined with
+    ``target`` on the SQL condition ``on``. Each clause ``(when,
+    projection)`` emits the row ``projection`` (``expr AS name`` SQL over
+    ``source.*`` / ``target.*``) for every joined pair where ``when`` is
+    TRUE (None: always). One clause is a filter and one :func:`_project`;
+    several leave through a code-generated ``explode(array(CASE WHEN when
+    THEN struct(...) END, ...))`` and ``IS NOT NULL``. ``stamps`` are
+    ``Column`` values without SQL text, added once to the joined frame for
+    the clauses to reference; ``hash_source`` makes the source the hash
+    join's build side."""
+    src = source.hint("shuffle_hash") if hash_source else source
+    joined = src.alias("source").join(target.alias("target"), F.expr(on),
+                                      "full_outer")
+    if stamps:
+        joined = joined.withColumns(dict(stamps))
+    if len(clauses) == 1:
+        (when, projection), = clauses
+        return _project(joined if when is None else joined.filter(when),
+                        projection)
+    rows = ", ".join(f"CASE WHEN {when} THEN struct({', '.join(proj)}) END"
+                     for when, proj in clauses)
+    return (joined.selectExpr(f"explode(array({rows})) AS r")
+            .filter("r IS NOT NULL").selectExpr("r.*"))
+
+
+def _is_true(cond: str | bool) -> str:
+    """A clause condition as SQL that is never NULL: a NULL condition
+    does not fire its clause, as in Delta."""
+    return str(cond).lower() if isinstance(cond, bool) else f"(({cond}) IS TRUE)"
+
+
 def merge_into(store: TableStore, spark: SparkSession, name: str,
                source: DataFrame, keys: Sequence[str], *,
                when_matched_update: Mapping[str, str] | None = None,
@@ -115,18 +174,20 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
                manifest_extra: dict | None = None,
                expected_version: int | None = None,
                ) -> int | None:
-    """General ``MERGE INTO`` (Delta ``DeltaTable.merge`` surface — the
-    reference's SCD writers are specializations of this; ``scd1/2/3`` in
-    ``writers.merge`` stay the metadata-stamped forms).
+    """General ``MERGE INTO`` (Delta ``DeltaTable.merge`` surface): one
+    clause set over :func:`_key_merge`, the key merge the SCD writers in
+    ``writers.merge`` also use.
 
-    Equi-merge on ``keys``. Clause semantics match Delta:
+    Equi-merge on ``keys``, NULL-safe (a NULL source key matches a NULL
+    target key). Clause semantics match Delta, and a clause fires only
+    where its condition is TRUE, never where it is NULL:
 
-    - matched + ``when_matched_delete`` condition true → row removed;
-    - matched + ``matched_condition`` true → assignments in
+    - matched + ``when_matched_delete`` condition → row removed;
+    - matched, not deleted, + ``matched_condition`` → assignments in
       ``when_matched_update`` applied (``source.col`` / ``target.col``
       qualifiers available in expressions; default updates every common
       column to the source value);
-    - source-only + ``not_matched_condition`` true → inserted when
+    - source-only + ``not_matched_condition`` → inserted when
       ``when_not_matched_insert``;
     - target-only → kept, unless ``when_not_matched_by_source_delete``
       (condition or True) says delete;
@@ -141,8 +202,10 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
     Scale: when no not-matched-by-source clause is present, target files
     whose key-range stats provably exclude every source key are
     hard-linked untouched (Delta MERGE's file pruning); only candidate
-    files join the source. The source is scanned twice (bounds + join) —
-    checkpoint upstream if its lineage is expensive.
+    files join the source. A key the source holds a NULL in prunes
+    nothing: file stats do not say where NULL keys are. The source is
+    scanned twice (bounds + join) — checkpoint upstream if its lineage is
+    expensive. An empty source returns None and commits nothing.
     """
     m = _snapshot(store, name, "merge", expected_version)
     keys = list(keys)
@@ -157,88 +220,61 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
             f"source has columns absent from target: {evolving}; pass "
             f"schema_evolution=True to add them (Delta autoMerge)")
 
-    nmbs = when_not_matched_by_source_delete
+    q = sql_ident
     predicates: list[tuple[str, str, object]] = []
-    if not nmbs and not evolving:
+    if not when_not_matched_by_source_delete and not evolving:
         # file pruning: [min, max] of each source key bounds the target
         # rows that can possibly match; everything outside is untouched
-        bounds = source.agg(*[f for k in keys
-                              for f in (F.min(k).alias(f"lo_{k}"),
-                                        F.max(k).alias(f"hi_{k}"))]).first()
-        if bounds[0] is None:  # empty source: nothing matches, nothing inserts
+        bounds = _project(source, ["count(1)", *(
+            f"{agg}({q(k)})" for k in keys for agg in ("count", "min", "max"))]
+        ).first()
+        if bounds[0] == 0:  # empty source: nothing matches, nothing inserts
             return None
-        for k in keys:
-            predicates.append((k, ">=", bounds[f"lo_{k}"]))
-            predicates.append((k, "<=", bounds[f"hi_{k}"]))
+        for i, k in enumerate(keys):
+            non_null, lo, hi = bounds[1 + 3 * i:4 + 3 * i]
+            if non_null == bounds[0]:
+                predicates += [(k, ">=", lo), (k, "<=", hi)]
+
+    # presence flags, not key-null checks: merge keys may themselves be NULL
+    matched = "(source.__s_exists IS NOT NULL AND target.__t_exists IS NOT NULL)"
+    source_only = "target.__t_exists IS NULL"
+    deleted = _is_true(when_matched_delete)
+    updated = (f"({matched} AND NOT {deleted} "
+               f"AND {_is_true(matched_condition or True)})")
+    inserted = _is_true(when_not_matched_insert and (not_matched_condition or True))
+    keep = (f"NOT (({matched} AND {deleted}) "
+            f"OR ({source_only} AND NOT {inserted}) OR (source.__s_exists IS NULL "
+            f"AND {_is_true(when_not_matched_by_source_delete)}))")
+    src = _project(source, ["*", "true AS __s_exists", "count(1) OVER "
+                            f"(PARTITION BY {', '.join(map(q, keys))}) AS __scnt"])
+    on = " AND ".join(f"source.{q(k)} <=> target.{q(k)}" for k in keys)
 
     def apply(tgt: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
         if evolving:
             # new columns append at the end, null where the source has no
-            # row — then the merge below treats them like any shared column
+            # row — then the merge treats them like any shared column
             tgt = tgt.withColumns({
                 c: F.lit(None).cast(source.schema[c].dataType)
                 for c in evolving})
-        cols = tgt.columns
-        # per-source-key row count, computed on the source BEFORE the join
-        # (same key partitioning the join needs, no post-join window): a
-        # matched pair whose source key occurs >1 times means one target
-        # row would take two updates — Delta's duplicate-match error
-        s = (source
-             .withColumn("__scnt",
-                         F.count(F.lit(1)).over(Window.partitionBy(*keys)))
-             .withColumn("__s_exists", F.lit(True)).alias("source"))
-        # presence flags, not key-null checks: merge keys may themselves be
-        # NULL and eqNullSafe matches them
-        t = tgt.withColumn("__t_exists", F.lit(True)).alias("target")
-        cond = None
-        for k in keys:
-            term = F.col(f"source.{k}").eqNullSafe(F.col(f"target.{k}"))
-            cond = term if cond is None else cond & term
-        joined = t.join(s, cond, "full_outer")
-
-        is_matched = (F.col("source.__s_exists").isNotNull()
-                      & F.col("target.__t_exists").isNotNull())
-        source_only = F.col("target.__t_exists").isNull()
-        target_only = F.col("source.__s_exists").isNull()
-
-        upd = dict(when_matched_update) if when_matched_update is not None \
-            else {c: f"source.{c}" for c in cols if c in source.columns}
-        m_cond = F.expr(matched_condition) if matched_condition else F.lit(True)
-        del_cond = (F.lit(False) if when_matched_delete is False
-                    else F.lit(True) if when_matched_delete is True
-                    else F.expr(when_matched_delete))
-        ins_cond = F.expr(not_matched_condition) if not_matched_condition \
-            else F.lit(True)
-        nmbs_cond = (F.lit(False) if nmbs is False
-                     else F.lit(True) if nmbs is True else F.expr(nmbs))
-
-        keep = ~(
-            (is_matched & del_cond)
-            | (source_only & ~(F.lit(when_not_matched_insert) & ins_cond))
-            | (target_only & nmbs_cond))
-
-        dup = is_matched & (F.col("source.__scnt") > 1)
-        guard_msg = ("MERGE: a target row matched multiple source rows; "
-                     "deduplicate the source on the merge keys")
-        out_cols = []
-        for i, c in enumerate(cols):
+        upd = when_matched_update if when_matched_update is not None \
+            else {c: f"source.{q(c)}" for c in tgt.columns if c in source.columns}
+        exprs = []
+        for c in tgt.columns:
+            val = f"target.{q(c)}"
+            if c in source.columns:
+                val = f"CASE WHEN {source_only} THEN source.{q(c)} ELSE {val} END"
             if c in upd:
-                val = (F.when(is_matched & ~del_cond & m_cond, F.expr(upd[c]))
-                       .when(source_only, F.col(f"source.{c}"))
-                       .otherwise(F.col(f"target.{c}")))
-            elif c in source.columns:
-                val = (F.when(source_only, F.col(f"source.{c}"))
-                       .otherwise(F.col(f"target.{c}")))
-            else:
-                val = F.col(f"target.{c}")
-            if i == 0:
-                # folded into an OUTPUT column so column pruning can never
-                # elide the check; raises only for rows that violate it
-                val = F.when(dup, F.raise_error(F.lit(guard_msg))).otherwise(val)
-            out_cols.append(val.alias(c))
-        return joined.filter(keep).select(*out_cols)
+                val = f"CASE WHEN {updated} THEN ({upd[c]}) ELSE {val} END"
+            exprs.append(val)
+        # a source key occurring twice in a matched pair means two updates
+        # of one target row: Delta's duplicate-match error, folded into an
+        # OUTPUT column so column pruning can never elide it
+        exprs[0] = (f"CASE WHEN {matched} AND source.__scnt > 1 THEN "
+                    f"raise_error('MERGE: a target row matched multiple source "
+                    f"rows; deduplicate the source on the merge keys') "
+                    f"ELSE {exprs[0]} END")
+        return _key_merge(src, _project(tgt, ["*", "true AS __t_exists"]), on,
+                          [(keep, list(map(_as, exprs, tgt.columns)))])
 
     # with every target file pruned, the merge runs over an empty target:
     # only the source-only inserts remain

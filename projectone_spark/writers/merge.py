@@ -1,34 +1,28 @@
-"""Pure SCD merge semantics as DataFrame -> DataFrame functions.
+"""SCD1/2/3 merges as ``(source, target) -> new_target`` DataFrame
+functions: clause sets over the store's one key merge.
 
-Re-expresses the reference's Delta ``MERGE``-based SCD1/2/3 writers
+Re-expresses the reference's Delta ``MERGE`` clause sets
 (``core/execution/write.py:320-544`` scd1, ``:547-1010`` scd2, ``:27-317``
-scd3) as *pure snapshot transforms*: ``(source, target) -> new_target``.
-This is the Spark-first shape — the physical write (Delta MERGE when
-available, versioned-parquet swap otherwise) is a separate concern handled
-by :mod:`projectone_spark.writers` / :mod:`projectone_spark.store`.
+scd3) as pure snapshot transforms; :mod:`projectone_spark.writers` commits
+the result through ``TableStore._rewrite``. Each merge hands
+:func:`projectone_spark.store.dml._key_merge` (the full outer join
+``merge_into`` also uses) an ``on`` condition over the key hash and its
+``(when, projection)`` clauses as SQL text:
 
-Scale notes:
-- every variant is ONE full-outer join keyed on ``__metadata_key_hash__``
-  (a single 32-byte/8-byte shuffle key), not per-branch joins — one shuffle
-  per merge regardless of how many match-branches the SCD type has;
-- SCD2 joins the whole target on the key AND ``t.active = 'Y'``: closed
-  history never matches and passes through unmatched, so the target is
-  scanned once and, with the source as hash-build side, never sorted.
-  Rows leave through ``explode(array(...))`` and ``IS NOT NULL``; a lambda
-  ``filter`` (``ArrayFilter``) has no generated code and runs interpreted;
-- change detection compares precomputed row hashes, not N column pairs,
-  so the join condition stays a cheap equi-compare (reference rationale:
-  ``write.py:103-140``);
-- with ``algo="xxhash64"`` the shuffle key is a long instead of a hex string.
+- one shuffle per merge whatever the clause count; change detection
+  compares precomputed row hashes, not N column pairs (reference
+  ``write.py:103-140``); ``algo="xxhash64"`` makes the key a long;
+- SCD1 and SCD3 are one clause: every joined pair emits one row;
+- SCD2 is two, the surviving target row and the new source version, and
+  also joins on ``target.active = 'Y'``: closed history passes through
+  unmatched, so the target is scanned once and, with the source as the
+  hash-build side, never sorted.
 
-Plan-construction rule: one SQL expression per output column; never one
-``Column`` per column per side. Each ``Column`` node (``F.col``, ``when``,
-``alias``, …) is one py4j round trip, which made building one 9-column
-SCD2 plan cost ~1,500 JVM calls of driver time before any job ran. The
-builders therefore write each output column as SQL
-text, with every identifier quoted by ``hashing.sql_ident``, and ship a
-whole projection to the JVM as one string (:func:`_project`), so building
-a merge costs a fixed few dozen calls whatever the column count.
+Plan-construction rule: one SQL expression per output column, identifiers
+quoted by ``hashing.sql_ident``; never one ``Column`` per column per side
+(each ``Column`` node is one py4j round trip: a 9-column SCD2 once cost
+~1,500 calls to build). A projection crosses to the JVM as one string
+(``dml._project``), so a merge builds in a fixed few dozen calls.
 ``Column``-typed arguments (``now``, ``valid_from``, ``history_start``)
 have no SQL text; each is stamped once as a column the SQL references,
 and the optimizer folds it back in.
@@ -36,12 +30,12 @@ and the optimizer folds it back in.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from projectone_spark.store.dml import _as, _key_merge, _project
 from projectone_spark.writers.hashing import (
     ACTIVE,
     COLUMN_KEY_HASH,
@@ -57,46 +51,26 @@ from projectone_spark.writers.hashing import (
     with_key_data_hashes,
 )
 
-#: Internal column names: the exploded SCD2 row struct, and the stamped
-#: ``now`` / ``history_start`` arguments the SQL text refers to.
-_ROW = "r"
+#: Internal column names: the stamped ``now`` / ``history_start`` arguments
+#: the SQL text refers to.
 _NOW = "__metadata_now__"
 _HISTORY_START = "__metadata_history_start__"
 
 _KH, _DH, _CKH = sql_ident(KEY_HASH), sql_ident(DATA_HASH), sql_ident(COLUMN_KEY_HASH)
 _VF, _VT, _ACTIVE = sql_ident(VALID_FROM), sql_ident(VALID_TO), sql_ident(ACTIVE)
-_S_PRESENT = f"s.{_KH} IS NOT NULL"
-_T_PRESENT = f"t.{_KH} IS NOT NULL"
+_ON = f"source.{_KH} = target.{_KH}"
+_S_PRESENT = f"source.{_KH} IS NOT NULL"
+_T_PRESENT = f"target.{_KH} IS NOT NULL"
 #: key on both sides, data hash differs
-_CHANGED = f"({_S_PRESENT} AND {_T_PRESENT} AND s.{_DH} != t.{_DH})"
+_CHANGED = f"({_S_PRESENT} AND {_T_PRESENT} AND source.{_DH} != target.{_DH})"
 
 
-def _as(expr: str, name: str) -> str:
-    return f"{expr} AS {sql_ident(name)}"
-
-
-def _project(df: DataFrame, exprs: Sequence[str]) -> DataFrame:
-    """``df.selectExpr(*exprs)`` in a fixed number of py4j calls.
-
-    py4j hands a Python list to the JVM one ``add`` call per element, so
-    the expressions cross as ONE JSON array that Spark's bundled Jackson
-    decodes back into the ``java.util.List`` ``selectExpr`` takes.
-    """
-    jvm = df.sparkSession._jvm
-    exprs_j = jvm.com.fasterxml.jackson.databind.ObjectMapper().readValue(
-        json.dumps(list(exprs)), jvm.java.util.ArrayList._java_lang_class)
-    return DataFrame(df._jdf.selectExpr(jvm.PythonUtils.toSeq(exprs_j)),
-                     df.sparkSession)
-
-
-def _bind_now(df: DataFrame, now: Column | None) -> tuple[DataFrame, str]:
-    """SQL text for the ``now`` argument: ``current_timestamp()`` when it
-    is None, else a reference to ``now`` stamped onto ``df`` (a literal or
-    ``current_timestamp()`` folds back into the expressions that use it,
-    so the stamp leaves the optimized plan as it was)."""
+def _bind_now(now: Column | None) -> tuple[dict[str, Column], str]:
+    """``(stamps, sql)`` for the ``now`` argument: ``current_timestamp()``
+    when it is None, else a reference to ``now`` stamped as a column."""
     if now is None:
-        return df, "current_timestamp()"
-    return df.withColumn(_NOW, now), sql_ident(_NOW)
+        return {}, "current_timestamp()"
+    return {_NOW: now}, sql_ident(_NOW)
 
 
 def _prep_source(source: DataFrame, key_cols: Sequence[str],
@@ -111,15 +85,10 @@ def _prep_source(source: DataFrame, key_cols: Sequence[str],
     return with_key_data_hashes(src, key_cols, data_cols, algo)
 
 
-def _join_on_key(src: DataFrame, tgt: DataFrame) -> DataFrame:
-    return src.alias("s").join(tgt.alias("t"), F.expr(f"s.{_KH} = t.{_KH}"),
-                               "full_outer")
-
-
 def _pick(cond: str, cols: Sequence[str]) -> list[str]:
-    """``CASE WHEN cond THEN s.c ELSE t.c END AS c`` for each column."""
-    return [_as(f"CASE WHEN {cond} THEN s.{sql_ident(c)} "
-                f"ELSE t.{sql_ident(c)} END", c) for c in cols]
+    """``CASE WHEN cond THEN source.c ELSE target.c END AS c`` per column."""
+    return [_as(f"CASE WHEN {cond} THEN source.{sql_ident(c)} "
+                f"ELSE target.{sql_ident(c)} END", c) for c in cols]
 
 
 def scd1_merge(source: DataFrame, target: DataFrame | None,
@@ -137,11 +106,11 @@ def scd1_merge(source: DataFrame, target: DataFrame | None,
     """
     src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo)
     out_cols = [*key_cols, *data_columns(source, key_cols), KEY_HASH, DATA_HASH]
+    stamps, now_sql = _bind_now(now)
 
     if target is None or not target.columns:
-        src, now_sql = _bind_now(src, now)
-        return _project(src, [*map(sql_ident, out_cols),
-                              _as(now_sql, VALID_FROM)])
+        return _project(src.withColumns(stamps) if stamps else src,
+                        [*map(sql_ident, out_cols), _as(now_sql, VALID_FROM)])
 
     tgt = target
     if KEY_HASH not in tgt.columns:
@@ -150,11 +119,11 @@ def scd1_merge(source: DataFrame, target: DataFrame | None,
         tgt = tgt.withColumn(VALID_FROM,
                              F.current_timestamp() if now is None else now)
 
-    joined, now_sql = _bind_now(_join_on_key(src, tgt), now)
-    take_source = f"({_CHANGED} OR t.{_KH} IS NULL)"
-    valid_from = f"CASE WHEN {take_source} THEN {now_sql} ELSE t.{_VF} END"
-    return _project(joined, [*_pick(take_source, out_cols),
-                             _as(valid_from, VALID_FROM)])
+    take_source = f"({_CHANGED} OR target.{_KH} IS NULL)"
+    valid_from = f"CASE WHEN {take_source} THEN {now_sql} ELSE target.{_VF} END"
+    return _key_merge(src, tgt, _ON, [(None, [
+        *_pick(take_source, out_cols), _as(valid_from, VALID_FROM)])],
+        stamps=stamps)
 
 
 def _scd2_data_cols(source: DataFrame, key_cols: Sequence[str],
@@ -182,9 +151,9 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
     I (new key) → insert active row; UI (key matched, data changed) → close
     the old row (``valid_to = source valid_from``, active 'N') and insert a
     new active row; D (no change) → keep. Closed history rows never match
-    (the join also requires ``t.active = 'Y'``) and pass through unmatched.
-    Exactly one active row per key is preserved (the reference's hardest
-    invariant, ``write.py:547-1010``).
+    (the join also requires ``target.active = 'Y'``) and pass through
+    unmatched. Exactly one active row per key is preserved (the reference's
+    hardest invariant, ``write.py:547-1010``).
 
     ``valid_from`` is the event-time column/expression on the source
     (reference ``history_tracking_col``); defaults to ``current_timestamp()``.
@@ -211,40 +180,27 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
         return _project(src, [*map(sql_ident, [*out_cols, VALID_FROM]),
                               _as(sentinel_ts, VALID_TO), _as("'Y'", ACTIVE)])
 
-    joined = src.hint("shuffle_hash").alias("s").join(
-        target.alias("t"), F.expr(f"s.{_KH} = t.{_KH} AND t.{_ACTIVE} = 'Y'"),
-        "full_outer")
-    new_vf = f"s.{_VF}"
+    stamps, new_vf = {}, f"source.{_VF}"
     if history_start is not None:
-        joined = joined.withColumn(_HISTORY_START, history_start)
+        stamps = {_HISTORY_START: history_start}
         new_vf = (f"CASE WHEN NOT ({_T_PRESENT}) "
                   f"THEN {sql_ident(_HISTORY_START)} ELSE {new_vf} END")
-
     insert_new = f"({_S_PRESENT} AND (NOT ({_T_PRESENT}) OR {_CHANGED}))"
-
-    # One pass emits up to two rows per joined key via explode of a struct
-    # array: the surviving target-side row (closed, unchanged or history)
-    # and the newly inserted source-side row — the Spark-native equivalent
-    # of the reference's dual-row unionByName trick (write.py:962-969).
-    def side_struct(side: str, valid_from_sql: str, valid_to_sql: str,
-                    active_sql: str) -> str:
-        fields = [*(_as(f"{side}.{sql_ident(c)}", c) for c in out_cols),
-                  _as(valid_from_sql, VALID_FROM), _as(valid_to_sql, VALID_TO),
-                  _as(active_sql, ACTIVE)]
-        return f"struct({', '.join(fields)})"
-
-    target_row = side_struct(
-        "t", f"t.{_VF}",
-        f"CASE WHEN {_CHANGED} THEN s.{_VF} ELSE t.{_VT} END",
-        f"CASE WHEN {_CHANGED} THEN 'N' ELSE t.{_ACTIVE} END")
-    source_row = side_struct("s", new_vf, sentinel_ts, "'Y'")
-    return (joined
-            .selectExpr(f"explode(array("
-                        f"CASE WHEN {_T_PRESENT} THEN {target_row} END, "
-                        f"CASE WHEN {insert_new} THEN {source_row} END)) "
-                        f"AS {_ROW}")
-            .filter(f"{_ROW} IS NOT NULL")
-            .selectExpr(f"{_ROW}.*"))
+    # Two clauses emit up to two rows per joined key: the surviving
+    # target-side row (closed, unchanged or history) and the newly
+    # inserted source-side row — the Spark-native equivalent of the
+    # reference's dual-row unionByName trick (write.py:962-969).
+    target_row = [
+        *(_as(f"target.{sql_ident(c)}", c) for c in [*out_cols, VALID_FROM]),
+        _as(f"CASE WHEN {_CHANGED} THEN source.{_VF} ELSE target.{_VT} END",
+            VALID_TO),
+        _as(f"CASE WHEN {_CHANGED} THEN 'N' ELSE target.{_ACTIVE} END", ACTIVE)]
+    source_row = [*(_as(f"source.{sql_ident(c)}", c) for c in out_cols),
+                  _as(new_vf, VALID_FROM),
+                  _as(sentinel_ts, VALID_TO), _as("'Y'", ACTIVE)]
+    return _key_merge(src, target, f"{_ON} AND target.{_ACTIVE} = 'Y'",
+                      [(_T_PRESENT, target_row), (insert_new, source_row)],
+                      stamps=stamps, hash_source=True)
 
 
 def scd3_apply(source: DataFrame, target: DataFrame | None,
@@ -257,26 +213,28 @@ def scd3_apply(source: DataFrame, target: DataFrame | None,
     """SCD3: current snapshot plus ``prev_<col>`` columns for tracked columns.
 
     Mirrors the reference's two-clause MERGE (``write.py:278-293``):
-    matched & tracked-column-hash changed → ``prev_c = CASE WHEN t.c <> s.c
-    THEN t.c END`` and all data columns updated; matched & only untracked
-    data changed → data updated, prev columns kept; unmatched source →
-    insert with NULL prev; unmatched target → kept.
+    matched & tracked-column-hash changed → ``prev_c = CASE WHEN
+    target.c <> source.c THEN target.c END`` and all data columns updated;
+    matched & only untracked data changed → data updated, prev columns
+    kept; unmatched source → insert with NULL prev; unmatched target →
+    kept.
     """
     src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo)
     src = src.withColumn(COLUMN_KEY_HASH, row_hash(list(tracked_cols), algo))
     out_cols = [*key_cols, *data_columns(source, key_cols)]
     meta = [KEY_HASH, DATA_HASH, COLUMN_KEY_HASH]
+    stamps, now_sql = _bind_now(now)
 
     if target is None or not target.columns:
         types = dict(source.dtypes)
         prevs = [_as(f"CAST(NULL AS {types[c]})", f"{prev_prefix}{c}")
                  for c in tracked_cols]
-        src, now_sql = _bind_now(src, now)
-        return _project(src, [*map(sql_ident, out_cols), *prevs,
-                              *map(sql_ident, meta), _as(now_sql, VALID_FROM)])
+        return _project(src.withColumns(stamps) if stamps else src,
+                        [*map(sql_ident, out_cols), *prevs,
+                         *map(sql_ident, meta), _as(now_sql, VALID_FROM)])
 
-    joined, now_sql = _bind_now(_join_on_key(src, target), now)
-    tracked_changed = f"({_S_PRESENT} AND {_T_PRESENT} AND s.{_CKH} != t.{_CKH})"
+    tracked_changed = (f"({_S_PRESENT} AND {_T_PRESENT} "
+                       f"AND source.{_CKH} != target.{_CKH})")
     inserted = f"({_S_PRESENT} AND NOT ({_T_PRESENT}))"
     take_source = f"({inserted} OR {_CHANGED} OR {tracked_changed})"
 
@@ -285,9 +243,9 @@ def scd3_apply(source: DataFrame, target: DataFrame | None,
         q, pc = sql_ident(c), f"{prev_prefix}{c}"
         prevs.append(_as(
             f"CASE WHEN {tracked_changed} THEN "
-            f"CASE WHEN t.{q} != s.{q} THEN t.{q} END "
-            f"WHEN {_T_PRESENT} THEN t.{sql_ident(pc)} ELSE NULL END", pc))
-    valid_from = f"CASE WHEN {take_source} THEN {now_sql} ELSE t.{_VF} END"
-    return _project(joined, [*_pick(take_source, out_cols), *prevs,
-                             *_pick(take_source, meta),
-                             _as(valid_from, VALID_FROM)])
+            f"CASE WHEN target.{q} != source.{q} THEN target.{q} END "
+            f"WHEN {_T_PRESENT} THEN target.{sql_ident(pc)} ELSE NULL END", pc))
+    valid_from = f"CASE WHEN {take_source} THEN {now_sql} ELSE target.{_VF} END"
+    return _key_merge(src, target, _ON, [(None, [
+        *_pick(take_source, out_cols), *prevs, *_pick(take_source, meta),
+        _as(valid_from, VALID_FROM)])], stamps=stamps)

@@ -1,4 +1,5 @@
-"""``tools/ab.py`` report verdicts on synthetic pairs (no Spark)."""
+"""``tools/ab.py`` report verdicts on synthetic pairs and its line delta on
+a synthetic ``git diff --numstat`` (no Spark)."""
 
 from __future__ import annotations
 
@@ -62,3 +63,12 @@ def test_within_and_pair_values_listed():
     assert got["op_p50_rel"] == "within"
     lines = _ab().report("w", pairs, SPEC)
     assert "| 3 | 9.8 → 9.9 |" in lines
+
+
+def test_line_delta_from_numstat():
+    numstat = ("12\t40\tprojectone_spark/store/dml.py\n"
+               "3\t0\tprojectone_spark/writers/merge.py\n"
+               "-\t-\tprojectone_spark/data/blob.bin\n"
+               "0\t5\tprojectone_spark/{old => new}/x.py\n")
+    assert _ab().line_delta(numstat) == (15, 45)
+    assert _ab().line_delta("") == (0, 0)

@@ -309,10 +309,13 @@ def test_delete_keeps_rows_whose_predicate_is_null(spark, store):
     assert sorted(r["id"] for r in store.read(spark, "t").collect()) == [1, 2]
 
 
-@pytest.mark.parametrize("col", ["order date", "select"])
+@pytest.mark.parametrize("col", ["order date", "select", "a.b"])
 def test_dml_and_selective_overwrite_quote_column_names(spark, store, col):
-    """Predicate SQL quotes identifiers: a column named with a space or a
-    reserved word stays one column reference."""
+    """Predicate and merge SQL quote identifiers: a column named with a
+    space, a dot or a reserved word stays one column reference, as a
+    partition column, a merge key or a merged value."""
+    from projectone_spark.store.dml import merge_into
+
     schema = f"id long, `{col}` string"
     store.overwrite(spark, spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], schema), "t",
@@ -323,3 +326,31 @@ def test_dml_and_selective_overwrite_quote_column_names(spark, store, col):
         partition_values={col: ["b"]})
     got = sorted((r["id"], r[col]) for r in store.read(spark, "t").collect())
     assert got == [(3, "c"), (9, "b")]
+    merge_into(store, spark, "t",
+               spark.createDataFrame([(3, "d"), (4, "e")], schema), ["id"])
+    merge_into(store, spark, "t",
+               spark.createDataFrame([(8, "b"), (7, "f")], schema), [col])
+    got = sorted((r["id"], r[col]) for r in store.read(spark, "t").collect())
+    assert got == [(3, "d"), (4, "e"), (7, "f"), (8, "b")]
+
+
+def test_merge_into_inserts_source_whose_keys_are_all_null(spark, store):
+    """A source whose only key is NULL is not an empty source: its row
+    inserts (no target key matches it), and a NULL key bounds no file."""
+    from projectone_spark.store.dml import merge_into
+
+    schema = "id long, v long"
+    store.overwrite(spark, spark.createDataFrame([(1, 10), (2, 20)], schema),
+                    "t", stats_columns=["id"])
+    v = merge_into(store, spark, "t",
+                   spark.createDataFrame([(None, 5)], schema), ["id"])
+    assert v == 1
+    got = sorted(map(tuple, store.read(spark, "t").collect()), key=repr)
+    assert got == sorted([(1, 10), (2, 20), (None, 5)], key=repr)
+    # a NULL key matches the stored NULL key (NULL-safe) even when the
+    # source's other keys bound away every file holding it
+    merge_into(store, spark, "t",
+               spark.createDataFrame([(None, 6), (50, 7)], schema), ["id"])
+    got = sorted(map(tuple, store.read(spark, "t").collect()), key=repr)
+    assert got == sorted([(1, 10), (2, 20), (None, 6), (50, 7)], key=repr)
+

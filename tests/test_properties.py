@@ -11,7 +11,7 @@ from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from projectone_spark.cdc import CdcState, resolve_cdc
@@ -290,17 +290,43 @@ def test_connected_components_driver_equals_rounds(spark, data, as_string):
     assert sorted(map(tuple, driver.collect()), key=repr) == want
 
 
-MERGE_ROWS = st.lists(st.tuples(KEYS, VALS), min_size=0, max_size=6,
-                      unique_by=lambda t: t[0])
+MERGE_ROWS = st.lists(st.tuples(KEYS, st.none() | VALS), min_size=0,
+                      max_size=6, unique_by=lambda t: t[0])
+
+
+def _cmp(a, b, op):
+    """SQL comparison: NULL (None) when either side is NULL."""
+    return None if a is None or b is None else op(a, b)
+
+
+#: (SQL condition, model) pairs; a model returns True, False or None (NULL)
+MATCHED_CONDITIONS = [
+    (None, lambda s, t: True),
+    ("source.v > target.v", lambda s, t: _cmp(s, t, int.__gt__)),
+    ("target.v < 2", lambda s, t: _cmp(t, 2, int.__lt__)),
+]
+NMBS_DELETES = [
+    (False, lambda t: False),
+    (True, lambda t: True),
+    ("target.v > 1", lambda t: _cmp(t, 1, int.__gt__)),
+]
 
 
 @given(target=MERGE_ROWS, source=MERGE_ROWS,
-       del_thresh=st.integers(min_value=0, max_value=4))
+       del_thresh=st.integers(min_value=0, max_value=4),
+       matched=st.sampled_from(range(len(MATCHED_CONDITIONS))),
+       nmbs=st.sampled_from(range(len(NMBS_DELETES))))
+@example(target=[(1, 1), (2, 2)], source=[(1, None), (2, 0)], del_thresh=1,
+         matched=0, nmbs=0)
+@example(target=[(1, 1), (2, None)], source=[(1, 1)], del_thresh=0,
+         matched=0, nmbs=2)
 @SLOW
 def test_merge_into_matches_python_model(spark, tmp_path_factory, target,
-                                         source, del_thresh):
-    """merge_into (update + conditional delete + insert) must equal the
-    trivially-correct dict model for any (target, source) pair."""
+                                         source, del_thresh, matched, nmbs):
+    """merge_into (conditional update + conditional delete + insert +
+    not-matched-by-source delete) must equal the trivially-correct dict
+    model for any (target, source) pair, values NULL included: a clause
+    whose condition is NULL does not fire."""
     from projectone_spark.store import TableStore
     from projectone_spark.store.dml import merge_into
 
@@ -309,20 +335,24 @@ def test_merge_into_matches_python_model(spark, tmp_path_factory, target,
     if not target:
         from projectone_spark.store.dml import delete_where
         delete_where(store, spark, "t", [("id", "==", 999)])
+    m_sql, m_model = MATCHED_CONDITIONS[matched]
+    d_sql, d_model = NMBS_DELETES[nmbs]
     merge_into(store, spark, "t", _df(spark, source), ["id"],
                when_matched_update={"v": "source.v + 100"},
+               matched_condition=m_sql,
                when_matched_delete=f"source.v < {del_thresh}",
-               when_not_matched_insert=True)
+               when_not_matched_insert=True,
+               when_not_matched_by_source_delete=d_sql)
 
-    model = dict(target)
+    model = {k: v for k, v in target
+             if k in dict(source) or d_model(v) is not True}
     for k, v in source:
-        if k in model:
-            if v < del_thresh:
-                del model[k]
-            else:
-                model[k] = v + 100
-        else:
+        if k not in model:
             model[k] = v
+        elif _cmp(v, del_thresh, int.__lt__) is True:
+            del model[k]
+        elif m_model(v, model[k]) is True:
+            model[k] = None if v is None else v + 100
     got = {r["id"]: r["v"] for r in store.read(spark, "t").collect()}
     assert got == model
 

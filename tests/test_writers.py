@@ -603,19 +603,36 @@ def _py4j_calls(spark, monkeypatch, build) -> int:
     return len(calls)
 
 
-@pytest.mark.parametrize("merge", ["scd1_merge", "scd2_apply", "scd3_apply"])
-def test_merge_plan_build_py4j_calls_fixed(spark, monkeypatch, merge):
+@pytest.mark.parametrize("merge", ["scd1_merge", "scd2_apply", "scd3_apply",
+                                   "merge_into"])
+def test_merge_plan_build_py4j_calls_fixed(spark, monkeypatch, store, merge):
     """Building (not running) a merge plan sends a fixed, small number of
     py4j calls whatever the column count: each projection crosses as SQL
     text, not as one Column object per column per side (that shape cost
-    1,538 calls for a 9-column SCD2)."""
+    1,538 calls for a 9-column SCD2 and 1,263 for a 9-column
+    ``merge_into``). ``merge_into`` is measured on the transform its
+    commit runs over the candidate target files."""
+    from projectone_spark.store import dml
     from projectone_spark.writers import merge as merges
 
-    fn = getattr(merges, merge)
+    def merge_into(source, target, keys):
+        if target is None:  # the table, and the transform its merge runs
+            name = f"t{len(source.columns)}"
+            store.overwrite(spark, source, name)
+            built = {}
+            with monkeypatch.context() as m:
+                m.setattr(store, "_rewrite", lambda spark, name, snap, preds,
+                          transform, *a, **kw: built.update(apply=transform))
+                dml.merge_into(store, spark, name, source, keys)
+            return built["apply"], store.read(spark, name)
+        apply, tgt = target
+        return apply(tgt)
+
+    fn = merge_into if merge == "merge_into" else getattr(merges, merge)
     extra = {"scd3_apply": {"tracked_cols": ["c0"]}}.get(merge, {})
     counts = {}
     for ncols in (9, 9, 40):  # the first 9 warms py4j's class lookups
-        source = spark.createDataFrame([], ", ".join(
+        source = spark.createDataFrame([(1, *["x"] * (ncols - 1))], ", ".join(
             ["id long"] + [f"c{i} string" for i in range(ncols - 1)]))
         target = fn(source, None, ["id"], **extra)
         counts[ncols] = _py4j_calls(

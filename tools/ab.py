@@ -26,8 +26,11 @@ change side was better (by the metric's ``better`` direction in the base's
 - ``within``: any other end-to-end metric; ``-``: any other per-layer
   metric (they have no bound).
 
-Each pair's end-to-end values follow the table. Runs are sequential: one
-Spark session at a time.
+Each pair's end-to-end values follow the table. Above the tables, the
+report gives the lines added and deleted under ``projectone_spark/``
+between the two revisions (``git diff --numstat``) and their net, the
+evidence a simplification PR shows for its smaller diff. Runs are
+sequential: one Spark session at a time.
 """
 
 from __future__ import annotations
@@ -55,6 +58,17 @@ def unpack(rev: str, dest: str) -> str:
     if archive.wait() != 0:
         raise SystemExit(f"git archive {rev} failed")
     return sha
+
+
+def line_delta(numstat: str) -> tuple[int, int]:
+    """Lines added and deleted in ``git diff --numstat`` output; a binary
+    file (``-`` counts) adds none."""
+    added = deleted = 0
+    for line in numstat.splitlines():
+        a, d, _ = line.split("\t", 2)
+        if a != "-":
+            added, deleted = added + int(a), deleted + int(d)
+    return added, deleted
 
 
 def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
@@ -150,7 +164,13 @@ def main(argv: list[str] | None = None) -> int:
     sides = [os.path.join(root, s, "repo") for s in ("a", "b")]
     shas = [unpack(rev, d) for rev, d in zip((args.base, args.change), sides)]
     print(f"# A = {args.base} ({shas[0][:10]}) in {sides[0]}")
-    print(f"# B = {args.change} ({shas[1][:10]}) in {sides[1]}\n")
+    print(f"# B = {args.change} ({shas[1][:10]}) in {sides[1]}")
+    numstat = subprocess.run(
+        ["git", "-C", REPO, "diff", "--numstat", *shas, "--", "projectone_spark/"],
+        check=True, capture_output=True, text=True).stdout
+    added, deleted = line_delta(numstat)
+    print(f"# projectone_spark/: +{added} -{deleted} lines, "
+          f"net {added - deleted:+d}\n")
     with open(os.path.join(sides[0], "BENCHMARK.json")) as f:
         spec = json.load(f)
 
