@@ -101,7 +101,7 @@ def update_where(store: TableStore, spark: SparkSession, name: str,
             raise ValueError(f"unknown columns in SET: {missing}")
         cond = F.expr(residual)
         return df.withColumns({
-            c: F.when(cond, F.expr(e)).otherwise(F.col(c))
+            c: F.when(cond, F.expr(e)).otherwise(F.col(sql_ident(c)))
             for c, e in assignments.items()})
 
     return store._rewrite(spark, name, m, predicates, apply, "update",
@@ -219,6 +219,10 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
         raise ValueError(
             f"source has columns absent from target: {evolving}; pass "
             f"schema_evolution=True to add them (Delta autoMerge)")
+    unknown = [c for c in when_matched_update or ()
+               if c not in tgt_probe.columns + evolving]
+    if unknown:
+        raise ValueError(f"unknown columns in SET: {unknown}")
 
     q = sql_ident
     predicates: list[tuple[str, str, object]] = []

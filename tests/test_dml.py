@@ -123,6 +123,10 @@ def test_update_bad_columns_raise(spark, store):
     with pytest.raises(ValueError, match="metadata"):
         update_where(store, spark, "orders",
                      [("o_orderkey", ">", 0)], {"__metadata_active__": "1"})
+    from projectone_spark.store.dml import merge_into
+    with pytest.raises(ValueError, match="unknown columns"):
+        merge_into(store, spark, "orders", _orders(spark).limit(1),
+                   ["o_orderkey"], when_matched_update={"nope": "1"})
 
 
 def test_delete_without_stats_rewrites_everything(spark, store):
@@ -311,9 +315,9 @@ def test_delete_keeps_rows_whose_predicate_is_null(spark, store):
 
 @pytest.mark.parametrize("col", ["order date", "select", "a.b"])
 def test_dml_and_selective_overwrite_quote_column_names(spark, store, col):
-    """Predicate and merge SQL quote identifiers: a column named with a
-    space, a dot or a reserved word stays one column reference, as a
-    partition column, a merge key or a merged value."""
+    """Predicate, SET and merge SQL quote identifiers: a column named with
+    a space, a dot or a reserved word stays one column reference, as a
+    partition column, an updated column, a merge key or a merged value."""
     from projectone_spark.store.dml import merge_into
 
     schema = f"id long, `{col}` string"
@@ -326,12 +330,13 @@ def test_dml_and_selective_overwrite_quote_column_names(spark, store, col):
         partition_values={col: ["b"]})
     got = sorted((r["id"], r[col]) for r in store.read(spark, "t").collect())
     assert got == [(3, "c"), (9, "b")]
+    update_where(store, spark, "t", [("id", "==", 9)], {col: "'g'"})
     merge_into(store, spark, "t",
                spark.createDataFrame([(3, "d"), (4, "e")], schema), ["id"])
     merge_into(store, spark, "t",
-               spark.createDataFrame([(8, "b"), (7, "f")], schema), [col])
+               spark.createDataFrame([(8, "g"), (7, "f")], schema), [col])
     got = sorted((r["id"], r[col]) for r in store.read(spark, "t").collect())
-    assert got == [(3, "d"), (4, "e"), (7, "f"), (8, "b")]
+    assert got == [(3, "d"), (4, "e"), (7, "f"), (8, "g")]
 
 
 def test_merge_into_inserts_source_whose_keys_are_all_null(spark, store):
