@@ -8,11 +8,9 @@ have delta-spark (the reference is built directly on DeltaTable:
 Design: one thin adapter per operation, all calls expressed through
 delta-spark's *public* API (``DeltaTable.forPath`` / ``merge`` /
 ``readChangeFeed``) so behavior matches a vanilla Delta deployment.
-``delta_scd1_merge`` is a second SCD1 builder: it restates
-``writers.merge.scd1_merge``'s clauses (update where the data hash
-differs, insert the unmatched) as a Delta MERGE, which adds Delta's data
-skipping and OPTIMIZE clustering on the merge keys. The ``DeltaStore``
-write surface runs the engine's own merge builders.
+``delta_scd1_merge`` restates ``writers.merge.scd1_merge``'s clauses
+(update where the data hash differs, insert the rest) as a second SCD1
+builder, a Delta MERGE; ``DeltaStore`` writes run the engine's builders.
 """
 
 from __future__ import annotations

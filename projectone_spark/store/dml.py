@@ -158,7 +158,9 @@ def _key_merge(source: DataFrame, target: DataFrame, on: str,
 def _is_true(cond: str | bool) -> str:
     """A clause condition as SQL that is never NULL: a NULL condition
     does not fire its clause, as in Delta."""
-    return str(cond).lower() if isinstance(cond, bool) else f"(({cond}) IS TRUE)"
+    if isinstance(cond, bool):
+        return "true" if cond else "false"
+    return f"(({cond}) IS TRUE)"
 
 
 def merge_into(store: TableStore, spark: SparkSession, name: str,
@@ -254,17 +256,13 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
     on = " AND ".join(f"source.{q(k)} <=> target.{q(k)}" for k in keys)
 
     def apply(tgt: DataFrame) -> DataFrame:
-        if evolving:
-            # new columns append at the end, null where the source has no
-            # row — then the merge treats them like any shared column
-            tgt = tgt.withColumns({
-                c: F.lit(None).cast(source.schema[c].dataType)
-                for c in evolving})
+        # new columns append at the end, NULL where the source has no row
+        cols = tgt.columns + evolving
         upd = when_matched_update if when_matched_update is not None \
-            else {c: f"source.{q(c)}" for c in tgt.columns if c in source.columns}
+            else {c: f"source.{q(c)}" for c in cols if c in source.columns}
         exprs = []
-        for c in tgt.columns:
-            val = f"target.{q(c)}"
+        for c in cols:
+            val = "NULL" if c in evolving else f"target.{q(c)}"
             if c in source.columns:
                 val = f"CASE WHEN {source_only} THEN source.{q(c)} ELSE {val} END"
             if c in upd:
@@ -278,7 +276,7 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
                     f"rows; deduplicate the source on the merge keys') "
                     f"ELSE {exprs[0]} END")
         return _key_merge(src, _project(tgt, ["*", "true AS __t_exists"]), on,
-                          [(keep, list(map(_as, exprs, tgt.columns)))])
+                          [(keep, list(map(_as, exprs, cols)))])
 
     # with every target file pruned, the merge runs over an empty target:
     # only the source-only inserts remain
