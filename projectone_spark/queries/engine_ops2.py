@@ -101,7 +101,7 @@ FROM orders
           tags=("store", "schema-evolution"))
 def s13_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from projectone_spark.store import TableStore
-    from projectone_spark.store.maintenance import append_evolve, read_merged
+    from projectone_spark.store.maintenance import append_evolve
 
     store = TableStore(scratch_dir(prefix="po_s13_"))
     orders = load(spark, sf_dir, "orders")
@@ -112,7 +112,7 @@ def s13_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                .select("o_orderkey", "o_totalprice",
                        F.col("o_orderpriority").alias("priority")))
     append_evolve(store, spark, widened, "orders")
-    return (read_merged(store, spark, "orders")
+    return (store.read(spark, "orders")
             .select("o_orderkey", F.round("o_totalprice", 2)
                     .alias("total_price"), "priority"))
 

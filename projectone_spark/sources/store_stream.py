@@ -25,7 +25,6 @@ discovers).
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator, Sequence
 
@@ -36,32 +35,21 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from projectone_spark.store import TableStore, _data_files
 
-def _manifests(root: str, table: str) -> dict[int, dict]:
-    tdir = os.path.join(root, table)
-    out: dict[int, dict] = {}
-    if not os.path.isdir(tdir):
-        return out
-    for fn in os.listdir(tdir):
-        if fn.startswith("_manifest_v") and fn.endswith(".json"):
-            with open(os.path.join(tdir, fn)) as f:
-                m = json.load(f)
-            out[m["version"]] = m
-    return out
+
+def _history(root: str, table: str) -> dict[int, dict]:
+    """Every committed manifest of ``table`` by version, read through
+    :meth:`TableStore.history`; empty when the table does not exist (the
+    root is checked first so a mistyped path is not created)."""
+    if not os.path.isdir(os.path.join(root, table)):
+        return {}
+    return {m["version"]: m for m in TableStore(root).history(table)}
 
 
 def _files_of(m: dict) -> list[str]:
     """Every data file of a snapshot (from recorded entries, else a walk)."""
-    entries = [f["path"] for f in (m.get("files") or [])]
-    if entries:
-        return entries
-    out = []
-    for d in m["dirs"]:
-        for dirpath, _, files in os.walk(d):
-            for fn in sorted(files):
-                if fn.endswith(".parquet"):
-                    out.append(os.path.join(dirpath, fn))
-    return out
+    return [f["path"] for f in (m.get("files") or [])] or _data_files(m["dirs"])
 
 
 class StoreFilePartition(InputPartition):
@@ -97,7 +85,7 @@ class StoreChangesStreamReader(DataSourceStreamReader):
             str(opts.get("skipchangecommits", "false")).lower() == "true")
         start = opts.get("startingversion")
         self._initial = int(start) if start is not None else -1
-        ms = _manifests(self.root, self.table)
+        ms = _history(self.root, self.table)
         if not ms:
             raise FileNotFoundError(f"table '{self.table}' does not exist")
         self._schema = _arrow_schema(ms[max(ms)])  # pickled to executors
@@ -106,12 +94,12 @@ class StoreChangesStreamReader(DataSourceStreamReader):
         return {"version": self._initial}
 
     def latestOffset(self) -> dict:
-        ms = _manifests(self.root, self.table)
+        ms = _history(self.root, self.table)
         return {"version": max(ms) if ms else -1}
 
     def partitions(self, start: dict, end: dict
                    ) -> Sequence[InputPartition]:
-        ms = _manifests(self.root, self.table)
+        ms = _history(self.root, self.table)
         parts: list[InputPartition] = []
         for v in range(start["version"] + 1, end["version"] + 1):
             m = ms.get(v)
@@ -176,7 +164,7 @@ class StoreChangesDataSource(DataSource):
     def schema(self) -> StructType:
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        ms = _manifests(self.options["root"], self.options["table"])
+        ms = _history(self.options["root"], self.options["table"])
         if not ms:
             raise FileNotFoundError(
                 f"table '{self.options['table']}' does not exist under "

@@ -11,9 +11,6 @@ on, with plain parquet + a manifest:
   append adds a directory instead of rewriting old files (a miniature
   add-file log).
 
-Delta is used only through an explicitly built
-``store.delta_backend.DeltaStore``; this class never switches to it.
-
 Scale notes: data directories may be hive-partitioned (``partition_by``).
 Row-level rewrites (``selective_overwrite``, the SCD1/2/3 key merges, the
 ``dml`` DELETE / UPDATE / MERGE) share one copy-on-write commit,
@@ -476,7 +473,8 @@ class TableStore:
         With no candidate file, a caller that cannot add rows (DELETE,
         UPDATE) gets None — no commit, no Spark job; one that can
         (``adds_rows``) has ``transform`` run over an empty frame of the
-        snapshot's schema."""
+        snapshot's schema. A column the frame has keeps its type: the
+        links hold it (:func:`_store_assign`)."""
         m = snapshot
         part = m["partition_by"]
         touched, linkable = self._select_files(m, predicates)
@@ -486,7 +484,8 @@ class TableStore:
         if frame is None:
             frame = self._read_files(
                 spark, m, {d: [d] for d in m["dirs"]}).limit(0)
-        out = transform(frame)
+        out = _store_assign(transform(frame), frame.schema, part,
+                            f"{operation} on '{name}'")
         nd = self._new_data_dir(name)
         written = self._write_dir(out, nd, part)
         linked = set()
@@ -673,6 +672,38 @@ def _derived_readback_schema(schema) -> str | None:
         return StructType.fromJson(nullable(root)).json()
     except ValueError:
         return None
+
+
+def _store_assign(out: DataFrame, schema, partition_by: Sequence[str],
+                  what: str) -> DataFrame:
+    """``out`` with each column that ``schema`` also has cast to its type
+    there — store assignment, as Delta's UPDATE and MERGE do. A rewrite
+    links the files it does not touch in their old types, so a rewritten
+    file in another type would leave a table that no longer reads. A
+    value that does not fit raises (Spark's ANSI store-assignment rule,
+    whatever the session's ANSI setting); it never wraps or becomes NULL.
+    Types that already match add nothing to the plan. Partition columns
+    are left as they are: their values live in directory names."""
+    import pyspark.sql.functions as F
+
+    from projectone_spark.store.skipping import sql_ident
+
+    want = {f.name: f.dataType for f in schema.fields
+            if f.name not in partition_by}
+    cast = {}
+    for f in out.schema.fields:
+        t = want.get(f.name)
+        if t is None or t.simpleString() == f.dataType.simpleString():
+            continue
+        c = F.col(sql_ident(f.name))
+        err = F.raise_error(F.concat(
+            F.lit(f"{what}: value "), c.cast("string"),
+            F.lit(f" does not fit column `{f.name}` {t.simpleString().upper()}"
+                  f"; cast it in the expression or overwrite the table "
+                  f"with a wider type")))
+        cast[f.name] = F.when(c.isNotNull() & c.try_cast(t).isNull(),
+                              err).otherwise(c.try_cast(t))
+    return out.withColumns(cast) if cast else out
 
 
 def create_if_not_exists(store: TableStore, spark: SparkSession, table,

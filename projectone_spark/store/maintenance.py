@@ -222,14 +222,6 @@ def append_evolve(store: TableStore, spark: SparkSession, df: DataFrame,
     return store.append(spark, df, name, stats_columns=stats_columns)
 
 
-def read_merged(store: TableStore, spark: SparkSession, name: str) -> DataFrame:
-    """The current snapshot with every column any data directory has (a
-    table widened by ``append_evolve``). ``TableStore.read`` now reads
-    that way itself (see ``TableStore._read_files``); this name stays for
-    callers that state the intent."""
-    return store.read(spark, name)
-
-
 #: Rank-bucket bits per column of a multi-column Z-order: 256 buckets, so
 #: four columns interleave into a 32-bit z-value.
 _ZORDER_BITS = 8

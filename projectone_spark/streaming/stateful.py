@@ -9,7 +9,9 @@ billion-key stream distributes like any other keyed aggregation.
 ``running_totals`` is the canonical example operator: per-key running
 count/sum maintained across micro-batches, emitting one row per key per
 batch the key appears in. The same scaffold (group → state get/update →
-emit) fits dedup-with-memory, anomaly scoring, session carry-over, etc.
+emit) fits anomaly scoring, session carry-over, etc. Streaming exact
+dedup is ``streaming.windows.dedup_within_watermark``
+(``dropDuplicatesWithinWatermark``).
 """
 
 from __future__ import annotations
@@ -45,65 +47,3 @@ def running_totals(df: DataFrame, key_col: str, value_col: str,
             .applyInPandasWithState(update, out_schema, state_schema,
                                     "update",
                                     getattr(GroupStateTimeout, timeout)))
-
-
-def has_transform_with_state() -> bool:
-    """The Spark 4 transformWithState runtime needs protobuf in the Python
-    workers; gate callers the way the kafka/delta connectors are gated."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def first_seen(df: DataFrame, key_col: str,
-               *, ttl_ms: int | None = None) -> DataFrame:
-    """Streaming exact dedup with unbounded-or-TTL'd memory via Spark 4
-    ``transformWithStateInPandas``: a key's rows are emitted only the
-    first time the key is ever seen (per TTL window when ``ttl_ms`` is
-    set).
-
-    Complements ``dropDuplicatesWithinWatermark`` (st04): that bounds
-    state by the watermark; this bounds it by an explicit state TTL —
-    the right tool when duplicates can arrive arbitrarily late but the
-    business rule is "suppress re-occurrences for N days". State per key
-    is one boolean ValueState; with TTL the store size is bounded by the
-    distinct-keys-per-TTL-window rate, and keys are hash-partitioned so a
-    billion-key stream spreads like any keyed aggregation.
-
-    Output schema: ``{key_col} bigint, n_rows bigint`` — the first batch's
-    row count for the key (later batches emit nothing for known keys).
-    """
-    if not has_transform_with_state():
-        raise ImportError(
-            "transformWithStateInPandas needs the protobuf package in the "
-            "Python workers (absent in this environment); use "
-            "running_totals/applyInPandasWithState or "
-            "dedup_within_watermark instead")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    out_schema = f"{key_col} bigint, n_rows bigint"
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState("seen", "seen boolean",
-                                              ttlDurationMs=ttl_ms)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._seen.exists():
-                return
-                yield  # pragma: no cover - generator form
-            n = sum(len(pdf) for pdf in rows)
-            self._seen.update((True,))
-            yield pd.DataFrame({key_col: [key[0]], "n_rows": [n]})
-
-        def close(self) -> None:
-            pass
-
-    return (df.groupBy(key_col)
-            .transformWithStateInPandas(Proc(), out_schema,
-                                        outputMode="Append",
-                                        timeMode="None"))

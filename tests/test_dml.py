@@ -359,3 +359,48 @@ def test_merge_into_inserts_source_whose_keys_are_all_null(spark, store):
     got = sorted(map(tuple, store.read(spark, "t").collect()), key=repr)
     assert got == sorted([(1, 10), (2, 20), (None, 6), (50, 7)], key=repr)
 
+
+
+@pytest.mark.parametrize("op", ["update_where", "merge_into", "write_scd1"])
+def test_rewrite_keeps_column_types(spark, store, op):
+    """A rewrite links the files it does not touch in their stored types,
+    so a value of another type is cast to the column's type (store
+    assignment) and the table still reads. A value that does not fit the
+    column raises and commits nothing."""
+    from projectone_spark.store.dml import merge_into
+    from projectone_spark.writers import write_scd1
+
+    base = spark.range(40).selectExpr("id", "id * 2 AS v", "id % 4 AS p")
+    if op == "write_scd1":  # partition pruning rewrites partition p=0
+        write_scd1(spark, store, base, "t", key_cols=["id"],
+                   partition_by=["p"])
+        changed = {i for i in range(40) if i % 4 == 0}
+    else:  # stats pruning rewrites the file holding id < 5
+        store.overwrite(spark, base.drop("p").repartitionByRange(4, "id"),
+                        "t", stats_columns=["id"])
+        changed = set(range(5))
+    types = store.read(spark, "t").dtypes
+
+    def assign(value: str):
+        """Set ``v`` to the SQL ``value`` over the old ``v`` on the
+        changed rows."""
+        if op == "update_where":
+            return update_where(store, spark, "t", [("id", "<", 5)],
+                                {"v": value})
+        src = (base.filter(F.col("id").isin(*changed))
+               .selectExpr("id", f"{value} AS v", "p"))
+        if op == "merge_into":
+            return merge_into(store, spark, "t", src.drop("p"), ["id"])
+        return write_scd1(spark, store, src, "t", key_cols=["id"],
+                          partition_prune=True)
+
+    v0 = store.version("t")
+    assert assign("v * 1.5") == v0 + 1  # a DECIMAL value
+    assert store.manifest("t")["metrics"]["files_linked"] > 0
+    got = store.read(spark, "t")
+    assert got.dtypes == types
+    assert {r["id"]: r["v"] for r in got.collect()} == {
+        i: 3 * i if i in changed else 2 * i for i in range(40)}
+    with pytest.raises(Exception, match="does not fit column `v` BIGINT"):
+        assign("v + 1e31")  # a DOUBLE out of BIGINT's range
+    assert store.version("t") == v0 + 1

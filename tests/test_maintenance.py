@@ -9,7 +9,7 @@ import pytest
 
 from projectone_spark.store import TableStore, read_changes
 from projectone_spark.store.maintenance import (
-    UNCOMMITTED_MIN_AGE_S, append_evolve, clone, compact, read_merged,
+    UNCOMMITTED_MIN_AGE_S, append_evolve, clone, compact,
     restore, table_files, vacuum, zorder_cluster,
 )
 
@@ -85,14 +85,14 @@ def test_append_evolve_new_and_missing_columns(spark, store):
                .select("o_orderkey", "o_totalprice")
                .withColumn("channel", F.lit("web")).limit(20))
     append_evolve(store, spark, widened, "orders")
-    got = read_merged(store, spark, "orders")
+    got = store.read(spark, "orders")
     assert set(got.columns) == {"o_orderkey", "o_totalprice", "channel"}
     assert got.count() == 40
     assert got.filter(F.col("channel").isNull()).count() == 20
     # narrower-than-table frame: missing column null-filled
     narrow = _orders(spark).select("o_orderkey", "o_totalprice").limit(5)
     append_evolve(store, spark, narrow, "orders")
-    got = read_merged(store, spark, "orders")
+    got = store.read(spark, "orders")
     assert got.count() == 45
     assert got.filter(F.col("channel").isNull()).count() == 25
 
@@ -121,20 +121,20 @@ def test_compact_preserves_evolved_columns(spark, store, op):
         v = zorder_cluster(store, spark, "orders",
                            ["o_orderkey", "o_totalprice"], target_files=2)
     assert v is not None
-    got = read_merged(store, spark, "orders")
+    got = store.read(spark, "orders")
     assert "channel" in got.columns
     assert got.count() == 60
     assert got.filter(F.col("channel") == "web").count() == 30
 
 
-def test_read_merged_partitioned_multicommit(spark, store):
-    """Regression: read_merged used one basePath across sibling commit
+def test_read_partitioned_multicommit_keeps_partition_column(spark, store):
+    """Regression: the merged read used one basePath across sibling commit
     dirs and crashed on partitioned multi-commit tables."""
     df = _orders(spark)
     store.overwrite(spark, df.limit(40), "orders",
                     partition_by=["o_orderstatus"])
     store.append(spark, df.limit(80).exceptAll(df.limit(40)), "orders")
-    got = read_merged(store, spark, "orders")
+    got = store.read(spark, "orders")
     assert got.count() == 80
     assert "o_orderstatus" in got.columns
 
@@ -275,11 +275,11 @@ def test_vacuum_spares_uncommitted_dirs(spark, store, monkeypatch):
     assert vacuum(store, "orders", keep_versions=1) == [orphan]
 
 
-def test_read_merged_fast_path_uniform_schemas(spark, store):
+def test_read_uniform_schemas_equals_merge_schema_read(spark, store):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string")
     store.append(spark, df, "t")
     store.append(spark, df, "t")
-    got = read_merged(store, spark, "t")
+    got = store.read(spark, "t")
     want = spark.read.option("mergeSchema", "true") \
         .parquet(*store.manifest("t")["dirs"])
     assert got.schema == want.schema
@@ -294,7 +294,7 @@ def test_evolved_schemas_fall_back_to_inference(spark, store):
     # two dirs with DIFFERENT recorded schemas: the single-schema fast
     # path must not engage, and the merged read stays correct
     assert len({m["schemas"][d] for d in m["dirs"]}) == 2
-    got = read_merged(store, spark, "t")
+    got = store.read(spark, "t")
     assert {tuple(r) for r in got.select("k", "s").collect()} \
         == {(1, None), (2, "b")}
 

@@ -104,7 +104,7 @@ def test_selective_overwrite_uniform_table_records_schema(spark, tmp_path):
 
 
 def test_selective_overwrite_evolved_table_skips_schema_record(spark, tmp_path):
-    from projectone_spark.store.maintenance import append_evolve, read_merged
+    from projectone_spark.store.maintenance import append_evolve
 
     st = _mk_store(tmp_path)
     df = spark.createDataFrame(
@@ -119,9 +119,9 @@ def test_selective_overwrite_evolved_table_skips_schema_record(spark, tmp_path):
         "t", partition_values={"part": ["p0"]})
     m = st.manifest("t")
     # mixed-provenance dir on an evolved table: no schema recorded, so
-    # read_merged keeps its true footer-merging semantics
+    # the read keeps its true footer-merging semantics
     assert m["dirs"][-1] not in (m.get("schemas") or {})
-    merged = read_merged(st, spark, "t")
+    merged = st.read(spark, "t")
     assert "s" in merged.columns
     # p0 was replaced (k=1 out, k=9 in); p1/p2 survive the re-link
     assert {r["k"] for r in merged.collect()} == {2, 3, 9}

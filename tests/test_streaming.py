@@ -123,39 +123,6 @@ def test_apply_in_pandas_with_state_running_totals(spark, tmp_path):
     assert final[2] == (1, 20.0)
 
 
-def test_transform_with_state_first_seen(spark, tmp_path):
-    """Keys emit only on first occurrence, across micro-batch boundaries."""
-    from projectone_spark.streaming import read_stream_parquet, stream_wait_close
-    from projectone_spark.streaming.stateful import (
-        first_seen, has_transform_with_state,
-    )
-
-    if not has_transform_with_state():
-        with pytest.raises(ImportError, match="protobuf"):
-            first_seen(spark.readStream.format("rate").load(), "value")
-        pytest.skip("protobuf absent: transformWithState runtime unavailable")
-
-    src = tmp_path / "src"
-    b1 = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")],
-                               "k long, payload string")
-    b2 = spark.createDataFrame([(1, "dup"), (3, "new")],
-                               "k long, payload string")
-    b1.coalesce(1).write.parquet(str(src / "f1"))
-    b2.coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = read_stream_parquet(spark, f"{src}/*/", "k long, payload string",
-                                 max_files_per_trigger=1)
-    firsts = first_seen(stream, "k")
-    q = (firsts.writeStream.format("memory").queryName("tws_q")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    stream_wait_close([q], timeout_seconds=300)
-    got = {r["k"]: r["n_rows"] for r in spark.table("tws_q").collect()}
-    # key 1 emitted once (first batch, 2 rows); its batch-2 dup suppressed
-    assert got == {1: 2, 2: 1, 3: 1}
-
-
 def test_stream_from_store_appends(spark, tmp_path):
     """The store is a streaming source: offsets are manifest versions, a
     restarted stream resumes from its checkpoint, appends stream in."""
@@ -244,3 +211,20 @@ def test_stream_from_store_partitioned(spark, tmp_path):
     exp = {(r["o_orderkey"], r["o_orderstatus"]) for r in df.collect()}
     assert {(r["o_orderkey"], r["o_orderstatus"])
             for r in got.collect()} == exp
+
+
+def test_stream_from_store_missing_table_raises(tmp_path):
+    """A missing root or table fails with the table's name, and opening
+    the source creates no directory."""
+    from projectone_spark.sources.store_stream import (
+        StoreChangesDataSource,
+        StoreChangesStreamReader,
+    )
+
+    root = str(tmp_path / "nowhere")
+    opts = {"root": root, "table": "orders"}
+    with pytest.raises(FileNotFoundError, match="'orders' does not exist"):
+        StoreChangesDataSource(opts).schema()
+    with pytest.raises(FileNotFoundError, match="'orders' does not exist"):
+        StoreChangesStreamReader(opts)
+    assert not (tmp_path / "nowhere").exists()
