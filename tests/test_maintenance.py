@@ -128,8 +128,8 @@ def test_compact_preserves_evolved_columns(spark, store, op):
 
 
 def test_read_partitioned_multicommit_keeps_partition_column(spark, store):
-    """Regression: the merged read used one basePath across sibling commit
-    dirs and crashed on partitioned multi-commit tables."""
+    """Regression: a read with one basePath across sibling commit dirs
+    crashed on partitioned multi-commit tables."""
     df = _orders(spark)
     store.overwrite(spark, df.limit(40), "orders",
                     partition_by=["o_orderstatus"])
