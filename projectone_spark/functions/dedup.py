@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 from projectone_spark.functions.text import (
     ngram_join,
     normalize,
+    normalizes_nonempty,
     spread,
     tokens_of_norm,
 )
@@ -339,13 +340,12 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     # serially (measured 2.5 s at sf0.1) while the 32 post-exchange
     # tasks waited; round-robin placement is value-independent, so the
     # fingerprint SET is unchanged
-    # the empty-doc gate is expressed on the RAW text (nonempty norm ⟺
-    # lower(text) has a [a-z0-9] char — normalize keeps exactly those):
-    # written as length(__norm) > 0 it pushes below the exchange and
-    # re-derives the whole regex chain serially in the map task; rlike
-    # early-exits at the first match
+    # the empty-doc gate is expressed on the RAW text: written as
+    # length(__norm) > 0 it pushes below the exchange and re-derives the
+    # whole regex chain serially in the map task; rlike early-exits at
+    # the first match
     base = (spread(df.select(F.col(id_col), F.col(text_col)), parallelism)
-            .filter(F.lower(F.col(text_col)).rlike("[a-z0-9]"))
+            .filter(normalizes_nonempty(text_col))
             .select(F.col(id_col), normalize(text_col).alias("__norm")))
     # __norm / __h are each referenced multiple times downstream, which
     # inhibits CollapseProject from inlining the chains into the

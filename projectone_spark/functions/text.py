@@ -16,6 +16,7 @@ these fast at scale (learned from .explain + bench):
 
 from __future__ import annotations
 
+import string
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
@@ -103,13 +104,41 @@ def _spread_width(df: DataFrame) -> int:
     return max(4, min(default, est // _SPREAD_CHUNK_BYTES + 1))
 
 
+#: ``translate`` tables for :func:`normalize`: ASCII A-Z and the Kelvin
+#: sign U+212A, whose lowercase is ``k``
+_CASE_FROM = string.ascii_uppercase + "\u212a"
+_CASE_TO = string.ascii_lowercase + "k"
+
+
 def normalize(col: Column | str) -> Column:
-    """Lowercase, strip non-alphanumerics to spaces, collapse runs, trim."""
+    """Lowercase, strip non-alphanumerics to spaces, collapse runs, trim.
+
+    The result equals ``trim(collapse(regexp_replace(lower(c),
+    '[^a-z0-9 ]', ' ')))`` for every string, but no case mapping runs:
+    Spark's ``lower`` goes through ICU, and the first call in a JVM loads
+    ICU's case data (1.5-1.75 s, paid by every cold batch run). Of all
+    non-ASCII code points only two lowercase to anything ``[a-z0-9]``
+    keeps: U+212A (Kelvin sign) to ``k``, and U+0130 (``İ``) to ``i`` plus
+    U+0307, a combining dot the next step turns into a space. So ASCII
+    A-Z and U+212A are translated, U+0130 becomes ``"i "``, and every
+    other code point is stripped as before.
+    ``tests/test_normalize_equivalence.py`` checks every code point.
+    """
     c = F.col(col) if isinstance(col, str) else col
-    c = F.lower(c)
+    c = F.translate(c, _CASE_FROM, _CASE_TO)
+    c = F.replace(c, F.lit("\u0130"), F.lit("i "))
     c = F.regexp_replace(c, "[^a-z0-9 ]", " ")
     c = F.regexp_replace(c, " +", " ")
     return F.trim(c)
+
+
+def normalizes_nonempty(col: Column | str) -> Column:
+    """``normalize(col) != ''`` decided on the raw text: true where it
+    holds a character that :func:`normalize` turns into ``[a-z0-9]``
+    (ASCII letters and digits, U+0130, U+212A). The rlike stops at the
+    first match and runs none of normalize's regex chain."""
+    c = F.col(col) if isinstance(col, str) else col
+    return c.rlike("[A-Za-z0-9\u0130\u212a]")
 
 
 def tokens_of_norm(norm: Column | str) -> Column:

@@ -11,7 +11,13 @@ so this module is import-safe from anywhere.
 from __future__ import annotations
 
 #: mirror of functions/text.normalize(): lowercase, strip non-alnum to
-#: spaces, collapse runs, trim
+#: spaces, collapse runs, trim. The Spark side calls no ``lower`` (Spark's
+#: goes through ICU, whose first use in a JVM costs ~1.5 s): it translates
+#: A-Z and the Kelvin sign U+212A, and turns U+0130 into "i ", the only
+#: non-ASCII code points whose lowercase holds [a-z0-9]. This ``lower`` is
+#: DuckDB's, which costs nothing like that. It maps U+0130 to a bare "i"
+#: (Spark keeps the combining dot as a space), so the two agree on every
+#: other code point.
 _NORM = ("trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),"
          " ' +', ' ', 'g'))")
 

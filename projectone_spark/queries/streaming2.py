@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from projectone_spark.functions import multiset_diff_count
 from projectone_spark.queries import load, register
+from projectone_spark.queries._sql_fragments import _NORM
 from projectone_spark.queries.streaming import _stream_events
 from projectone_spark.session import scratch_dir
 
@@ -73,11 +74,10 @@ def st11_stream_outer_interval_join(spark: SparkSession,
     return run_to_memory(out, output_mode="append")
 
 
-_ST12_SQL = """
+_ST12_SQL = f"""
 WITH d AS (
   SELECT doc_id,
-         md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]',
-             ' ', 'g'), ' +', ' ', 'g'))) AS content_md5,
+         md5({_NORM}) AS content_md5,
          CAST(ceil(n_chars / 4.0) AS BIGINT) AS toks
   FROM documents)
 SELECT content_md5,

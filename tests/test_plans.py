@@ -493,3 +493,43 @@ def test_apply_token_classifier_model_join_broadcasts_by_contract(spark):
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") == 1
+
+
+def test_corpus_plans_run_no_case_mapping(spark, monkeypatch):
+    """``text.normalize`` and the winnow gate translate instead of calling
+    ``lower``: Spark's case functions go through ICU, whose first use in
+    a JVM costs ~1.5 s of every cold corpus run. Checked on the optimized
+    plan of each stage's frame and of every frame its builder
+    ``localCheckpoint``s on the way (unigram_surprise's token counts and
+    LSH's signatures are checkpointed while the frame is built)."""
+    import re
+
+    from projectone_spark.functions import dedup, text
+    from projectone_spark.queries import load
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
+    plans: dict[str, list[str]] = {}
+    stage = ""
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    real = type(docs).localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans[stage].append(optimized(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", recording)
+    for stage, build in (("exact_dedup", dedup.exact_dedup),
+                         ("lsh_candidate_pairs", dedup.lsh_candidate_pairs),
+                         ("gopher_rules", text.gopher_rules),
+                         ("unigram_surprise", text.unigram_surprise),
+                         ("winnow_fingerprints", dedup.winnow_fingerprints)):
+        plans[stage] = []
+        plans[stage].append(optimized(build(docs)))
+    assert len(plans["unigram_surprise"]) > 1
+    case = re.compile(r"\b(lower|upper|initcap)\(")
+    found = {s: sorted({m.group(0) for p in ps for m in case.finditer(p)})
+             for s, ps in plans.items()}
+    assert found == {s: [] for s in plans}
