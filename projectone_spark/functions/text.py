@@ -104,19 +104,14 @@ def _spread_width(df: DataFrame) -> int:
     return max(4, min(default, est // _SPREAD_CHUNK_BYTES + 1))
 
 
-#: ``translate`` tables for :func:`normalize`: ASCII A-Z and the Kelvin
-#: sign U+212A, whose lowercase is ``k``
-_CASE_FROM = string.ascii_uppercase + "\u212a"
-_CASE_TO = string.ascii_lowercase + "k"
-
-
 def normalize(col: Column | str) -> Column:
     """Lowercase, strip non-alphanumerics to spaces, collapse runs, trim.
 
     The result equals ``trim(collapse(regexp_replace(lower(c),
     '[^a-z0-9 ]', ' ')))`` for every string, but no case mapping runs:
     Spark's ``lower`` goes through ICU, and the first call in a JVM loads
-    ICU's case data (1.5-1.75 s, paid by every cold batch run). Of all
+    ICU's case data (about 2.5 s on 4 vCPU, paid by every cold batch run;
+    PLANS.md, "Cold-start cost"). Of all
     non-ASCII code points only two lowercase to anything ``[a-z0-9]``
     keeps: U+212A (Kelvin sign) to ``k``, and U+0130 (``İ``) to ``i`` plus
     U+0307, a combining dot the next step turns into a space. So ASCII
@@ -125,7 +120,8 @@ def normalize(col: Column | str) -> Column:
     ``tests/test_normalize_equivalence.py`` checks every code point.
     """
     c = F.col(col) if isinstance(col, str) else col
-    c = F.translate(c, _CASE_FROM, _CASE_TO)
+    c = F.translate(c, string.ascii_uppercase + "\u212a",
+                    string.ascii_lowercase + "k")
     c = F.replace(c, F.lit("\u0130"), F.lit("i "))
     c = F.regexp_replace(c, "[^a-z0-9 ]", " ")
     c = F.regexp_replace(c, " +", " ")

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 #: mirror of functions/text.normalize(): lowercase, strip non-alnum to
 #: spaces, collapse runs, trim. The Spark side calls no ``lower`` (Spark's
-#: goes through ICU, whose first use in a JVM costs ~1.5 s): it translates
+#: goes through ICU, whose first use in a JVM costs ~2.5 s): it translates
 #: A-Z and the Kelvin sign U+212A, and turns U+0130 into "i ", the only
 #: non-ASCII code points whose lowercase holds [a-z0-9]. This ``lower`` is
 #: DuckDB's, which costs nothing like that. It maps U+0130 to a bare "i"

@@ -498,7 +498,7 @@ def test_apply_token_classifier_model_join_broadcasts_by_contract(spark):
 def test_corpus_plans_run_no_case_mapping(spark, monkeypatch):
     """``text.normalize`` and the winnow gate translate instead of calling
     ``lower``: Spark's case functions go through ICU, whose first use in
-    a JVM costs ~1.5 s of every cold corpus run. Checked on the optimized
+    a JVM costs ~2.5 s of every cold corpus run. Checked on the optimized
     plan of each stage's frame and of every frame its builder
     ``localCheckpoint``s on the way (unigram_surprise's token counts and
     LSH's signatures are checkpointed while the frame is built)."""
