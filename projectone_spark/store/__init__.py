@@ -679,7 +679,9 @@ def _store_assign(out: DataFrame, schema, partition_by: Sequence[str],
     """``out`` with each column that ``schema`` also has cast to its type
     there — store assignment, as Delta's UPDATE and MERGE do. A rewrite
     links the files it does not touch in their old types, so a rewritten
-    file in another type would leave a table that no longer reads.
+    file in another type would leave a table that no longer reads. A
+    value that does not fit raises (Spark's ANSI store-assignment rule,
+    whatever the session's ANSI setting); it never wraps or becomes NULL.
     Types that already match add nothing to the plan. Partition columns
     are left as they are: their values live in directory names."""
     import pyspark.sql.functions as F
@@ -688,36 +690,20 @@ def _store_assign(out: DataFrame, schema, partition_by: Sequence[str],
 
     want = {f.name: f.dataType for f in schema.fields
             if f.name not in partition_by}
-    cast = {f.name: F.expr(_assign_sql(sql_ident(f.name), want[f.name],
-                                       f.name, what))
-            for f in out.schema.fields
-            if f.name in want and want[f.name].simpleString()
-            != f.dataType.simpleString()}
+    cast = {}
+    for f in out.schema.fields:
+        t = want.get(f.name)
+        if t is None or t.simpleString() == f.dataType.simpleString():
+            continue
+        c = F.col(sql_ident(f.name))
+        err = F.raise_error(F.concat(
+            F.lit(f"{what}: value "), c.cast("string"),
+            F.lit(f" does not fit column `{f.name}` {t.simpleString().upper()}"
+                  f"; cast it in the expression or overwrite the table "
+                  f"with a wider type")))
+        cast[f.name] = F.when(c.isNotNull() & c.try_cast(t).isNull(),
+                              err).otherwise(c.try_cast(t))
     return out.withColumns(cast) if cast else out
-
-
-def _assign_sql(value: str, t, column: str, what: str) -> str:
-    """SQL for the SQL ``value`` stored into ``column`` of type ``t``: cast
-    to ``t``, and a value that does not fit raises (Spark's ANSI
-    store-assignment rule, whatever the session's ANSI setting); it never
-    wraps or becomes NULL. ``what`` opens the error message.
-
-    A writer applies this to a new value BEFORE it meets the stored value
-    in one ``CASE``: a ``CASE`` takes its branches' common type, so an
-    uncast DOUBLE would turn the unchanged BIGINT rows of the same column
-    into doubles (and back, rounded past 2^53), and a DOUBLE into a
-    STRING column would cast every unchanged string to DOUBLE."""
-    from projectone_spark.store.skipping import sql_ident, sql_string
-
-    typ = t.simpleString()
-    fits = f"try_cast(({value}) AS {typ})"
-    err = sql_string(f"{what}: value ")
-    tail = sql_string(f" does not fit column {sql_ident(column)} "
-                      f"{typ.upper()}; cast it in the expression or "
-                      f"overwrite the table with a wider type")
-    return (f"CASE WHEN ({value}) IS NOT NULL AND {fits} IS NULL THEN "
-            f"raise_error(concat({err}, CAST(({value}) AS STRING), {tail})) "
-            f"ELSE {fits} END")
 
 
 def create_if_not_exists(store: TableStore, spark: SparkSession, table,

@@ -31,12 +31,7 @@ from collections.abc import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from projectone_spark.store import (
-    ConcurrentWriteError,
-    TableStore,
-    _assign_sql,
-    _store_assign,
-)
+from projectone_spark.store import ConcurrentWriteError, TableStore
 from projectone_spark.store.skipping import (
     _validate_predicates,
     predicates_to_sql,
@@ -107,26 +102,10 @@ def update_where(store: TableStore, spark: SparkSession, name: str,
         cond = F.expr(residual)
         return df.withColumns({
             c: F.when(cond, F.expr(e)).otherwise(F.col(sql_ident(c)))
-            for c, e in _assigned(df, df, assignments,
-                                  f"update on '{name}'").items()})
+            for c, e in assignments.items()})
 
     return store._rewrite(spark, name, m, predicates, apply, "update",
                           metrics={"predicate": residual})
-
-
-def _assigned(values: DataFrame, target: DataFrame,
-              assignments: Mapping[str, str], what: str) -> dict[str, str]:
-    """``assignments`` (column → SQL over ``values``) with each value whose
-    type is not its ``target`` column's wrapped in the store-assignment
-    cast (:func:`store._assign_sql`), so that the ``CASE`` that picks
-    between it and the stored value has the column's type. Columns
-    ``target`` lacks (schema evolution) keep their expression."""
-    got = dict(_project(values, [_as(f"({e})", c) for c, e
-                                 in assignments.items()]).dtypes)
-    want = {f.name: f.dataType for f in target.schema.fields}
-    return {c: e if c not in want or got[c] == want[c].simpleString()
-            else _assign_sql(f"({e})", want[c], c, what)
-            for c, e in assignments.items()}
 
 
 def _as(expr: str, name: str) -> str:
@@ -160,11 +139,8 @@ def _key_merge(source: DataFrame, target: DataFrame, on: str,
     THEN struct(...) END, ...))`` and ``IS NOT NULL``. ``stamps`` are
     ``Column`` values without SQL text, added once to the joined frame for
     the clauses to reference; ``hash_source`` makes the source the hash
-    join's build side. Source columns the target also has are cast to the
-    target's types first (:func:`store._assign_sql`), so each clause's
-    ``CASE`` and ``struct`` keep the stored rows in the table's types."""
-    src = _store_assign(source, target.schema, (), "merge")
-    src = src.hint("shuffle_hash") if hash_source else src
+    join's build side."""
+    src = source.hint("shuffle_hash") if hash_source else source
     joined = src.alias("source").join(target.alias("target"), F.expr(on),
                                       "full_outer")
     if stamps:
@@ -251,8 +227,6 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
         raise ValueError(f"unknown columns in SET: {unknown}")
 
     q = sql_ident
-    what = f"merge on '{name}'"
-    source = _store_assign(source, tgt_probe.schema, (), what)
     predicates: list[tuple[str, str, object]] = []
     if not when_not_matched_by_source_delete and not evolving:
         # file pruning: [min, max] of each source key bounds the target
@@ -280,16 +254,12 @@ def merge_into(store: TableStore, spark: SparkSession, name: str,
     src = _project(source, ["*", "true AS __s_exists", "count(1) OVER "
                             f"(PARTITION BY {', '.join(map(q, keys))}) AS __scnt"])
     on = " AND ".join(f"source.{q(k)} <=> target.{q(k)}" for k in keys)
-    upd = when_matched_update if when_matched_update is not None \
-        else {c: f"source.{q(c)}" for c in tgt_probe.columns + evolving
-              if c in source.columns}
-    upd = _assigned(src.alias("source").join(tgt_probe.alias("target"),
-                                             F.expr(on), "full_outer"),
-                    tgt_probe, upd, what)
 
     def apply(tgt: DataFrame) -> DataFrame:
         # new columns append at the end, NULL where the source has no row
         cols = tgt.columns + evolving
+        upd = when_matched_update if when_matched_update is not None \
+            else {c: f"source.{q(c)}" for c in cols if c in source.columns}
         exprs = []
         for c in cols:
             val = "NULL" if c in evolving else f"target.{q(c)}"

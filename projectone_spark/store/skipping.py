@@ -513,11 +513,6 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def sql_string(value: str) -> str:
-    """``value`` as a single-quoted SQL string literal."""
-    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _sql_literal(val) -> str:
     if isinstance(val, str):
         return "'" + val.replace("'", "''") + "'"

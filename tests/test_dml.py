@@ -5,8 +5,6 @@ import os
 
 import pyspark.sql.functions as F
 import pytest
-from hypothesis import HealthCheck, example, given, settings
-from hypothesis import strategies as st
 
 from projectone_spark.store import TableStore
 from projectone_spark.store.dml import delete_where, update_where
@@ -406,133 +404,3 @@ def test_rewrite_keeps_column_types(spark, store, op):
     with pytest.raises(Exception, match="does not fit column `v` BIGINT"):
         assign("v + 1e31")  # a DOUBLE out of BIGINT's range
     assert store.version("t") == v0 + 1
-
-
-# SET values for the store-assignment property: each is valid Spark SQL
-# and DuckDB SQL with the same value, over the row's stored columns
-_ASSIGN_COLS = {"i": "INT", "l": "BIGINT", "d": "DOUBLE",
-                "m": "DECIMAL(9,2)", "s": "STRING"}
-_ASSIGN_EXPRS = (
-    "l * 1.5",                # DECIMAL, wider than INT
-    "i + 2147483648",         # BIGINT past INT
-    "d * 3",                  # DOUBLE, fractional on odd ids
-    "-m",                     # DECIMAL, negative fractions
-    "m * 2",
-    "l * 1000000000",         # BIGINT past DECIMAL(9,2)
-    "CAST(l AS SMALLINT)",    # narrower
-    "CAST(id AS STRING)",     # unrelated, parses as every type here
-    "s",                      # unrelated, parses as none but STRING
-    "d / 4",                  # DOUBLE eighths into 2 decimal places
-    "CAST(NULL AS STRING)",
-)
-_ASSIGN_BASE = ("id", "CAST(id * 3 AS INT) AS i", "id * 2 AS l",
-                "CAST(id AS DOUBLE) * 0.5 AS d",
-                "CAST(id * 1.25 AS DECIMAL(9,2)) AS m",
-                "concat('s', CAST(id AS STRING)) AS s")
-
-
-def _duck_assigned(con, expr: str, col: str, k: int):
-    """DuckDB's rows after setting ``col`` to ``expr`` where ``id < k``,
-    or None when a changed row's value does not fit the column. Casts to
-    an integral type truncate toward zero first, as Spark's cast does
-    (DuckDB's rounds)."""
-    typ = _ASSIGN_COLS[col].replace("STRING", "VARCHAR")
-    src_type = con.execute(f"SELECT typeof({expr}) FROM t LIMIT 1").fetchone()[0]
-    value = expr
-    if typ in ("INT", "BIGINT") and src_type.startswith(("DECIMAL", "DOUBLE")):
-        value = f"trunc({expr})"
-    cast = f"TRY_CAST({value} AS {typ})"
-    misfits = con.execute(f"SELECT count(*) FROM t WHERE id < {k} AND "
-                          f"({expr}) IS NOT NULL AND {cast} IS NULL").fetchone()[0]
-    if misfits:
-        return None
-    cols = ", ".join(f"CASE WHEN id < {k} THEN {cast} ELSE {c} END"
-                     if c == col else c for c in ("id", *_ASSIGN_COLS))
-    return sorted(con.execute(f"SELECT {cols} FROM t").fetchall())
-
-
-@example(expr="l * 1.5", col="i", op="update_where", k=5)
-@example(expr="d * 3", col="s", op="update_where", k=5)
-@example(expr="s", col="d", op="merge_into", k=5)
-@given(expr=st.sampled_from(_ASSIGN_EXPRS),
-       col=st.sampled_from(sorted(_ASSIGN_COLS)),
-       op=st.sampled_from(["update_where", "merge_into"]),
-       k=st.integers(min_value=1, max_value=20))
-@settings(max_examples=30, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture,
-                                 HealthCheck.too_slow])
-def test_store_assignment_matches_duckdb_cast(spark, expr, col, op, k):
-    """A SET value of a wider, narrower or unrelated type, committed over
-    a table whose untouched files are linked: the table reads in its
-    recorded schema with DuckDB's CAST of each value, and a value that
-    does not fit raises and leaves the version as it was."""
-    import tempfile
-
-    import duckdb
-
-    from projectone_spark.store.dml import merge_into
-
-    con = duckdb.connect()
-    con.execute(f"CREATE TABLE t AS SELECT {', '.join(_ASSIGN_BASE)} "
-                "FROM range(40) r(id)".replace(" STRING", " VARCHAR"))
-    want = _duck_assigned(con, expr, col, k)
-    with tempfile.TemporaryDirectory() as root:
-        store = TableStore(root)
-        base = spark.range(40).selectExpr(*_ASSIGN_BASE)
-        store.overwrite(spark, base.repartitionByRange(4, "id"), "t",
-                        stats_columns=["id"])
-        types = store.read(spark, "t").dtypes
-        v0 = store.version("t")
-
-        def assign():
-            if op == "update_where":
-                return update_where(store, spark, "t", [("id", "<", k)],
-                                    {col: expr})
-            src = base.filter(F.col("id") < k).selectExpr(
-                "id", f"{expr} AS {col}")
-            return merge_into(store, spark, "t", src, ["id"])
-
-        if want is None:
-            with pytest.raises(Exception, match="does not fit column"):
-                assign()
-            assert store.version("t") == v0
-            assert sorted(map(tuple, store.read(spark, "t").collect())) \
-                == sorted(map(tuple, base.collect()))
-            return
-        assert assign() == v0 + 1
-        assert store.manifest("t")["metrics"]["files_linked"] > 0
-        got = store.read(spark, "t")
-        assert got.dtypes == types
-        assert sorted(map(tuple, got.collect())) == want
-
-
-@pytest.mark.parametrize("op", ["update_where", "merge_into", "write_scd1",
-                                "write_scd2"])
-def test_new_value_type_leaves_unmatched_rows_alone(spark, store, op):
-    """A new value of another type meets the stored value in one CASE;
-    without the store-assignment cast first, the CASE's common type
-    rounded unchanged BIGINTs past 2^53 through DOUBLE and cast unchanged
-    strings to DOUBLE (which raised)."""
-    from projectone_spark.store.dml import merge_into
-    from projectone_spark.writers import write_scd1, write_scd2
-
-    base = spark.range(8).selectExpr(
-        "id", "id + 9007199254740993 AS big", "concat('s', id) AS s")
-    new = base.filter("id < 2").selectExpr(
-        "id", "CAST(big AS DOUBLE) AS big", "CAST(id AS DOUBLE) AS s")
-    if op.startswith("write_scd"):
-        write = write_scd1 if op == "write_scd1" else write_scd2
-        write(spark, store, base.coalesce(1), "t", key_cols=["id"])
-        write(spark, store, new, "t", key_cols=["id"])
-    else:
-        store.overwrite(spark, base.coalesce(1), "t")
-        if op == "merge_into":
-            merge_into(store, spark, "t", new, ["id"])
-        else:
-            update_where(store, spark, "t", [("id", "<", 2)],
-                         {"big": "CAST(big AS DOUBLE)", "s": "CAST(id AS DOUBLE)"})
-    got = store.read(spark, "t")
-    assert dict(got.dtypes)["big"] == "bigint"
-    rows = {(r["id"], r["big"], r["s"]) for r in got.collect()
-            if r["id"] >= 2}
-    assert rows == {(i, i + 9007199254740993, f"s{i}") for i in range(2, 8)}

@@ -7,17 +7,21 @@ compare the two expressions row by row: over every Unicode scalar value
 context, and over Hypothesis text that leans on the two code points that
 lowercase into ASCII (U+0130, U+212A), combining marks, supplementary
 planes, tabs and NULL. ``normalizes_nonempty`` (the winnow gate) is
-compared with ``lower(text) RLIKE '[a-z0-9]'`` the same way.
+compared with ``lower(text) RLIKE '[a-z0-9]'`` the same way. The DuckDB
+oracle's mirror, ``queries._sql_fragments._NORM``, is checked against
+``normalize`` over every code point too.
 """
 
 from __future__ import annotations
 
+import duckdb
 import pyspark.sql.functions as F
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from projectone_spark.functions.text import normalize, normalizes_nonempty
+from projectone_spark.queries._sql_fragments import _NORM
 
 SURROGATES = (0xD800, 0xDFFF)
 
@@ -77,17 +81,45 @@ def test_every_code_point(code_points):
     assert [r[0] for r in bad.collect()] == []
 
 
+_KNOWN = [("İ", "i"), ("xİy", "xi y"), ("K", "k"),
+          ("Kelvin", "kelvin"), ("ı", ""), ("ſ", ""),
+          ("Ȧ", "a"), ("\t\x00Q\x00", "q"), (None, None)]
+
+
 def test_gate_and_normalize_on_known_code_points(spark):
-    df = spark.createDataFrame(
-        [("İ", "i"), ("xİy", "xi y"), ("K", "k"),
-         ("Kelvin", "kelvin"), ("ı", ""), ("ſ", ""),
-         ("Ȧ", "a"), ("\t\x00Q\x00", "q"), (None, None)],
-        "s string, want string")
+    df = spark.createDataFrame(_KNOWN, "s string, want string")
     got = df.select("want", normalize("s").alias("n"),
                     normalizes_nonempty("s").alias("g")).collect()
     assert [r.n for r in got] == [r.want for r in got]
     assert [r.g for r in got] == [None if r.want is None else r.want != ""
                                   for r in got]
+    con = duckdb.connect()
+    assert [con.execute(f"SELECT {_NORM} FROM (SELECT ? AS text)",
+                        [s]).fetchone()[0] for s, _ in _KNOWN] \
+        == [want for _, want in _KNOWN]
+
+
+def test_oracle_mirror_on_every_code_point(spark, tmp_path):
+    """DuckDB's ``_NORM`` gives ``normalize``'s string for every code
+    point in the contexts of :func:`test_every_code_point`: DuckDB's
+    ``lower`` differs from Spark's only at U+0130, which ``_NORM``
+    replaces first."""
+    lo, hi = SURROGATES
+    path = str(tmp_path / "norm.parquet")
+    duckdb.connect().execute(f"""
+        COPY (WITH c AS (SELECT id, chr(CAST(id AS INTEGER)) AS ch
+                         FROM range(0, {0x110000}) r(id)
+                         WHERE id < {lo} OR id > {hi}),
+              t AS (SELECT id, unnest([ch, 'Ab' || ch || 'Z9',
+                                       ' x ' || ch || ch || chr(9)]) AS text
+                    FROM c)
+              SELECT id, text, {_NORM} AS norm FROM t)
+        TO '{path}' (FORMAT parquet)""")
+    df = spark.read.parquet(path)
+    assert df.count() == 3 * (0x110000 - 0x800)
+    bad = (df.filter(~normalize("text").eqNullSafe(F.col("norm")))
+           .select(F.format_string("U+%04X", "id")).distinct().limit(10))
+    assert [r[0] for r in bad.collect()] == []
 
 
 _SPECIAL = st.sampled_from([
