@@ -111,13 +111,13 @@ def normalize(col: Column | str) -> Column:
     '[^a-z0-9 ]', ' ')))`` for every string, but no case mapping runs:
     Spark's ``lower`` goes through ICU, and the first call in a JVM loads
     ICU's case data (about 2.5 s on 4 vCPU, paid by every cold batch run;
-    PLANS.md, "Cold-start cost"). Of all
-    non-ASCII code points only two lowercase to anything ``[a-z0-9]``
-    keeps: U+212A (Kelvin sign) to ``k``, and U+0130 (``İ``) to ``i`` plus
-    U+0307, a combining dot the next step turns into a space. So ASCII
-    A-Z and U+212A are translated, U+0130 becomes ``"i "``, and every
-    other code point is stripped as before.
-    ``tests/test_normalize_equivalence.py`` checks every code point.
+    PLANS.md, "Cold-start cost"). Of all non-ASCII code points only two
+    lowercase to anything ``[a-z0-9]`` keeps: U+212A (Kelvin sign) to
+    ``k``, and U+0130 (``İ``) to ``i`` plus U+0307, a combining dot the
+    next step turns into a space. So ASCII A-Z and U+212A are
+    translated, U+0130 becomes ``"i "``, and every other code point is
+    stripped as before. ``tests/test_normalize_equivalence.py`` checks
+    every code point.
     """
     c = F.col(col) if isinstance(col, str) else col
     c = F.translate(c, string.ascii_uppercase + "\u212a",
