@@ -16,10 +16,11 @@ reader:
   ``skipChangeCommits=true`` — Delta's exact contract for streaming from a
   mutated table.
 
-Scale: the per-batch planning cost is O(files added), read cost is the new
-files only, and rate is boundable upstream via the trigger. Hive-
-partitioned tables stream with their partition columns reattached per file
-as typed constants (pyarrow's hive inference — the same types a batch read
+Scale: the per-batch planning cost is O(files added) and opens one manifest
+per version in the batch's range, read cost is the new files only, and
+rate is boundable upstream via the trigger. Hive-partitioned tables
+stream with their partition columns reattached per file as typed
+constants (pyarrow's hive inference — the same types a batch read
 discovers).
 """
 
@@ -38,13 +39,14 @@ from pyspark.sql.types import StructType
 from projectone_spark.store import TableStore, _data_files
 
 
-def _history(root: str, table: str) -> dict[int, dict]:
-    """Every committed manifest of ``table`` by version, read through
-    :meth:`TableStore.history`; empty when the table does not exist (the
-    root is checked first so a mistyped path is not created)."""
+def _current(root: str, table: str) -> tuple[TableStore, dict]:
+    """The table's store and current manifest; raises "does not exist"
+    before ``TableStore`` would create a mistyped root."""
     if not os.path.isdir(os.path.join(root, table)):
-        return {}
-    return {m["version"]: m for m in TableStore(root).history(table)}
+        raise FileNotFoundError(
+            f"table '{table}' does not exist under {root}")
+    store = TableStore(root)
+    return store, store.snapshot(table)
 
 
 def _files_of(m: dict) -> list[str]:
@@ -79,33 +81,26 @@ def _arrow_schema(m: dict):
 class StoreChangesStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
         opts = {k.lower(): v for k, v in options.items()}
-        self.root = opts["root"]
         self.table = opts["table"]
         self.skip_change_commits = (
             str(opts.get("skipchangecommits", "false")).lower() == "true")
         start = opts.get("startingversion")
         self._initial = int(start) if start is not None else -1
-        ms = _history(self.root, self.table)
-        if not ms:
-            raise FileNotFoundError(f"table '{self.table}' does not exist")
-        self._schema = _arrow_schema(ms[max(ms)])  # pickled to executors
+        self._store, m = _current(opts["root"], self.table)
+        self._schema = _arrow_schema(m)  # pickled to executors
 
     def initialOffset(self) -> dict:
         return {"version": self._initial}
 
     def latestOffset(self) -> dict:
-        ms = _history(self.root, self.table)
-        return {"version": max(ms) if ms else -1}
+        return {"version": self._store.version(self.table)}
 
     def partitions(self, start: dict, end: dict
                    ) -> Sequence[InputPartition]:
-        ms = _history(self.root, self.table)
         parts: list[InputPartition] = []
-        for v in range(start["version"] + 1, end["version"] + 1):
-            m = ms.get(v)
-            if m is None:
-                continue
-            prev = ms.get(v - 1)
+        for prev, m in self._store._commits(
+                self.table, start["version"] + 1, end["version"]):
+            v = m["version"]
             if m["operation"] != "append" and prev is not None:
                 if self.skip_change_commits:
                     continue
@@ -164,13 +159,8 @@ class StoreChangesDataSource(DataSource):
     def schema(self) -> StructType:
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        ms = _history(self.options["root"], self.options["table"])
-        if not ms:
-            raise FileNotFoundError(
-                f"table '{self.options['table']}' does not exist under "
-                f"{self.options['root']}")
-        return from_arrow_schema(_arrow_schema(ms[max(ms)]),
-                                 prefer_timestamp_ntz=True)
+        _, m = _current(self.options["root"], self.options["table"])
+        return from_arrow_schema(_arrow_schema(m), prefer_timestamp_ntz=True)
 
     def streamReader(self, schema: StructType) -> StoreChangesStreamReader:
         return StoreChangesStreamReader(self.options)

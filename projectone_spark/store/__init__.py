@@ -51,6 +51,11 @@ class TableStore:
         root/<table>/_manifest_v{n}.json     # history (reference-style
                                              #   versioned state, state.py:89-127)
         root/<table>/v{n}-<uuid>/            # data directories
+
+    :meth:`snapshot` is the one manifest lookup: it opens one file, the
+    current pointer or ``_manifest_v{n}.json``, so time travel, restore,
+    the change feed and the table stream source open one manifest per
+    version they touch. Only :meth:`history` lists them all.
     """
 
     def __init__(self, root: str):
@@ -62,13 +67,36 @@ class TableStore:
     def _table_dir(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _manifest_path(self, name: str) -> str:
-        return os.path.join(self._table_dir(name), "_manifest.json")
+    def _manifest_path(self, name: str, version: int | None = None) -> str:
+        fn = "_manifest.json" if version is None else f"_manifest_v{version}.json"
+        return os.path.join(self._table_dir(name), fn)
+
+    def snapshot(self, name: str, version: int | None = None) -> dict:
+        """The current manifest, or version ``version``'s: one file opened
+        either way. A missing table or version raises FileNotFoundError."""
+        try:
+            with open(self._manifest_path(name, version)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"table '{name}' does not exist in {self.root}"
+                if version is None else
+                f"table '{name}' has no version {version}") from None
+
+    def _retained(self, name: str, version: int) -> dict:
+        """:meth:`snapshot` of ``version``, raising when vacuum removed its
+        data dirs: the check every pinned read and restore share."""
+        m = self.snapshot(name, version)
+        missing = [d for d in m["dirs"] if not os.path.isdir(d)]
+        if missing:
+            raise FileNotFoundError(
+                f"version {version} of '{name}' was vacuumed; "
+                f"missing {missing}")
+        return m
 
     def manifest(self, name: str) -> dict | None:
-        try:
-            with open(self._manifest_path(name)) as f:
-                return json.load(f)
+        try:  # snapshot, or None when the table does not exist
+            return self.snapshot(name)
         except FileNotFoundError:
             return None
 
@@ -177,14 +205,19 @@ class TableStore:
                     manifest[stamp] = prev[stamp]
             if manifest_extra:
                 manifest.update(manifest_extra)
-            tdir = self._table_dir(name)
-            tmp = os.path.join(tdir, f"_manifest.tmp.{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            # keep history, then atomically swap the current pointer
-            shutil.copy(tmp, os.path.join(tdir, f"_manifest_v{version}.json"))
-            os.replace(tmp, self._manifest_path(name))
+            self._publish(name, manifest)
             return version
+
+    def _publish(self, name: str, m: dict) -> None:
+        """Write ``m`` as its version's ``_manifest_v{n}.json``, then swap
+        the current pointer to it atomically. The caller holds the commit
+        lock."""
+        tmp = os.path.join(self._table_dir(name),
+                           f"_manifest.tmp.{uuid.uuid4().hex}")
+        with open(tmp, "w") as f:
+            json.dump(m, f, indent=1)
+        shutil.copy(tmp, self._manifest_path(name, m["version"]))
+        os.replace(tmp, self._manifest_path(name))
 
     def txn_version(self, name: str, app_id: str) -> int:
         """Highest transaction version committed for ``app_id`` (-1 if
@@ -203,21 +236,17 @@ class TableStore:
         lands meanwhile is neither rolled back nor overwritten. Every
         commit waits on that lock, so ``mutator`` must be cheap: it edits
         the dict and reads no data files."""
-        if self.manifest(name) is None:  # before the lock, which makes the dir
-            raise FileNotFoundError(f"table '{name}' does not exist")
+        self.snapshot(name)  # raises before the lock, which makes the dir
         with self._commit_lock(name):
-            m = self.manifest(name)
+            m = self.snapshot(name)
             mutator(m)
-            tdir = self._table_dir(name)
-            tmp = os.path.join(tdir, f"_manifest.tmp.{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                json.dump(m, f, indent=1)
-            shutil.copy(tmp, os.path.join(tdir, f"_manifest_v{m['version']}.json"))
-            os.replace(tmp, self._manifest_path(name))
+            self._publish(name, m)
         return m
 
     def history(self, name: str) -> list[dict]:
-        """All committed manifests, newest first (cf. DeltaTable.history)."""
+        """All committed manifests, newest first (cf. DeltaTable.history).
+        It parses every version, so it is for listings and ``vacuum``; one
+        version is :meth:`snapshot`."""
         tdir = self._table_dir(name)
         out = []
         if not os.path.isdir(tdir):
@@ -228,6 +257,15 @@ class TableStore:
                     out.append(json.load(f))
         return sorted(out, key=lambda m: m["version"], reverse=True)
 
+    def _commits(self, name: str, first: int, last: int):
+        """``(previous, manifest)`` of each version ``first … last``,
+        opening versions ``first − 1 … last`` once each."""
+        prev = self.snapshot(name, first - 1) if first > 0 else None
+        for v in range(first, last + 1):
+            m = self.snapshot(name, v)
+            yield prev, m
+            prev = m
+
     # -- IO ----------------------------------------------------------------
 
     def read(self, spark: SparkSession, name: str,
@@ -235,9 +273,7 @@ class TableStore:
         """The current version, or exactly ``snapshot`` (a dict from
         :meth:`manifest`): a read-modify-write reads the version it then
         pins as ``_expected_base``, not whatever is current by then."""
-        m = self.manifest(name) if snapshot is None else snapshot
-        if m is None:
-            raise FileNotFoundError(f"table '{name}' does not exist in {self.root}")
+        m = self.snapshot(name) if snapshot is None else snapshot
         return self._read_files(spark, m, {d: [d] for d in m["dirs"]})
 
     @staticmethod
@@ -279,24 +315,12 @@ class TableStore:
         return out
 
     def read_version(self, spark: SparkSession, name: str, version: int) -> DataFrame:
-        """Time travel to an historical version. Applies the same per-dir
-        ``basePath`` handling as :meth:`read` (a partitioned multi-dir
-        version must rediscover its hive partition columns per data
-        directory), and fails with a clear vacuumed-version error instead
-        of a raw Spark path error when the dirs are gone — the
-        ``maintenance.restore`` missing-dirs discipline, shared by every
-        pinned reader (``load_model(version=...)``,
-        ``open_index(version=...)``)."""
-        for m in self.history(name):
-            if m["version"] != version:
-                continue
-            missing = [d for d in m["dirs"] if not os.path.isdir(d)]
-            if missing:
-                raise FileNotFoundError(
-                    f"version {version} of '{name}' was vacuumed; "
-                    f"missing {missing}")
-            return self._read_files(spark, m, {d: [d] for d in m["dirs"]})
-        raise FileNotFoundError(f"table '{name}' has no version {version}")
+        """Time travel to an historical version, read as :meth:`read`
+        reads. Vacuumed dirs raise the same clear error as
+        ``maintenance.restore`` (:meth:`_retained`), for every pinned
+        reader (``load_model``/``open_index`` with ``version``)."""
+        m = self._retained(name, version)
+        return self._read_files(spark, m, {d: [d] for d in m["dirs"]})
 
     def _new_data_dir(self, name: str) -> str:
         version = self.version(name) + 1
@@ -679,11 +703,20 @@ def _store_assign(out: DataFrame, schema, partition_by: Sequence[str],
     """``out`` with each column that ``schema`` also has cast to its type
     there — store assignment, as Delta's UPDATE and MERGE do. A rewrite
     links the files it does not touch in their old types, so a rewritten
-    file in another type would leave a table that no longer reads. A
+    file in another type would leave a table that no longer reads.
+    Partition columns are left as they are: their values live in
+    directory names."""
+    cast = _assigned(out.schema.fields, schema, partition_by, what)
+    return out.withColumns(cast) if cast else out
+
+
+def _assigned(fields, schema, partition_by: Sequence[str], what: str) -> dict:
+    """``{name: Column}``, each of ``fields`` whose type differs from its
+    type in ``schema`` cast to it: the values a commit would store. A
     value that does not fit raises (Spark's ANSI store-assignment rule,
     whatever the session's ANSI setting); it never wraps or becomes NULL.
-    Types that already match add nothing to the plan. Partition columns
-    are left as they are: their values live in directory names."""
+    Types that already match get no entry, so they add nothing to a
+    plan."""
     import pyspark.sql.functions as F
 
     from projectone_spark.store.skipping import sql_ident
@@ -691,7 +724,7 @@ def _store_assign(out: DataFrame, schema, partition_by: Sequence[str],
     want = {f.name: f.dataType for f in schema.fields
             if f.name not in partition_by}
     cast = {}
-    for f in out.schema.fields:
+    for f in fields:
         t = want.get(f.name)
         if t is None or t.simpleString() == f.dataType.simpleString():
             continue
@@ -703,7 +736,7 @@ def _store_assign(out: DataFrame, schema, partition_by: Sequence[str],
                   f"with a wider type")))
         cast[f.name] = F.when(c.isNotNull() & c.try_cast(t).isNull(),
                               err).otherwise(c.try_cast(t))
-    return out.withColumns(cast) if cast else out
+    return cast
 
 
 def create_if_not_exists(store: TableStore, spark: SparkSession, table,
@@ -737,9 +770,7 @@ def last_commit_stats(store: TableStore, name: str) -> dict:
     """Last-commit operation stats (reference ``get_last_write_stats``,
     ``core/utils/delta.py:135-168``): operation, version, file count and
     byte size of the current snapshot — all from metadata, no Spark job."""
-    m = store.manifest(name)
-    if m is None:
-        raise FileNotFoundError(f"table '{name}' does not exist")
+    m = store.snapshot(name)
     n_files = 0
     n_bytes = 0
     for d in m["dirs"]:
@@ -808,20 +839,17 @@ def read_changes(store: TableStore, spark: SparkSession, name: str,
     files for free at write time.
 
     Output adds ``_change_type`` ('insert' | 'delete') and
-    ``_commit_version`` columns, mirroring CDF's shape.
+    ``_commit_version`` columns, mirroring CDF's shape. The range is
+    ``[starting_version, ending_version]``, and only the manifests of
+    versions ``starting_version − 1 … ending_version`` are opened.
     """
     import pyspark.sql.functions as F
 
-    history = {m["version"]: m for m in store.history(name)}
-    if not history:
-        raise FileNotFoundError(f"table '{name}' does not exist")
-    end = ending_version if ending_version is not None else max(history)
+    end = (ending_version if ending_version is not None
+           else store.snapshot(name)["version"])
     frames = []
-    for v in range(starting_version, end + 1):
-        m = history.get(v)
-        if m is None:
-            continue
-        prev = history.get(v - 1)
+    for prev, m in store._commits(name, starting_version, end):
+        v = m["version"]
         if m["operation"] == "append" and prev is not None:
             new_dirs = [d for d in m["dirs"] if d not in set(prev["dirs"])]
             if new_dirs:
@@ -850,7 +878,8 @@ def read_changes(store: TableStore, spark: SparkSession, name: str,
                       .withColumn("_change_type", F.lit("delete"))
                       .withColumn("_commit_version", F.lit(v)))
     if not frames:
-        raise ValueError(f"no commits in ({starting_version}, {end}] for '{name}'")
+        store.snapshot(name)  # a missing table raises "does not exist"
+        raise ValueError(f"no commits in [{starting_version}, {end}] for '{name}'")
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)

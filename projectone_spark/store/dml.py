@@ -46,9 +46,7 @@ def _snapshot(store: TableStore, name: str, operation: str,
     (e.g. the manifest a ``manifest_extra`` stamp was read from): a commit
     that landed in between raises here instead of re-publishing stale
     metadata over the newer contents."""
-    m = store.manifest(name)
-    if m is None:
-        raise FileNotFoundError(f"table '{name}' does not exist")
+    m = store.snapshot(name)
     if expected_version is not None and m["version"] != expected_version:
         raise ConcurrentWriteError(
             f"table '{name}' is at version {m['version']}, but this "

@@ -169,17 +169,7 @@ def open_index(store: TableStore, spark: SparkSession, name: str,
     v_N+1 over both the code table and the part tables. A pinned commit
     that was not save_index-stamped (e.g. a junk overwrite between
     saves) fails the same no-index-metadata check as the unpinned path."""
-    if version is None:
-        m = store.manifest(name)
-    else:
-        m = next((h for h in store.history(name)
-                  if h["version"] == version), None)
-    if m is None:
-        raise FileNotFoundError(
-            f"index table '{name}' does not exist in {store.root}"
-            if version is None else
-            f"index table '{name}' has no version {version} "
-            f"in {store.root}")
+    m = store.snapshot(name, version)
     meta = m.get("index")
     if meta is None:
         raise ValueError(
@@ -193,7 +183,8 @@ def open_index(store: TableStore, spark: SparkSession, name: str,
         raise ValueError(f"index '{name}' holds kind {meta.get('kind')!r}, "
                          f"caller expected {kind!r}")
     ikind, params = meta["kind"], dict(meta.get("params") or {})
-    codes = (store.read(spark, name) if version is None
+    # unpinned, the codes are read from the stamp's own manifest
+    codes = (store.read(spark, name, snapshot=m) if version is None
              else store.read_version(spark, name, version))
     required = _code_columns(ikind, params)
     missing = required - set(codes.columns)
@@ -333,16 +324,7 @@ def index_stats(store: TableStore, spark: SparkSession, name: str,
     unpartitioned code table's files span cells; the manifest cannot
     attribute rows without a scan, and guessing would be silently
     wrong)."""
-    if version is None:
-        m = store.manifest(name)
-    else:
-        m = next((h for h in store.history(name)
-                  if h["version"] == version), None)
-    if m is None:
-        raise FileNotFoundError(
-            f"index table '{name}' does not exist in {store.root}"
-            if version is None else
-            f"index table '{name}' has no version {version} in {store.root}")
+    m = store.snapshot(name, version)
     if m.get("index") is None:
         raise ValueError(
             f"store table '{name}' carries no index metadata — it was "

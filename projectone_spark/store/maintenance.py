@@ -24,14 +24,7 @@ from projectone_spark.store.skipping import sql_ident
 
 def table_files(store: TableStore, name: str) -> list[tuple[str, int]]:
     """(path, bytes) of every data file in the current snapshot."""
-    return _snapshot_files(_snapshot(store, name))
-
-
-def _snapshot(store: TableStore, name: str) -> dict:
-    m = store.manifest(name)
-    if m is None:
-        raise FileNotFoundError(f"table '{name}' does not exist")
-    return m
+    return _snapshot_files(store.snapshot(name))
 
 
 def _snapshot_files(m: dict) -> list[tuple[str, int]]:
@@ -71,7 +64,7 @@ def compact(store: TableStore, spark: SparkSession, name: str,
     same plan.
     """
     small = small_file_bytes if small_file_bytes is not None else target_file_bytes // 2
-    m = _snapshot(store, name)
+    m = store.snapshot(name)
     files = _snapshot_files(m)
     if sum(1 for _, b in files if b < small) < 2:
         return None
@@ -132,17 +125,7 @@ def restore(store: TableStore, name: str, version: int) -> int:
     time travel past the restore both keep working). The restored dirs
     become referenced by the current manifest again, so a later
     ``vacuum`` keeps them."""
-    target = None
-    for m in store.history(name):
-        if m["version"] == version:
-            target = m
-            break
-    if target is None:
-        raise FileNotFoundError(f"table '{name}' has no version {version}")
-    missing = [d for d in target["dirs"] if not os.path.isdir(d)]
-    if missing:
-        raise FileNotFoundError(
-            f"version {version} of '{name}' was vacuumed; missing {missing}")
+    target = store._retained(name, version)
     # the restored contents are exactly the historical version's, so the
     # model/index stamps (if any) must be THAT version's — never the
     # pre-restore manifest's, which described different rows (r9 advice:
@@ -165,10 +148,8 @@ def clone(store: TableStore, name: str, target: str) -> int:
     ``TableStore._rewrite`` uses for untouched files), so vacuuming
     or dropping the source never breaks the clone — unlike a Delta
     shallow clone, which this otherwise matches in cost."""
-    m = store.manifest(name)
-    if m is None:
-        raise FileNotFoundError(f"table '{name}' does not exist")
-    if store.manifest(target) is not None:
+    m = store.snapshot(name)
+    if store.exists(target):
         raise FileExistsError(f"table '{target}' already exists")
     from projectone_spark.store import _link_tree
 
@@ -257,7 +238,7 @@ def zorder_cluster(store: TableStore, spark: SparkSession, name: str,
     if not 1 <= len(cols) <= 4:
         raise ValueError(f"zorder_cluster needs 1-4 columns, got {cols}")
     n_files = max(1, int(target_files))
-    m = _snapshot(store, name)
+    m = store.snapshot(name)
 
     def layout(df: DataFrame, part: list[str]) -> DataFrame:
         keys = [F.col(sql_ident(c)) for c in cols]

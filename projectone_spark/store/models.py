@@ -98,17 +98,7 @@ def load_model(store: TableStore, spark: SparkSession, name: str,
     up). A pinned version whose commit was not a ``save_model`` (e.g.
     a junk overwrite between saves) fails the same no-model-metadata
     check the unpinned path applies."""
-    if version is None:
-        m = store.manifest(name)
-    else:
-        m = next((h for h in store.history(name)
-                  if h["version"] == version), None)
-    if m is None:
-        raise FileNotFoundError(
-            f"model table '{name}' does not exist in {store.root}"
-            if version is None else
-            f"model table '{name}' has no version {version} "
-            f"in {store.root}")
+    m = store.snapshot(name, version)
     meta = m.get("model")
     if meta is None:
         raise ValueError(
@@ -118,7 +108,9 @@ def load_model(store: TableStore, spark: SparkSession, name: str,
         raise ValueError(
             f"model table '{name}' holds kind {meta.get('kind')!r}, "
             f"caller expected {kind!r}")
-    frame = (store.read(spark, name) if version is None
+    # unpinned, the frame is read from the manifest the stamp came from,
+    # so a save that lands in between cannot pair one with the other
+    frame = (store.read(spark, name, snapshot=m) if version is None
              else store.read_version(spark, name, version))
     # belt and braces against stamp/content drift (a rewritten table
     # whose stamp somehow survived): the frame must still carry the

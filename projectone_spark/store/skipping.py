@@ -237,9 +237,7 @@ def add_value_set_stats(store, name: str, columns: Sequence[str],
     commits do not wait on the index build. Under the lock only the
     computed sets are merged into the files still listed; a file that a
     concurrent commit added keeps no set and is never pruned by one."""
-    m = store.manifest(name)
-    if m is None:
-        raise FileNotFoundError(f"table '{name}' does not exist")
+    m = store.snapshot(name)
     found: dict[str, dict] = {}
     for f in m.get("files") or []:
         need = [c for c in columns if c not in (f.get("vals") or {})]
@@ -554,9 +552,7 @@ def read_where(store, spark: SparkSession, name: str,
     no stats entry is always read: a stats gap never drops data), and it is
     read with the snapshot's recorded schemas, so planning runs no job.
     """
-    m = store.manifest(name)
-    if m is None:
-        raise FileNotFoundError(f"table '{name}' does not exist in {store.root}")
+    m = store.snapshot(name)
     if not predicates:
         return store.read(spark, name, snapshot=m)
     # materialize once up front: a generator-valued 'in' would otherwise be

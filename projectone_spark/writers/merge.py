@@ -35,6 +35,7 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from projectone_spark.store import _assigned
 from projectone_spark.store.dml import _as, _key_merge, _project
 from projectone_spark.writers.hashing import (
     ACTIVE,
@@ -75,14 +76,32 @@ def _bind_now(now: Column | None) -> tuple[dict[str, Column], str]:
 
 def _prep_source(source: DataFrame, key_cols: Sequence[str],
                  data_cols: Sequence[str] | None, dedup_on_keys: bool,
-                 algo: str) -> DataFrame:
+                 algo: str, target: DataFrame | None = None,
+                 tracked_cols: Sequence[str] = ()) -> DataFrame:
+    """``source`` with its key, data and (SCD3) tracked-column hashes.
+    Against a target they hash each value as the commit stores it (store
+    assignment to the target's types, misfit error included), so stored
+    rows resent in another type are unchanged; the merged columns keep
+    the source's values."""
     src = source
     if dedup_on_keys:
         # reference `deduplicate_onkeys` (write.py:257-259, 488-491, 769-771)
         src = src.dropDuplicates(list(key_cols))
     if data_cols is None:  # resolve on `source`, whose schema is cached
         data_cols = data_columns(source, key_cols)
-    return with_key_data_hashes(src, key_cols, data_cols, algo)
+    hashed = {*key_cols, *data_cols, *tracked_cols}
+    stored = {} if target is None else _assigned(
+        [f for f in source.schema.fields if f.name in hashed],
+        target.schema, (), "SCD merge")
+    tmp = {c: f"__stored_{c}__" for c in stored}
+    if tmp:
+        src = src.withColumns({tmp[c]: v for c, v in stored.items()})
+    src = with_key_data_hashes(src, [tmp.get(c, c) for c in key_cols],
+                               [tmp.get(c, c) for c in data_cols], algo)
+    if tracked_cols:
+        src = src.withColumn(COLUMN_KEY_HASH, row_hash(
+            [tmp.get(c, c) for c in tracked_cols], algo))
+    return src.drop(*tmp.values()) if tmp else src
 
 
 def _pick(cond: str, cols: Sequence[str]) -> list[str]:
@@ -104,7 +123,8 @@ def scd1_merge(source: DataFrame, target: DataFrame | None,
     ``now`` defaults to ``current_timestamp()``; pass a literal for
     deterministic tests.
     """
-    src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo)
+    src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo,
+                       target)
     out_cols = [*key_cols, *data_columns(source, key_cols), KEY_HASH, DATA_HASH]
     stamps, now_sql = _bind_now(now)
 
@@ -170,7 +190,8 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
         vf = F.col(valid_from) if isinstance(valid_from, str) else valid_from
     sentinel_ts = f"CAST({sql_string(sentinel)} AS TIMESTAMP)"
     data_cols = _scd2_data_cols(source, key_cols, data_cols, valid_from)
-    src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo)
+    src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo,
+                       target)
     src = src.withColumn(VALID_FROM, vf)
     out_cols = [*key_cols, *data_columns(source, key_cols), KEY_HASH, DATA_HASH]
 
@@ -219,8 +240,8 @@ def scd3_apply(source: DataFrame, target: DataFrame | None,
     kept; unmatched source → insert with NULL prev; unmatched target →
     kept.
     """
-    src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo)
-    src = src.withColumn(COLUMN_KEY_HASH, row_hash(list(tracked_cols), algo))
+    src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo,
+                       target, tracked_cols)
     out_cols = [*key_cols, *data_columns(source, key_cols)]
     meta = [KEY_HASH, DATA_HASH, COLUMN_KEY_HASH]
     stamps, now_sql = _bind_now(now)

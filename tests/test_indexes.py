@@ -798,3 +798,25 @@ def test_index_stats_across_append_commits(spark, tmp_path):
     m = store.manifest("idx")
     assert m["stats_columns"] == ["vec_id"]
     assert all("vec_id" in f["min"] for f in m["files"])
+
+
+def test_unpinned_open_reads_the_codes_of_its_stamp(spark, tmp_path,
+                                                   monkeypatch):
+    """An append that lands between reading the stamp and reading the
+    codes cannot pair ``OpenedIndex.version`` with another version's
+    rows."""
+    store, emb, cents, bounds = _built(spark, tmp_path)
+    extra = build_ivf_sq8_codes(emb.limit(3), cents, bounds, dims=64)
+    read = TableStore.read
+
+    def read_after_an_append(self, spark_, name, *args, **kwargs):
+        if name == "idx":
+            monkeypatch.setattr(TableStore, "read", read)
+            store.append(spark, extra, "idx")
+        return read(self, spark_, name, *args, **kwargs)
+
+    monkeypatch.setattr(TableStore, "read", read_after_an_append)
+    opened = open_index(store, spark, "idx", kind="ivf_sq8")
+    assert store.version("idx") == opened.version + 1
+    assert opened.codes.count() == store.read_version(
+        spark, "idx", opened.version).count()

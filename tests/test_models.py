@@ -305,3 +305,26 @@ def test_pinned_load_of_vacuumed_version_fails_clearly(spark, tmp_path):
     vacuum(store, "m", keep_versions=1, retention_seconds=0)
     with pytest.raises(FileNotFoundError, match="vacuumed"):
         load_model(store, spark, "m", version=v1)
+
+
+def test_unpinned_load_reads_the_rows_of_its_stamp(spark, tmp_path,
+                                                  monkeypatch):
+    """A save that lands between reading the stamp and reading the frame
+    cannot pair one version's stamp with the next version's rows."""
+    store = _store(tmp_path)
+    w1 = spark.createDataFrame([("cat", 7)], "term string, weight_micro bigint")
+    w2 = spark.createDataFrame([("cat", 8)], "term string, weight_micro bigint")
+    save_model(store, spark, "m", "token_weights", w1, params={"corpus": "t0"})
+    read = TableStore.read
+
+    def read_after_a_save(self, *args, **kwargs):
+        monkeypatch.setattr(TableStore, "read", read)
+        save_model(store, spark, "m", "token_weights", w2,
+                   params={"corpus": "t1"})
+        return read(self, *args, **kwargs)
+
+    monkeypatch.setattr(TableStore, "read", read_after_a_save)
+    frame, meta = load_model(store, spark, "m")
+    assert store.version("m") == 1
+    assert meta["params"] == {"corpus": "t0"}
+    assert [tuple(r) for r in frame.collect()] == [("cat", 7)]

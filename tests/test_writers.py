@@ -387,6 +387,36 @@ def test_scd_odd_column_names(spark, store, write_type):
             == [(2, "b")]
 
 
+@pytest.mark.parametrize("write_type", ["scd1", "scd2", "scd3"])
+def test_scd_resend_in_other_types_changes_nothing(spark, store, write_type):
+    """The stored rows resent with the key, then a data column, as DOUBLE
+    are unchanged rows: the source is hashed as the commit stores it, so
+    no key is versioned, inserted twice or re-stamped."""
+    write = {
+        "scd1": lambda df, t: write_scd1(spark, store, df, "t",
+                                         key_cols=["id"], now=_ts(t)),
+        "scd2": lambda df, t: write_scd2(spark, store, df, "t",
+                                         key_cols=["id"], valid_from=_ts(t)),
+        "scd3": lambda df, t: write_scd3(spark, store, df, "t",
+                                         key_cols=["id"], tracked_cols=["v"],
+                                         now=_ts(t)),
+    }[write_type]
+    src = spark.createDataFrame([(i, 10 * i) for i in range(1, 5)],
+                                "id long, v long")
+    write(src, T0)
+    before = store.read(spark, "t")
+    cols = before.columns
+    stored = _rows(before, *cols)
+    for c, t in (("id", T1), ("v", T2)):
+        write(src.withColumn(c, F.col(c).cast("double")), t)
+        got = store.read(spark, "t")
+        assert got.dtypes == before.dtypes
+        assert _rows(got, *cols) == stored, c
+    if write_type == "scd2":
+        assert got.filter(F.col(ACTIVE) == "Y").select("id").distinct() \
+            .count() == got.count() == 4
+
+
 def test_scd3_second_tracked_change_overwrites_prev(spark, store):
     write_scd3(spark, store, _df(spark, BASE), "t", key_cols=["id"],
                tracked_cols=["name"], now=_ts(T0))
