@@ -79,9 +79,9 @@ class TableStore:
                 return json.load(f)
         except FileNotFoundError:
             raise FileNotFoundError(
-                f"table '{name}' does not exist in {self.root}"
-                if version is None else
-                f"table '{name}' has no version {version}") from None
+                f"table '{name}' has no version {version}"
+                if version is not None and self.exists(name) else
+                f"table '{name}' does not exist in {self.root}") from None
 
     def _retained(self, name: str, version: int) -> dict:
         """:meth:`snapshot` of ``version``, raising when vacuum removed its

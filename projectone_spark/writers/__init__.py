@@ -15,7 +15,7 @@ Metadata stamping matches the reference (FIXTURES.md §2):
 All metadata columns are renameable (``rename_metadata_columns``) and the
 scd2 active flag values remappable (``active_record_value_mapping``).
 
-SCD1/2/3 are ``build(target) -> merged`` transforms over one commit path,
+SCD1/2/3 are ``build(target, spec)`` transforms over one commit path,
 :func:`_merge_write`: it creates a missing table, or rewrites an existing
 one through ``TableStore._rewrite``, recorded as ``scd1``/``scd2``/``scd3``.
 """
@@ -118,15 +118,15 @@ def write_selective_overwrite(spark: SparkSession, store: TableStore,
 
 
 def _merge_write(spark: SparkSession, store: TableStore, table: str,
-                 build: Callable[[DataFrame | None], DataFrame],
+                 build: Callable[[DataFrame | None, list[str]], DataFrame],
                  operation: str, *,
                  partition_by: Sequence[str] | None = None,
                  rename: Mapping[str, str] | None = None,
                  prune: Callable[[list[str]], list] | None = None) -> int:
     """The one commit path of every key-merge write (SCD1/2/3).
 
-    ``build(target)`` returns the merged table, with canonical metadata
-    names, from the current target (None when the table does not exist).
+    ``build(target, spec)`` returns the merged table (canonical metadata
+    names) from the current target (None when absent) and its partition spec.
     The manifest is read once. A missing table is created by ``overwrite``
     pinned to "no table yet", so a concurrent creator makes it raise. An
     existing table is rewritten by ``TableStore._rewrite`` over that
@@ -139,7 +139,7 @@ def _merge_write(spark: SparkSession, store: TableStore, table: str,
     snapshot = store.manifest(table)
     if snapshot is None:
         return store.overwrite(
-            spark, rename_metadata_columns(build(None), rename), table,
+            spark, rename_metadata_columns(build(None, []), rename), table,
             partition_by, _expected_base=-1)
     spec = snapshot["partition_by"]
     if partition_by and list(partition_by) != spec:
@@ -150,7 +150,7 @@ def _merge_write(spark: SparkSession, store: TableStore, table: str,
     return store._rewrite(
         spark, table, snapshot, prune(spec) if prune else [],
         lambda cand: rename_metadata_columns(
-            build(rename_metadata_columns(cand, canonical)), rename),
+            build(rename_metadata_columns(cand, canonical), spec), rename),
         operation, adds_rows=True)
 
 
@@ -211,9 +211,10 @@ def write_scd1(spark: SparkSession, store: TableStore, df: DataFrame,
     """SCD1 upsert. With ``partition_prune`` on a partitioned table, only
     the files in partitions holding source rows are read, merged and
     rewritten; the rest are re-linked (see :func:`_merge_write`)."""
-    def build(target: DataFrame | None) -> DataFrame:
+    def build(target: DataFrame | None, spec: list[str]) -> DataFrame:
         return scd1_merge(df, target, key_cols, data_cols=data_cols,
-                          dedup_on_keys=dedup_on_keys, now=now, algo=algo)
+                          dedup_on_keys=dedup_on_keys, now=now, algo=algo,
+                          partition_by=spec)
 
     def prune(spec: list[str]) -> list[tuple[str, str, list]]:
         return _partition_prune(df, table, spec,
@@ -245,7 +246,7 @@ def write_scd2(spark: SparkSession, store: TableStore, df: DataFrame,
     # flags map back to 'Y'/'N' for the merge, and out again after it
     y, n = (sql_string((active_mapping or {}).get(f, f)) for f in "YN")
 
-    def build(target: DataFrame | None) -> DataFrame:
+    def build(target: DataFrame | None, spec: list[str]) -> DataFrame:
         if active_mapping and target is not None:
             target = target.withColumn(ACTIVE, F.expr(
                 f"CASE WHEN {sql_ident(ACTIVE)} = {y} THEN 'Y' ELSE 'N' END"))
@@ -256,13 +257,15 @@ def write_scd2(spark: SparkSession, store: TableStore, df: DataFrame,
             merged = scd2_apply(latest, target, key_cols,
                                 data_cols=data_cols, valid_from=valid_from,
                                 sentinel=sentinel, dedup_on_keys=False,
-                                algo=algo, history_start=history_start)
+                                algo=algo, history_start=history_start,
+                                partition_by=spec)
             merged = merged.unionByName(history)
         else:
             merged = scd2_apply(df, target, key_cols, data_cols=data_cols,
                                 valid_from=valid_from, sentinel=sentinel,
                                 dedup_on_keys=dedup_on_keys, algo=algo,
-                                history_start=history_start)
+                                history_start=history_start,
+                                partition_by=spec)
         if active_mapping:
             merged = merged.withColumn(ACTIVE, F.expr(
                 f"CASE WHEN {sql_ident(ACTIVE)} = 'Y' THEN {y} ELSE {n} END"))
@@ -315,10 +318,10 @@ def write_scd3(spark: SparkSession, store: TableStore, df: DataFrame,
                partition_by: Sequence[str] | None = None,
                rename: Mapping[str, str] | None = None,
                algo: str = "md5") -> int:
-    def build(target: DataFrame | None) -> DataFrame:
+    def build(target: DataFrame | None, spec: list[str]) -> DataFrame:
         return scd3_apply(df, target, key_cols, tracked_cols,
                           data_cols=data_cols, dedup_on_keys=dedup_on_keys,
-                          now=now, algo=algo)
+                          now=now, algo=algo, partition_by=spec)
 
     return _merge_write(spark, store, table, build, "scd3",
                         partition_by=partition_by, rename=rename)

@@ -77,12 +77,14 @@ def _bind_now(now: Column | None) -> tuple[dict[str, Column], str]:
 def _prep_source(source: DataFrame, key_cols: Sequence[str],
                  data_cols: Sequence[str] | None, dedup_on_keys: bool,
                  algo: str, target: DataFrame | None = None,
-                 tracked_cols: Sequence[str] = ()) -> DataFrame:
+                 tracked_cols: Sequence[str] = (),
+                 partition_by: Sequence[str] = ()) -> DataFrame:
     """``source`` with its key, data and (SCD3) tracked-column hashes.
     Against a target they hash each value as the commit stores it (store
     assignment to the target's types, misfit error included), so stored
     rows resent in another type are unchanged; the merged columns keep
-    the source's values."""
+    the source's values. Its ``partition_by`` columns hash as sent, as
+    stored: their read-back types come from directory names."""
     src = source
     if dedup_on_keys:
         # reference `deduplicate_onkeys` (write.py:257-259, 488-491, 769-771)
@@ -92,7 +94,7 @@ def _prep_source(source: DataFrame, key_cols: Sequence[str],
     hashed = {*key_cols, *data_cols, *tracked_cols}
     stored = {} if target is None else _assigned(
         [f for f in source.schema.fields if f.name in hashed],
-        target.schema, (), "SCD merge")
+        target.schema, partition_by, "SCD merge")
     tmp = {c: f"__stored_{c}__" for c in stored}
     if tmp:
         src = src.withColumns({tmp[c]: v for c, v in stored.items()})
@@ -115,16 +117,17 @@ def scd1_merge(source: DataFrame, target: DataFrame | None,
                data_cols: Sequence[str] | None = None,
                dedup_on_keys: bool = False,
                now: Column | None = None,
-               algo: str = "md5") -> DataFrame:
+               algo: str = "md5",
+               partition_by: Sequence[str] = ()) -> DataFrame:
     """SCD1 upsert: matched-and-changed rows take source values, unmatched
     source rows insert, everything else keeps the target row.
 
     Output schema: payload + key_hash, data_hash, ``__metadata_valid_from_ts__``.
     ``now`` defaults to ``current_timestamp()``; pass a literal for
-    deterministic tests.
+    deterministic tests. ``partition_by`` is the target's partition spec.
     """
     src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo,
-                       target)
+                       target, partition_by=partition_by)
     out_cols = [*key_cols, *data_columns(source, key_cols), KEY_HASH, DATA_HASH]
     stamps, now_sql = _bind_now(now)
 
@@ -164,7 +167,8 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
                sentinel: str = SCD2_SENTINEL,
                dedup_on_keys: bool = False,
                algo: str = "md5",
-               history_start: Column | None = None) -> DataFrame:
+               history_start: Column | None = None,
+               partition_by: Sequence[str] = ()) -> DataFrame:
     """SCD2 history build: close changed rows, insert new versions.
 
     Implements the reference's flag taxonomy (``write.py:799-844``):
@@ -182,7 +186,8 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
     ``write.py:849-863``): brand-new keys (flag I) open their first history
     row at this fixed literal instead of the source valid_from — initial
     loads then say "valid since epoch", not "valid since the load ran".
-    Version-2 rows of existing keys are unaffected.
+    Version-2 rows of existing keys are unaffected. ``partition_by`` is
+    the target's partition spec.
     """
     if valid_from is None:
         vf = F.current_timestamp()
@@ -191,7 +196,7 @@ def scd2_apply(source: DataFrame, target: DataFrame | None,
     sentinel_ts = f"CAST({sql_string(sentinel)} AS TIMESTAMP)"
     data_cols = _scd2_data_cols(source, key_cols, data_cols, valid_from)
     src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo,
-                       target)
+                       target, partition_by=partition_by)
     src = src.withColumn(VALID_FROM, vf)
     out_cols = [*key_cols, *data_columns(source, key_cols), KEY_HASH, DATA_HASH]
 
@@ -230,7 +235,8 @@ def scd3_apply(source: DataFrame, target: DataFrame | None,
                prev_prefix: str = "prev_",
                dedup_on_keys: bool = False,
                now: Column | None = None,
-               algo: str = "md5") -> DataFrame:
+               algo: str = "md5",
+               partition_by: Sequence[str] = ()) -> DataFrame:
     """SCD3: current snapshot plus ``prev_<col>`` columns for tracked columns.
 
     Mirrors the reference's two-clause MERGE (``write.py:278-293``):
@@ -238,10 +244,10 @@ def scd3_apply(source: DataFrame, target: DataFrame | None,
     target.c <> source.c THEN target.c END`` and all data columns updated;
     matched & only untracked data changed → data updated, prev columns
     kept; unmatched source → insert with NULL prev; unmatched target →
-    kept.
+    kept. ``partition_by`` is the target's partition spec.
     """
     src = _prep_source(source, key_cols, data_cols, dedup_on_keys, algo,
-                       target, tracked_cols)
+                       target, tracked_cols, partition_by)
     out_cols = [*key_cols, *data_columns(source, key_cols)]
     meta = [KEY_HASH, DATA_HASH, COLUMN_KEY_HASH]
     stamps, now_sql = _bind_now(now)

@@ -111,6 +111,20 @@ def test_read_changes_append_and_overwrite(spark, tmp_path):
     assert whole.filter("_commit_version = 0").count() == 3
 
 
+def test_read_changes_errors_name_the_table_and_range(spark, tmp_path):
+    """A missing table says so whatever range is asked for; a missing
+    version names it; an empty range names the inclusive range read."""
+    store = TableStore(str(tmp_path / "store"))
+    for args in [(1, 3), (0,), (3, 1)]:
+        with pytest.raises(FileNotFoundError, match="'nope' does not exist"):
+            read_changes(store, spark, "nope", *args)
+    store.overwrite(spark, spark.createDataFrame(BASE, SCHEMA), "t")
+    with pytest.raises(FileNotFoundError, match="'t' has no version 4"):
+        read_changes(store, spark, "t", 5, 6)
+    with pytest.raises(ValueError, match=r"no commits in \[1, 0\] for 't'"):
+        read_changes(store, spark, "t", 1)
+
+
 def test_store_cdf_incremental_cycle(spark, tmp_path):
     store = TableStore(str(tmp_path / "store"))
     state = StateStore(str(tmp_path / "state"))

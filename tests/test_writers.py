@@ -477,6 +477,42 @@ def test_scd_write_keeps_partition_spec(spark, store, write_type):
     assert store.version("t") == m["version"]
 
 
+@pytest.mark.parametrize("write_type", ["scd1", "scd2", "scd3"])
+def test_scd_resend_keeps_zero_padded_partition_rows(spark, store,
+                                                      write_type):
+    """A string partition column of zero-padded values reads back as int
+    (its type is inferred from directory names), but the commit stores the
+    source's strings: partition columns hash in the source's types, so a
+    resend of the stored rows changes none of them."""
+    write = _scd_writer(spark, store, write_type)
+    src = _df(spark, BASE).withColumn(
+        "zip", F.expr("IF(id <= 3, '01', '02')"))
+    write(src, T0, partition_by=["zip"])
+    before = store.read(spark, "t")
+    assert dict(before.dtypes)["zip"] == "int"
+    stored = _rows(before, *before.columns)
+    write(src, T1)
+    got = store.read(spark, "t")
+    assert _rows(got, *before.columns) == stored
+    if write_type == "scd2":
+        assert got.filter(F.col(ACTIVE) == "Y").count() == got.count() == 6
+
+
+def test_scd_writes_wide_value_into_int_inferred_partition(spark, store):
+    """A bigint partition column whose small values read back as int takes
+    a new value above 2^31: the commit stores partition values in the
+    source's type, so the merge does not cast them to the read-back int."""
+    write = _scd_writer(spark, store, "scd1")
+    grp = F.expr("CAST(id % 2 AS BIGINT)")
+    write(_df(spark, BASE).withColumn("grp", grp), T0, partition_by=["grp"])
+    assert dict(store.read(spark, "t").dtypes)["grp"] == "int"
+    wide = 2 ** 31 + 5
+    write(_df(spark, [(7, "g", 70)]).withColumn("grp", F.lit(wide)), T1)
+    got = store.read(spark, "t")
+    assert _rows(got.filter("id = 7"), "id", "grp") == [(7, wide)]
+    assert got.count() == 7
+
+
 @pytest.mark.parametrize("write_type", ["scd2", "scd1"])
 def test_scd_commit_records_operation_and_changes(spark, store, write_type):
     """An SCD increment is recorded as its write type with the rewrite's
