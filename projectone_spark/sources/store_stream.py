@@ -14,7 +14,7 @@ reader:
 - append commits stream their added files as inserts; data-changing
   commits (delete/update/merge/compact/zorder/restore) RAISE unless
   ``skipChangeCommits=true`` — Delta's exact contract for streaming from a
-  mutated table.
+  mutated table. A commit that keeps its parent's files changes no data.
 
 Scale: the per-batch planning cost is O(files added) and opens one manifest
 per version in the batch's range, read cost is the new files only, and
@@ -36,7 +36,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from projectone_spark.store import TableStore, _data_files
+from projectone_spark.store import TableStore, _dir_of
 
 
 def _current(root: str, table: str) -> tuple[TableStore, dict]:
@@ -50,8 +50,8 @@ def _current(root: str, table: str) -> tuple[TableStore, dict]:
 
 
 def _files_of(m: dict) -> list[str]:
-    """Every data file of a snapshot (from recorded entries, else a walk)."""
-    return [f["path"] for f in (m.get("files") or [])] or _data_files(m["dirs"])
+    """Every data file of a snapshot."""
+    return [f["path"] for f in m["files"]]
 
 
 class StoreFilePartition(InputPartition):
@@ -101,20 +101,19 @@ class StoreChangesStreamReader(DataSourceStreamReader):
         for prev, m in self._store._commits(
                 self.table, start["version"] + 1, end["version"]):
             v = m["version"]
+            seen = set(_files_of(prev)) if prev is not None else set()
             if m["operation"] != "append" and prev is not None:
-                if self.skip_change_commits:
+                # a value-set build keeps its parent's files: no change
+                if self.skip_change_commits or seen == set(_files_of(m)):
                     continue
                 raise ValueError(
                     f"version {v} of '{self.table}' is a "
                     f"'{m['operation']}' commit; streaming sources only "
                     f"support appends — set skipChangeCommits=true to "
                     f"ignore data-changing commits (Delta's contract)")
-            seen = set(_files_of(prev)) if prev is not None else set()
             for p in _files_of(m):
                 if p not in seen:
-                    base = next(d for d in m["dirs"]
-                                if p.startswith(d + os.sep))
-                    parts.append(StoreFilePartition(p, v, base))
+                    parts.append(StoreFilePartition(p, v, _dir_of(m, p)))
         return parts
 
     def read(self, partition: StoreFilePartition) -> Iterator:

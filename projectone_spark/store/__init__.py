@@ -5,8 +5,9 @@ so the store re-creates the two Delta properties the engine actually relies
 on, with plain parquet + a manifest:
 
 - **atomic snapshot swap** — writers produce a new version directory and
-  atomically repoint a JSON manifest (`os.replace`), so readers never see a
-  partial write;
+  publish its manifest as ``_manifest_v{n}.json``, an immutable file linked
+  into place put-if-absent (:mod:`store.versioned`), so readers never see a
+  partial write and of two writers racing on a version exactly one wins;
 - **append without rewrite** — a manifest version lists *data directories*;
   append adds a directory instead of rewriting old files (a miniature
   add-file log).
@@ -22,24 +23,25 @@ directory's recorded schema → normal pushdown/pruning applies.
 
 from __future__ import annotations
 
-import fcntl
 import json
 import os
 import shutil
 import time
 import uuid
 from collections.abc import Sequence
-from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
+from projectone_spark.store.versioned import publish, read_latest
+
 
 class ConcurrentWriteError(RuntimeError):
-    """Another writer committed between this write's snapshot read and its
-    commit (Delta's ConcurrentAppend/ConcurrentModification family).
-    Appends retry internally; rewrites (compact, DML, merge) surface it —
-    retrying those without re-reading would silently drop the other
-    writer's rows."""
+    """Another writer committed after the version this write pinned as its
+    base (Delta's ConcurrentAppend/ConcurrentModification family). Appends
+    and value-set builds retry internally; rewrites (compact, DML, merge)
+    surface it — retrying those without re-reading would silently drop the
+    other writer's rows."""
 
 
 class TableStore:
@@ -47,10 +49,13 @@ class TableStore:
 
     Layout::
 
-        root/<table>/_manifest.json          # current {"version", "dirs", ...}
-        root/<table>/_manifest_v{n}.json     # history (reference-style
-                                             #   versioned state, state.py:89-127)
+        root/<table>/_manifest.json          # hint: a copy of a recent version
+        root/<table>/_manifest_v{n}.json     # version n, immutable
         root/<table>/v{n}-<uuid>/            # data directories
+
+    Each ``_manifest_v{n}.json`` is linked into place once and never
+    rewritten (:mod:`store.versioned`); its ``files`` list every data file
+    of the version. The pointer may lag: readers step forward from it.
 
     :meth:`snapshot` is the one manifest lookup: it opens one file, the
     current pointer or ``_manifest_v{n}.json``, so time travel, restore,
@@ -73,15 +78,22 @@ class TableStore:
 
     def snapshot(self, name: str, version: int | None = None) -> dict:
         """The current manifest, or version ``version``'s: one file opened
-        either way. A missing table or version raises FileNotFoundError."""
-        try:
-            with open(self._manifest_path(name, version)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"table '{name}' has no version {version}"
-                if version is not None and self.exists(name) else
-                f"table '{name}' does not exist in {self.root}") from None
+        either way (while the pointer is not stale). A missing table or
+        version raises FileNotFoundError."""
+        if version is None:
+            m = read_latest(self._manifest_path(name),
+                            partial(self._manifest_path, name))
+            if m is not None:
+                return m
+        else:
+            try:
+                with open(self._manifest_path(name, version)) as f:
+                    return json.load(f)
+            except FileNotFoundError:
+                if self.exists(name):
+                    raise FileNotFoundError(
+                        f"table '{name}' has no version {version}") from None
+        raise FileNotFoundError(f"table '{name}' does not exist in {self.root}")
 
     def _retained(self, name: str, version: int) -> dict:
         """:meth:`snapshot` of ``version``, raising when vacuum removed its
@@ -107,35 +119,6 @@ class TableStore:
         m = self.manifest(name)
         return -1 if m is None else m["version"]
 
-    @contextmanager
-    def _commit_lock(self, name: str, timeout: float = 30.0):
-        """Per-table mutex for the check-and-swap window: an exclusive
-        ``flock`` on ``_commit.lock``, polled until ``timeout``. The kernel
-        drops it when the holder's process dies, so a writer killed
-        mid-commit blocks no one; each ``open`` is its own lock owner, so
-        threads of one process exclude each other too. The file itself is
-        never removed (unlinking a held lock file would let a second
-        writer lock a fresh inode)."""
-        tdir = self._table_dir(name)
-        os.makedirs(tdir, exist_ok=True)
-        lock = os.path.join(tdir, "_commit.lock")
-        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-        try:
-            deadline = time.time() + timeout
-            while True:
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                    break
-                except BlockingIOError:
-                    if time.time() > deadline:
-                        raise TimeoutError(
-                            f"commit lock {lock} held by another writer for "
-                            f"more than {timeout:g}s") from None
-                    time.sleep(0.005)
-            yield
-        finally:
-            os.close(fd)
-
     def _commit(self, name: str, dirs: list[str], partition_by: list[str],
                 operation: str, metrics: dict | None = None,
                 stats_columns: list[str] | None = None,
@@ -145,7 +128,11 @@ class TableStore:
                 set_columns: list[str] | None = None,
                 manifest_extra: dict | None = None,
                 schemas: dict[str, str] | None = None) -> int:
-        with self._commit_lock(name):
+        """Publish the next version of ``name`` and return it. The link of
+        its manifest (:func:`store.versioned.publish`) orders commits: one
+        pinned to ``expected_base`` raises ConcurrentWriteError when
+        another version landed since, a blind one re-reads and retries."""
+        while True:
             prev = self.manifest(name)
             prev_version = -1 if prev is None else prev["version"]
             if expected_base is not None and prev_version != expected_base:
@@ -181,43 +168,25 @@ class TableStore:
                                 if d in dirs and s})
             if dir_schemas:
                 manifest["schemas"] = dir_schemas
-            # model metadata (store.models.save_model) rides the SAME
-            # atomic manifest publish — never a second write — and
-            # carries forward across CONTENT-PRESERVING commits (append
-            # adds rows, compact/zorder recluster the same
-            # rows), so routine maintenance on a model table cannot
-            # silently strip its kind stamp. Content-REPLACING commits
-            # (overwrite, selective overwrite, DML mutations) drop it:
-            # the new contents were not produced by save_model, and a
-            # stale stamp would let load_model hand a downstream apply
-            # task garbage with a valid-looking kind (r9 review finding
-            # — reproduced with a plain overwrite of junk onto a model
-            # table). save_model itself re-stamps through manifest_extra
-            # on every save; restore copies the RESTORED version's stamp
-            # through manifest_extra (prev's would be the wrong
-            # contents' stamp).
-            # the index stamp (store.indexes.save_index) follows the same
-            # lifecycle one level up: appends are exactly how an index is
-            # incrementally maintained, so they must keep the stamp
+            # the model and index stamps (save_model, save_index) carry
+            # across commits that keep or add to the stamped rows (append,
+            # compact, zorder, a value-set build); a commit that replaces
+            # contents drops them, since a stale stamp would pass junk off
+            # as a model. save_model/save_index/restore re-stamp through
+            # manifest_extra.
             for stamp in ("model", "index"):
                 if (prev is not None and stamp in prev
-                        and operation in ("append", "compact", "zorder")):
+                        and operation in ("append", "compact", "zorder",
+                                          "value_sets")):
                     manifest[stamp] = prev[stamp]
             if manifest_extra:
                 manifest.update(manifest_extra)
-            self._publish(name, manifest)
-            return version
-
-    def _publish(self, name: str, m: dict) -> None:
-        """Write ``m`` as its version's ``_manifest_v{n}.json``, then swap
-        the current pointer to it atomically. The caller holds the commit
-        lock."""
-        tmp = os.path.join(self._table_dir(name),
-                           f"_manifest.tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        shutil.copy(tmp, self._manifest_path(name, m["version"]))
-        os.replace(tmp, self._manifest_path(name))
+            try:
+                publish(self._manifest_path(name),
+                        partial(self._manifest_path, name), manifest)
+                return version
+            except FileExistsError:
+                continue  # the re-read sees the winner's version
 
     def txn_version(self, name: str, app_id: str) -> int:
         """Highest transaction version committed for ``app_id`` (-1 if
@@ -227,21 +196,6 @@ class TableStore:
         if m is None:
             return -1
         return int((m.get("txns") or {}).get(app_id, -1))
-
-    def amend_manifest(self, name: str, mutator) -> dict:
-        """Apply ``mutator(manifest_dict)`` to the current manifest and
-        atomically republish it (current pointer + its ``_v{n}`` history
-        copy) — the single place manifest-rewrite atomicity lives. The
-        read, mutation and publish hold the commit lock, so a commit that
-        lands meanwhile is neither rolled back nor overwritten. Every
-        commit waits on that lock, so ``mutator`` must be cheap: it edits
-        the dict and reads no data files."""
-        self.snapshot(name)  # raises before the lock, which makes the dir
-        with self._commit_lock(name):
-            m = self.snapshot(name)
-            mutator(m)
-            self._publish(name, m)
-        return m
 
     def history(self, name: str) -> list[dict]:
         """All committed manifests, newest first (cf. DeltaTable.history).
@@ -373,6 +327,9 @@ class TableStore:
     def _stats_for(self, dirs: list[str],
                    stats_columns: list[str],
                    set_columns: list[str] | None = None) -> list[dict]:
+        """Stats entries of the files in ``dirs``, just written. A 0-row
+        file (Spark writes one beside a small write's rows) is deleted,
+        unless every file is empty, so an empty write's dir still reads."""
         # entries are recorded even with no declared stats columns:
         # path/rows/bytes cost one footer read each, and the hive partition
         # values embedded in paths make partition pruning (read_where,
@@ -380,6 +337,11 @@ class TableStore:
         from projectone_spark.store.skipping import file_stats, value_set_stats
 
         entries = file_stats(dirs, stats_columns)
+        if any(f["rows"] for f in entries):
+            for f in entries:
+                if not f["rows"]:
+                    os.remove(f["path"])
+            entries = [f for f in entries if f["rows"]]
         for f in entries:  # inline distinct-set index for =/IN pruning
             if set_columns:
                 vals = value_set_stats(f["path"], set_columns)
@@ -457,24 +419,23 @@ class TableStore:
 
     @staticmethod
     def _select_files(m: dict, predicates: Sequence[tuple[str, str, object]],
-                      ) -> tuple[dict[str, list[str]], list[tuple[str, str]]]:
-        """``(touched, skipped)`` data files of snapshot ``m``: ``touched``
-        maps each dir to the files the conjunctive ``predicates`` may match
-        (a file with no stats entry included); ``skipped`` lists the
-        ``(dir, file)`` pairs that stats or hive partition values exclude."""
+                      ) -> tuple[dict[str, list[str]], list[tuple[str, dict]]]:
+        """``(touched, skipped)`` data files of snapshot ``m``, from its
+        ``files``: ``touched`` maps each dir to the files the conjunctive
+        ``predicates`` may match; ``skipped`` lists the ``(dir, entry)``
+        pairs that stats or hive partition values exclude."""
         from projectone_spark.store.skipping import prune_files
 
         kept, _ = prune_files(m, predicates)
         candidates = {f["path"] for f in kept}
-        entries = {f["path"] for f in (m.get("files") or [])}
         touched: dict[str, list[str]] = {}
-        skipped: list[tuple[str, str]] = []
-        for d in m["dirs"]:
-            for p in _data_files([d]):
-                if p in candidates or p not in entries:
-                    touched.setdefault(d, []).append(p)
-                else:
-                    skipped.append((d, p))
+        skipped: list[tuple[str, dict]] = []
+        for f in m["files"]:
+            d = _dir_of(m, f["path"])
+            if f["path"] in candidates:
+                touched.setdefault(d, []).append(f["path"])
+            else:
+                skipped.append((d, f))
         return touched, skipped
 
     def _rewrite(self, spark: SparkSession, name: str, snapshot: dict,
@@ -486,13 +447,14 @@ class TableStore:
         """The store's one copy-on-write commit: link the untouched data,
         rewrite the rest. Files of ``snapshot`` whose stats or hive
         partition values provably exclude the conjunctive ``predicates``
-        are hard-linked into a new data directory; every other file (no
-        stats entry included) is read as one frame, ``transform(frame)``
-        is written first, the links are added beside it, and the commit
-        pins ``snapshot``: a commit that landed since raises
-        ConcurrentWriteError instead of losing its rows. The commit
-        records its exact read/write file sets (``changed_old`` /
-        ``changed_new``) for the change feed.
+        are hard-linked into a new data directory, each with its stats
+        entry carried over; every other file is read as one frame,
+        ``transform(frame)`` is written first, the links are added beside
+        it, and the commit pins ``snapshot``: a commit that landed since
+        raises ConcurrentWriteError instead of losing its rows. Only the
+        written files' footers are read. The commit records its exact
+        read/write file sets (``changed_old`` / ``changed_new``) for the
+        change feed.
 
         With no candidate file, a caller that cannot add rows (DELETE,
         UPDATE) gets None — no commit, no Spark job; one that can
@@ -512,27 +474,22 @@ class TableStore:
                             f"{operation} on '{name}'")
         nd = self._new_data_dir(name)
         written = self._write_dir(out, nd, part)
-        linked = set()
-        for d, p in linkable:
-            dst = os.path.join(nd, os.path.relpath(p, d))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            _link_file(p, dst)
-            linked.add(dst)
+        cols = m.get("stats_columns") or []
+        sets = m.get("set_columns") or []
+        fresh = self._stats_for([nd], cols, sets)
+        linked = _link_entries(linkable, lambda d: nd)
         # the new dir's read-back schema is recorded only when uniformity
         # is provable: every linked-from dir carries exactly the recorded
         # schema the fresh files read back as. Otherwise readers merge the
         # dir's footer schemas (TableStore._read_files).
         recorded = m.get("schemas") or {}
         uniform = all(recorded.get(d) == written for d, _ in linkable)
-        cols = m.get("stats_columns") or []
-        sets = m.get("set_columns") or []
-        files = self._stats_for([nd], cols, sets)
-        fresh = [f for f in files if f["path"] not in linked]
+        rows = {f["path"]: f["rows"] for f in m["files"]}
         stats = {
             **(metrics or {}),
             "files_rewritten": sum(map(len, touched.values())),
             "files_linked": len(linked),
-            "rows_scanned": sum(_footer_rows(p) for ps in touched.values()
+            "rows_scanned": sum(rows[p] for ps in touched.values()
                                 for p in ps),
             "rows_after_rewrite": sum(f["rows"] for f in fresh),
             "changed_old": touched,
@@ -544,7 +501,7 @@ class TableStore:
                  for d, ps in touched.items() for p in ps})
         return self._commit(name, [nd], part, operation, stats,
                             stats_columns=cols, set_columns=sets,
-                            files=files, txn=txn,
+                            files=[*fresh, *linked], txn=txn,
                             # index maintenance (indexes.drop_from_index)
                             # re-stamps through the SAME atomic commit
                             manifest_extra=manifest_extra,
@@ -745,7 +702,8 @@ def create_if_not_exists(store: TableStore, spark: SparkSession, table,
     ``DeltaTable.createIfNotExists`` feature, ``core/utils/delta.py:84-133``):
     an empty version-0 snapshot with the declared schema; partition spec,
     properties, comment, and column metadata recorded in the manifest.
-    Returns the created version, or None when the table already exists."""
+    Returns the created version, or None when the table already exists,
+    also when a concurrent writer created it first."""
     from projectone_spark.config.data_objects import Table
     from projectone_spark.features import parse_ddl
 
@@ -753,17 +711,16 @@ def create_if_not_exists(store: TableStore, spark: SparkSession, table,
     if store.exists(table.name):
         return None
     empty = spark.createDataFrame([], parse_ddl(table.ddl()))
-    v = store.overwrite(spark, empty, table.name,
-                        table.partition_by or None)
-
-    def _enrich(m: dict) -> None:
-        m["operation"] = "create"
-        m["properties"] = dict(table.properties)
-        m["comment"] = table.comment
-        m["columns"] = [c.model_dump() for c in table.columns]
-
-    store.amend_manifest(table.name, _enrich)
-    return v
+    try:
+        return store.overwrite(
+            spark, empty, table.name, table.partition_by or None,
+            _operation="create", _expected_base=-1,
+            manifest_extra={"properties": dict(table.properties),
+                            "comment": table.comment,
+                            "columns": [c.model_dump()
+                                        for c in table.columns]})
+    except ConcurrentWriteError:
+        return None
 
 
 def last_commit_stats(store: TableStore, name: str) -> dict:
@@ -771,17 +728,10 @@ def last_commit_stats(store: TableStore, name: str) -> dict:
     ``core/utils/delta.py:135-168``): operation, version, file count and
     byte size of the current snapshot — all from metadata, no Spark job."""
     m = store.snapshot(name)
-    n_files = 0
-    n_bytes = 0
-    for d in m["dirs"]:
-        for dirpath, _, files in os.walk(d):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    n_files += 1
-                    n_bytes += os.path.getsize(os.path.join(dirpath, fn))
     return {"operation": m["operation"], "version": m["version"],
-            "committed_at": m["committed_at"], "num_files": n_files,
-            "num_bytes": n_bytes, "partition_by": m["partition_by"]}
+            "committed_at": m["committed_at"], "num_files": len(m["files"]),
+            "num_bytes": sum(f["bytes"] for f in m["files"]),
+            "partition_by": m["partition_by"]}
 
 
 def _link_file(src: str, dst: str) -> None:
@@ -793,19 +743,25 @@ def _link_file(src: str, dst: str) -> None:
         shutil.copy2(src, dst)
 
 
-def _link_tree(src: str, dst: str) -> None:
-    """:func:`_link_file` over a directory tree."""
-    os.makedirs(dst, exist_ok=True)
-    for entry in os.listdir(src):
-        s, d = os.path.join(src, entry), os.path.join(dst, entry)
-        if os.path.isdir(s):
-            _link_tree(s, d)
-        else:
-            _link_file(s, d)
+def _link_entries(entries: list[tuple[str, dict]], into) -> list[dict]:
+    """Hard-link the file of each ``(dir, entry)`` to its path relative to
+    ``dir`` under ``into(dir)``; returns the entries with the new paths."""
+    out = []
+    for d, f in entries:
+        dst = os.path.join(into(d), os.path.relpath(f["path"], d))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        _link_file(f["path"], dst)
+        out.append({**f, "path": dst})
+    return out
+
+
+def _dir_of(m: dict, path: str) -> str:
+    """The data directory of snapshot ``m`` that holds file ``path``."""
+    return next(d for d in m["dirs"] if path.startswith(d + os.sep))
 
 
 def _data_files(dirs: Sequence[str]) -> list[str]:
-    """Every parquet data file under ``dirs``, in a stable order."""
+    """Every parquet data file under ``dirs`` (just written), in order."""
     out = []
     for d in dirs:
         for dirpath, _, files in os.walk(d):
@@ -813,12 +769,6 @@ def _data_files(dirs: Sequence[str]) -> list[str]:
                 if fn.endswith(".parquet"):
                     out.append(os.path.join(dirpath, fn))
     return out
-
-
-def _footer_rows(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
 
 
 def read_changes(store: TableStore, spark: SparkSession, name: str,
@@ -832,7 +782,8 @@ def read_changes(store: TableStore, spark: SparkSession, name: str,
     new files. Commits made by ``TableStore._rewrite`` (delete / update /
     merge, selective overwrites, SCD1/2/3) record their exact read/write
     file sets, so the delta diffs only the touched files — cost ∝ files
-    changed, not table size. A plain overwrite (and compact / zorder /
+    changed, not table size. A value-set build records that it changed
+    no file, so its delta is empty. A plain overwrite (and compact / zorder /
     restore) records no change files, so its delta is the two
     whole snapshots compared with exceptAll both ways — correct, but a
     full compare; a production deployment on Delta gets those change

@@ -18,17 +18,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from projectone_spark.store import TableStore, _data_files
+from projectone_spark.store import TableStore
 from projectone_spark.store.skipping import sql_ident
 
 
 def table_files(store: TableStore, name: str) -> list[tuple[str, int]]:
     """(path, bytes) of every data file in the current snapshot."""
-    return _snapshot_files(store.snapshot(name))
-
-
-def _snapshot_files(m: dict) -> list[tuple[str, int]]:
-    return [(p, os.path.getsize(p)) for p in _data_files(m["dirs"])]
+    return [(f["path"], f["bytes"]) for f in store.snapshot(name)["files"]]
 
 
 def _recluster(store: TableStore, spark: SparkSession, name: str, m: dict,
@@ -65,10 +61,10 @@ def compact(store: TableStore, spark: SparkSession, name: str,
     """
     small = small_file_bytes if small_file_bytes is not None else target_file_bytes // 2
     m = store.snapshot(name)
-    files = _snapshot_files(m)
-    if sum(1 for _, b in files if b < small) < 2:
+    sizes = [f["bytes"] for f in m["files"]]
+    if sum(1 for b in sizes if b < small) < 2:
         return None
-    n_out = max(1, -(-sum(b for _, b in files) // target_file_bytes))
+    n_out = max(1, -(-sum(sizes) // target_file_bytes))
     return _recluster(
         store, spark, name, m, "compact",
         lambda df, part: df.repartition(n_out, *[F.col(c) for c in part]))
@@ -143,36 +139,30 @@ def restore(store: TableStore, name: str, version: int) -> int:
 
 def clone(store: TableStore, name: str, target: str) -> int:
     """Delta ``CREATE TABLE ... CLONE``: snapshot ``name`` into a new
-    independent table. Data files are HARD-LINKED into the target table's
-    own directory (metadata-only cost on one filesystem, the same trick
-    ``TableStore._rewrite`` uses for untouched files), so vacuuming
+    independent table. The snapshot's data files are HARD-LINKED into the
+    target table's own directory (metadata-only cost on one filesystem, the
+    same trick ``TableStore._rewrite`` uses for untouched files), so vacuuming
     or dropping the source never breaks the clone — unlike a Delta
-    shallow clone, which this otherwise matches in cost."""
+    shallow clone, which this otherwise matches in cost. A concurrent
+    creator of ``target`` makes the commit raise ConcurrentWriteError."""
     m = store.snapshot(name)
     if store.exists(target):
         raise FileExistsError(f"table '{target}' already exists")
-    from projectone_spark.store import _link_tree
+    from projectone_spark.store import _dir_of, _link_entries
 
-    new_dirs: list[str] = []
-    remap: dict[str, str] = {}
-    for d in m["dirs"]:
-        nd = os.path.join(store._table_dir(target), os.path.basename(d))
-        os.makedirs(os.path.dirname(nd), exist_ok=True)
-        _link_tree(d, nd)
-        new_dirs.append(nd)
-        remap[d] = nd
-    files = []
-    for f in m.get("files") or []:
-        for old, new in remap.items():
-            if f["path"].startswith(old + os.sep):
-                files.append({**f, "path": new + f["path"][len(old):]})
-                break
+    remap = {d: os.path.join(store._table_dir(target), os.path.basename(d))
+             for d in m["dirs"]}
+    for nd in remap.values():  # a dir of an empty write holds no file
+        os.makedirs(nd, exist_ok=True)
+    files = _link_entries([(_dir_of(m, f["path"]), f) for f in m["files"]],
+                          remap.__getitem__)
     src_schemas = m.get("schemas") or {}
-    return store._commit(target, new_dirs, list(m["partition_by"]), "clone",
+    return store._commit(target, list(remap.values()),
+                         list(m["partition_by"]), "clone",
                          {"cloned_from": name, "source_version": m["version"]},
                          stats_columns=list(m.get("stats_columns") or []),
                          set_columns=list(m.get("set_columns") or []),
-                         files=files,
+                         files=files, expected_base=-1,
                          schemas={remap[d]: src_schemas[d]
                                   for d in m["dirs"] if d in src_schemas})
 

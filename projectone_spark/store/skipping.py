@@ -37,6 +37,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from projectone_spark.store import ConcurrentWriteError
+
 #: comparison operators usable for pruning; anything else is residual-only.
 #: "in" takes an iterable literal and prunes via both interval and
 #: value-set stats.
@@ -228,30 +230,36 @@ def value_set_stats(path: str, columns: Sequence[str],
 
 def add_value_set_stats(store, name: str, columns: Sequence[str],
                         cap: int = 64) -> dict:
-    """Enrich the current manifest's file entries with distinct-value sets
-    for ``columns`` — an index build, republished atomically via
-    ``amend_manifest``. Files already carrying sets for a column are
-    skipped, so running this after each commit only reads NEW files.
-
-    The files are read before the commit lock is taken, so concurrent
-    commits do not wait on the index build. Under the lock only the
-    computed sets are merged into the files still listed; a file that a
-    concurrent commit added keeps no set and is never pruned by one."""
-    m = store.snapshot(name)
+    """Commit a version of ``name`` whose file entries carry distinct-value
+    sets for ``columns`` — an index build that changes metadata only: it
+    keeps its parent's files and stamps, and records that it changed no
+    file. Files already carrying sets are skipped, so running this after
+    each commit only reads NEW files. Returns the new manifest. The commit
+    pins the version the files were listed from; when another lands
+    first, the build re-reads, reads only the files that one added, and
+    commits again."""
     found: dict[str, dict] = {}
-    for f in m.get("files") or []:
-        need = [c for c in columns if c not in (f.get("vals") or {})]
-        if need:
-            found[f["path"]] = value_set_stats(f["path"], need, cap)
-
-    def mutator(m: dict) -> None:
-        for f in m.get("files") or []:
-            if found.get(f["path"]):
-                f["vals"] = {**(f.get("vals") or {}), **found[f["path"]]}
-        m["set_columns"] = sorted(
-            set(m.get("set_columns") or []) | set(columns))
-
-    return store.amend_manifest(name, mutator)
+    while True:
+        m = store.snapshot(name)
+        files = []
+        for f in m["files"]:
+            need = [c for c in columns if c not in (f.get("vals") or {})]
+            if need and f["path"] not in found:
+                found[f["path"]] = value_set_stats(f["path"], need, cap)
+            vals = found.get(f["path"]) if need else None
+            files.append({**f, "vals": {**(f.get("vals") or {}), **vals}}
+                         if vals else f)
+        try:
+            v = store._commit(
+                name, m["dirs"], m["partition_by"], "value_sets",
+                {"changed_old": {}, "changed_new": []},
+                stats_columns=m["stats_columns"],
+                set_columns=sorted(set(m["set_columns"]) | set(columns)),
+                files=files, expected_base=m["version"],
+                schemas=m.get("schemas"))
+        except ConcurrentWriteError:
+            continue
+        return store.snapshot(name, v)
 
 
 def _eq_forms(v) -> set:
@@ -548,9 +556,10 @@ def read_where(store, spark: SparkSession, name: str,
     Equivalent to a Delta scan with data skipping: the driver consults
     commit metadata, hands Spark only the surviving files, and Catalyst's
     own row-group pushdown takes over from there. The file set is the one
-    ``TableStore._rewrite`` would read for the same predicates (a file with
-    no stats entry is always read: a stats gap never drops data), and it is
-    read with the snapshot's recorded schemas, so planning runs no job.
+    ``TableStore._rewrite`` would read for the same predicates (a file
+    whose entry lacks a predicate column's stats is always read: a stats
+    gap never drops data), and it is read with the snapshot's recorded
+    schemas, so planning runs no job.
     """
     m = store.snapshot(name)
     if not predicates:

@@ -4,8 +4,9 @@ Mirrors the reference's task state semantics (``core/state/spark/state.py``):
 folders ``sources/ sink/ state/``, each key a JSON file
 ``{"version": n, "value": ...}`` with historical ``_v{n}`` copies kept on
 every set (``state.py:89-127``) and reads returning the full envelope
-(``:158-180``). Values are plain JSON; timestamps/dates are stored as tagged
-strings so CDC state round-trips losslessly.
+(``:158-180``). Each ``_v{n}`` is published put-if-absent and never
+rewritten (:mod:`store.versioned`). Values are plain JSON; timestamps/dates
+are stored as tagged strings so CDC state round-trips losslessly.
 """
 
 from __future__ import annotations
@@ -13,8 +14,9 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import os
-import uuid
 from typing import Any
+
+from projectone_spark.store.versioned import publish, read_latest
 
 _TYPE_TAG = "__type__"
 
@@ -59,11 +61,11 @@ class StateStore:
         return os.path.join(self.root, folder, f"{key}{suffix}.json")
 
     def get(self, key: str, folder: str = "state") -> dict | None:
-        """Returns ``{"version": n, "value": ...}`` or None."""
-        try:
-            with open(self._path(folder, key)) as f:
-                envelope = json.load(f)
-        except FileNotFoundError:
+        """Returns ``{"version": n, "value": ...}`` of the newest version,
+        or None."""
+        envelope = read_latest(self._path(folder, key),
+                               lambda v: self._path(folder, key, v))
+        if envelope is None:
             return None
         envelope["value"] = _decode(envelope["value"])
         return envelope
@@ -73,19 +75,18 @@ class StateStore:
         return default if envelope is None else envelope["value"]
 
     def set(self, key: str, value: Any, folder: str = "state") -> int:
-        """Write a new version; prior versions are retained as ``_v{n}``."""
-        prev = self.get(key, folder)
-        version = 0 if prev is None else prev["version"] + 1
-        envelope = {"version": version, "value": _encode(value)}
-        path = self._path(folder, key)
-        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(envelope, f, indent=1)
-        import shutil
-
-        shutil.copy(tmp, self._path(folder, key, version))
-        os.replace(tmp, path)
-        return version
+        """Write a new version; prior versions are retained as ``_v{n}``,
+        and a concurrent set of the key takes the next one."""
+        while True:
+            prev = self.get(key, folder)
+            version = 0 if prev is None else prev["version"] + 1
+            try:
+                publish(self._path(folder, key),
+                        lambda v: self._path(folder, key, v),
+                        {"version": version, "value": _encode(value)})
+                return version
+            except FileExistsError:
+                continue
 
     def get_version(self, key: str, version: int, folder: str = "state") -> dict | None:
         try:

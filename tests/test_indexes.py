@@ -276,14 +276,12 @@ def test_open_index_pinned_rejects_pre_pinning_stamp(spark, tmp_path):
     which part contents its codes were built under — a pinned open must
     refuse rather than silently pair with the latest parts."""
     store, *_ = _built(spark, tmp_path)
-    v0 = store.version("idx")
-
-    def _strip(man):
-        man["index"].pop("part_versions", None)
-
-    store.amend_manifest("idx", _strip)
+    m = store.snapshot("idx")
+    stamp = {k: v for k, v in m["index"].items() if k != "part_versions"}
+    v1 = store.overwrite(spark, store.read(spark, "idx"), "idx",
+                         manifest_extra={"index": stamp})
     with pytest.raises(ValueError, match="predates part-version"):
-        open_index(store, spark, "idx", version=v0)
+        open_index(store, spark, "idx", version=v1)
     open_index(store, spark, "idx")  # unpinned open still fine
 
 

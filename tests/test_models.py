@@ -241,12 +241,10 @@ def test_load_model_revalidates_required_columns(spark, tmp_path):
     store = _store(tmp_path)
     w = spark.createDataFrame([("cat", 7)], "term string, weight_micro bigint")
     save_model(store, spark, "m", "token_weights", w)
-    # simulate stamp/content drift via a manifest amendment onto junk
+    # simulate stamp/content drift: junk committed under a model stamp
     junk = spark.createDataFrame([(1,)], "a bigint")
-    store.overwrite(spark, junk, "m")
-    store.amend_manifest(
-        "m", lambda man: man.update(
-            {"model": {"kind": "token_weights", "params": {}}}) or man)
+    store.overwrite(spark, junk, "m", manifest_extra={
+        "model": {"kind": "token_weights", "params": {}}})
     with pytest.raises(ValueError, match="no longer carries required"):
         load_model(store, spark, "m", kind="token_weights")
 

@@ -3,7 +3,6 @@ conflict detection for snapshot-derived rewrites, and append retries that
 make concurrent appends all land."""
 
 import threading
-import time
 
 import pyspark.sql.functions as F
 import pytest
@@ -212,50 +211,11 @@ def test_scd_write_raises_on_concurrent_append(spark, store, monkeypatch,
     assert store.read(spark, "dim").filter("id = 99").count() == 1
 
 
-def test_amend_does_not_roll_back_concurrent_append(spark, store, monkeypatch):
-    """A slow ``amend_manifest`` mutator runs while an append commits: the
-    amend holds the commit lock, so the append lands after it instead of
-    being overwritten by the amend's stale copy of the manifest."""
-    df = _orders(spark).limit(4)
-    store.overwrite(spark, df, "orders")
-    amending, committing = threading.Event(), threading.Event()
-    real_commit = store._commit
-
-    def commit(*args, **kwargs):
-        committing.set()
-        return real_commit(*args, **kwargs)
-
-    monkeypatch.setattr(store, "_commit", commit)
-
-    def slow_mutator(m):
-        amending.set()
-        assert committing.wait(60)
-        time.sleep(0.5)  # the append's commit would land here, unlocked
-        m["amended"] = True
-
-    errors = []
-
-    def amend_orders():
-        try:
-            store.amend_manifest("orders", slow_mutator)
-        except Exception as e:  # pragma: no cover
-            errors.append(e)
-
-    amend = threading.Thread(target=amend_orders)
-    amend.start()
-    assert amending.wait(60)  # the amend has read version 0
-    store.append(spark, df, "orders")
-    amend.join(60)
-    assert not amend.is_alive() and not errors
-    assert store.version("orders") == 1
-    assert store.read(spark, "orders").count() == 8
-    assert [m.get("amended") for m in store.history("orders")] == [None, True]
-
-
-def test_index_build_reads_files_outside_commit_lock(spark, store, monkeypatch):
-    """``add_value_set_stats`` reads data files before it takes the commit
-    lock: an append that commits during the build lands at once, and the
-    sets merge into the files they were read from."""
+def test_index_build_lets_a_concurrent_append_land(spark, store, monkeypatch):
+    """``add_value_set_stats`` reads data files before it commits: an
+    append that commits during the build lands at once, and the build,
+    pinned to the version it listed, re-reads and commits after it, with
+    sets for the appended files too."""
     from projectone_spark.store import skipping
 
     df = _orders(spark).limit(4)
@@ -264,53 +224,17 @@ def test_index_build_reads_files_outside_commit_lock(spark, store, monkeypatch):
     appended = []
 
     def reading(*args, **kwargs):
-        if not appended:  # with the lock held this append would time out
+        if not appended:
             appended.append(store.append(spark, df, "orders"))
         return real(*args, **kwargs)
 
     monkeypatch.setattr(skipping, "value_set_stats", reading)
     m = skipping.add_value_set_stats(store, "orders", ["o_orderstatus"])
-    assert appended == [1] and m["version"] == 1
+    assert appended == [1] and m["version"] == 2
+    assert m["operation"] == "value_sets"
     assert m["set_columns"] == ["o_orderstatus"]
-    old, new = store.history("orders")[1], store.history("orders")[0]
-    old_paths = {f["path"] for f in old["files"]}
-    assert all(("vals" in f) == (f["path"] in old_paths) for f in new["files"])
+    appended_files = store.snapshot("orders", 1)["files"]
+    assert [f["path"] for f in m["files"]] == [f["path"] for f in appended_files]
+    assert all("vals" in f for f in m["files"])
+    assert [h["version"] for h in store.history("orders")] == [2, 1, 0]
     assert store.read(spark, "orders").count() == 8
-
-
-def test_commit_lock_dies_with_its_holder(tmp_path):
-    """A writer SIGKILLed while it holds the commit lock blocks no one: the
-    kernel drops the lock with the process, and the next commit takes it
-    at once (no stale lock file to wait out or delete by hand)."""
-    import os
-    import signal
-    import subprocess
-    import sys
-
-    root = str(tmp_path / "store")
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    holder = subprocess.Popen(
-        [sys.executable, "-c",
-         "import sys, time\n"
-         "from projectone_spark.store import TableStore\n"
-         "with TableStore(sys.argv[1])._commit_lock('t'):\n"
-         "    print('locked', flush=True)\n"
-         "    time.sleep(600)\n", root],
-        cwd=repo, stdout=subprocess.PIPE, text=True,
-        env={**os.environ, "PYTHONPATH": repo})
-    try:
-        assert holder.stdout.readline().strip() == "locked"
-        store = TableStore(root)
-        with pytest.raises(TimeoutError):
-            with store._commit_lock("t", timeout=0.05):
-                pass
-        holder.send_signal(signal.SIGKILL)
-        holder.wait(30)
-        start = time.monotonic()
-        with store._commit_lock("t", timeout=2.0):
-            pass
-        assert time.monotonic() - start < 1.0
-    finally:
-        holder.kill()
-        holder.wait(30)
-        holder.stdout.close()
