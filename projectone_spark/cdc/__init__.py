@@ -22,17 +22,24 @@ Where the bounds come from: :func:`resolve_cdc` takes them either from a
 Spark aggregate over the whole source (one job per run, scanning every
 landed file, as in the reference) or, when the caller passes
 ``file_bounds``, from per-file min/max values with no Spark job at all.
-``SparkTask`` passes footer bounds for a local directory of parquet files
-(``store.skipping.footer_bounds``) and then reads only the files whose max
-is above the watermark, since landed files never change. It falls back to
-the aggregate for a backfill, a user ``source_schema``, a non-``file:`` or
+For a local directory of parquet files read with no options, ``SparkTask``
+plans the run without Spark: it lists the files in Python with Spark's
+hidden-file rule, takes each file's bounds and schema key from its footer
+(``store.skipping.footer_bounds``), and takes the Spark schema from a
+record in its ``StateStore`` kept per schema key, so no schema-inference
+job runs while the key is unchanged. It then builds one frame, with that
+schema, over the files :func:`new_file_bounds` picks (landed files never
+change). A subdirectory, a parquet summary file or a read option leaves
+the listing and the inference to Spark, and the bounds then come from the
+footers of the files Spark listed. Either way it falls back to the
+aggregate for a backfill, a user ``source_schema``, a non-``file:`` or
 hive-partitioned source, an attribute that is not int, long, date,
 timestamp or timestamp_ntz, NANOS or INT96 timestamps, any row group
 with rows but no min/max (an all-null chunk), and a saved watermark that
 is not of the bounds' Python type (a backfill's string range end, or a
 tz-aware datetime), which only Spark compares as the aggregate does.
-Either way the boundary rules above live only in :func:`resolve_cdc`,
-and the data read itself stays lazy.
+The boundary rules above live only in :func:`resolve_cdc` and
+:func:`new_file_bounds`, and the data read itself stays lazy.
 """
 
 from __future__ import annotations
@@ -72,12 +79,21 @@ def NO_DATA() -> Column:
     return F.expr("1=2")
 
 
+def new_file_bounds(file_bounds: Sequence[tuple[str, Any, Any]],
+                    prev: CdcState | None) -> list[tuple[str, Any, Any]]:
+    """The ``(path, min, max)`` entries whose files can hold rows past the
+    watermark of ``prev``: every entry on a first run."""
+    if prev is None or prev.next_value is None:
+        return list(file_bounds)
+    return [b for b in file_bounds if b[2] > prev.next_value]
+
+
 def resolve_cdc(df: DataFrame, attribute: str,
                 prev: CdcState | None = None,
                 backfill: tuple[Any, Any] | None = None,
                 batch_id: str | None = None, *,
                 file_bounds: Sequence[tuple[str, Any, Any]] | None = None,
-                ) -> tuple[Column, CdcState] | tuple[Column, CdcState, list[str]]:
+                ) -> tuple[Column, CdcState]:
     """Compute the incremental filter predicate and the post-run state.
 
     Returns ``(predicate, new_state)``. Apply the predicate with
@@ -85,12 +101,12 @@ def resolve_cdc(df: DataFrame, attribute: str,
     succeeds (reference persists post-success, ``task.py:519-544``).
 
     ``file_bounds`` lists ``(path, min, max)`` of ``attribute`` for every
-    non-empty file behind ``df``, exact as Spark would ``collect()`` them
+    non-empty file of the source, exact as Spark would ``collect()`` them
     and of the same Python type as ``prev.next_value``. With it no Spark
-    job runs, and the return gains a third item: the paths that can hold
-    rows matching the predicate (empty when nothing is new). Without it,
-    the bounds come from an aggregate over ``df``. A backfill reads every
-    file and takes no ``file_bounds``.
+    job runs, and ``df`` need only read the files of
+    :func:`new_file_bounds`. Without it, the bounds come from an
+    aggregate over ``df``. A backfill reads every file and takes no
+    ``file_bounds``.
     """
     attr = F.col(attribute)
 
@@ -103,10 +119,8 @@ def resolve_cdc(df: DataFrame, attribute: str,
 
     first = prev is None or prev.next_value is None
     start = None if first else prev.next_value
-    files = None
     if file_bounds is not None:
-        chosen = [b for b in file_bounds if first or b[2] > start]
-        files = [b[0] for b in chosen]
+        chosen = new_file_bounds(file_bounds, prev)
         lo = min((b[1] for b in chosen), default=None) if first else start
         hi = max((b[2] for b in chosen), default=None)
     elif first:
@@ -133,7 +147,7 @@ def resolve_cdc(df: DataFrame, attribute: str,
             pred = attr == F.lit(start)
         else:
             pred = (attr > F.lit(start)) & (attr <= F.lit(hi))
-    return (pred, state) if file_bounds is None else (pred, state, files)
+    return pred, state
 
 
 def load_cdc_state(state_store: StateStore, input_name: str) -> CdcState | None:

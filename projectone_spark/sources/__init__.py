@@ -21,15 +21,20 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from projectone_spark.features import parse_ddl
 
 
 def read_batch(spark: SparkSession, source: str, *,
-               path: str | None = None, table: str | None = None,
-               schema: str | None = None,
+               path: str | list[str] | None = None, table: str | None = None,
+               schema: str | StructType | None = None,
                options: dict[str, Any] | None = None) -> DataFrame:
-    """Generic batch read (reference ``core/sources/__init__.py:568-606``)."""
+    """Generic batch read (reference ``core/sources/__init__.py:568-606``).
+
+    ``path`` may list files to read in place of one path. ``schema`` is a
+    DDL string, or a ``StructType`` already inferred (a file source then
+    runs no schema-inference job)."""
     if source == "store":
         from projectone_spark.store import TableStore
 
@@ -40,7 +45,8 @@ def read_batch(spark: SparkSession, source: str, *,
     if options:
         reader = reader.options(**{k: str(v) for k, v in options.items()})
     if schema:
-        reader = reader.schema(parse_ddl(schema))
+        reader = reader.schema(parse_ddl(schema) if isinstance(schema, str)
+                               else schema)
     if table is not None:
         return reader.table(table)
     return reader.load(path)

@@ -23,6 +23,7 @@ directory's recorded schema → normal pushdown/pruning applies.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -341,6 +342,9 @@ class TableStore:
             for f in entries:
                 if not f["rows"]:
                     os.remove(f["path"])
+                    head, tail = os.path.split(f["path"])
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(head, f".{tail}.crc"))
             entries = [f for f in entries if f["rows"]]
         for f in entries:  # inline distinct-set index for =/IN pruning
             if set_columns:

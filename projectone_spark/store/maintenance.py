@@ -87,8 +87,9 @@ def vacuum(store: TableStore, name: str, keep_versions: int = 2,
     exactly like Delta. A directory no manifest names at all (written but
     not yet committed, or left by a crashed writer) is deleted only once
     it is older than ``UNCOMMITTED_MIN_AGE_S``, so a concurrent writer
-    never commits a directory vacuum removed. Returns the removed
-    directories."""
+    never commits a directory vacuum removed. A publish's tmp file
+    (``_manifest.json.tmp.<hex>``, left by a writer that died before its
+    link) goes once it is that old too. Returns the removed paths."""
     import time as _time
 
     history = store.history(name)
@@ -105,11 +106,12 @@ def vacuum(store: TableStore, name: str, keep_versions: int = 2,
     tdir = store._table_dir(name)
     for entry in sorted(os.listdir(tdir)):
         p = os.path.join(tdir, entry)
-        if not os.path.isdir(p) or p in keep:
+        is_dir = os.path.isdir(p)
+        if not (is_dir or ".tmp." in entry) or p in keep:
             continue
         if p not in committed and now - os.path.getmtime(p) < UNCOMMITTED_MIN_AGE_S:
             continue
-        shutil.rmtree(p)
+        (shutil.rmtree if is_dir else os.remove)(p)
         dropped.append(p)
     return dropped
 

@@ -149,19 +149,23 @@ def _raw_scale(col, data_type: T.DataType) -> tuple[int, float] | None:
     return None if scale is None else (scale, _FLOOR_MICROS)
 
 
-def footer_bounds(paths: Sequence[str], column: str,
-                  data_type: T.DataType) -> list[tuple[str, object, object]] | None:
+def footer_bounds(paths: Sequence[str], column: str, data_type: T.DataType,
+                  footers: Sequence | None = None,
+                  ) -> list[tuple[str, object, object]] | None:
     """Exact per-file ``(path, min, max)`` of one int/long/date/timestamp
     column, from parquet footers only, as the Python values Spark's
     ``collect()`` of ``min``/``max`` returns for ``data_type``. Files with
     no rows are left out. Returns None when any file cannot give exact
     bounds: the column is missing or of another physical type, or a row
-    group holding rows has no min/max (an all-null chunk)."""
+    group holding rows has no min/max (an all-null chunk). ``footers``,
+    the files' pyarrow ``FileMetaData`` in ``paths`` order, saves opening
+    them again."""
     import pyarrow.parquet as pq
 
+    if footers is None:
+        footers = [pq.read_metadata(p) for p in paths]
     out: list[tuple[str, object, object]] = []
-    for path in paths:
-        md = pq.ParquetFile(path).metadata
+    for path, md in zip(paths, footers):
         if md.num_rows == 0:
             continue
         ci = next((i for i in range(md.num_columns)

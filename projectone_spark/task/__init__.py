@@ -14,6 +14,8 @@ micro-batch via foreachBatch (see :mod:`projectone_spark.streaming`).
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import time
 import traceback
@@ -24,9 +26,10 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from projectone_spark.cdc import (CdcState, load_cdc_state, resolve_cdc,
-                                  save_cdc_state)
+from projectone_spark.cdc import (CdcState, load_cdc_state, new_file_bounds,
+                                  resolve_cdc, save_cdc_state)
 from projectone_spark.config import SparkInput, SparkOutput, TaskConfig
 from projectone_spark.features import (
     DictSecretManager,
@@ -181,34 +184,11 @@ class SparkTask:
         path = interpolate(inp.path, self._variables(), secrets) if inp.path else None
         row_filter = (interpolate(inp.read_options.filter, self._variables(), secrets)
                       if inp.read_options.filter else None)
-        df = read_batch(self.spark, inp.source, path=path, table=inp.table,
-                        schema=inp.read_options.source_schema, options=opts)
-        # CDC pre-step (reference input.py:92-162)
-        if inp.cdc is not None:
-            backfill = None
-            rp = self.config.refresh_policy
-            if rp.type == "backfill":
-                backfill = (inp.cdc.backfill_start or rp.range_start,
-                            inp.cdc.backfill_end or rp.range_end)
-            prev = load_cdc_state(self.state, inp.name)
-            bounds = None
-            if backfill is None and not inp.read_options.source_schema:
-                bounds = _footer_file_bounds(df, inp.source, path, opts,
-                                             inp.cdc.attribute)
-            if bounds and not _fits_watermark(prev, bounds[0][2]):
-                bounds = None
-            pred, new_state, *rest = resolve_cdc(
-                df, inp.cdc.attribute, prev, backfill, self.batch_id,
-                file_bounds=bounds)
-            if rest and rest[0] and len(rest[0]) < len(bounds):
-                # landed files are immutable: re-read only those that can
-                # hold new rows, with the schema already inferred
-                df = (self.spark.read.format(inp.source)
-                      .options(**{k: str(v) for k, v in opts.items()})
-                      .schema(df.schema).load(rest[0]))
-            df = df.filter(pred)
-            self._pending_cdc = getattr(self, "_pending_cdc", {})
-            self._pending_cdc[inp.name] = new_state
+        if inp.cdc is None:
+            df = read_batch(self.spark, inp.source, path=path, table=inp.table,
+                            schema=inp.read_options.source_schema, options=opts)
+        else:
+            df = self._read_cdc(inp, path, opts)
         if row_filter:
             df = df.filter(row_filter)
         # post-steps: configured features in order (input.py:164-287);
@@ -224,6 +204,54 @@ class SparkTask:
             else:
                 feats.append(d)
         return apply_input_features(df, feats)
+
+    def _read_cdc(self, inp: SparkInput, path: str | None,
+                  opts: dict[str, Any]) -> DataFrame:
+        """The CDC pre-step (reference input.py:92-162): the input read
+        through its incremental predicate. The state to save once the run
+        succeeds goes to ``_pending_cdc``.
+
+        A local directory of parquet files, read with no options, is
+        planned by ``_plan_from_footers`` with no Spark job and no JVM
+        listing. Any other input is read as given, and a local parquet
+        directory then takes its footer bounds from the files Spark
+        listed. With bounds, the one frame handed to ``resolve_cdc`` reads
+        only the files that can hold new rows (landed files never
+        change)."""
+        rp = self.config.refresh_policy
+        backfill = None
+        if rp.type == "backfill":
+            backfill = (inp.cdc.backfill_start or rp.range_start,
+                        inp.cdc.backfill_end or rp.range_end)
+        attr = inp.cdc.attribute
+        prev = load_cdc_state(self.state, inp.name)
+        incremental = backfill is None and not inp.read_options.source_schema
+        plan = None
+        if incremental and inp.source == "parquet" and not opts:
+            plan = _plan_from_footers(self.spark, self.state, inp.name, path,
+                                      attr)
+        if plan is None:
+            df = read_batch(self.spark, inp.source, path=path, table=inp.table,
+                            schema=inp.read_options.source_schema, options=opts)
+            schema = None
+            bounds = (_footer_file_bounds(df, inp.source, path, opts, attr)
+                      if incremental else None)
+        else:
+            df = None
+            schema, bounds = plan
+        if bounds and not _fits_watermark(prev, bounds[0][2]):
+            bounds = None
+        new = None if bounds is None else new_file_bounds(bounds, prev)
+        if new and len(new) < len(bounds):
+            df = read_batch(self.spark, inp.source, path=[b[0] for b in new],
+                            schema=schema or df.schema, options=opts)
+        elif df is None:
+            df = read_batch(self.spark, inp.source, path=path, schema=schema)
+        pred, new_state = resolve_cdc(df, attr, prev, backfill, self.batch_id,
+                                      file_bounds=bounds)
+        self._pending_cdc = getattr(self, "_pending_cdc", {})
+        self._pending_cdc[inp.name] = new_state
+        return df.filter(pred)
 
     def _run_cleanup(self) -> None:
         """Post-success source-file ops (reference ``file_source.py:622-672``:
@@ -461,6 +489,101 @@ def _local_path(uri: str) -> str | None:
                                             if parsed.scheme else uri))
 
 
+def _hidden(name: str) -> bool:
+    """Spark's rule for a file or directory name it reads no data from:
+    one that starts with ``.``, or with ``_`` and holds no ``=``, or ends
+    in ``._COPYING_``."""
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def _listed_files(path: str | None) -> list[str] | None:
+    """The data files Spark lists in a local directory, listed in Python
+    with Spark's ``_hidden`` rule. None, so that Spark lists, for a
+    non-local path, a path that is not a directory, a subdirectory or a
+    parquet summary file (``_metadata``, ``_common_metadata``), whose
+    footer Spark would infer the schema from."""
+    root = _local_path(path) if path else None
+    if root is None or not os.path.isdir(root):
+        return None
+    files = []
+    with os.scandir(root) as entries:
+        for e in entries:
+            name = e.name
+            if name.startswith(("_metadata", "_common_metadata")):
+                return None
+            if _hidden(name):
+                continue
+            if e.is_dir():
+                return None
+            files.append(e.path)
+    return sorted(files)
+
+
+#: Session confs under which Spark turns a parquet footer into a schema.
+_INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _recorded_schema(spark: SparkSession, state: StateStore, name: str,
+                     path: str, footers: list) -> StructType:
+    """What ``spark.read.parquet(path).schema`` returns for files with
+    these footers. Spark infers it from a footer's parquet schema, or from
+    the Spark schema a Spark writer embeds in it, read under the session's
+    parquet confs. Those make the key of the input's record in ``state``
+    (``{name}_parquet_schema``). A record of another key, or none, is a
+    miss: Spark infers the schema once (one job), and the record is
+    rewritten."""
+    keys = sorted({str(md.schema).split("\n", 1)[1]
+                   + (md.metadata or {}).get(_ROW_METADATA, b"").decode()
+                   for md in footers})
+    confs = [spark.conf.get(c, None) for c in _INFERENCE_CONFS]
+    key = hashlib.sha256(json.dumps([keys, confs]).encode()).hexdigest()
+    record = state.get_value(f"{name}_parquet_schema", folder="sources")
+    if record is not None and record["key"] == key:
+        return StructType.fromJson(record["schema"])
+    schema = read_batch(spark, "parquet", path=path).schema
+    state.set(f"{name}_parquet_schema",
+              {"key": key, "schema": schema.jsonValue()}, folder="sources")
+    return schema
+
+
+def _plan_from_footers(spark: SparkSession, state: StateStore, name: str,
+                       path: str | None, attribute: str):
+    """``(schema, bounds)`` of a local directory of parquet files, planned
+    without Spark: the files are listed in Python, one footer read per
+    file gives its ``(path, min, max)`` of ``attribute`` and its schema
+    key, and the schema is the recorded one. ``bounds`` is None when a
+    file has no exact bounds. None, so that Spark lists and infers, when
+    ``_listed_files`` declines or a footer does not read."""
+    import pyarrow.parquet as pq
+
+    from projectone_spark.store.skipping import footer_bounds
+
+    files = _listed_files(path)
+    if not files:
+        return None
+    try:
+        footers = [pq.read_metadata(f) for f in files]
+    except (OSError, ValueError):
+        return None
+    schema = _recorded_schema(spark, state, name, path, footers)
+    if attribute not in schema.names:
+        return schema, None
+    return schema, footer_bounds(files, attribute, schema[attribute].dataType,
+                                 footers)
+
+
 def _footer_file_bounds(df: DataFrame, source: str, path: str | None,
                         options: dict[str, Any], attribute: str):
     """Per-file ``(path, min, max)`` of ``attribute`` from the parquet
@@ -477,7 +600,8 @@ def _footer_file_bounds(df: DataFrame, source: str, path: str | None,
     root = _local_path(path)
     if root is None or not os.path.isdir(root):
         return None
-    files = df.inputFiles()
+    # inputFiles() also names the summary files Spark reads no rows from
+    files = [f for f in df.inputFiles() if not _hidden(f.rsplit("/", 1)[-1])]
     local = [_local_path(f) for f in files]
     if any(p is None or os.path.dirname(p) != root for p in local):
         return None

@@ -11,6 +11,7 @@ assert that the footer path stepped aside.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
 import tempfile
@@ -347,3 +348,172 @@ def test_footer_path_matches_incremental_read(spark, used_footers, increments):
             _same_state(load_cdc_state(task.state, "src"),
                         load_cdc_state(lanes.ref_state, "src"))
             assert used_footers == [True]
+
+
+# -- the recorded schema -----------------------------------------------------
+
+@contextlib.contextmanager
+def _conf(spark, key: str | None, value: str | None):
+    """Sets one session conf for the block, then restores it."""
+    if key is None:
+        yield
+        return
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def _arrow_file(src: str, i: int, **cols) -> None:
+    _write(f"{src}/p{i}.parquet", {"offset": [10 * i + 1, 10 * i + 2], **cols})
+
+
+def _ntz_file(spark, src: str, i: int) -> None:
+    _arrow_file(src, i, ts=pa.array([dt.datetime(2024, 1, 1 + i)] * 2,
+                                    pa.timestamp("us")))
+
+
+def _binary_file(spark, src: str, i: int) -> None:
+    _arrow_file(src, i, b=pa.array([b"x", b"yz"], pa.binary()))
+
+
+def _spark_file(spark, src: str, i: int) -> None:
+    spark.sql(f"SELECT CAST({i} + 0.125 AS DECIMAL(12, 3)) AS d, "
+              f"CAST('v{i}' AS VARCHAR(8)) AS v, CAST({10 * i + 1} AS BIGINT) "
+              f"AS offset").write.mode("append").parquet(src)
+
+
+@pytest.mark.parametrize("write, conf, values", [
+    (_ntz_file, "spark.sql.parquet.inferTimestampNTZ.enabled",
+     ["true", "true", "false", "false", "true"]),
+    (_binary_file, "spark.sql.parquet.binaryAsString",
+     ["false", "true", "true", "false"]),
+    (_spark_file, None, [None, None, None]),
+], ids=["timestamp_ntz", "binary_as_string", "spark_row_metadata"])
+def test_recorded_schema_equals_inference(spark, tmp_path, used_footers,
+                                          write, conf, values):
+    """Run after run, with a file landed before each and the conf set as
+    given, the frame a run reads has the schema ``spark.read.parquet``
+    infers for the directory. The record is rewritten only when the conf
+    or the files' footer schemas change it."""
+    src = str(tmp_path / "src")
+    lanes = Lanes(spark, str(tmp_path), src, "offset")
+    task = lanes.task()
+    seen = []
+    for i, value in enumerate(values):
+        write(spark, src, i)
+        with _conf(spark, conf, value):
+            df = task._read_input(task.config.inputs[0])
+            save_cdc_state(task.state, "src", task._pending_cdc["src"])
+            want = spark.read.parquet(src).schema
+            assert df.schema == want
+            assert _rows(df) == lanes.reference()
+        seen.append(want)
+    changes = sum(a != b for a, b in zip(seen, seen[1:]))
+    record = task.state.get("src_parquet_schema", folder="sources")
+    assert record["version"] == changes
+    assert used_footers == [True] * len(values)
+
+
+def _extra_entry(src: str, name: str) -> None:
+    if name.endswith("/"):
+        _write(f"{src}/{name}p1.parquet", {"id": [7], "offset": [70]})
+    elif name in ("_metadata", "_common_metadata", "_k=1.parquet"):
+        _write(f"{src}/{name}", {"id": [8], "offset": [80]})
+    else:
+        with open(f"{src}/{name}", "wb") as f:
+            f.write(b"not parquet")
+
+
+@pytest.mark.parametrize("extra", [
+    "_SUCCESS", ".p9.parquet.crc", "p9.parquet._COPYING_", "_k=1.parquet",
+    "_temporary/", ".hidden/", "_metadata", "_common_metadata", "sub/"])
+def test_listing_matches_spark_or_falls_back(spark, tmp_path, extra):
+    """The Python listing takes the files ``spark.read.load(dir)`` reads,
+    or declines so that Spark lists the directory; either way the run
+    reads the rows the aggregate path reads."""
+    src = str(tmp_path / "src")
+    _write(f"{src}/p0.parquet", {"id": [1, 2], "offset": [10, 20]})
+    _extra_entry(src, extra)
+    listed = task_mod._listed_files(src)
+    if extra in ("_metadata", "_common_metadata", "sub/"):
+        assert listed is None
+    else:
+        spark_files = spark.read.load(src).inputFiles()
+        assert listed == sorted(task_mod._local_path(f) for f in spark_files)
+    Lanes(spark, str(tmp_path), src, "offset").step()
+
+
+# -- planning jobs -------------------------------------------------------------
+
+def _last_job(spark) -> int:
+    """Id of a job run now: every later job has a larger id."""
+    sc = spark.sparkContext
+    sc.setJobGroup("cdc-footers-mark", "job id mark")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return max(sc.statusTracker().getJobIdsForGroup("cdc-footers-mark"))
+
+
+def _jobs_since(spark, mark: int) -> list[int]:
+    """Ids of every job started after job ``mark``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    jobs, jid = [], mark + 1
+    while tracker.getJobInfo(jid) is not None:
+        jobs.append(jid)
+        jid += 1
+    return jobs
+
+
+def test_warm_run_starts_no_job_outside_its_output(spark, tmp_path):
+    """A parquet CDC → SCD2 run plans its read from footers and the
+    recorded schema: once the schema is recorded, every Spark job of a run
+    belongs to its output's ``output_{name}_{batch_id}`` group. The first
+    run over a schema key infers it with one job and records it."""
+    src = str(tmp_path / "src")
+    cols = {"k": pa.array([1, 2, 3], pa.int64()), "v": ["a", "b", "c"]}
+
+    def land(i: int) -> None:
+        ts = dt.datetime(2024, 1, 1 + i, tzinfo=dt.timezone.utc)
+        _write(f"{src}/p{i}.parquet", {**cols, "v": [f"{x}{i}" for x in cols["v"]],
+                                       "ts": pa.array([ts] * 3, pa.timestamp("us", tz="UTC"))})
+
+    def run() -> tuple[list[int], list[int]]:
+        task = (SparkTask.builder.setName("cdc_jobs")
+                .setInput(name="src", path=src, source="parquet",
+                          cdc={"attribute": "ts"})
+                .setOutput(name="hist", table="hist", write_type="scd2",
+                           write_options={"key_attributes": "k",
+                                          "history_tracking_col": "ts"})
+                .setStateLocation(str(tmp_path / "state"))
+                .setStoreLocation(str(tmp_path / "store"))
+                .setSession(spark)
+                .create())
+        mark = _last_job(spark)
+        assert all(r.status == "success" for r in task.execute())
+        jobs = _jobs_since(spark, mark)
+        own = set(spark.sparkContext.statusTracker().getJobIdsForGroup(
+            f"output_hist_{task.batch_id}"))
+        return [j for j in jobs if j not in own], [j for j in jobs if j in own]
+
+    land(0)
+    outside, own = run()
+    assert len(outside) == 1 and own  # the schema inference
+    state = StateStore(str(tmp_path / "state"))
+    assert state.get("src_parquet_schema", folder="sources")["version"] == 0
+    for i in (1, 2):
+        land(i)
+        outside, own = run()
+        assert outside == [] and own
+    assert state.get("src_parquet_schema", folder="sources")["version"] == 0
+    hist = TableStore(str(tmp_path / "store")).read(spark, "hist")
+    assert hist.count() == 9 and hist.filter("v LIKE '%2'").count() == 3

@@ -392,3 +392,40 @@ def test_small_append_commits_no_empty_file(spark, tmp_path):
     store.append(spark, one, "t")
     parts = reader.partitions(start, reader.latestOffset())
     assert len(parts) == 2
+
+
+def test_vacuum_removes_stale_publish_tmp(spark, tmp_path, monkeypatch):
+    """A commit whose link fails leaves its tmp file beside the manifests.
+    ``vacuum`` keeps it while it is young (a live writer may be about to
+    link it) and removes it once it is older than UNCOMMITTED_MIN_AGE_S."""
+    from projectone_spark.store.maintenance import UNCOMMITTED_MIN_AGE_S
+
+    store = TableStore(str(tmp_path / "store"))
+    store.overwrite(spark, spark.createDataFrame([(1,)], "id long"), "t")
+    with monkeypatch.context() as mp:
+        _raise_at("tmp", mp)
+        with pytest.raises(_Died):
+            restore(store, "t", 0)
+    tdir = store._table_dir("t")
+    [tmp] = [os.path.join(tdir, n) for n in os.listdir(tdir) if ".tmp." in n]
+    assert vacuum(store, "t") == []
+    assert os.path.exists(tmp)
+    aged = time.time() - UNCOMMITTED_MIN_AGE_S - 60
+    os.utime(tmp, (aged, aged))
+    assert vacuum(store, "t") == [tmp]
+    assert not os.path.exists(tmp)
+    assert store.read(spark, "t").count() == 1
+
+
+def test_small_append_leaves_no_orphan_checksum(spark, tmp_path):
+    """The 0-row file a small write drops takes Hadoop's ``.crc`` beside it
+    along: every checksum left in the data dir belongs to a data file."""
+    store = TableStore(str(tmp_path / "store"))
+    one = spark.createDataFrame([(1,)], "id long")
+    assert one.rdd.getNumPartitions() > 1
+    store.append(spark, one, "t")
+    [d] = store.snapshot("t")["dirs"]
+    names = set(os.listdir(d))
+    crcs = {n for n in names if n.endswith(".crc")}
+    assert crcs, "the writer left no checksums to check"
+    assert {n[1:-len(".crc")] for n in crcs} <= names
