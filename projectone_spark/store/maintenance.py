@@ -88,8 +88,8 @@ def vacuum(store: TableStore, name: str, keep_versions: int = 2,
     not yet committed, or left by a crashed writer) is deleted only once
     it is older than ``UNCOMMITTED_MIN_AGE_S``, so a concurrent writer
     never commits a directory vacuum removed. A publish's tmp file
-    (``_manifest.json.tmp.<hex>``, left by a writer that died before its
-    link) goes once it is that old too. Returns the removed paths."""
+    (``<pointer>.tmp.<hex>``, left by a writer that died before its link)
+    goes once it is that old too. Returns the removed paths."""
     import time as _time
 
     history = store.history(name)

@@ -2,11 +2,12 @@
 
 For a local directory of parquet files, ``SparkTask`` takes each file's
 min/max of the CDC attribute from its footer, lets ``resolve_cdc`` pick the
-new bound with no Spark job, and re-reads only the files that can hold new
-rows. Every test here runs that path side by side with
-``cdc.incremental_read`` (the Spark aggregate over every landed file) and
-asserts the same rows and the same saved CDC state. The fallback cases
-assert that the footer path stepped aside.
+new bound with no Spark job, and reads only the files that can hold new
+rows, with the schema recorded for the footers' schema key. Every test
+here runs that path side by side with ``cdc.incremental_read`` (the Spark
+aggregate over every landed file) and asserts the same rows and the same
+saved CDC state. The fallback cases assert that the footer path stepped
+aside.
 """
 
 from __future__ import annotations
