@@ -540,15 +540,16 @@ def _recorded_schema(spark: SparkSession, state: StateStore, name: str,
     """What ``spark.read.parquet(path).schema`` returns for files with
     these footers. Spark infers it from a footer's parquet schema, or from
     the Spark schema a Spark writer embeds in it, read under the session's
-    parquet confs. Those make the key of the input's record in ``state``
-    (``{name}_parquet_schema``). A record of another key, or none, is a
-    miss: Spark infers the schema once (one job), and the record is
-    rewritten."""
+    parquet confs by this Spark version. Those make the key of the input's
+    record in ``state`` (``{name}_parquet_schema``). A record of another
+    key, or none, is a miss: Spark infers the schema once (one job), and
+    the record is rewritten."""
     keys = sorted({str(md.schema).split("\n", 1)[1]
                    + (md.metadata or {}).get(_ROW_METADATA, b"").decode()
                    for md in footers})
     confs = [spark.conf.get(c, None) for c in _INFERENCE_CONFS]
-    key = hashlib.sha256(json.dumps([keys, confs]).encode()).hexdigest()
+    key = hashlib.sha256(
+        json.dumps([keys, spark.version, confs]).encode()).hexdigest()
     record = state.get_value(f"{name}_parquet_schema", folder="sources")
     if record is not None and record["key"] == key:
         return StructType.fromJson(record["schema"])
