@@ -29,9 +29,10 @@ hidden-file rule, takes each file's bounds and schema key from its footer
 record in its ``StateStore`` kept per schema key, so no schema-inference
 job runs while the key is unchanged. It then builds one frame, with that
 schema, over the files :func:`new_file_bounds` picks (landed files never
-change). A subdirectory, a parquet summary file or a read option leaves
-the listing and the inference to Spark, and the bounds then come from the
-footers of the files Spark listed. Either way it falls back to the
+change). A subdirectory, a parquet summary file, a streaming sink's
+``_spark_metadata`` log or a read option leaves the listing and the
+inference to Spark, and the bounds then come from the footers of the
+files Spark listed. Either way it falls back to the
 aggregate for a backfill, a user ``source_schema``, a non-``file:`` or
 hive-partitioned source, an attribute that is not int, long, date,
 timestamp or timestamp_ntz, NANOS or INT96 timestamps, any row group

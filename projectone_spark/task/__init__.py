@@ -489,6 +489,21 @@ def _local_path(uri: str) -> str | None:
                                             if parsed.scheme else uri))
 
 
+def _on_local_fs(spark: SparkSession, path: str | None) -> bool:
+    """Whether Spark reads ``path`` from the local file system: a
+    ``file:`` path, or one with no scheme while the default file system
+    (``fs.defaultFS``, set on the session or in the Hadoop conf) is
+    local."""
+    if path is None:
+        return False
+    scheme = urllib.parse.urlparse(path).scheme
+    if scheme:
+        return scheme == "file"
+    default = (spark.conf.get("fs.defaultFS", None)
+               or spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS"))
+    return default is None or default.startswith("file:")
+
+
 def _hidden(name: str) -> bool:
     """Spark's rule for a file or directory name it reads no data from:
     one that starts with ``.``, or with ``_`` and holds no ``=``, or ends
@@ -500,9 +515,10 @@ def _hidden(name: str) -> bool:
 def _listed_files(path: str | None) -> list[str] | None:
     """The data files Spark lists in a local directory, listed in Python
     with Spark's ``_hidden`` rule. None, so that Spark lists, for a
-    non-local path, a path that is not a directory, a subdirectory or a
+    non-local path, a path that is not a directory, a subdirectory, a
     parquet summary file (``_metadata``, ``_common_metadata``), whose
-    footer Spark would infer the schema from."""
+    footer Spark would infer the schema from, or a streaming file sink's
+    ``_spark_metadata`` log, which names the only files Spark reads."""
     root = _local_path(path) if path else None
     if root is None or not os.path.isdir(root):
         return None
@@ -510,7 +526,8 @@ def _listed_files(path: str | None) -> list[str] | None:
     with os.scandir(root) as entries:
         for e in entries:
             name = e.name
-            if name.startswith(("_metadata", "_common_metadata")):
+            if name.startswith(("_metadata", "_common_metadata",
+                                "_spark_metadata")):
                 return None
             if _hidden(name):
                 continue
@@ -571,7 +588,7 @@ def _plan_from_footers(spark: SparkSession, state: StateStore, name: str,
 
     from projectone_spark.store.skipping import footer_bounds
 
-    files = _listed_files(path)
+    files = _listed_files(path) if _on_local_fs(spark, path) else None
     if not files:
         return None
     try:
@@ -581,8 +598,10 @@ def _plan_from_footers(spark: SparkSession, state: StateStore, name: str,
     schema = _recorded_schema(spark, state, name, path, footers)
     if attribute not in schema.names:
         return schema, None
-    return schema, footer_bounds(files, attribute, schema[attribute].dataType,
-                                 footers)
+    # ``file:`` URIs, so that Spark reads the listed files whatever its
+    # default file system
+    return schema, footer_bounds(["file:" + f for f in files], attribute,
+                                 schema[attribute].dataType, footers)
 
 
 def _footer_file_bounds(df: DataFrame, source: str, path: str | None,

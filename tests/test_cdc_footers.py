@@ -14,7 +14,9 @@ from __future__ import annotations
 
 import contextlib
 import datetime as dt
+import json
 import os
+import pathlib
 import tempfile
 
 import pyarrow as pa
@@ -422,7 +424,18 @@ def test_recorded_schema_equals_inference(spark, tmp_path, used_footers,
 
 
 def _extra_entry(src: str, name: str) -> None:
-    if name.endswith("/"):
+    if name == "_spark_metadata/":
+        # a streaming file sink's log that commits p0 only, beside a file
+        # of a batch it never committed
+        _write(f"{src}/p9.parquet", {"id": [9], "offset": [90]})
+        p0 = f"{src}/p0.parquet"
+        entry = {"path": pathlib.Path(p0).as_uri(), "size": os.path.getsize(p0),
+                 "isDir": False, "modificationTime": 0, "blockReplication": 1,
+                 "blockSize": 1 << 25, "action": "add"}
+        os.makedirs(f"{src}/{name}")
+        with open(f"{src}/{name}0", "w") as f:
+            f.write("v1\n" + json.dumps(entry))
+    elif name.endswith("/"):
         _write(f"{src}/{name}p1.parquet", {"id": [7], "offset": [70]})
     elif name in ("_metadata", "_common_metadata", "_k=1.parquet"):
         _write(f"{src}/{name}", {"id": [8], "offset": [80]})
@@ -433,7 +446,8 @@ def _extra_entry(src: str, name: str) -> None:
 
 @pytest.mark.parametrize("extra", [
     "_SUCCESS", ".p9.parquet.crc", "p9.parquet._COPYING_", "_k=1.parquet",
-    "_temporary/", ".hidden/", "_metadata", "_common_metadata", "sub/"])
+    "_temporary/", ".hidden/", "_metadata", "_common_metadata", "sub/",
+    "_spark_metadata/"])
 def test_listing_matches_spark_or_falls_back(spark, tmp_path, extra):
     """The Python listing takes the files ``spark.read.load(dir)`` reads,
     or declines so that Spark lists the directory; either way the run
@@ -442,12 +456,35 @@ def test_listing_matches_spark_or_falls_back(spark, tmp_path, extra):
     _write(f"{src}/p0.parquet", {"id": [1, 2], "offset": [10, 20]})
     _extra_entry(src, extra)
     listed = task_mod._listed_files(src)
-    if extra in ("_metadata", "_common_metadata", "sub/"):
+    if extra in ("_metadata", "_common_metadata", "sub/", "_spark_metadata/"):
         assert listed is None
+        if extra == "_spark_metadata/":  # Spark reads what the log commits
+            assert [task_mod._local_path(f) for f in
+                    spark.read.load(src).inputFiles()] == [f"{src}/p0.parquet"]
     else:
         spark_files = spark.read.load(src).inputFiles()
         assert listed == sorted(task_mod._local_path(f) for f in spark_files)
     Lanes(spark, str(tmp_path), src, "offset").step()
+
+
+def test_file_input_reads_listed_files_whatever_the_default_fs(
+        spark, tmp_path, used_footers):
+    """A ``file:`` input is planned from footers even when the default file
+    system is another one, and the run reads the listed files from the
+    local file system. A path with no scheme then names a file of the
+    default file system, so the Python listing declines it."""
+    src = str(tmp_path / "src dir")
+    lanes = Lanes(spark, str(tmp_path), "file:" + src, "offset")
+    task = lanes.task()
+    for i in range(3):
+        _write(f"{src}/p{i}.parquet", {"id": [i], "offset": [10 * i + 1]})
+        with _conf(spark, "fs.defaultFS", "nosuchfs:///"):
+            assert not task_mod._on_local_fs(spark, src)
+            got = _rows(task._read_input(task.config.inputs[0]))
+        save_cdc_state(task.state, "src", task._pending_cdc["src"])
+        assert got == lanes.reference()
+    assert task_mod._on_local_fs(spark, src)
+    assert used_footers == [True] * 3
 
 
 # -- planning jobs -------------------------------------------------------------
