@@ -607,10 +607,12 @@ def _plan_from_footers(spark: SparkSession, state: StateStore, name: str,
 def _footer_file_bounds(df: DataFrame, source: str, path: str | None,
                         options: dict[str, Any], attribute: str):
     """Per-file ``(path, min, max)`` of ``attribute`` from the parquet
-    footers of the files Spark listed for ``df``, keyed by Spark's own file
-    URIs. None, so that CDC falls back to its Spark aggregate, unless the
-    input is a local directory of parquet files with no partition
-    subdirectories and every file has exact footer bounds."""
+    footers of the files Spark listed for ``df``, keyed by ``file:`` paths
+    as ``_plan_from_footers`` keys them: ``inputFiles()`` gives %-escaped
+    URIs, which Spark would read back as unescaped paths. None, so that
+    CDC falls back to its Spark aggregate, unless the input is a local
+    directory of parquet files with no partition subdirectories and every
+    file has exact footer bounds."""
     from projectone_spark.store.skipping import footer_bounds
 
     if source != "parquet" or path is None or attribute not in df.schema.names:
@@ -631,8 +633,8 @@ def _footer_file_bounds(df: DataFrame, source: str, path: str | None,
         # an unreadable or vanished file: the aggregate path fails or
         # skips it exactly as Spark's options say (ignoreCorruptFiles)
         return None
-    uri = dict(zip(local, files))
-    return None if bounds is None else [(uri[p], lo, hi) for p, lo, hi in bounds]
+    return None if bounds is None else [("file:" + p, lo, hi)
+                                         for p, lo, hi in bounds]
 
 
 def _fits_watermark(prev: CdcState | None, bound: Any) -> bool:

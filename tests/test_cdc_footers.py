@@ -467,6 +467,21 @@ def test_listing_matches_spark_or_falls_back(spark, tmp_path, extra):
     Lanes(spark, str(tmp_path), src, "offset").step()
 
 
+def test_spark_listed_files_read_back_from_an_escaped_path(
+        spark, tmp_path, used_footers):
+    """When Spark lists the directory (here a summary file makes the
+    Python listing decline), the new files are read back by the paths
+    their footers were read from, not by Spark's %-escaped file URIs."""
+    src = str(tmp_path / "src dir%")
+    _extra_entry(src, "_metadata")
+    lanes = Lanes(spark, str(tmp_path), src, "offset")
+    for i in range(3):
+        _write(f"{src}/p{i}.parquet", {"id": [i], "offset": [10 * i + 1]})
+        lanes.step()
+    assert task_mod._listed_files(src) is None
+    assert used_footers == [True] * 3
+
+
 def test_file_input_reads_listed_files_whatever_the_default_fs(
         spark, tmp_path, used_footers):
     """A ``file:`` input is planned from footers even when the default file
